@@ -13,7 +13,9 @@ which measures nothing). A warmup pass on sf0.001 primes the
 JVM/codegen so we measure the engine, not JIT warmup.  Each query runs
 best-of-6 (override with $SPARK_GRAFT_BENCH_REPS) and the JSON carries
 per-query {best, median, n} plus whether other JVMs were alive at
-start, so jitter is separable from regression after the fact.
+start, so jitter is separable from regression after the fact, and the
+master string and ``cpus_effective`` (``sc.defaultParallelism``) the
+run actually had.
 
 If BENCH_baseline.json exists at the repo root, per-query deltas vs
 that snapshot are printed to stderr so regressions are visible at a
@@ -325,6 +327,8 @@ def main() -> None:
         "total_median_pass_sec": total_median_pass,
         "pass_totals_sec": pass_totals,
         "other_jvms_at_start": jvms_before,
+        "master": spark.sparkContext.master,
+        "cpus_effective": spark.sparkContext.defaultParallelism,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
     if host_factor > 0:

@@ -58,31 +58,6 @@ def test_vectorized_cosine_matches_jvm_path(spark, sf_dir):
     assert jvm == vec
 
 
-def test_adaptive_cosine_dispatch(spark, sf_dir, monkeypatch):
-    """cosine_topk_adaptive picks the JVM fold below the row-bound
-    threshold and the Arrow GEMM path above it — identical rows either
-    way (r16, guide §4.2: batch the heavy math through numpy at scale,
-    skip the fixed Python-boundary floor on small corpora)."""
-    from verified_sources_spark.llm.similarity import cosine_topk_adaptive
-
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 5)
-
-    monkeypatch.setenv("SPARK_GRAFT_COSINE_GEMM_MIN_ROWS", str(10**9))
-    small = cosine_topk_adaptive(e, q, k=3)
-    assert "MapInPandas" not in small._jdf.queryExecution().executedPlan().toString()
-
-    monkeypatch.setenv("SPARK_GRAFT_COSINE_GEMM_MIN_ROWS", "0")
-    big = cosine_topk_adaptive(e, q, k=3)
-    assert "MapInPandas" in big._jdf.queryExecution().executedPlan().toString()
-
-    assert sorted(map(tuple, small.collect())) == sorted(map(tuple, big.collect()))
-
-    # malformed env falls back to the default instead of raising
-    monkeypatch.setenv("SPARK_GRAFT_COSINE_GEMM_MIN_ROWS", "not-a-number")
-    cosine_topk_adaptive(e, q, k=3).collect()
-
-
 def test_watermark_drops_late_events(spark, tmp_path):
     """Event-time watermark: a 10-minute watermark finalizes windows; an
     event arriving after its window is finalized is dropped from the

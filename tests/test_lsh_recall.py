@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import sys
 
+import pytest
+
 sys.path.insert(0, "/root/repo/tools")
 
 from lsh_recall_sweep import (  # noqa: E402
@@ -87,14 +89,12 @@ def test_real_corpus_high_j_recall(spark):
 def test_materialize_modes_share_or_skip_correctly(spark):
     """r15 materialization contract, pinned on the EXECUTED plan:
 
-    - localCheckpoint is the mode that actually shares the level-1 cut
-      (RDD identity): both pair branches read checkpoint blocks, so the
-      final plan contains ZERO parquet scans of the corpus.
+    - "cut" shares the level-1 summaries (RDD identity): both pair
+      branches read checkpoint blocks, so the final plan contains ZERO
+      parquet scans of the corpus.
     - auto on a provably-small corpus (parquet-footer bound under the
       threshold) skips materialization: the fork recomputes, TWO scans.
-    - persist cannot share (lambda plans defeat cache-lookup
-      canonicalization): it too shows TWO scans — the reason it is no
-      longer the default.  All three modes produce identical pairs.
+      Both modes produce identical pairs.
     """
     from verified_sources_spark.llm.minhash import lsh_candidate_pairs
 
@@ -108,14 +108,13 @@ def test_materialize_modes_share_or_skip_correctly(spark):
         )
         rows = {(int(r["id_a"]), int(r["id_b"])) for r in pairs.collect()}
         plan = pairs._jdf.queryExecution().executedPlan().toString()
-        pairs.release_candidate_cut()
         return plan.count("Scan parquet"), rows
 
-    lc_scans, lc_rows = scans_and_rows("localCheckpoint")
+    cut_scans, cut_rows = scans_and_rows("cut")
     auto_scans, auto_rows = scans_and_rows("auto")
-    p_scans, p_rows = scans_and_rows("persist")
-    assert lc_scans == 0
+    assert cut_scans == 0
     # un-materialized fork: the corpus is scanned once PER BRANCH
     assert auto_scans >= 2
-    assert p_scans == auto_scans  # persist behaves exactly like None
-    assert lc_rows == auto_rows == p_rows
+    assert cut_rows == auto_rows
+    with pytest.raises(ValueError, match="materialize"):
+        lsh_candidate_pairs(docs, "doc_id", "text", materialize="persist")

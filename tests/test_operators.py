@@ -381,23 +381,32 @@ def test_sessionize_auto_probes_skew_and_picks_the_cheap_plan(spark):
 def test_sessionize_static_bound_from_parquet_footers(spark, tmp_path):
     """The auto-mode short-circuit reads row counts from parquet footers
     on the driver (zero Spark jobs) — exact for scan/filter plans, None
-    (probe required) for plans that can multiply rows or have no files."""
-    from verified_sources_spark.operators.sessionize import (
-        _static_row_upper_bound,
-    )
+    (probe required) for plans that can multiply rows, read a file
+    twice, or have no files."""
+    from verified_sources_spark.sizing import row_upper_bound
 
     p = str(tmp_path / "ev")
     spark.range(1000).selectExpr(
         "id as user_id", "id as event_id"
     ).write.parquet(p)
     df = spark.read.parquet(p)
-    assert _static_row_upper_bound(df) == 1000
+    assert row_upper_bound(df) == 1000
     # filters only reduce rows: footer sum stays a valid upper bound
-    assert _static_row_upper_bound(df.filter("user_id < 10")) == 1000
+    assert row_upper_bound(df.filter("user_id < 10")) == 1000
     # a self-join can multiply rows — bound must refuse
-    assert _static_row_upper_bound(df.join(df, "user_id")) is None
-    # in-memory relations have no input files — bound must refuse
-    assert (
-        _static_row_upper_bound(spark.createDataFrame([(1,)], "a long"))
-        is None
-    )
+    assert row_upper_bound(df.join(df, "user_id")) is None
+    # a self-union holds 2000 rows but reads the same files: inputFiles()
+    # is a distinct set, so summing it would undercount — bound must refuse
+    assert row_upper_bound(df.unionByName(df)) is None
+    # in-memory relations have no input files — bound must refuse, also
+    # when unioned with a file scan (its rows are not in any footer)
+    mem = spark.createDataFrame([(1, 1)], "user_id long, event_id long")
+    assert row_upper_bound(mem) is None
+    assert row_upper_bound(df.unionByName(mem)) is None
+    # partitioned layout: files sit one directory down per partition
+    # value, and every one of them counts
+    pp = str(tmp_path / "part")
+    spark.range(1000).selectExpr(
+        "id as user_id", "id % 7 as day"
+    ).write.partitionBy("day").parquet(pp)
+    assert row_upper_bound(spark.read.parquet(pp)) == 1000

@@ -1,0 +1,42 @@
+"""Branch parity for every size-based dispatch (verified_sources_spark.sizing).
+
+Each dispatching registry entry runs with its threshold forced to 0
+(every input counts as large) and to 10**9 (every input counts as
+small).  The plan must really take the other branch — the Arrow GEMM's
+MapInPandas or a cut's LogicalRDD appears or disappears — and the rows
+must hash identically, so a threshold only ever moves cost.
+"""
+
+from __future__ import annotations
+
+import pytest
+
+from tools.check_correctness import result_hash
+from verified_sources_spark import sizing
+from verified_sources_spark.plans.queries import QUERIES
+
+# entry → the plan node its large-input branch adds
+BRANCH_MARKERS = {
+    "cosine_topk_embeddings": "MapInPandas",
+    "lsh_candidate_pairs_docs": "LogicalRDD",
+    "cross_source_dedup_docs": "LogicalRDD",
+    "incremental_dedup_docs": "LogicalRDD",
+}
+
+
+@pytest.mark.parametrize("name", sorted(BRANCH_MARKERS))
+def test_branch_parity(spark, sf_dir, monkeypatch, name):
+    marker = BRANCH_MARKERS[name]
+
+    def run(min_rows):
+        monkeypatch.setattr(sizing, "GEMM_MIN_ROWS", min_rows)
+        monkeypatch.setattr(sizing, "CUT_MIN_ROWS", min_rows)
+        df = QUERIES[name](spark, sf_dir)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        rows = [tuple(r) for r in df.collect()]
+        return plan.count(marker), result_hash(df.columns, rows)
+
+    large_nodes, large_hash = run(0)
+    small_nodes, small_hash = run(10**9)
+    assert large_nodes > small_nodes
+    assert large_hash == small_hash

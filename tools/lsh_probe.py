@@ -2,7 +2,7 @@
 does (fresh session, sf0.001 warmup, N timed reps at sf0.1) so the
 cold-start overhead of each cut is separable from execution time.
 
-Usage: python tools/lsh_probe.py [variant ...]   (default: all)
+Usage: python tools/lsh_probe.py [cut|none|auto ...]   (default: cut none)
 """
 
 from __future__ import annotations
@@ -38,7 +38,7 @@ def run(spark, sf, materialize):
 
 
 def main():
-    variants = sys.argv[1:] or ["localCheckpoint", "persist", "none"]
+    variants = sys.argv[1:] or ["cut", "none"]
     spark = get_spark("lsh-probe")
     spark.sparkContext.setLogLevel("ERROR")
     for v in variants:

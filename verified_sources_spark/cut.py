@@ -24,19 +24,21 @@ cluster runs can flip the mechanism without touching call sites:
   must be set, either by the application via ``sc.setCheckpointDir`` or
   through ``SPARK_GRAFT_CHECKPOINT_DIR``; a reliable cut with no
   directory raises immediately with instructions rather than failing
-  deep inside Spark.  Cost: each cut's rows are written to (and re-read
-  from) durable storage, and plain ``checkpoint`` recomputes the cut's
-  RDD once more than ``localCheckpoint`` does unless it is also cached —
-  that is the price of durability, pay it only when reruns are dearer.
+  deep inside Spark.  A directory the application already set wins, with
+  a warning when ``SPARK_GRAFT_CHECKPOINT_DIR`` names a different one.
+  Cost: each cut's rows are written to (and re-read from) durable
+  storage, and plain ``checkpoint`` recomputes the cut's RDD once more
+  than ``localCheckpoint`` does unless it is also cached — that is the
+  price of durability, pay it only when reruns are dearer.
 
 Unknown mode values fall back to ``local`` (a typo must not change
-query semantics or crash query construction — same policy as the LSH
-materialize-threshold env parse).
+query semantics or crash query construction).
 """
 
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import DataFrame
 
@@ -46,6 +48,12 @@ _VALID_MODES = ("local", "reliable")
 def _mode() -> str:
     m = os.environ.get("SPARK_GRAFT_CUT_MODE", "local").strip().lower()
     return m if m in _VALID_MODES else "local"
+
+
+def _dir_key(path: str) -> str:
+    """``path`` comparable with Spark's qualified ``file:`` form."""
+    path = path[5:] if path.startswith("file:") else path
+    return path.rstrip("/") if "://" in path else os.path.abspath(path)
 
 
 def cut(df: DataFrame, eager: bool = False) -> DataFrame:
@@ -58,8 +66,9 @@ def cut(df: DataFrame, eager: bool = False) -> DataFrame:
     """
     if _mode() == "reliable":
         sc = df.sparkSession.sparkContext
-        if sc._jsc.sc().getCheckpointDir().isEmpty():
-            ckdir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
+        ckdir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
+        current = sc._jsc.sc().getCheckpointDir()
+        if current.isEmpty():
             if not ckdir:
                 raise RuntimeError(
                     "SPARK_GRAFT_CUT_MODE=reliable needs a durable checkpoint "
@@ -67,5 +76,13 @@ def cut(df: DataFrame, eager: bool = False) -> DataFrame:
                     "SPARK_GRAFT_CHECKPOINT_DIR"
                 )
             sc.setCheckpointDir(ckdir)
+        elif ckdir and _dir_key(current.get().rsplit("/", 1)[0]) != _dir_key(ckdir):
+            # setCheckpointDir(d) checkpoints into a fresh d/<uuid>
+            warnings.warn(
+                f"SPARK_GRAFT_CHECKPOINT_DIR={ckdir} is ignored: the session "
+                f"already checkpoints to {current.get()}",
+                RuntimeWarning,
+                stacklevel=2,
+            )
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)

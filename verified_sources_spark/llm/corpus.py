@@ -52,6 +52,7 @@ from verified_sources_spark.operators.prefix import (
     bucketed_prefix_sum,
     with_range_buckets,
 )
+from verified_sources_spark.sizing import should_cut
 
 
 def domain_cap(
@@ -638,15 +639,9 @@ def incremental_dedup(
     # cannot share a lambda-bearing subtree across branches (the
     # llm/minhash r15 finding) — without materialization the whole
     # signature pipeline (tokenize+shingle+md5+minhash of EVERY row)
-    # executes once per branch.  Same auto rule as lsh_candidate_pairs:
-    # below the row threshold the fork back-fills idle cores and the
-    # checkpoint barrier would cost more than it saves; above it (or
-    # when the bound is unknowable) one pass wins.
-    from verified_sources_spark.llm.minhash import _materialize_auto_min_rows
-    from verified_sources_spark.operators.sessionize import _static_row_upper_bound
-
-    bound = _static_row_upper_bound(df)
-    if bound is None or bound >= _materialize_auto_min_rows():
+    # executes once per branch.  Same size rule as lsh_candidate_pairs'
+    # materialize="auto" (sizing.should_cut).
+    if should_cut(df):
         sig_bands = sig_bands.transform(cut)
     existing_band_rows = sig_bands.join(existing_ids, id_col, "left_semi")
     incoming_bands = sig_bands.join(incoming_ids, id_col, "left_semi")

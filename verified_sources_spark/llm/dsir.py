@@ -89,9 +89,9 @@ def importance_weights(df: DataFrame, target_df: DataFrame,
     callers wanting DSIR's Gumbel resampling can rank on ``score``
     with any hash jitter downstream.  Consumers that fully
     materialize the result should call the returned DataFrame's
-    ``release_feature_cut()`` (the llm/minhash precedent) to drop the
-    persisted per-occurrence cut — a long-lived driver scoring
-    corpus after corpus otherwise accumulates cache entries."""
+    ``release_feature_cut()`` to drop the persisted per-occurrence
+    cut — a long-lived driver scoring corpus after corpus otherwise
+    accumulates cache entries."""
     # The shared cut is the per-(doc, bucket) occurrence-count table,
     # materialized with localCheckpoint, not persist: the cut sits under
     # a lambda-bearing plan (zip_with shingles), and CacheManager's

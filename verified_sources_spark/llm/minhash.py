@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from verified_sources_spark.cut import cut
 
 from verified_sources_spark.functions.text import TOKEN_RE, shingles
+from verified_sources_spark.sizing import should_cut
 
 # FROZEN universal-hash family parameters: the DuckDB oracle renders the
 # same literals (plans/oracle.py imports these), so any change is a format
@@ -112,19 +113,6 @@ def _mins_sql(k: int) -> str:
     )
 
 
-def _materialize_auto_min_rows() -> int:
-    """Row threshold for the materialize='auto' decision (shared with
-    ``corpus.incremental_dedup``): inputs provably smaller keep the plan
-    fork (the second pass back-fills idle cores locally), larger or
-    unknowable inputs take the single-pass localCheckpoint."""
-    import os
-
-    try:
-        return int(os.environ.get("SPARK_GRAFT_LSH_MATERIALIZE_MIN_ROWS", "200000"))
-    except ValueError:  # malformed env var: fall back to the default
-        return 200000
-
-
 def minhash_signatures(
     df: DataFrame, id_col: str, text_col: str, k: int = 8, shingle_n: int = 3
 ) -> DataFrame:
@@ -199,39 +187,23 @@ def lsh_candidate_pairs(
 
     ``materialize`` picks the mechanism:
 
-    - ``"auto"`` (default) — ``None`` when the input provably holds
-      fewer than ``$SPARK_GRAFT_LSH_MATERIALIZE_MIN_ROWS`` (default
-      200k) rows (driver-only parquet-footer bound, no Spark job — the
-      sessionize probe), ``"localCheckpoint"`` otherwise or when the
-      bound is unknowable.  Rationale, measured r15: on a small corpus
-      the fork's second signature pass back-fills idle cores and costs
-      almost no wall clock, while the checkpoint's block write + stage
-      barrier costs ~0.15 s — but on a saturated cluster the second
-      pass is a genuine 2x of the dominant compute, so big-or-unknown
-      inputs take the single-pass materialization.
-    - ``"localCheckpoint"`` — the only mechanism that actually shares
-      the cut (RDD-identity, immune to the canonicalization failure):
-      executed-plan check shows ONE parquet scan.  Lazy, self-cleaning.
-      Resilience trade-off, stated precisely: localCheckpoint TRUNCATES
-      lineage, so a checkpoint block lost with its executor is
-      unrecoverable — the JOB FAILS (SparkException on the missing
-      block) rather than recomputing.  Acceptable here: rerunning a
-      failed job beats paying 2x the dominant compute on EVERY run.
-      Fault-sensitive cluster runs that cannot rerun should write the
-      cut to durable storage instead (reliable ``checkpoint()`` after
-      ``sc.setCheckpointDir``, or write+read-back) — at the cost of a
-      full write of the cut.
-    - ``"persist"`` — retained for API compatibility but DOES NOT SHARE
-      the cut: CacheManager lookup goes through the same plan
-      canonicalization that lambda variables defeat, so the cache entry
-      is registered yet never read or even filled (r15 executed-plan
-      check: zero InMemoryTableScan, TWO parquet scans — behaviorally
-      ``None`` plus a dead cache entry).  The earlier belief that this
-      mode materialized fastest timed exactly that double-compute.  The
-      returned DataFrame still carries ``release_candidate_cut()`` to
-      drop the dead entry.
+    - ``"auto"`` (default) — ``"cut"`` when ``sizing.should_cut(df)``
+      (the input may hold ``sizing.CUT_MIN_ROWS`` rows or more, or its
+      size is unknowable), ``None`` otherwise.  Rationale, measured r15:
+      on a small corpus the fork's second signature pass back-fills idle
+      cores and costs almost no wall clock, while the cut's block write
+      + stage barrier costs ~0.15 s — but on a saturated cluster the
+      second pass is a genuine 2x of the dominant compute.
+    - ``"cut"`` — ``verified_sources_spark.cut.cut``, the only mechanism
+      that actually shares the level-1 summaries (RDD identity, immune
+      to the canonicalization failure that makes ``persist()`` register
+      a cache entry no branch ever reads): the corpus is scanned once,
+      by the cut.  Lazy, self-cleaning; see ``cut.py`` for the
+      lineage-truncation trade-off and the durable mode.
     - ``None`` — no materialization; the pipeline recomputes per branch.
     """
+    if materialize not in ("auto", "cut", None):
+        raise ValueError("materialize must be 'auto', 'cut', or None")
     assert k % bands == 0, "k must divide into equal bands"
     rows_per_band = k // bands
     cap = int(max_bucket_size)
@@ -313,25 +285,9 @@ SELECT band_idx, band_key, pmod(xxhash64(id), {sub_buckets}) AS salt,
 FROM banded
 GROUP BY band_idx, band_key, pmod(xxhash64(id), {sub_buckets})
 """
-    if materialize == "auto":
-        from verified_sources_spark.operators.sessionize import (
-            _static_row_upper_bound,
-        )
-
-        min_rows = _materialize_auto_min_rows()
-        bound = _static_row_upper_bound(df)
-        materialize = (
-            None if bound is not None and bound < min_rows else "localCheckpoint"
-        )
     l1 = df.sparkSession.sql(sql_l1, df=df)
-    if materialize == "localCheckpoint":
+    if materialize == "cut" or (materialize == "auto" and should_cut(df)):
         l1 = l1.transform(cut)
-    elif materialize == "persist":
-        l1 = l1.persist()
-    elif materialize is not None:
-        raise ValueError(
-            "materialize must be 'auto', 'localCheckpoint', 'persist', or None"
-        )
 
     # Two branches read the materialized cut, not three: the complete-bucket
     # pair expansion and the hot-bucket star are ONE case-expression over l2
@@ -376,15 +332,7 @@ SELECT DISTINCT id_a, id_b FROM (
   UNION ALL SELECT id_a, id_b FROM sub_star
 )
 """
-    pairs = df.sparkSession.sql(sql_pairs, l1=l1)
-    # Consumers that fully materialize the pairs (near_dedup's eager
-    # connected-components checkpoint, a sink write) should release the
-    # persisted cut afterwards — a long-lived driver calling this per
-    # corpus/batch otherwise accumulates one cache entry per call.
-    pairs.release_candidate_cut = (
-        l1.unpersist if materialize == "persist" else (lambda: None)
-    )
-    return pairs
+    return df.sparkSession.sql(sql_pairs, l1=l1)
 
 
 def ngram_jaccard(
@@ -433,8 +381,4 @@ def ngram_jaccard(
         "id_b",
         (F.size(F.array_intersect(a, b)) / F.size(F.array_union(a, b))).alias("jaccard"),
     ).filter(F.col("jaccard") >= threshold)
-    out = out.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    # propagate the cache-release hook so callers of the verified form can
-    # still free the LSH cut after materializing
-    out.release_candidate_cut = getattr(pairs, "release_candidate_cut", lambda: None)
-    return out
+    return out.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))

@@ -150,10 +150,6 @@ def near_dedup_docs(
         df, id_col, text_col, pairs=pairs, shingle_n=shingle_n, threshold=threshold
     ).select("id_a", "id_b")
     comp = connected_components(verified)
-    # connected_components eagerly checkpointed the edge set, so the LSH
-    # cut's cache entry is no longer needed — release it (repeat callers
-    # would otherwise accumulate one entry per corpus)
-    getattr(pairs, "release_candidate_cut", lambda: None)()
     drop = comp.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias(id_col)
     )
@@ -174,5 +170,4 @@ def near_dup_clusters(
         df, id_col, text_col, pairs=pairs, threshold=threshold
     ).select("id_a", "id_b")
     comp = connected_components(verified)
-    getattr(pairs, "release_candidate_cut", lambda: None)()
     return comp.groupBy("component").agg(F.count(F.lit(1)).alias("n_members"))

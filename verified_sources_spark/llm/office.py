@@ -87,17 +87,20 @@ def _esc(s: str) -> str:
 # ---------------------------------------------------------------------------
 # encoders (independent writers: literal templates, no ET)
 
+# member timestamp: fixed, so the same parts always encode to the same bytes
+_ZIP_DATE_TIME = (1980, 1, 1, 0, 0, 0)
+
+
 def _zip_parts(parts: list[tuple[str, bytes]],
                stored_first: bool = False) -> bytes:
     buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as z:
+    with zipfile.ZipFile(buf, "w") as z:
         for i, (name, data) in enumerate(parts):
-            if stored_first and i == 0:
-                # ODF requires the mimetype member first and STORED
-                zi = zipfile.ZipInfo(name)
-                z.writestr(zi, data, compress_type=zipfile.ZIP_STORED)
-            else:
-                z.writestr(name, data)
+            # ODF requires the mimetype member first and STORED
+            stored = stored_first and i == 0
+            z.writestr(zipfile.ZipInfo(name, _ZIP_DATE_TIME), data,
+                       compress_type=(zipfile.ZIP_STORED if stored
+                                      else zipfile.ZIP_DEFLATED))
     return buf.getvalue()
 
 

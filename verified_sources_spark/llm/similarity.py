@@ -23,6 +23,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 from verified_sources_spark.cut import cut
+from verified_sources_spark.sizing import use_gemm
 
 
 def _dot(a, b):
@@ -142,25 +143,12 @@ def cosine_topk_vectorized(
     )
 
 
-def _gemm_min_rows() -> int:
-    """Corpus-size crossover between the JVM fold and the Arrow GEMM path,
-    env-tunable (``SPARK_GRAFT_COSINE_GEMM_MIN_ROWS``); malformed values
-    fall back to the default rather than failing query construction."""
-    import os
-
-    try:
-        return int(os.environ.get("SPARK_GRAFT_COSINE_GEMM_MIN_ROWS", "20000"))
-    except ValueError:
-        return 20000
-
-
 def cosine_topk_adaptive(
     corpus: DataFrame,
     queries: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 3,
-    corpus_rows: int | None = None,
 ) -> DataFrame:
     """``cosine_topk`` with the implementation picked by corpus size.
 
@@ -175,46 +163,14 @@ def cosine_topk_adaptive(
       ~0.2-0.3 s floor (query-side collect job + Python worker
       round-trip) that dominates on small corpora.
 
-    Measured crossover (r16, d=64, Q=10, 32 cores, interleaved A/B at
-    1x/10x/100x the graded corpus): the fold wins at 2k rows (0.38 vs
-    0.50 s best), ties at 20k (0.73 vs 0.74 s), loses at 200k (1.20 vs
-    0.85 s best; 23 vs 3.6 s median under host load — the fold degrades
-    far worse under CPU steal).  Default threshold 20k = the measured
-    tie, preferring the scale path at the boundary.  The bound comes
-    from parquet footers (driver-only, no job); unknowable bounds take
-    the GEMM path — at 100 TB the fold is never the right answer.
-    Callers that already know the corpus size (e.g. from their own
-    footer read) pass ``corpus_rows`` and skip the plan probe entirely.
+    The crossover and the bound are ``sizing.use_gemm``'s: a corpus
+    that provably holds fewer than ``sizing.GEMM_MIN_ROWS`` rows takes
+    the fold, anything larger or unknowable takes the GEMM — at 100 TB
+    the fold is never the right answer.
     """
-    bound = corpus_rows if corpus_rows is not None else _adaptive_bound(corpus)
-    if bound is not None and bound < _gemm_min_rows():
-        return cosine_topk(corpus, queries, id_col, vec_col, k)
-    return cosine_topk_vectorized(corpus, queries, id_col, vec_col, k)
-
-
-# row bounds memoized by (application, file set): the footer probe walks
-# the optimized plan (~60 ms/build measured — the dominant cost of the
-# dispatch), and repeated invocations in one driver (the bench loops
-# entries) should not re-pay it.  Keying on the file set alone can
-# mis-dispatch a differently-shaped plan over the same files (e.g. an
-# exploded view), but the dispatch is PERF-ONLY — both paths return
-# identical rows — so a stale bound can never change results.
-_ADAPTIVE_BOUND_MEMO: dict = {}
-
-
-def _adaptive_bound(corpus: DataFrame):
-    from verified_sources_spark.operators.sessionize import _static_row_upper_bound
-
-    try:
-        files = tuple(sorted(corpus.inputFiles()))
-    except Exception:
-        files = None
-    if not files:
-        return _static_row_upper_bound(corpus)
-    key = (corpus.sparkSession.sparkContext.applicationId, files)
-    if key not in _ADAPTIVE_BOUND_MEMO:
-        _ADAPTIVE_BOUND_MEMO[key] = _static_row_upper_bound(corpus)
-    return _ADAPTIVE_BOUND_MEMO[key]
+    if use_gemm(corpus):
+        return cosine_topk_vectorized(corpus, queries, id_col, vec_col, k)
+    return cosine_topk(corpus, queries, id_col, vec_col, k)
 
 
 def _centroid_df(spark, centroids: list[list[float]]) -> DataFrame:

@@ -35,10 +35,10 @@ know their skew pin ``mode=`` and skip the probe entirely.
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
+
+from verified_sources_spark.sizing import row_upper_bound
 
 DEFAULT_GAP_US = 1_800_000_000        # 30 min
 DEFAULT_BUCKET_US = 86_400_000_000    # 1 day — must be >> gap
@@ -49,48 +49,6 @@ DEFAULT_BUCKET_US = 86_400_000_000    # 1 day — must be >> gap
 # straggle: every task is equally loaded)
 HOT_MIN_ROWS = 200_000
 HOT_SKEW_RATIO = 8.0
-
-# optimizedPlan substrings that can MULTIPLY rows — the footer-sum
-# bound below is only an upper bound when every operator preserves or
-# reduces cardinality (Filter/Project/Aggregate/Window/Union are fine:
-# union's inputFiles covers both sides)
-_ROW_MULTIPLIERS = ("Join", "Generate", "Expand", "FlatMap", "MapInPandas",
-                    "MapPartitions", "PythonUDTF")
-
-
-def _static_row_upper_bound(df: DataFrame) -> int | None:
-    """Driver-only upper bound on ``df``'s row count, summed from the
-    parquet footers of its input files — NO Spark job, so the auto-mode
-    short-circuit costs microseconds instead of a cluster round-trip.
-    Returns None whenever the bound can't be trusted: non-parquet or
-    non-local inputs, an empty file list (in-memory relations), or a
-    plan containing row-multiplying operators."""
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-    except Exception:
-        return None
-    if any(op in plan for op in _ROW_MULTIPLIERS):
-        return None
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
-    try:
-        import pyarrow.parquet as pq
-
-        total = 0
-        for f in files:
-            if not f.endswith(".parquet"):
-                return None
-            path = f[5:] if f.startswith("file:") else f
-            if not os.path.exists(path):
-                return None  # remote FS: footers not reachable driver-side
-            total += pq.ParquetFile(path).metadata.num_rows
-        return total
-    except Exception:
-        return None
 
 
 def sessionize(
@@ -128,7 +86,7 @@ def sessionize(
     # hold hot_min_rows rows, no user can possibly be hot.  The bound
     # comes from parquet footers on the driver — zero Spark jobs — so
     # small/unskewed callers pay NOTHING over the plain formulation.
-    bound = _static_row_upper_bound(df)
+    bound = row_upper_bound(df)
     if bound is not None and bound < hot_min_rows:
         return sessionize_plain(df, user_col, ts_col, id_col, gap_us)
     probe = (

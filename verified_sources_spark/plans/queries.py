@@ -45,6 +45,7 @@ from verified_sources_spark.operators.incremental import (
 from verified_sources_spark.operators.merge import merge_dataframes
 from verified_sources_spark.operators.pivot import unpivot
 from verified_sources_spark.operators.routing import route_counts
+from verified_sources_spark.sizing import should_cut, spread
 
 
 def _dec(col, scale: int = 2):
@@ -625,94 +626,13 @@ def lang_id_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _docs_parallel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents, repartitioned for CPU-bound hashing ONLY when the scan
-    itself cannot feed every core (guide §2.4 remove shuffles outright,
-    r16): signature computation is hash-dominated, so a single-split
-    table (the graded SFs are one parquet file each) must spread across
-    cores — but once the input has at least ``defaultParallelism`` scan
-    splits, the round-robin exchange would shuffle the full corpus text
-    for nothing.  Measured on a 32-split 50k-doc table at 32 cores:
-    minhash_signatures median 1.30 s with the unconditional repartition,
-    0.78 s without.  The split count comes from the physical scan plan
-    (driver-side metadata, no job)."""
-    return _spread(spark, load_table(spark, sf_dir, "documents"))
-
-
-# parquet-footer row counts memoized by table path (metadata only, never
-# rows/results; a regenerated file re-keys via mtime+size).  Feeds
-# cosine_topk_adaptive's size dispatch without the ~50 ms plan-walk the
-# generic _static_row_upper_bound probe pays per build.
-_FOOTER_ROWS_MEMO: dict = {}
-
-
-def _footer_rows(sf_dir: str, name: str) -> int | None:
-    import glob as _glob
-    import os as _os
-
-    base = f"{sf_dir.rstrip('/')}/{name}.parquet"
-    paths = [base] if _os.path.isfile(base) else sorted(
-        _glob.glob(f"{base}/*.parquet")
-    )
-    if not paths:
-        return None
-    try:
-        key = (base, tuple((_os.path.getmtime(p), _os.path.getsize(p)) for p in paths))
-    except OSError:
-        return None
-    if key not in _FOOTER_ROWS_MEMO:
-        try:
-            import pyarrow.parquet as pq
-
-            _FOOTER_ROWS_MEMO[key] = sum(
-                pq.ParquetFile(p).metadata.num_rows for p in paths
-            )
-        except Exception:
-            _FOOTER_ROWS_MEMO[key] = None
-    return _FOOTER_ROWS_MEMO[key]
-
-
-# scan-split counts memoized by (application, file set, parallelism):
-# partitioning METADATA only — never rows or results — so repeated
-# invocations in one driver (the bench loops entries) skip the ~25 ms
-# physical-planning probe.  The file list itself keys the entry, so a
-# changed input layout re-probes.
-_SPREAD_MEMO: dict = {}
-
-
-def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """``df`` repartitioned across cores unless its scan already has that
-    many splits (see ``_docs_parallel``)."""
-    par = spark.sparkContext.defaultParallelism
-    try:
-        files = tuple(sorted(df.inputFiles()))
-    except Exception:
-        files = None
-    key = (spark.sparkContext.applicationId, files, par)
-    scan_splits = _SPREAD_MEMO.get(key) if files else None
-    if scan_splits is None:
-        try:
-            scan_splits = df._jdf.rdd().getNumPartitions()
-        except Exception:
-            scan_splits = 1
-        if files:
-            _SPREAD_MEMO[key] = scan_splits
-    if scan_splits >= par:
-        return df
-    return df.repartition(par)
+    """documents spread across the cores for CPU-bound hashing
+    (``sizing.spread``)."""
+    return spread(load_table(spark, sf_dir, "documents"))
 
 
 def minhash_signatures_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_signatures(_docs_parallel(spark, sf_dir), "doc_id", "text", k=8, shingle_n=3)
-
-
-# NOTE (r16): the former module-global release-hook registry for LSH cuts
-# is gone.  It existed to unpersist the previous invocation's persist()'d
-# cut, but since r15 these entries run materialize="auto", which never
-# persists (None below the row threshold, localCheckpoint above it —
-# checkpoint blocks self-clean when their RDD is GC'd), so every
-# registered hook was a no-op lambda and the global list was the one
-# piece of cross-invocation mutable state left in the module (unsafe
-# under concurrent sessions/threads for zero benefit).
 
 
 def lsh_candidate_pairs_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -734,14 +654,8 @@ def cosine_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from verified_sources_spark.llm.similarity import cosine_topk_adaptive
 
     e = load_table(spark, sf_dir, "embeddings")
-    corpus = _spread(spark, e)
     queries = e.filter(F.col("vec_id") < 10)
-    # corpus_rows from the parquet footers directly (memoized per path):
-    # the generic plan-walk probe costs ~50-60 ms per build, a real tax
-    # when the entry is rebuilt per bench rep
-    return cosine_topk_adaptive(
-        corpus, queries, k=3, corpus_rows=_footer_rows(sf_dir, "embeddings")
-    )
+    return cosine_topk_adaptive(spread(e), queries, k=3)
 
 
 def cosine_topk_vectorized_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -749,7 +663,7 @@ def cosine_topk_vectorized_embeddings(spark: SparkSession, sf_dir: str) -> DataF
     the throughput path; same contract and oracle as cosine_topk."""
     from verified_sources_spark.llm.similarity import cosine_topk_vectorized
 
-    e = _spread(spark, load_table(spark, sf_dir, "embeddings"))
+    e = spread(load_table(spark, sf_dir, "embeddings"))
     queries = e.filter(F.col("vec_id") < 10)
     return cosine_topk_vectorized(e, queries, k=3)
 
@@ -761,7 +675,7 @@ def embedding_near_dup_pairs_embeddings(spark: SparkSession, sf_dir: str) -> Dat
     the ~99.9th percentile of this corpus's pair cosines."""
     from verified_sources_spark.llm.similarity import embedding_near_dup_pairs
 
-    e = _spread(spark, load_table(spark, sf_dir, "embeddings"))
+    e = spread(load_table(spark, sf_dir, "embeddings"))
     return embedding_near_dup_pairs(e, threshold=0.35)
 
 
@@ -5168,19 +5082,16 @@ def cross_source_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # doc encoded as WARC + EML + zip) executed once PER LEG — three
     # full mint passes with two of the three blobs discarded each time
     # (r16, §2.4; found by the Python-node plan census: the same
-    # MapInPandas mint appeared 3x in the final plan).  Cut only above
-    # the LSH materialize threshold, same policy and rationale as
-    # minhash's materialize="auto": on a small corpus the extra passes
+    # MapInPandas mint appeared 3x in the final plan).  Cut only when
+    # sizing.should_cut says so, the policy of lsh_candidate_pairs'
+    # materialize="auto": on a small corpus the extra passes
     # back-fill idle cores while the cut's barrier + payload blocks cost
     # real wall clock (interleaved A/B at sf0.01: unconditional cut
     # 1.7-3.1 s vs uncut 1.5-1.9 s warm); on big-or-unknown inputs the
     # duplicate mint is a genuine 3x of the dominant compute.
-    from verified_sources_spark.llm.minhash import _materialize_auto_min_rows
-
     assets = d.mapInPandas(
         mint, "doc_id long, warc binary, mail binary, archive binary")
-    _bound = _footer_rows(sf_dir, "documents")
-    if _bound is None or _bound >= _materialize_auto_min_rows():
+    if should_cut(d):
         assets = assets.transform(cut)
     web = (warc_extract(assets.select("doc_id",
                                       F.col("warc").alias("asset")))
