@@ -317,7 +317,7 @@ def test_hash_sampled_distinct(spark):
 
 def test_dsir_selection_fidelity_on_planted_mixture(spark):
     """r15 DSIR fidelity floor (the ring construction, pinned at
-    small scale; tools/soak_r15b.py measures the same construction
+    small scale; ``tools/soak.py dsir_uniform`` measures the same construction
     at 100k: precision 1.0000 / recall 1.0000): ring-A docs share 97
     bigram types with the target spine regardless of offset, ring-B
     docs a disjoint ring — selection must fish out exactly the
@@ -432,7 +432,6 @@ def test_pmi_collocations(spark):
     r = rows[("new", "york")]
     assert (r.c_xy, r.c1, r.c2, r.n_tokens, r.pmi_ratio_scaled) == \
         (2, 3, 3, 12, 2666)
-    out.release_count_table()
     # validation
     import pytest as _pytest
     with _pytest.raises(ValueError):
@@ -470,7 +469,6 @@ def test_pmi_collocations_matches_brute_force(spark):
         assert r.c_xy == c and r.c1 == uni[w1] and r.c2 == uni[w2]
         assert r.n_tokens == n
         assert r.pmi_ratio_scaled == (c * n * 10**6) // (uni[w1] * uni[w2])
-    out.release_count_table()
 
 
 def test_hash_sampled_overlap(spark):
@@ -494,7 +492,6 @@ def test_hash_sampled_overlap(spark):
     df = spark.createDataFrame(rows, "g string, v string")
     out = hash_sampled_overlap(df, "g", "v", sample_log2=3)
     got = {(r.g_a, r.g_b): r for r in out.collect()}
-    out.release_sample_cut()
 
     thr = 1 << 57
     sets: dict[str, set] = {}

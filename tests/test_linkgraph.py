@@ -31,7 +31,6 @@ def test_link_rank_matches_integer_brute_force(spark):
     for k in (1, 2, 3):
         out = link_rank(df, "s", "d", iterations=k)
         got = {r.node: (r.out_degree, r.rank) for r in out.collect()}
-        out.release_edges()
         outdeg, rank = _brute(EDGES, k, 850, 1_000_000)
         assert got == {n: (outdeg.get(n, 0), rank[n]) for n in rank}
     # the quality ordering: the hub outranks everything, the
@@ -49,7 +48,6 @@ def test_link_rank_parallel_edges_and_self_loops(spark):
     df = spark.createDataFrame(edges, "s string, d string")
     out = link_rank(df, "s", "d", iterations=1)
     got = {r.node: r.rank for r in out.collect()}
-    out.release_edges()
     _, want = _brute(edges, 1, 850, 1_000_000)
     assert got == want
     assert got["Y"] > got["Z"]          # two shares vs one

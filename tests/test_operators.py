@@ -314,17 +314,20 @@ def test_sessionize_bucketed_matches_plain(spark):
     assert by_user[4] == [1]
 
 
-def test_sessionize_auto_probes_skew_and_picks_the_cheap_plan(spark):
-    """mode="auto": unskewed input keeps the 1-shuffle single-window
-    plan (no join anywhere — the bucketed boundary-merge join is the
-    2x tax r7 made every caller pay); a measured hot user flips to the
-    bucketed formulation, value-identical.  The hot gate needs BOTH the
+def test_sessionize_auto_probes_skew_and_picks_the_cheap_plan(
+        spark, monkeypatch):
+    """Unskewed input keeps the 1-shuffle single-window plan (no join
+    anywhere — the bucketed boundary-merge join is the 2x tax r7 made
+    every caller pay); a measured hot user flips to the bucketed
+    formulation, value-identical.  The hot gate needs BOTH the
     absolute floor and the mean-ratio: uniformly-busy users never
     bucket."""
     import datetime as dt
 
+    from verified_sources_spark.operators import sessionize as mod
     from verified_sources_spark.operators.sessionize import (
         sessionize,
+        sessionize_bucketed,
         sessionize_plain,
     )
 
@@ -340,7 +343,8 @@ def test_sessionize_auto_probes_skew_and_picks_the_cheap_plan(spark):
         return "Join" in out._jdf.queryExecution().optimizedPlan().toString()
 
     # uniform: plain plan, no join
-    out = sessionize(df, "user_id", "ts", "event_id", hot_min_rows=2)
+    monkeypatch.setattr(mod, "HOT_MIN_ROWS", 2)
+    out = sessionize(df, "user_id", "ts", "event_id")
     assert not has_join(out)
 
     # one hot user (12 events vs 2 each): bucketed under lowered gates
@@ -353,9 +357,9 @@ def test_sessionize_auto_probes_skew_and_picks_the_cheap_plan(spark):
     hot_df = spark.createDataFrame(
         hot_rows, "user_id long, event_id long, ts timestamp"
     )
-    out_hot = sessionize(
-        hot_df, "user_id", "ts", "event_id", hot_min_rows=10, hot_skew_ratio=2.0
-    )
+    monkeypatch.setattr(mod, "HOT_MIN_ROWS", 10)
+    monkeypatch.setattr(mod, "HOT_SKEW_RATIO", 2.0)
+    out_hot = sessionize(hot_df, "user_id", "ts", "event_id")
     assert has_join(out_hot)
     got = {
         (r.user_id, r.event_id, r.session_id) for r in out_hot.collect()
@@ -368,14 +372,11 @@ def test_sessionize_auto_probes_skew_and_picks_the_cheap_plan(spark):
 
     # absolute floor wins even when the ratio trips (12 >= 2x mean but
     # < 200k rows): stays plain at default gates
+    monkeypatch.undo()
     assert not has_join(sessionize(hot_df, "user_id", "ts", "event_id"))
-    # explicit pins skip the probe
-    assert has_join(
-        sessionize(df, "user_id", "ts", "event_id", mode="bucketed")
-    )
-    assert not has_join(
-        sessionize(hot_df, "user_id", "ts", "event_id", mode="plain")
-    )
+    # the two formulations called directly skip the probe
+    assert has_join(sessionize_bucketed(df, "user_id", "ts", "event_id"))
+    assert not has_join(sessionize_plain(hot_df, "user_id", "ts", "event_id"))
 
 
 def test_sessionize_static_bound_from_parquet_footers(spark, tmp_path):

@@ -1,10 +1,12 @@
-"""Branch parity for every size-based dispatch (verified_sources_spark.sizing).
+"""Branch parity for every size-based dispatch (verified_sources_spark.sizing,
+and sessionize's hot-user gate in verified_sources_spark.operators.sessionize).
 
 Each dispatching registry entry runs with its threshold forced to 0
 (every input counts as large) and to 10**9 (every input counts as
 small).  The plan must really take the other branch — the Arrow GEMM's
-MapInPandas or a cut's LogicalRDD appears or disappears — and the rows
-must hash identically, so a threshold only ever moves cost.
+MapInPandas, a cut's LogicalRDD or the bucketed sessionizer's
+boundary-merge Join appears or disappears — and the rows must hash
+identically, so a threshold only ever moves cost.
 """
 
 from __future__ import annotations
@@ -13,6 +15,7 @@ import pytest
 
 from tools.check_correctness import result_hash
 from verified_sources_spark import sizing
+from verified_sources_spark.operators import sessionize
 from verified_sources_spark.plans.queries import QUERIES
 
 # entry → the plan node its large-input branch adds
@@ -21,6 +24,7 @@ BRANCH_MARKERS = {
     "lsh_candidate_pairs_docs": "LogicalRDD",
     "cross_source_dedup_docs": "LogicalRDD",
     "incremental_dedup_docs": "LogicalRDD",
+    "sessionize_events": "Join",
 }
 
 
@@ -31,6 +35,8 @@ def test_branch_parity(spark, sf_dir, monkeypatch, name):
     def run(min_rows):
         monkeypatch.setattr(sizing, "GEMM_MIN_ROWS", min_rows)
         monkeypatch.setattr(sizing, "CUT_MIN_ROWS", min_rows)
+        monkeypatch.setattr(sessionize, "HOT_MIN_ROWS", min_rows)
+        monkeypatch.setattr(sessionize, "HOT_SKEW_RATIO", min_rows)
         df = QUERIES[name](spark, sf_dir)
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         rows = [tuple(r) for r in df.collect()]

@@ -1,21 +1,29 @@
 """Regenerate PLANS.md: formatted physical plans for the headline queries.
 
     python tools/dump_plans.py
+    python tools/dump_plans.py --out plans/r16 --tag before [entries ...]
 
 The dump is the plan-audit artifact: broadcast placement, pushed filters,
 pruned read schemas, exchange structure — reviewable without running
 Spark. Regenerate after any planner-relevant change; the plan-quality
 invariants are ALSO asserted in tests/test_plan_quality.py (this file is
 for human review, the tests are the gate).
+
+With ``--out DIR`` it instead writes each entry's plan at sf0.1 to
+``DIR/<entry>_<tag>.txt`` (default entries: the bench headline), so a
+change's before/after plans can be diffed file by file.
 """
 
 from __future__ import annotations
 
+import argparse
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from bench import HEADLINE  # noqa: E402
 from verified_sources_spark.plans.queries import QUERIES  # noqa: E402
@@ -50,9 +58,23 @@ CORPUS_AUDIT = {
 }
 
 
-def main() -> None:
-    spark = get_spark("plan-dump")
-    spark.sparkContext.setLogLevel("ERROR")
+def formatted_plan(spark, name: str, sf_dir: str) -> str:
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        QUERIES[name](spark, sf_dir).explain("formatted")
+    return buf.getvalue()
+
+
+def dump_entries(spark, out_dir: str, tag: str, names) -> None:
+    sf_dir = os.path.join(os.path.dirname(SF), "sf0.1")
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names or HEADLINE:
+        with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as f:
+            f.write(formatted_plan(spark, name, sf_dir))
+        print("dumped", name)
+
+
+def write_plans_md(spark) -> None:
     out = ["# PLANS — formatted physical plans for the headline queries",
            "",
            f"Generated by tools/dump_plans.py at sf0.01. Invariants asserted in",
@@ -60,15 +82,11 @@ def main() -> None:
            ""]
 
     def dump(name: str, note: str) -> None:
-        df = QUERIES[name](spark, SF)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
         out.append(f"## {name}")
         if note:
             out.append(f"\n_{note}_\n")
         out.append("```")
-        out.append(buf.getvalue().rstrip())
+        out.append(formatted_plan(spark, name, SF).rstrip())
         out.append("```\n")
 
     for name in HEADLINE:
@@ -76,9 +94,25 @@ def main() -> None:
     out.append("# Corpus-pillar plans (llm/corpus.py)\n")
     for name, note in CORPUS_AUDIT.items():
         dump(name, note)
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"PLANS.md written ({len(HEADLINE) + len(CORPUS_AUDIT)} plans)")
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--out", help="directory for per-entry plan files")
+    ap.add_argument("--tag", default="before", help="file suffix, e.g. before|after")
+    ap.add_argument("entries", nargs="*", help="with --out: entries to dump")
+    args = ap.parse_args()
+    if args.entries and not args.out:
+        ap.error("entries need --out")
+    spark = get_spark("plan-dump")
+    spark.sparkContext.setLogLevel("ERROR")
+    if args.out:
+        dump_entries(spark, args.out, args.tag, args.entries)
+    else:
+        write_plans_md(spark)
     spark.stop()
 
 

@@ -30,6 +30,13 @@ cluster runs can flip the mechanism without touching call sites:
   storage, and plain ``checkpoint`` recomputes the cut's RDD once more
   than ``localCheckpoint`` does unless it is also cached — that is the
   price of durability, pay it only when reruns are dearer.
+  Reliable checkpoint files are NOT deleted when their RDD is garbage
+  collected unless the application sets
+  ``spark.cleaner.referenceTracking.cleanCheckpoints=true``.  Loops that
+  cut once per iteration — connected components (llm/neardup.py), BPE
+  merge training (llm/bpe.py) — otherwise grow the checkpoint directory
+  without bound; set it on the session (or in ``spark-defaults.conf``)
+  for any long-lived reliable-mode driver.
 
 Unknown mode values fall back to ``local`` (a typo must not change
 query semantics or crash query construction).

@@ -184,9 +184,8 @@ def pmi_collocations(
     emits unigram entries (w2 NULL) and bigram entries through a
     single explode, so one (w1, w2)-keyed exchange with map-side
     partial aggregation builds both count tables.  The type-level
-    count table persists (vocab-sized, not occurrence-sized) because
-    three branches consume it; release via
-    ``release_count_table()``.  The c_x/c_y joins are left to AQE —
+    count table is cut (vocab-sized, not occurrence-sized) because
+    three branches consume it.  The c_x/c_y joins are left to AQE —
     a web corpus's bigram-type table has a long tail, so neither
     side is forced broadcast; the corpus total is the one-row
     broadcast crossJoin precedent."""
@@ -222,7 +221,7 @@ def pmi_collocations(
     big = counts.filter(
         F.col("w2").isNotNull() & (F.col("c") >= min_count)).select(
         "w1", "w2", F.col("c").alias("c_xy"))
-    out = (
+    return (
         big.join(uni.select(F.col("tok").alias("w1"),
                             F.col("cu").alias("c1")), "w1")
         .join(uni.select(F.col("tok").alias("w2"),
@@ -234,13 +233,6 @@ def pmi_collocations(
                 f"CAST(CAST(c_xy AS DECIMAL(38,0)) * n_tokens * "
                 f"{scale}L DIV (CAST(c1 AS DECIMAL(38,0)) * c2) "
                 "AS BIGINT)").alias("pmi_ratio_scaled")))
-
-    def _release() -> None:
-        # checkpoint blocks self-clean on GC; no-op hook kept for callers
-        return None
-
-    out.release_count_table = _release
-    return out
 
 
 def budget_apportionment(

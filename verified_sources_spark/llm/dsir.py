@@ -87,11 +87,9 @@ def importance_weights(df: DataFrame, target_df: DataFrame,
     terms (0 for documents under ``n`` tokens), ``selected`` true
     when score > n_ngrams·scale.  Deterministic — no sampling jitter;
     callers wanting DSIR's Gumbel resampling can rank on ``score``
-    with any hash jitter downstream.  Consumers that fully
-    materialize the result should call the returned DataFrame's
-    ``release_feature_cut()`` to drop the persisted per-occurrence
-    cut — a long-lived driver scoring corpus after corpus otherwise
-    accumulates cache entries."""
+    with any hash jitter downstream.  The per-occurrence cut is a
+    checkpoint whose blocks are cleaned when its RDD is garbage
+    collected; there is nothing to release."""
     # The shared cut is the per-(doc, bucket) occurrence-count table,
     # materialized with localCheckpoint, not persist: the cut sits under
     # a lambda-bearing plan (zip_with shingles), and CacheManager's
@@ -146,7 +144,7 @@ def importance_weights(df: DataFrame, target_df: DataFrame,
              F.sum(F.expr(
                  "_c * ((coalesce(tc, 0L) + 1L) * ratio_scale "
                  "DIV (coalesce(rc, 0L) + 1L))")).alias("score")))
-    out = (
+    return (
         df.select(id_col).join(scored, id_col, "left")
         .select(
             F.col(id_col),
@@ -155,11 +153,3 @@ def importance_weights(df: DataFrame, target_df: DataFrame,
         .withColumn(
             "selected",
             F.col("score") > F.col("n_ngrams") * F.lit(scale)))
-
-    def _release() -> None:
-        # checkpoint blocks self-clean when the RDDs are GC'd; kept as a
-        # no-op hook for API compatibility with existing callers
-        return None
-
-    out.release_feature_cut = _release
-    return out

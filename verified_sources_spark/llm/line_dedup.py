@@ -21,8 +21,9 @@ twice).  The cost of the window form is that an unbounded window
 partition BUFFERS its rows in the reducer (spilling to disk past the
 threshold): a banner occurring millions of times is one linear,
 spill-backed partition rather than one pre-aggregated row — soaked at
-1M occurrences of a single hot unit in tools/soak_r16.py (r16) against
-the groupBy+join form; see OPTIMIZATION_r16.md for the numbers.
+1M occurrences of a single hot unit (``tools/soak.py
+hot_span_window_vs_groupjoin``) against the groupBy+join form; see
+OPTIMIZATION_r16.md for the numbers.
 Reassembly is a per-document groupBy whose rows are the document's own
 units.  No collect_list across documents, no driver-side state.  Hash
 collisions

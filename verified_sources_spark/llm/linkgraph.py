@@ -26,10 +26,9 @@ ORDERING, which stabilizes long before the values.
 
 100 TB shape: one shuffle per iteration, keyed alternately on src
 (share computation joins ranks to edges) and dst (contribution sum).
-The edge list and out-degree table persist across iterations
-(``release_edges()`` to drop); on a real cluster, bucket the edge
-table by src so the rank join co-locates and only the dst-keyed
-aggregation exchanges.  The rank table is node-sized, never
+The edge list and out-degree table are cut once and shared by every
+iteration; on a real cluster, bucket the edge table by src so the rank
+join co-locates and only the dst-keyed aggregation exchanges.  The rank table is node-sized, never
 edge-sized.  Plans grow linearly with ``iterations`` — for k ≳ 8
 checkpoint between steps (not needed at the graded k).
 """
@@ -96,13 +95,5 @@ def link_rank(edges: DataFrame, src_col: str, dst_col: str,
             .select("node", F.expr(
                 f"{base}L + {d}L * coalesce(inflow, 0L) DIV 1000")
                 .alias("rank")))
-    out = spine.join(ranks, "node").select(
+    return spine.join(ranks, "node").select(
         "node", "out_degree", F.col("rank").cast("long").alias("rank"))
-
-    def _release() -> None:
-        # checkpoint blocks self-clean when the RDDs are GC'd; kept as a
-        # no-op hook for API compatibility with existing callers
-        return None
-
-    out.release_edges = _release
-    return out

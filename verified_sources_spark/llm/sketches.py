@@ -197,7 +197,7 @@ def hash_sampled_overlap(df: DataFrame, group_col: str,
         .join(per_group.select(F.col("_g").alias("g_b"),
                                F.col("n").alias("n_b")),
               F.col("g_a") < F.col("g_b")))
-    out = (
+    return (
         all_pairs.join(pairs, ["g_a", "g_b"], "left")
         .select(
             "g_a", "g_b",
@@ -214,11 +214,3 @@ def hash_sampled_overlap(df: DataFrame, group_col: str,
         .withColumn(
             "jaccard_permille",
             F.expr("n_common * 1000L DIV (n_a + n_b - n_common)")))
-
-    def _release() -> None:
-        # checkpoint blocks self-clean when the RDD is GC'd; kept as a
-        # no-op hook for API compatibility with existing callers
-        return None
-
-    out.release_sample_cut = _release
-    return out

@@ -30,7 +30,8 @@ one single-column scan, map-side combined to one row per user, reduced
 to (max, mean) on the driver — picks plain unless some user BOTH
 exceeds an absolute straggler floor (a task that would run materially
 longer than its peers) AND dominates the mean.  Callers that already
-know their skew pin ``mode=`` and skip the probe entirely.
+know their skew call ``sessionize_plain`` or ``sessionize_bucketed``
+directly and skip the probe entirely.
 """
 
 from __future__ import annotations
@@ -42,11 +43,12 @@ from verified_sources_spark.sizing import row_upper_bound
 
 DEFAULT_GAP_US = 1_800_000_000        # 30 min
 DEFAULT_BUCKET_US = 86_400_000_000    # 1 day — must be >> gap
-# auto-mode straggler gate: a user is "hot" when its event count BOTH
-# exceeds this floor (below it, one window task absorbs the user in
-# well under a second — bucketing would cost more than it saves) AND
-# dominates the mean by HOT_SKEW_RATIO (uniformly-huge users don't
-# straggle: every task is equally loaded)
+# straggler gate: a user is "hot" when its event count BOTH exceeds
+# this floor (below it, one window task absorbs the user in well under
+# a second — bucketing would cost more than it saves) AND dominates the
+# mean by HOT_SKEW_RATIO (uniformly-huge users don't straggle: every
+# task is equally loaded).  Read at call time, so tests monkeypatch
+# them to force a branch.
 HOT_MIN_ROWS = 200_000
 HOT_SKEW_RATIO = 8.0
 
@@ -58,36 +60,23 @@ def sessionize(
     id_col: str,
     gap_us: int = DEFAULT_GAP_US,
     bucket_us: int = DEFAULT_BUCKET_US,
-    mode: str = "auto",
-    hot_min_rows: int = HOT_MIN_ROWS,
-    hot_skew_ratio: float = HOT_SKEW_RATIO,
 ) -> DataFrame:
     """Gap sessionization with adaptive skew handling.
 
-    ``mode="plain"`` / ``mode="bucketed"`` pin the formulation (no
-    probe — the right call when the caller knows the distribution).
-    ``mode="auto"`` (default) probes per-user counts first: ONE
-    single-column scan whose shuffle carries one partially-aggregated
-    row per user, reduced to two numbers on the driver.  Plain unless
-    some user exceeds ``hot_min_rows`` AND ``hot_skew_ratio``× the
-    mean — the measured condition under which the one-window cumsum
-    grows a straggler (r7 sf10 soak: 30% hot user → 2.6× max/median
-    task skew; bucketed → ~1.0).  Both formulations are value-identical
-    (asserted against each other and the DuckDB oracle)."""
-    if mode == "plain":
-        return sessionize_plain(df, user_col, ts_col, id_col, gap_us)
-    if mode == "bucketed":
-        return sessionize_bucketed(
-            df, user_col, ts_col, id_col, gap_us, bucket_us
-        )
-    if mode != "auto":
-        raise ValueError(f"mode must be auto|plain|bucketed, got {mode!r}")
+    Probes per-user counts first: ONE single-column scan whose shuffle
+    carries one partially-aggregated row per user, reduced to two
+    numbers on the driver.  Plain unless some user exceeds
+    ``HOT_MIN_ROWS`` AND ``HOT_SKEW_RATIO``× the mean — the measured
+    condition under which the one-window cumsum grows a straggler (r7
+    sf10 soak: 30% hot user → 2.6× max/median task skew; bucketed →
+    ~1.0).  Both formulations are value-identical (asserted against
+    each other and the DuckDB oracle)."""
     # short-circuit BEFORE the per-user probe: if the whole input can't
-    # hold hot_min_rows rows, no user can possibly be hot.  The bound
+    # hold HOT_MIN_ROWS rows, no user can possibly be hot.  The bound
     # comes from parquet footers on the driver — zero Spark jobs — so
     # small/unskewed callers pay NOTHING over the plain formulation.
     bound = row_upper_bound(df)
-    if bound is not None and bound < hot_min_rows:
+    if bound is not None and bound < HOT_MIN_ROWS:
         return sessionize_plain(df, user_col, ts_col, id_col, gap_us)
     probe = (
         df.select(user_col)
@@ -99,8 +88,8 @@ def sessionize(
     hot = (
         probe is not None
         and probe.mx is not None
-        and probe.mx >= hot_min_rows
-        and probe.mx >= hot_skew_ratio * float(probe.mean or 1.0)
+        and probe.mx >= HOT_MIN_ROWS
+        and probe.mx >= HOT_SKEW_RATIO * float(probe.mean or 1.0)
     )
     if hot:
         return sessionize_bucketed(

@@ -6617,11 +6617,9 @@ def dsir_importance_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     target = d.filter(F.col("doc_id") % 50 == 0)
     corpus = d.filter(F.col("doc_id") % 50 != 0)
     scored = importance_weights(corpus, target)
-    out = scored.select(
+    return scored.select(
         "doc_id", F.col("n_ngrams").cast("long").alias("n_ngrams"),
         F.col("score").cast("long").alias("score"), "selected")
-    out.release_feature_cut = scored.release_feature_cut
-    return out
 
 
 def vocab_estimate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6677,11 +6675,9 @@ def corpus_overlap_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang", F.expr(_tokens_sql("text")).alias("toks")).select(
         "lang", F.explode(F.expr(_shingles_sql(2))).alias("gram"))
     out = hash_sampled_overlap(grams, "lang", "gram", 4)
-    result = out.select(
+    return out.select(
         "g_a", "g_b", "n_a", "n_b", "n_common",
         "inter_estimate", "union_estimate", "jaccard_permille")
-    result.release_sample_cut = out.release_sample_cut
-    return result
 
 
 def blocklist_filter_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6776,11 +6772,9 @@ def pmi_collocations_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _docs_parallel(spark, sf_dir)
     out = pmi_collocations(d, "text", min_count=5, scale=1_000_000)
-    result = out.select(
+    return out.select(
         "w1", "w2", "c_xy", "c1", "c2", "n_tokens",
         "pmi_ratio_scaled")
-    result.release_count_table = out.release_count_table
-    return result
 
 
 def link_rank_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6801,9 +6795,7 @@ def link_rank_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("doc_id") * 7 + 3) % 101).alias("dst"))
     out = link_rank(edges, "src", "dst", iterations=2,
                     damping_permille=850, scale=1_000_000)
-    result = out.select("node", "out_degree", "rank")
-    result.release_edges = out.release_edges
-    return result
+    return out.select("node", "out_degree", "rank")
 
 
 def token_budget_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6865,8 +6857,8 @@ def selection_pipeline_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the MINT-side leader join that plants the duplicates (fixture
     construction — broadcast at graded SF, co-partitioned on a real
     corpus).  The minted corpus and the two id-sized flag cuts
-    persist so the mint subtree runs once, not once per consuming
-    branch (review find); release via release_feature_cut."""
+    are cut so the mint subtree runs once, not once per consuming
+    branch (review find)."""
     from verified_sources_spark.llm.crawlgov import blocklist_verdicts
     from verified_sources_spark.llm.dsir import importance_weights
 
@@ -6931,7 +6923,7 @@ def selection_pipeline_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         dup_flags.filter(~F.col("is_dup")).select("doc_id"),
         "doc_id", "left_semi")
     scored = importance_weights(survivors, target)
-    out = (
+    return (
         corpus.select("doc_id")
         .join(verdicts, "doc_id", "left")
         .join(dup_flags, "doc_id", "left")
@@ -6947,14 +6939,6 @@ def selection_pipeline_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "kept",
             ~F.col("blocked") & ~F.col("is_dup") & F.col("selected")))
-
-    def _release() -> None:
-        # checkpoint blocks self-clean on GC; only DSIR's cuts need an
-        # explicit drop
-        scored.release_feature_cut()
-
-    out.release_feature_cut = _release
-    return out
 
 
 def length_quantiles_docs(spark: SparkSession, sf_dir: str) -> DataFrame:

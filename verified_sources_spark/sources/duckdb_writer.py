@@ -38,43 +38,13 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame
 
-
-def _ident(name: str) -> str:
-    return '"' + str(name).replace('"', '""') + '"'
-
-
-def _lit(s: str) -> str:
-    return "'" + str(s).replace("'", "''") + "'"
-
-
-def _null_safe_on(keys: Sequence[str], left: str, right: str) -> str:
-    return " AND ".join(
-        f"{left}.{_ident(k)} IS NOT DISTINCT FROM {right}.{_ident(k)}"
-        for k in keys
-    )
-
-
-def _dedup_select(
-    cols: Sequence[str],
-    src: str,
-    merge_keys: Sequence[str],
-    dedup_sort: Sequence[str] | None,
-    descending: bool,
-) -> str:
-    """Staging → source relation, one row per key when *dedup_sort* is
-    given (DISTINCT ON keeps the first row per key in sort order — the
-    SQL twin of the engine's ``keep_latest``, identical to pg_writer)."""
-    col_sql = ", ".join(_ident(c) for c in cols)
-    if not dedup_sort:
-        return f"SELECT {col_sql} FROM {src}"
-    direction = "DESC NULLS LAST" if descending else "ASC NULLS LAST"
-    keys_sql = ", ".join(_ident(k) for k in merge_keys)
-    order = keys_sql + ", " + ", ".join(
-        f"{_ident(s)} {direction}" for s in dedup_sort
-    )
-    return (
-        f"SELECT DISTINCT ON ({keys_sql}) {col_sql} FROM {src} ORDER BY {order}"
-    )
+from verified_sources_spark.sources.pg_writer import (
+    _dedup_select,
+    _finalize_delete_insert,
+    _ident,
+    _lit,
+    _null_safe_on,
+)
 
 
 def _existing_columns(con, table: str) -> list[str] | None:
@@ -238,32 +208,6 @@ def write_duckdb(
         if staging_dir is None:
             shutil.rmtree(stage_root, ignore_errors=True)
     return {"staged": int(staged), "applied": True}
-
-
-def _finalize_delete_insert(
-    con, table, src, data_cols, merge_keys, dedup_sort, dedup_descending,
-    hard_delete_col,
-) -> None:
-    """The reference's default merge strategy: delete every touched key,
-    insert the deduped non-deleted source rows (pg_writer twin)."""
-    on = _null_safe_on(merge_keys, "t", "s")
-    keys_sql = ", ".join(_ident(k) for k in merge_keys)
-    con.execute(
-        f"DELETE FROM {_ident(table)} t USING "
-        f"(SELECT DISTINCT {keys_sql} FROM {src}) s WHERE {on}"
-    )
-    sel = _dedup_select(
-        data_cols + ([hard_delete_col] if hard_delete_col else []),
-        src, merge_keys, dedup_sort, dedup_descending,
-    )
-    insert_cols = ", ".join(_ident(c) for c in data_cols)
-    not_deleted = (
-        f" WHERE {_ident(hard_delete_col)} IS NULL" if hard_delete_col else ""
-    )
-    con.execute(
-        f"INSERT INTO {_ident(table)} ({insert_cols}) "
-        f"SELECT {insert_cols} FROM ({sel}) x{not_deleted}"
-    )
 
 
 def _finalize_upsert(

@@ -240,17 +240,19 @@ def _null_safe_on(keys: Sequence[str], left: str, right: str) -> str:
 
 def _dedup_select(
     cols: Sequence[str],
-    staging: str,
+    src: str,
     merge_keys: Sequence[str],
     dedup_sort: Sequence[str] | None,
     descending: bool,
 ) -> str:
     """Staging → source relation SQL, one row per key when *dedup_sort*
     is given (DISTINCT ON keeps the first row per key in sort order —
-    PostgreSQL's native form of the engine's ``keep_latest``)."""
+    the native form of the engine's ``keep_latest`` in PostgreSQL and
+    DuckDB alike).  *src* is relation SQL: a quoted staging table here,
+    a ``read_parquet(...)`` call in sources/duckdb_writer.py."""
     col_sql = ", ".join(_ident(c) for c in cols)
     if not dedup_sort:
-        return f"SELECT {col_sql} FROM {_ident(staging)}"
+        return f"SELECT {col_sql} FROM {src}"
     direction = "DESC NULLS LAST" if descending else "ASC NULLS LAST"
     keys_sql = ", ".join(_ident(k) for k in merge_keys)
     order = keys_sql + ", " + ", ".join(
@@ -258,7 +260,7 @@ def _dedup_select(
     )
     return (
         f"SELECT DISTINCT ON ({keys_sql}) {col_sql} "
-        f"FROM {_ident(staging)} ORDER BY {order}"
+        f"FROM {src} ORDER BY {order}"
     )
 
 
@@ -393,12 +395,12 @@ def write_postgres(
                 )
             elif strategy == "upsert":
                 _finalize_upsert(
-                    c, table, staging, target_cols, data_cols, merge_keys,
-                    dedup_sort, dedup_descending, hard_delete_col,
+                    c, table, _ident(staging), target_cols, data_cols,
+                    merge_keys, dedup_sort, dedup_descending, hard_delete_col,
                 )
             else:
                 _finalize_delete_insert(
-                    c, table, staging, data_cols, merge_keys,
+                    c, table, _ident(staging), data_cols, merge_keys,
                     dedup_sort, dedup_descending, hard_delete_col,
                 )
             if ledger is not None:
@@ -421,21 +423,23 @@ def write_postgres(
 
 
 def _finalize_delete_insert(
-    c, table, staging, data_cols, merge_keys, dedup_sort, dedup_descending,
+    c, table, src, data_cols, merge_keys, dedup_sort, dedup_descending,
     hard_delete_col,
 ) -> None:
     """The reference's default merge strategy: delete every touched key,
     insert the deduped non-deleted source rows — the SQL twin of
-    ``merge_dataframes`` (target ⟕anti src ∪ dedup(src ∖ deletes))."""
+    ``merge_dataframes`` (target ⟕anti src ∪ dedup(src ∖ deletes)).
+    *c* is any client with ``execute(sql)`` (pg_wire or a DuckDB
+    connection); *src* is relation SQL."""
     on = _null_safe_on(merge_keys, "t", "s")
     c.execute(
         f"DELETE FROM {_ident(table)} t USING (SELECT DISTINCT "
         + ", ".join(_ident(k) for k in merge_keys)
-        + f" FROM {_ident(staging)}) s WHERE {on}"
+        + f" FROM {src}) s WHERE {on}"
     )
-    src = _dedup_select(
+    sel = _dedup_select(
         data_cols + ([hard_delete_col] if hard_delete_col else []),
-        staging, merge_keys, dedup_sort, dedup_descending,
+        src, merge_keys, dedup_sort, dedup_descending,
     )
     insert_cols = ", ".join(_ident(col) for col in data_cols)
     not_deleted = (
@@ -443,21 +447,21 @@ def _finalize_delete_insert(
     )
     c.execute(
         f"INSERT INTO {_ident(table)} ({insert_cols}) "
-        f"SELECT {insert_cols} FROM ({src}) src{not_deleted}"
+        f"SELECT {insert_cols} FROM ({sel}) src{not_deleted}"
     )
 
 
 def _finalize_upsert(
-    c, table, staging, target_cols, data_cols, merge_keys, dedup_sort,
+    c, table, src, target_cols, data_cols, merge_keys, dedup_sort,
     dedup_descending, hard_delete_col,
 ) -> None:
     """PostgreSQL 15 ``MERGE``: update-in-place upsert.  Source rows are
     always key-deduped (MERGE refuses a source that touches a target row
     twice); target columns absent from the source are set NULL on
     update, mirroring the engine's replace-the-row semantics."""
-    src = _dedup_select(
+    sel = _dedup_select(
         data_cols + ([hard_delete_col] if hard_delete_col else []),
-        staging, merge_keys,
+        src, merge_keys,
         dedup_sort or list(merge_keys), dedup_descending,
     )
     on = _null_safe_on(merge_keys, "t", "s")
@@ -485,7 +489,7 @@ def _finalize_upsert(
         f"THEN INSERT ({insert_cols}) VALUES ({insert_vals})"
     )
     c.execute(
-        f"MERGE INTO {_ident(table)} t USING ({src}) s ON {on} "
+        f"MERGE INTO {_ident(table)} t USING ({sel}) s ON {on} "
         + " ".join(clauses)
     )
 
