@@ -110,3 +110,56 @@ def test_append_boundary_reread_deduped_by_row_identity(spark, tmp_path):
     info3 = p.run(src2, "t", write_disposition="append", incremental="updated")
     assert info3.rows_loaded == 0
     assert p.read("t").count() == 4
+
+
+@pytest.fixture
+def checkpoint_dir(spark, tmp_path):
+    """A checkpoint directory for reliable cuts on the shared session;
+    puts back whatever was set before, including nothing."""
+    sc = spark.sparkContext._jsc.sc()
+    before = sc.checkpointDir()
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ck"))
+    yield
+    getattr(sc, "checkpointDir_$eq")(before)  # SparkContext's private var
+
+
+def _incremental_loads(spark, path):
+    """Three merge loads with boundary ties; the row count and the new
+    cursor come from the eager cut's observed metrics."""
+    p = pipeline(spark, path)
+    schema = "id long, updated long, v string"
+    batches = [
+        [(1, 10, "a"), (2, 20, "b"), (3, 20, "c")],
+        [(2, 20, "b"), (3, 20, "c"), (4, 20, "tie"), (5, 30, "d")],
+        [(5, 30, "d"), (6, 5, "stale")],
+    ]
+    out = []
+    for rows in batches:
+        info = p.run(spark.createDataFrame(rows, schema), "t", write_disposition="merge",
+                     primary_key="id", incremental="updated")
+        out.append((info.rows_loaded, info.cursor_value, p.state.get("t"),
+                    p.state.get_extra("t", "boundary_hashes")))
+    table = sorted(tuple(r) for r in p.read("t").collect())
+    return out, table
+
+
+def test_incremental_metrics_same_in_both_cut_modes(spark, tmp_path, monkeypatch, checkpoint_dir):
+    monkeypatch.setenv("SPARK_GRAFT_CUT_MODE", "local")
+    local = _incremental_loads(spark, str(tmp_path / "local"))
+    monkeypatch.setenv("SPARK_GRAFT_CUT_MODE", "reliable")
+    reliable = _incremental_loads(spark, str(tmp_path / "reliable"))
+    assert reliable == local
+    loads, table = local
+    assert [(n, c, s) for n, c, s, _ in loads] == [(3, 20, 20), (2, 30, 30), (0, None, 30)]
+    assert [len(h) for *_, h in loads] == [2, 1, 1]
+    assert table == [(1, 10, "a"), (2, 20, "b"), (3, 20, "c"), (4, 20, "tie"), (5, 30, "d")]
+
+
+def test_incremental_run_keeps_session_serializable(spark, tmp_path):
+    """The observed load metrics must not create the session's
+    ObservationManager: it is not serializable, and an ML model that keeps
+    the session in its training summary then fails in every task."""
+    p = pipeline(spark, str(tmp_path / "ds"))
+    src = spark.createDataFrame([(1, 10), (2, 20)], "id long, updated long")
+    assert p.run(src, "t", incremental="updated").cursor_value == 20
+    spark._jvm.org.apache.spark.util.Utils.serialize(spark._jsparkSession)

@@ -26,5 +26,14 @@ DataFrame/SQL API and Catalyst/Tungsten choose the physical strategy.
 
 __version__ = "0.1.0"
 
+from pyspark import TaskContext as _TaskContext
+
+if _TaskContext.get() is not None:
+    # imported inside a Python worker's task: stop every later task in
+    # this worker from re-reading pyspark.zip (see _worker_imports)
+    from verified_sources_spark import _worker_imports
+
+    _worker_imports.install()
+
 from verified_sources_spark.session import get_spark  # noqa: F401
 from verified_sources_spark.catalog import load_tables, register_views  # noqa: F401

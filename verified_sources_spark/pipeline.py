@@ -33,6 +33,7 @@ from dataclasses import dataclass
 from typing import Any
 
 import pyspark.sql.functions as F
+from pyspark.serializers import CPickleSerializer
 from pyspark.sql import DataFrame, SparkSession
 
 from verified_sources_spark.cut import cut
@@ -41,10 +42,26 @@ from verified_sources_spark.operators.incremental import (
     CursorStore,
     _cursor_col,
     incremental_filter,
-    max_cursor_value,
 )
 from verified_sources_spark.operators.merge import ParquetSink
 from verified_sources_spark.operators.table_format import ManifestTable
+
+
+_LOAD_METRICS = "pipeline_load"
+
+
+def _observed_metrics(df: DataFrame, name: str) -> tuple:
+    """The values ``df.observe(name, ...)`` collected when ``df`` ran.
+
+    Read from ``df``'s own query execution, not through
+    ``pyspark.sql.Observation``: an Observation creates the session's
+    ObservationManager, which is not serializable, and from then on every
+    task closure that captures the session (an ML model keeps it in its
+    training summary) fails with NotSerializableException.
+    """
+    jrow = df._jdf.queryExecution().observedMetrics().get(name).get()
+    utils = df.sparkSession._jvm.org.apache.spark.sql.api.python.PythonSQLUtils
+    return tuple(CPickleSerializer().loads(utils.toPyRow(jrow)))
 
 
 @dataclass
@@ -105,12 +122,13 @@ class Pipeline:
         """
         df = data
         resource = f"{table_name}"
-        last = None
+        last = observed = None
         if incremental is not None:
             last = self.state.get(resource)
             df = incremental_filter(
                 df, incremental, last_value=last, end_value=incremental_end
             )
+            row_hash = self._row_hash(df)
             # the >= last_value boundary re-read: drop rows ALREADY LOADED
             # last run, identified by row hash (the reference's incremental
             # unique-hash dedup) — so append does not duplicate the
@@ -118,12 +136,19 @@ class Pipeline:
             known = self.state.get_extra(resource, "boundary_hashes")
             if last is not None and known:
                 at_boundary = _cursor_col(incremental) == F.lit(last)
-                df = df.filter(~(at_boundary & self._row_hash(df).isin(list(known))))
+                df = df.filter(~(at_boundary & row_hash.isin(list(known))))
             # pin ONE evaluation: the write, the row count, and the cursor
             # below must all describe the same data — a non-deterministic
             # source re-evaluated after the write could otherwise commit a
-            # cursor past rows that were never written (silent data loss)
-            df = df.transform(cut, eager=True)
+            # cursor past rows that were never written (silent data loss).
+            # The count and the new watermark are observed on the cut's own
+            # job, not by two more actions over its result.
+            observed = df.observe(
+                _LOAD_METRICS,
+                F.count(F.lit(1)).alias("rows"),
+                F.max(_cursor_col(incremental)).alias("cursor"),
+            )
+            df = observed.transform(cut, eager=True)
 
         sink = self.sink(table_name, partition_by=partition_by)
         if write_disposition == "append":
@@ -143,31 +168,30 @@ class Pipeline:
         else:
             raise ValueError(f"unknown write_disposition: {write_disposition!r}")
 
-        rows = df.count()
-        cursor_val = None
-        if incremental is not None:
-            cursor_val = max_cursor_value(df, incremental)
-            if cursor_val is not None:
-                # commit AFTER the successful write — a failed load never
-                # advances the cursor (the reference's state contract).
-                # Record the hashes of rows AT the new boundary so the next
-                # run's >= re-read can drop exactly them; if the watermark
-                # did not move, the previously-known hashes stay valid too.
-                boundary = (
-                    df.filter(_cursor_col(incremental) == F.lit(cursor_val))
-                    .select(self._row_hash(df).alias("h"))
-                    .limit(self.BOUNDARY_HASH_CAP + 1)
-                    .collect()
+        if observed is None:
+            return LoadInfo(table_name, write_disposition, df.count())
+        rows, cursor_val = _observed_metrics(observed, _LOAD_METRICS)
+        if cursor_val is not None:
+            # commit AFTER the successful write — a failed load never
+            # advances the cursor (the reference's state contract).
+            # Record the hashes of rows AT the new boundary so the next
+            # run's >= re-read can drop exactly them; if the watermark
+            # did not move, the previously-known hashes stay valid too.
+            boundary = (
+                df.filter(_cursor_col(incremental) == F.lit(cursor_val))
+                .select(row_hash.alias("h"))
+                .limit(self.BOUNDARY_HASH_CAP + 1)
+                .collect()
+            )
+            hashes = [r["h"] for r in boundary]
+            if len(hashes) > self.BOUNDARY_HASH_CAP:
+                hashes = []  # too many ties to track — fall back to re-read
+            elif last is not None and str(cursor_val) == str(last):
+                hashes = sorted(
+                    set(hashes)
+                    | set(self.state.get_extra(resource, "boundary_hashes") or [])
                 )
-                hashes = [r["h"] for r in boundary]
-                if len(hashes) > self.BOUNDARY_HASH_CAP:
-                    hashes = []  # too many ties to track — fall back to re-read
-                elif last is not None and str(cursor_val) == str(last):
-                    hashes = sorted(
-                        set(hashes)
-                        | set(self.state.get_extra(resource, "boundary_hashes") or [])
-                    )
-                self.state.set(resource, cursor_val, boundary_hashes=hashes)
+            self.state.set(resource, cursor_val, boundary_hashes=hashes)
         return LoadInfo(table_name, write_disposition, rows, cursor_val)
 
     BOUNDARY_HASH_CAP = 4096
