@@ -400,3 +400,27 @@ def test_live_logical_replication_roundtrip(spark, pg_server, pgc):
         assert ("D", 1, None) in ops
     finally:
         pgc.execute("SELECT pg_drop_replication_slot('vss_slot')")
+
+
+def test_walsender_close_releases_slot(pg_server, pgc):
+    """``close()`` returns only once the walsender backend has exited, so
+    the slot it streamed from is no longer active and drops at once."""
+    from verified_sources_spark.sources.pg_wire import WalsenderClient
+
+    pgc.execute("DROP TABLE IF EXISTS slot_src")
+    pgc.execute("CREATE TABLE slot_src (id bigint PRIMARY KEY)")
+    pgc.execute("DROP PUBLICATION IF EXISTS slot_pub")
+    pgc.execute("CREATE PUBLICATION slot_pub FOR TABLE slot_src")
+    for i in range(5):
+        pgc.execute(
+            "SELECT pg_create_logical_replication_slot('slot_rel', 'pgoutput')"
+        )
+        pgc.execute(f"INSERT INTO slot_src VALUES ({i})")
+        with WalsenderClient(
+            pg_server["host"], pg_server["port"], pg_server["database"],
+            pg_server["user"],
+        ) as wc:
+            for msg in wc.start_replication("slot_rel", "slot_pub", start_lsn=0):
+                if msg.payload[:1] == b"I":
+                    break
+        pgc.execute("SELECT pg_drop_replication_slot('slot_rel')")

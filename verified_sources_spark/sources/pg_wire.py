@@ -353,6 +353,13 @@ class WalsenderClient:
     def close(self) -> None:
         try:
             self._send(b"X", b"")  # Terminate
+            if self._REPLICATION:
+                # A walsender releases its slot only as its backend exits,
+                # before the server closes the socket.  Wait for that EOF so
+                # the slot can be dropped or reused as soon as close() returns.
+                self._sock.settimeout(5.0)
+                while self._sock.recv(65536):
+                    pass
         except OSError:
             pass
         self._sock.close()
