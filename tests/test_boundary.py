@@ -1,0 +1,105 @@
+"""verified_sources_spark.boundary.map_rows: the one batch loop around
+every per-row Python stage."""
+
+from __future__ import annotations
+
+import pathlib
+import re
+
+from verified_sources_spark.boundary import map_rows
+
+PKG = pathlib.Path(__file__).resolve().parent.parent / "verified_sources_spark"
+
+# the batch loops that stay outside map_rows: file -> (count, reason)
+BATCH_LOOPS = {
+    "boundary.py": (1, "the one per-row loop"),
+    "llm/similarity.py": (6, "numpy matrix math over the whole batch"),
+    "llm/multimodal.py": (3, "resize: ids pass through as one array"),
+    "llm/endpoint.py": (2, "one HTTP request per batch, not per row"),
+    "llm/bpe.py": (1, "adds a column; input columns pass through as-is"),
+    "operators/deletion_vectors.py": (1, "a DV frames its position array whole"),
+    "sources/pg_writer.py": (1, "a sink: one transaction per batch"),
+}
+
+
+def test_long_column_round_trips_64_bits_with_nulls(spark):
+    df = spark.createDataFrame([(0,), (1,), (2,)], "i long").coalesce(1)
+    wide = {0: 2**63 - 1, 1: -(2**63), 2: None}
+
+    def emit(i):
+        yield {"i": i, "h": wide[i]}
+
+    got = {r.i: r.h for r in map_rows(df, emit, "i long, h long").collect()}
+    assert got == wide
+
+
+def test_rows_per_input_follow_the_generator(spark):
+    df = spark.createDataFrame([(0,), (1,), (3,)], "n long")
+
+    def fan(n):
+        for k in range(n):
+            yield {"n": n, "k": k}
+
+    out = map_rows(df, fan, "n long, k int").collect()
+    assert sorted((r.n, r.k) for r in out) == [(1, 0), (3, 0), (3, 1), (3, 2)]
+
+
+def test_multi_column_input_in_column_order(spark):
+    df = spark.createDataFrame([("a", 1), ("b", 2)], "s string, n long")
+
+    def rep(s, n):
+        yield {"t": s * n}
+
+    assert sorted(r.t for r in map_rows(df, rep, "t string").collect()) == ["a", "bb"]
+
+
+def test_empty_partition_gives_schemad_empty_frame(spark):
+    # partition 0 (ids 0, 1) yields no rows: its batch is an empty frame
+    df = spark.range(0, 4, numPartitions=2)
+
+    def late(i):
+        if i >= 2:
+            yield {"n": i, "blob": b"x", "s": "y"}
+
+    out = map_rows(df, late, "n long, blob binary, s string")
+    assert out.schema.simpleString() == "struct<n:bigint,blob:binary,s:string>"
+    assert sorted(out.collect()) == [(2, b"x", "y"), (3, b"x", "y")]
+    assert map_rows(df.where("id < 2"), late, "n long, blob binary, s string").collect() == []
+
+
+def test_missing_key_reads_null(spark):
+    df = spark.createDataFrame([(1,), (2,)], "n long")
+
+    def partial(n):
+        yield {"n": n} if n == 1 else {"n": n, "s": "two", "h": 7}
+
+    rows = {r.n: (r.s, r.h) for r in map_rows(df, partial, "n long, s string, h long").collect()}
+    assert rows == {1: (None, None), 2: ("two", 7)}
+
+
+def test_plan_names_the_stage_after_its_enclosing_function(spark):
+    df = spark.range(3)
+
+    def probe(i):
+        yield {"i": i}
+
+    plan = map_rows(df, probe, "i long")._jdf.queryExecution().optimizedPlan().toString()
+    assert "MapInPandas" in plan
+    assert "test_plan_names_the_stage_after_its_enclosing_function.probe(" in plan
+
+
+def test_no_hand_written_row_loops_outside_boundary():
+    """No Spark: new per-row stages go through map_rows, and every batch
+    loop left is on BATCH_LOOPS with its reason."""
+    frame_yield = re.compile(r"yield (pd\.DataFrame\(\s*rows|exact_frame\()")
+    loops = {}
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        src = path.read_text()
+        if rel != "boundary.py":
+            assert not frame_yield.search(src), f"{rel}: per-row frame built by hand; use map_rows"
+        n = len(re.findall(r"^\s*for pdf in batches:", src, re.M))
+        if n:
+            loops[rel] = n
+    assert loops == {k: n for k, (n, _) in BATCH_LOOPS.items()}
+    assert all(reason for _, reason in BATCH_LOOPS.values())

@@ -90,9 +90,10 @@ def test_spark_operator(spark):
 
 
 def test_fuzz_battery():
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo/tests")
+    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from test_fuzz_frontdoors import _battery
 
     t = pa.table({"id": list(range(20)),
@@ -286,9 +287,10 @@ def test_arrow_in_spark_door_and_router(spark):
 
 
 def test_arrow_fuzz_battery():
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo/tests")
+    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from test_fuzz_frontdoors import _battery
 
     from verified_sources_spark.llm.datablob import arrow_rows_blob

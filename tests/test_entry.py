@@ -4,12 +4,13 @@ in tools/check_correctness.py)."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from tools.check_correctness import TABLES, result_hash  # noqa: E402

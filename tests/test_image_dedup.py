@@ -135,7 +135,7 @@ def test_dhash_exact_in_mixed_refusal_batches(spark):
     demote the hash column to float64 (53-bit mantissa) — the same
     asset must hash identically whether or not its batch also carried
     a corrupt file.  Regression for the pandas list-of-dicts dtype
-    trap (llm/_frames.exact_frame)."""
+    trap (boundary.map_rows builds long columns as nullable Int64)."""
     from verified_sources_spark.llm.image_dedup import image_dhash
     from verified_sources_spark.llm.png_codec import encode as penc
     import numpy as np

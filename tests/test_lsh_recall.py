@@ -6,11 +6,12 @@ under theory."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 
 from lsh_recall_sweep import (  # noqa: E402
     exact_jaccard_pairs,

@@ -5,9 +5,10 @@ dedup-group scheme's under-merge stays bounded."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 
 from simhash_recall_sweep import brute_force_pairs, closure  # noqa: E402
 

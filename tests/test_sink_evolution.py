@@ -3,8 +3,10 @@
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from verified_sources_spark.operators.merge import ParquetSink
+from verified_sources_spark.operators.table_format import ManifestTable
 from verified_sources_spark.sources.cdc import split_on_schema_change
 from verified_sources_spark.sources.rest import (
     LocalPagesTransport,
@@ -87,12 +89,15 @@ def test_partition_pruned_merge_leaves_untouched_files_byte_identical(spark, tmp
     assert rows == {1: ("2024-01-01", "a2"), 2: ("2024-01-02", "b"), 3: ("2024-01-03", "c")}
 
 
-def test_partition_pruned_merge_key_moves_partition(spark, tmp_path, sink_fs):
+@pytest.mark.parametrize("table_cls", [ParquetSink, ManifestTable],
+                         ids=lambda c: c.__name__)
+def test_partition_pruned_merge_key_moves_partition(spark, tmp_path, sink_fs, table_cls):
     """A key whose partition value changes must not leave its old row
     behind in the previous partition (pruning by source partitions alone
-    would miss it)."""
+    would miss it) — on both merge paths, which share
+    ``merge.touched_partitions``."""
     root = str(tmp_path / "t")
-    sink = ParquetSink(spark, root, partition_by=["day"], fs=sink_fs)
+    sink = table_cls(spark, root, partition_by=["day"], fs=sink_fs)
     sink.append(
         spark.createDataFrame(
             [("2024-01-01", 1, "a"), ("2024-01-02", 2, "b")], "day string, k long, v string"

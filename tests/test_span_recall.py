@@ -9,9 +9,10 @@ structure rather than accidental values."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 
 from span_recall_sweep import brute_force_truth  # noqa: E402
 

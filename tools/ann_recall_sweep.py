@@ -13,9 +13,10 @@ IVF family, recall@3 vs cosine_topk, and prints one JSON line per
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:

@@ -14,11 +14,13 @@ Usage: python tools/deep_fuzz.py [n_seeds] [n_each] [timeout_sec]
 from __future__ import annotations
 
 import inspect
+import os
 import signal
 import sys
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tests"))
 
 
 class Hang(Exception):

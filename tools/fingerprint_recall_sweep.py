@@ -20,10 +20,11 @@ Usage: python tools/fingerprint_recall_sweep.py [n_docs] [max_hamming]
 
 from __future__ import annotations
 
+import os
 import random
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def plant_corpus(n: int, max_h: int, seed: int = 11,

@@ -23,10 +23,11 @@ Usage: python tools/lsh_recall_sweep.py [sf_dir]
 from __future__ import annotations
 
 import itertools
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def shingle_sets(texts: dict[int, str], n: int = 3) -> dict[int, set]:

@@ -7,10 +7,11 @@ Usage: python tools/probe_r16_media.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from verified_sources_spark.plans.queries import QUERIES  # noqa: E402
 from verified_sources_spark.session import get_spark  # noqa: E402

@@ -18,7 +18,7 @@ import sys
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from verified_sources_spark.plans.queries import QUERIES  # noqa: E402
 from verified_sources_spark.session import get_spark  # noqa: E402

@@ -22,9 +22,10 @@ Usage: python tools/simhash_recall_sweep.py [sf_dir] [max_hamming]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def brute_force_pairs(sigs: dict[int, int], max_hamming: int) -> set:

@@ -27,10 +27,11 @@ Usage: python tools/span_recall_sweep.py [sf_dir] [L] [windows...]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def brute_force_truth(texts: dict[int, str], L: int) -> set[tuple]:

@@ -45,6 +45,8 @@ import tarfile
 import zipfile
 import zlib
 
+from verified_sources_spark.boundary import map_rows
+
 __all__ = [
     "ArchiveError",
     "ArchiveExplosionError",
@@ -236,42 +238,27 @@ def archive_members(df, id_col: str = "doc_id", asset_col: str = "asset"):
     member (utf-8 text decoded with replacement — binary members still
     land with their true byte counts).  A corrupt archive yields one
     ``decoded_ok=false`` row instead of failing the task."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                payload = bytes(payload)
-                fmt = sniff_archive_format(payload)
-                try:
-                    n_before = len(rows)
-                    for name, data in iter_members(payload):
-                        rows.append(
-                            {"doc_id": _id, "decoded_ok": True,
-                             "archive_format": fmt, "member_name": name,
-                             "n_bytes": len(data),
-                             "text": data.decode("utf-8", errors="replace")}
-                        )
-                    if len(rows) == n_before:  # valid but empty archive
-                        rows.append(
-                            {"doc_id": _id, "decoded_ok": True,
-                             "archive_format": fmt, "member_name": None,
-                             "n_bytes": 0, "text": None})
-                except ArchiveError:
-                    rows.append(
-                        {"doc_id": _id, "decoded_ok": False,
-                         "archive_format": None, "member_name": None,
-                         "n_bytes": None, "text": None})
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "decoded_ok", "archive_format",
-                               "member_name", "n_bytes", "text"])
+    def run(_id, payload):
+        payload = bytes(payload)
+        fmt = sniff_archive_format(payload)
+        try:
+            empty = True
+            for name, data in iter_members(payload):
+                empty = False
+                yield {"doc_id": _id, "decoded_ok": True,
+                       "archive_format": fmt, "member_name": name,
+                       "n_bytes": len(data),
+                       "text": data.decode("utf-8", errors="replace")}
+            if empty:  # valid but empty archive
+                yield {"doc_id": _id, "decoded_ok": True,
+                       "archive_format": fmt, "n_bytes": 0}
+        except ArchiveError:
+            yield {"doc_id": _id, "decoded_ok": False}
 
     from pyspark.sql import functions as F
 
-    out = df.select(F.col(id_col), F.col(asset_col)).mapInPandas(
-        run, ARCHIVE_MEMBERS_SCHEMA
-    )
+    out = map_rows(df.select(F.col(id_col), F.col(asset_col)), run,
+                   ARCHIVE_MEMBERS_SCHEMA)
     if id_col != "doc_id":
         out = out.withColumnRenamed("doc_id", id_col)
     return out
@@ -414,40 +401,29 @@ def shard_lines(df, id_col: str = "shard_id", asset_col: str = "asset"):
     front door (The Pile / RedPajama shape).  Corrupt or refused
     shards isolate as one ``decoded_ok=false`` row; payloads never
     shuffle — lines leave the scan's executor, bytes do not."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                payload = bytes(payload)
-                codec = sniff_shard_codec(payload)
-                try:
-                    text = decompress_shard(payload).decode(
-                        "utf-8", errors="replace")
-                    idx = 0
-                    for line in text.split("\n"):
-                        if not line:
-                            continue
-                        rows.append({"shard_id": _id, "decoded_ok": True,
-                                     "codec": codec, "line_idx": idx,
-                                     "text": line})
-                        idx += 1
-                    if idx == 0:  # valid but empty shard
-                        rows.append({"shard_id": _id, "decoded_ok": True,
-                                     "codec": codec, "line_idx": None,
-                                     "text": None})
-                except ArchiveError:
-                    rows.append({"shard_id": _id, "decoded_ok": False,
-                                 "codec": codec, "line_idx": None,
-                                 "text": None})
-            yield pd.DataFrame(
-                rows, columns=["shard_id", "decoded_ok", "codec",
-                               "line_idx", "text"])
+    def run(_id, payload):
+        payload = bytes(payload)
+        codec = sniff_shard_codec(payload)
+        try:
+            text = decompress_shard(payload).decode(
+                "utf-8", errors="replace")
+            idx = 0
+            for line in text.split("\n"):
+                if not line:
+                    continue
+                yield {"shard_id": _id, "decoded_ok": True,
+                       "codec": codec, "line_idx": idx,
+                       "text": line}
+                idx += 1
+            if idx == 0:  # valid but empty shard
+                yield {"shard_id": _id, "decoded_ok": True, "codec": codec}
+        except ArchiveError:
+            yield {"shard_id": _id, "decoded_ok": False, "codec": codec}
 
     from pyspark.sql import functions as F
 
-    out = df.select(F.col(id_col), F.col(asset_col)).mapInPandas(
+    out = map_rows(
+        df.select(F.col(id_col), F.col(asset_col)),
         run, SHARD_LINES_SCHEMA)
     if id_col != "shard_id":
         out = out.withColumnRenamed("shard_id", id_col)

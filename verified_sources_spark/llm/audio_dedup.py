@@ -33,13 +33,11 @@ row; decode itself is the pure-stdlib WAV codec, llm/wav_codec.py).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
+from verified_sources_spark.boundary import map_rows
 from verified_sources_spark.cut import cut
 
 AUDIO_FP_SCHEMA = T.StructType(
@@ -109,44 +107,28 @@ def audio_fingerprint(
     if freq_bands * (time_slices - 1) > 64:
         raise ValueError("freq_bands * (time_slices - 1) exceeds 64 bits")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(_id, payload):
         from verified_sources_spark.llm.wav_codec import decode
 
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                try:
-                    m = decode(bytes(payload))
-                    fp = _audio_fingerprint_of_samples(
-                        m["samples"], m["sample_rate"], time_slices, freq_bands
-                    )
-                    if fp >= 1 << 63:  # store as signed 64-bit long
-                        fp -= 1 << 64
-                    rows.append(
-                        {
-                            "doc_id": _id,
-                            "decoded_ok": True,
-                            "afp": fp,
-                            "sample_rate": m["sample_rate"],
-                            "n_frames": m["n_frames"],
-                        }
-                    )
-                except Exception:
-                    rows.append(
-                        {
-                            "doc_id": _id,
-                            "decoded_ok": False,
-                            "afp": None,
-                            "sample_rate": None,
-                            "n_frames": None,
-                        }
-                    )
-            from verified_sources_spark.llm._frames import exact_frame
-            # afp is a 64-bit hash: keep nullable-Int64, never float64
-            yield exact_frame(rows, [f.name for f in AUDIO_FP_SCHEMA.fields],
-                              int64_cols=("afp",))
+        try:
+            m = decode(bytes(payload))
+            fp = _audio_fingerprint_of_samples(
+                m["samples"], m["sample_rate"], time_slices, freq_bands
+            )
+            if fp >= 1 << 63:  # store as signed 64-bit long
+                fp -= 1 << 64
+            yield {
+                "doc_id": _id,
+                "decoded_ok": True,
+                "afp": fp,
+                "sample_rate": m["sample_rate"],
+                "n_frames": m["n_frames"],
+            }
+        except Exception:
+            yield {"doc_id": _id, "decoded_ok": False}
 
-    out = df.select(F.col(id_col), F.col(asset_col)).mapInPandas(
+    out = map_rows(
+        df.select(F.col(id_col), F.col(asset_col)),
         run, AUDIO_FP_SCHEMA
     )
     if id_col != "doc_id":
@@ -189,63 +171,50 @@ def audio_segments(
     if threshold < 0:
         raise ValueError("threshold must be non-negative")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(_id, payload):
         import numpy as np
 
         from verified_sources_spark.llm.wav_codec import decode
 
-        cols = [f.name for f in AUDIO_SEGMENTS_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                try:
-                    m = decode(bytes(payload))
-                    mono = np.asarray(m["samples"], dtype=np.float64)
-                    if mono.ndim == 2:
-                        mono = mono.mean(axis=1)
-                    rate = m["sample_rate"]
-                    w = max(1, (rate * frame_ms) // 1000)
-                    n_win = len(mono) // w
-                    if n_win == 0:
-                        raise ValueError("clip shorter than one frame")
-                    rms = np.sqrt(
-                        (mono[: n_win * w].reshape(n_win, w) ** 2).mean(axis=1)
-                    )
-                    active = rms > threshold
-                    segs = []
+        try:
+            m = decode(bytes(payload))
+            mono = np.asarray(m["samples"], dtype=np.float64)
+            if mono.ndim == 2:
+                mono = mono.mean(axis=1)
+            rate = m["sample_rate"]
+            w = max(1, (rate * frame_ms) // 1000)
+            n_win = len(mono) // w
+            if n_win == 0:
+                raise ValueError("clip shorter than one frame")
+            rms = np.sqrt(
+                (mono[: n_win * w].reshape(n_win, w) ** 2).mean(axis=1)
+            )
+            active = rms > threshold
+            segs = []
+            start = None
+            for i, a in enumerate(active):
+                if a and start is None:
+                    start = i
+                elif not a and start is not None:
+                    segs.append((start, i))
                     start = None
-                    for i, a in enumerate(active):
-                        if a and start is None:
-                            start = i
-                        elif not a and start is not None:
-                            segs.append((start, i))
-                            start = None
-                    if start is not None:
-                        segs.append((start, n_win))
-                    if not segs:
-                        rows.append(
-                            {"doc_id": _id, "decoded_ok": True,
-                             "seg_idx": None, "start_ms": None,
-                             "end_ms": None}
-                        )
-                    for s_idx, (s, e) in enumerate(segs):
-                        rows.append(
-                            {
-                                "doc_id": _id,
-                                "decoded_ok": True,
-                                "seg_idx": s_idx,
-                                "start_ms": s * w * 1000 // rate,
-                                "end_ms": e * w * 1000 // rate,
-                            }
-                        )
-                except Exception:
-                    rows.append(
-                        {"doc_id": _id, "decoded_ok": False, "seg_idx": None,
-                         "start_ms": None, "end_ms": None}
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+            if start is not None:
+                segs.append((start, n_win))
+            if not segs:
+                yield {"doc_id": _id, "decoded_ok": True}
+            for s_idx, (s, e) in enumerate(segs):
+                yield {
+                    "doc_id": _id,
+                    "decoded_ok": True,
+                    "seg_idx": s_idx,
+                    "start_ms": s * w * 1000 // rate,
+                    "end_ms": e * w * 1000 // rate,
+                }
+        except Exception:
+            yield {"doc_id": _id, "decoded_ok": False}
 
-    out = df.select(F.col(id_col), F.col(asset_col)).mapInPandas(
+    out = map_rows(
+        df.select(F.col(id_col), F.col(asset_col)),
         run, AUDIO_SEGMENTS_SCHEMA
     )
     if id_col != "doc_id":
@@ -328,42 +297,25 @@ def mp3_probe(
     named, so media ingestion treats MP3 exact-dedup-only).  A corrupt
     / truncated / non-MPEG payload yields ``decoded_ok=false``."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(_id, payload):
         from verified_sources_spark.llm.mp3_codec import probe
 
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                try:
-                    m = probe(bytes(payload))
-                    rows.append(
-                        {
-                            "doc_id": _id,
-                            "decoded_ok": True,
-                            "sample_rate": m["sample_rate"],
-                            "channels": m["channels"],
-                            "n_frames": m["n_frames"],
-                            "duration_ms": m["duration_ms"],
-                            "bitrate_kbps": m["bitrate_kbps"],
-                        }
-                    )
-                except Exception:
-                    rows.append(
-                        {
-                            "doc_id": _id,
-                            "decoded_ok": False,
-                            "sample_rate": None,
-                            "channels": None,
-                            "n_frames": None,
-                            "duration_ms": None,
-                            "bitrate_kbps": None,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in MP3_PROBE_SCHEMA.fields]
-            )
+        try:
+            m = probe(bytes(payload))
+            yield {
+                "doc_id": _id,
+                "decoded_ok": True,
+                "sample_rate": m["sample_rate"],
+                "channels": m["channels"],
+                "n_frames": m["n_frames"],
+                "duration_ms": m["duration_ms"],
+                "bitrate_kbps": m["bitrate_kbps"],
+            }
+        except Exception:
+            yield {"doc_id": _id, "decoded_ok": False}
 
-    out = df.select(F.col(id_col), F.col(asset_col)).mapInPandas(
+    out = map_rows(
+        df.select(F.col(id_col), F.col(asset_col)),
         run, MP3_PROBE_SCHEMA
     )
     if id_col != "doc_id":
@@ -396,44 +348,26 @@ def audio_probe(
     shuffle, samples never materialize; a corrupt / unknown payload
     yields ``decoded_ok=false``."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(_id, payload):
         from verified_sources_spark.llm.audio_io import probe_audio
 
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                try:
-                    m = probe_audio(bytes(payload))
-                    rows.append(
-                        {
-                            "doc_id": _id,
-                            "decoded_ok": True,
-                            "container": m["container"],
-                            "sample_rate": m["sample_rate"],
-                            "channels": m["channels"],
-                            "n_samples": m["n_samples"],
-                            "duration_ms": m["duration_ms"],
-                            "codec": m["codec"],
-                        }
-                    )
-                except Exception:
-                    rows.append(
-                        {
-                            "doc_id": _id,
-                            "decoded_ok": False,
-                            "container": None,
-                            "sample_rate": None,
-                            "channels": None,
-                            "n_samples": None,
-                            "duration_ms": None,
-                            "codec": None,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in AUDIO_PROBE_SCHEMA.fields]
-            )
+        try:
+            m = probe_audio(bytes(payload))
+            yield {
+                "doc_id": _id,
+                "decoded_ok": True,
+                "container": m["container"],
+                "sample_rate": m["sample_rate"],
+                "channels": m["channels"],
+                "n_samples": m["n_samples"],
+                "duration_ms": m["duration_ms"],
+                "codec": m["codec"],
+            }
+        except Exception:
+            yield {"doc_id": _id, "decoded_ok": False}
 
-    out = df.select(F.col(id_col), F.col(asset_col)).mapInPandas(
+    out = map_rows(
+        df.select(F.col(id_col), F.col(asset_col)),
         run, AUDIO_PROBE_SCHEMA
     )
     if id_col != "doc_id":

@@ -293,6 +293,7 @@ def apply_bpe(
 
     def encode_batches(batches: Iterator) -> Iterator:
         cache: dict[str, list[str]] = {}
+        # not map_rows: adds a column; input columns pass through as-is
         for pdf in batches:
             col = []
             for text in pdf[text_col]:

@@ -25,6 +25,8 @@ from __future__ import annotations
 
 import json
 
+from verified_sources_spark.boundary import map_rows
+
 __all__ = [
     "ChatError", "parse_conversation", "chat_turns",
     "CHAT_TURNS_SCHEMA",
@@ -133,45 +135,34 @@ def chat_turns(df, id_col: str = "doc_id", line_col: str = "line"):
     turns are dropped at parse time and do NOT count toward
     ``n_turns`` (tool outputs are not training prose).  Malformed
     records isolate as ``decoded_ok=false`` rows."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _id, line in zip(pdf[id_col], pdf[line_col]):
-                try:
-                    turns = parse_conversation(str(line))
-                    if not turns:
-                        raise ChatError("empty conversation")
-                    # only a LEADING system turn is exempt from the
-                    # pairing gate; a mid-dialog system turn lands in
-                    # `body` and fails the user/assistant check below
-                    body = (turns[1:] if turns[0]["role"] == "system"
-                            else turns)
-                    ok_alt = bool(body) and all(
-                        t["role"] == ("user" if i % 2 == 0
-                                      else "assistant")
-                        for i, t in enumerate(body))
-                    for i, t in enumerate(turns):
-                        rows.append({
-                            "doc_id": _id, "decoded_ok": True,
-                            "turn_idx": i, "n_turns": len(turns),
-                            "role": t["role"],
-                            "alternation_ok": ok_alt,
-                            "text": t["text"]})
-                except ChatError:
-                    rows.append({
-                        "doc_id": _id, "decoded_ok": False,
-                        "turn_idx": None, "n_turns": None,
-                        "role": None, "alternation_ok": None,
-                        "text": None})
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "decoded_ok", "turn_idx", "n_turns", "role",
-                "alternation_ok", "text"])
+    def run(_id, line):
+        try:
+            turns = parse_conversation(str(line))
+            if not turns:
+                raise ChatError("empty conversation")
+            # only a LEADING system turn is exempt from the
+            # pairing gate; a mid-dialog system turn lands in
+            # `body` and fails the user/assistant check below
+            body = (turns[1:] if turns[0]["role"] == "system"
+                    else turns)
+            ok_alt = bool(body) and all(
+                t["role"] == ("user" if i % 2 == 0
+                              else "assistant")
+                for i, t in enumerate(body))
+            for i, t in enumerate(turns):
+                yield {
+                    "doc_id": _id, "decoded_ok": True,
+                    "turn_idx": i, "n_turns": len(turns),
+                    "role": t["role"],
+                    "alternation_ok": ok_alt,
+                    "text": t["text"]}
+        except ChatError:
+            yield {"doc_id": _id, "decoded_ok": False}
 
     from pyspark.sql import functions as F
 
-    out = df.select(F.col(id_col), F.col(line_col)).mapInPandas(
+    out = map_rows(
+        df.select(F.col(id_col), F.col(line_col)),
         run, CHAT_TURNS_SCHEMA)
     if id_col != "doc_id":
         out = out.withColumnRenamed("doc_id", id_col)

@@ -21,6 +21,8 @@ from __future__ import annotations
 
 import re
 
+from verified_sources_spark.boundary import map_rows
+
 __all__ = ["detect_language", "code_file_signals", "code_signals",
            "CODE_SIGNALS_SCHEMA"]
 
@@ -117,31 +119,16 @@ CODE_SIGNALS_SCHEMA = (
 def code_signals(df, id_col: str = "doc_id", text_col: str = "text"):
     """Arrow-batched signal extraction: one row per file blob.  Null
     text yields a null-signal row (inventory preserved)."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _id, s in zip(pdf[id_col], pdf[text_col]):
-                if s is None:
-                    rows.append({"doc_id": _id, "language": None,
-                                 "n_lines": None, "max_line_len": None,
-                                 "mean_line_len": None,
-                                 "comment_ratio": None,
-                                 "alnum_fraction": None,
-                                 "has_license": None,
-                                 "is_generated": None})
-                    continue
-                rows.append({"doc_id": _id,
-                             **code_file_signals(str(s))})
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "language", "n_lines", "max_line_len",
-                "mean_line_len", "comment_ratio", "alnum_fraction",
-                "has_license", "is_generated"])
+    def run(_id, s):
+        if s is None:
+            yield {"doc_id": _id}
+            return
+        yield {"doc_id": _id, **code_file_signals(str(s))}
 
     from pyspark.sql import functions as F
 
-    out = df.select(F.col(id_col), F.col(text_col)).mapInPandas(
+    out = map_rows(
+        df.select(F.col(id_col), F.col(text_col)),
         run, CODE_SIGNALS_SCHEMA)
     if id_col != "doc_id":
         out = out.withColumnRenamed("doc_id", id_col)

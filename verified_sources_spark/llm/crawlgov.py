@@ -28,6 +28,8 @@ from __future__ import annotations
 
 import re
 
+from verified_sources_spark.boundary import map_rows
+
 __all__ = [
     "CrawlGovError", "parse_robots", "is_allowed", "parse_sitemap",
     "encode_robots", "encode_sitemap", "robots_rules", "sitemap_urls",
@@ -247,49 +249,34 @@ def robots_rules(df, id_col: str = "doc_id", asset_col: str = "asset"):
     """Arrow-batched robots explosion: one row per rule (groups with
     no rules emit one null-rule row so allow-all groups are visible);
     malformed payloads isolate as ``decoded_ok=false``."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                _id = int(_id)
-                try:
-                    out = parse_robots(bytes(payload))
-                    ns = len(out["sitemaps"])
-                    for gi, g in enumerate(out["groups"]):
-                        agents = ";".join(g["agents"])
-                        if not g["rules"]:
-                            rows.append({
-                                "doc_id": _id, "decoded_ok": True,
-                                "group_idx": gi, "agents": agents,
-                                "rule_idx": None, "directive": None,
-                                "pattern": None,
-                                "crawl_delay": g["crawl_delay"],
-                                "n_sitemaps": ns})
-                        for ri, (d, p) in enumerate(g["rules"]):
-                            rows.append({
-                                "doc_id": _id, "decoded_ok": True,
-                                "group_idx": gi, "agents": agents,
-                                "rule_idx": ri, "directive": d,
-                                "pattern": p,
-                                "crawl_delay": g["crawl_delay"],
-                                "n_sitemaps": ns})
-                except CrawlGovError:
-                    rows.append({
-                        "doc_id": _id, "decoded_ok": False,
-                        "group_idx": None, "agents": None,
-                        "rule_idx": None, "directive": None,
-                        "pattern": None, "crawl_delay": None,
-                        "n_sitemaps": None})
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "decoded_ok", "group_idx", "agents",
-                "rule_idx", "directive", "pattern", "crawl_delay",
-                "n_sitemaps"])
+    def run(_id, payload):
+        _id = int(_id)
+        try:
+            out = parse_robots(bytes(payload))
+            ns = len(out["sitemaps"])
+            for gi, g in enumerate(out["groups"]):
+                agents = ";".join(g["agents"])
+                if not g["rules"]:
+                    yield {
+                        "doc_id": _id, "decoded_ok": True,
+                        "group_idx": gi, "agents": agents,
+                        "crawl_delay": g["crawl_delay"],
+                        "n_sitemaps": ns}
+                for ri, (d, p) in enumerate(g["rules"]):
+                    yield {
+                        "doc_id": _id, "decoded_ok": True,
+                        "group_idx": gi, "agents": agents,
+                        "rule_idx": ri, "directive": d,
+                        "pattern": p,
+                        "crawl_delay": g["crawl_delay"],
+                        "n_sitemaps": ns}
+        except CrawlGovError:
+            yield {"doc_id": _id, "decoded_ok": False}
 
     from pyspark.sql import functions as F
 
-    out = df.select(F.col(id_col), F.col(asset_col)).mapInPandas(
+    out = map_rows(
+        df.select(F.col(id_col), F.col(asset_col)),
         run, ROBOTS_RULES_SCHEMA)
     if id_col != "doc_id":
         out = out.withColumnRenamed("doc_id", id_col)
@@ -314,41 +301,29 @@ def frontier_audit(df, agent: str, id_col: str = "doc_id",
     (url, allowed, crawl_delay) rows.  Either payload failing
     isolates the whole host as ``decoded_ok=false`` (a frontier must
     not crawl a host whose governance it could not read)."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _id, rb, sm in zip(pdf[id_col], pdf[robots_col],
-                                   pdf[sitemap_col]):
-                _id = int(_id)
-                try:
-                    robots = parse_robots(bytes(rb))
-                    entries = parse_sitemap(bytes(sm))["entries"]
-                    g = _group_for(robots, agent)
-                    delay = g["crawl_delay"] if g else None
-                    for i, e in enumerate(entries):
-                        loc = e["loc"]
-                        path = _url_path(loc)
-                        rows.append({
-                            "doc_id": _id, "decoded_ok": True,
-                            "url_idx": i, "loc": loc, "path": path,
-                            "allowed": is_allowed(robots, agent,
-                                                  path),
-                            "crawl_delay": delay})
-                except CrawlGovError:
-                    rows.append({
-                        "doc_id": _id, "decoded_ok": False,
-                        "url_idx": None, "loc": None, "path": None,
-                        "allowed": None, "crawl_delay": None})
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "decoded_ok", "url_idx", "loc", "path",
-                "allowed", "crawl_delay"])
+    def run(_id, rb, sm):
+        _id = int(_id)
+        try:
+            robots = parse_robots(bytes(rb))
+            entries = parse_sitemap(bytes(sm))["entries"]
+            g = _group_for(robots, agent)
+            delay = g["crawl_delay"] if g else None
+            for i, e in enumerate(entries):
+                loc = e["loc"]
+                path = _url_path(loc)
+                yield {
+                    "doc_id": _id, "decoded_ok": True,
+                    "url_idx": i, "loc": loc, "path": path,
+                    "allowed": is_allowed(robots, agent,
+                                          path),
+                    "crawl_delay": delay}
+        except CrawlGovError:
+            yield {"doc_id": _id, "decoded_ok": False}
 
     from pyspark.sql import functions as F
 
-    out = df.select(F.col(id_col), F.col(robots_col),
-                    F.col(sitemap_col)).mapInPandas(
+    out = map_rows(
+        df.select(F.col(id_col), F.col(robots_col), F.col(sitemap_col)),
         run, FRONTIER_AUDIT_SCHEMA)
     if id_col != "doc_id":
         out = out.withColumnRenamed("doc_id", id_col)
@@ -433,47 +408,32 @@ def frontier_expand(df, agent: str, max_depth: int = 2,
     child referenced twice (cycle), or an index nested past
     ``max_depth``.  Output is metadata-sized; payload columns never
     leave the scan's executor."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _id, rb, root, locs, blobs in zip(
-                    pdf[id_col], pdf[robots_col], pdf[root_col],
-                    pdf[locs_col], pdf[blobs_col]):
-                _id = int(_id)
-                try:
-                    if rb is None or root is None or locs is None \
-                            or blobs is None:
-                        raise CrawlGovError(
-                            "host row with null governance columns")
-                    if len(locs) != len(blobs):
-                        raise CrawlGovError(
-                            "child_locs/child_blobs length mismatch "
-                            f"({len(locs)} vs {len(blobs)})")
-                    if any(v is None for v in blobs):
-                        raise CrawlGovError("null child sitemap blob")
-                    fetched = {str(k): bytes(v)
-                               for k, v in zip(locs, blobs)}
-                    for r in expand_host(bytes(rb), bytes(root),
-                                         fetched, agent, max_depth):
-                        rows.append({"doc_id": _id,
-                                     "decoded_ok": True, **r})
-                except CrawlGovError:
-                    rows.append({
-                        "doc_id": _id, "decoded_ok": False,
-                        "depth": None, "sitemap_loc": None,
-                        "url_idx": None, "loc": None, "path": None,
-                        "allowed": None, "crawl_delay": None})
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "decoded_ok", "depth", "sitemap_loc",
-                "url_idx", "loc", "path", "allowed", "crawl_delay"])
+    def run(_id, rb, root, locs, blobs):
+        _id = int(_id)
+        try:
+            if rb is None or root is None or locs is None \
+                    or blobs is None:
+                raise CrawlGovError(
+                    "host row with null governance columns")
+            if len(locs) != len(blobs):
+                raise CrawlGovError(
+                    "child_locs/child_blobs length mismatch "
+                    f"({len(locs)} vs {len(blobs)})")
+            if any(v is None for v in blobs):
+                raise CrawlGovError("null child sitemap blob")
+            fetched = {str(k): bytes(v)
+                       for k, v in zip(locs, blobs)}
+            for r in expand_host(bytes(rb), bytes(root),
+                                 fetched, agent, max_depth):
+                yield {"doc_id": _id, "decoded_ok": True, **r}
+        except CrawlGovError:
+            yield {"doc_id": _id, "decoded_ok": False}
 
     from pyspark.sql import functions as F
 
-    out = df.select(
-        F.col(id_col), F.col(robots_col), F.col(root_col),
-        F.col(locs_col), F.col(blobs_col)).mapInPandas(
+    out = map_rows(
+        df.select(F.col(id_col), F.col(robots_col), F.col(root_col),
+                  F.col(locs_col), F.col(blobs_col)),
         run, FRONTIER_BUILD_SCHEMA)
     if id_col != "doc_id":
         out = out.withColumnRenamed("doc_id", id_col)
@@ -490,34 +450,23 @@ SITEMAP_URLS_SCHEMA = (
 def sitemap_urls(df, id_col: str = "doc_id", asset_col: str = "asset"):
     """Arrow-batched sitemap explosion: one row per <url>/<sitemap>
     entry; gzip payloads decode; malformed isolate."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                _id = int(_id)
-                try:
-                    out = parse_sitemap(bytes(payload))
-                    es = out["entries"]
-                    for i, e in enumerate(es):
-                        rows.append({
-                            "doc_id": _id, "decoded_ok": True,
-                            "kind": out["kind"], "url_idx": i,
-                            "n_urls": len(es), **e})
-                except CrawlGovError:
-                    rows.append({
-                        "doc_id": _id, "decoded_ok": False,
-                        "kind": None, "url_idx": None, "n_urls": None,
-                        "loc": None, "lastmod": None,
-                        "changefreq": None, "priority": None})
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "decoded_ok", "kind", "url_idx", "n_urls",
-                "loc", "lastmod", "changefreq", "priority"])
+    def run(_id, payload):
+        _id = int(_id)
+        try:
+            out = parse_sitemap(bytes(payload))
+            es = out["entries"]
+            for i, e in enumerate(es):
+                yield {
+                    "doc_id": _id, "decoded_ok": True,
+                    "kind": out["kind"], "url_idx": i,
+                    "n_urls": len(es), **e}
+        except CrawlGovError:
+            yield {"doc_id": _id, "decoded_ok": False}
 
     from pyspark.sql import functions as F
 
-    out = df.select(F.col(id_col), F.col(asset_col)).mapInPandas(
+    out = map_rows(
+        df.select(F.col(id_col), F.col(asset_col)),
         run, SITEMAP_URLS_SCHEMA)
     if id_col != "doc_id":
         out = out.withColumnRenamed("doc_id", id_col)

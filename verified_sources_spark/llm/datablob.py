@@ -36,6 +36,8 @@ see one surface.  The document router dispatches by magic (``PAR1``
 
 from __future__ import annotations
 
+from verified_sources_spark.boundary import map_rows
+
 __all__ = [
     "DataBlobError", "parquet_rows_blob", "avro_rows_blob",
     "orc_rows_blob", "sqlite_tables_blob", "arrow_rows_blob",
@@ -332,63 +334,41 @@ def data_blob_rows(df, id_col: str = "doc_id",
     a CONTAINER of tables: each user table emits its own row group
     with ``fmt='sqlite:<table>'`` and per-table header/row counts.
     Corrupt/unknown blobs isolate as ``decoded_ok=false`` rows."""
-    import pandas as pd
+    def emit(_id, fmt, out):
+        base = {"doc_id": _id, "decoded_ok": True, "fmt": fmt,
+                "n_rows": len(out["rows"]), "n_cols": len(out["columns"]),
+                "header": "\t".join(out["columns"])}
+        for i, r in enumerate(out["rows"]):
+            yield {**base, "row_idx": i, "line": "\t".join(r)}
+        if not out["rows"]:
+            yield base
 
-    def run(batches):
-        def emit(rows, _id, fmt, out):
-            hdr = "\t".join(out["columns"])
-            n = len(out["rows"])
-            for i, r in enumerate(out["rows"]):
-                rows.append({
-                    "doc_id": _id, "decoded_ok": True,
-                    "fmt": fmt, "row_idx": i, "n_rows": n,
-                    "n_cols": len(out["columns"]),
-                    "header": hdr, "line": "\t".join(r)})
-            if not out["rows"]:
-                rows.append({
-                    "doc_id": _id, "decoded_ok": True,
-                    "fmt": fmt, "row_idx": None, "n_rows": 0,
-                    "n_cols": len(out["columns"]),
-                    "header": hdr, "line": None})
-
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                raw = bytes(payload)
-                try:
-                    if raw[:4] == b"PAR1":
-                        emit(rows, _id, "parquet",
-                             parquet_rows_blob(raw))
-                    elif raw[:4] == b"Obj\x01":
-                        emit(rows, _id, "avro", avro_rows_blob(raw))
-                    elif raw[:3] == b"ORC":
-                        emit(rows, _id, "orc", orc_rows_blob(raw))
-                    elif raw[:16] == b"SQLite format 3\x00":
-                        for tbl in sqlite_tables_blob(raw):
-                            emit(rows, _id,
-                                 f"sqlite:{tbl['table']}", tbl)
-                    elif raw[:6] == b"ARROW1":
-                        emit(rows, _id, "arrow",
-                             arrow_rows_blob(raw))
-                    elif raw[:4] == b"\xff\xff\xff\xff":
-                        emit(rows, _id, "arrows",
-                             arrow_rows_blob(raw))
-                    else:
-                        raise DataBlobError(
-                            "no parquet/avro/orc/sqlite/arrow magic")
-                except DataBlobError:
-                    rows.append({
-                        "doc_id": _id, "decoded_ok": False,
-                        "fmt": None, "row_idx": None, "n_rows": None,
-                        "n_cols": None, "header": None, "line": None})
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "decoded_ok", "fmt", "row_idx", "n_rows",
-                "n_cols", "header", "line"])
+    def run(_id, payload):
+        raw = bytes(payload)
+        try:
+            if raw[:4] == b"PAR1":
+                yield from emit(_id, "parquet", parquet_rows_blob(raw))
+            elif raw[:4] == b"Obj\x01":
+                yield from emit(_id, "avro", avro_rows_blob(raw))
+            elif raw[:3] == b"ORC":
+                yield from emit(_id, "orc", orc_rows_blob(raw))
+            elif raw[:16] == b"SQLite format 3\x00":
+                for tbl in sqlite_tables_blob(raw):
+                    yield from emit(_id, f"sqlite:{tbl['table']}", tbl)
+            elif raw[:6] == b"ARROW1":
+                yield from emit(_id, "arrow", arrow_rows_blob(raw))
+            elif raw[:4] == b"\xff\xff\xff\xff":
+                yield from emit(_id, "arrows", arrow_rows_blob(raw))
+            else:
+                raise DataBlobError(
+                    "no parquet/avro/orc/sqlite/arrow magic")
+        except DataBlobError:
+            yield {"doc_id": _id, "decoded_ok": False}
 
     from pyspark.sql import functions as F
 
-    out = df.select(F.col(id_col), F.col(asset_col)).mapInPandas(
-        run, DATA_BLOB_ROWS_SCHEMA)
+    out = map_rows(df.select(F.col(id_col), F.col(asset_col)), run,
+                   DATA_BLOB_ROWS_SCHEMA)
     if id_col != "doc_id":
         out = out.withColumnRenamed("doc_id", id_col)
     return out

@@ -22,6 +22,8 @@ right operator instead of silently ingesting ``str(bytes)`` garble.
 
 from __future__ import annotations
 
+from verified_sources_spark.boundary import map_rows
+
 __all__ = ["DocRouteError", "sniff_document", "extract_document"]
 
 
@@ -430,85 +432,72 @@ def archive_document_texts(df, id_col: str = "doc_id",
     ``decoded_ok=false`` row; a member the router refuses (media,
     binary, corrupt inner archive) isolates as its own false row with
     the byte count kept."""
-    import pandas as pd
-
     _ARCHIVE_FMTS = {"zip", "7z", "tar", "tgz", "txz", "tbz2", "tzst"}
 
-    def run(batches):
+    def run(_id, payload):
         from verified_sources_spark.llm.archives import (
             ArchiveError, ArchiveExplosionError, iter_members,
         )
 
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                raw = bytes(payload)
-                doc_rows: list[dict] = []
-                emitted = 0
+        raw = bytes(payload)
+        doc_rows: list[dict] = []
+        emitted = 0
+        try:
+            stack = [(n, d, 1)
+                     for n, d in iter_members(raw)][::-1]
+            while stack:
+                name, data, depth = stack.pop()
+                # sniff ONCE per member: the result both
+                # decides plain-archive recursion (package
+                # zips — docx/odf/epub — are DOCUMENTS, never
+                # exploded) and feeds extract_document, so
+                # zip directories open once, not three times
                 try:
-                    stack = [(n, d, 1)
-                             for n, d in iter_members(raw)][::-1]
-                    while stack:
-                        name, data, depth = stack.pop()
-                        # sniff ONCE per member: the result both
-                        # decides plain-archive recursion (package
-                        # zips — docx/odf/epub — are DOCUMENTS, never
-                        # exploded) and feeds extract_document, so
-                        # zip directories open once, not three times
-                        try:
-                            fmt = sniff_document(data)
-                        except DocRouteError:
-                            fmt = None
-                        if depth < 3 and fmt in _ARCHIVE_FMTS:
-                            try:
-                                inner = list(iter_members(data))
-                            except ArchiveError:
-                                inner = None  # corrupt inner: row
-                            if inner is not None:
-                                stack += [(f"{name}!{n}", d, depth + 1)
-                                          for n, d in inner][::-1]
-                                continue
-                        emitted += 1
-                        if emitted > max_total_members:
-                            # the same explosion gate the archives
-                            # module enforces: a wide zip-of-zips bomb
-                            # refuses WHOLE, never partially explodes
-                            raise ArchiveExplosionError(
-                                f"nested archive exceeds "
-                                f"{max_total_members} members")
-                        try:
-                            out = (extract_document(data, fmt=fmt)
-                                   if fmt is not None else None)
-                            if out is None:
-                                raise DocRouteError(
-                                    "unrecognized binary payload")
-                            doc_rows.append({
-                                "doc_id": _id, "decoded_ok": True,
-                                "member_name": name,
-                                "doc_format": out["format"],
-                                "n_bytes": len(data),
-                                "text": out["text"]})
-                        except DocRouteError:
-                            doc_rows.append({
-                                "doc_id": _id, "decoded_ok": False,
-                                "member_name": name,
-                                "doc_format": None,
-                                "n_bytes": len(data), "text": None})
-                    rows += doc_rows
-                except ArchiveError:
-                    # corrupt outer OR explosion gate: all-or-nothing
-                    rows.append({
+                    fmt = sniff_document(data)
+                except DocRouteError:
+                    fmt = None
+                if depth < 3 and fmt in _ARCHIVE_FMTS:
+                    try:
+                        inner = list(iter_members(data))
+                    except ArchiveError:
+                        inner = None  # corrupt inner: row
+                    if inner is not None:
+                        stack += [(f"{name}!{n}", d, depth + 1)
+                                  for n, d in inner][::-1]
+                        continue
+                emitted += 1
+                if emitted > max_total_members:
+                    # the same explosion gate the archives
+                    # module enforces: a wide zip-of-zips bomb
+                    # refuses WHOLE, never partially explodes
+                    raise ArchiveExplosionError(
+                        f"nested archive exceeds "
+                        f"{max_total_members} members")
+                try:
+                    out = (extract_document(data, fmt=fmt)
+                           if fmt is not None else None)
+                    if out is None:
+                        raise DocRouteError(
+                            "unrecognized binary payload")
+                    doc_rows.append({
+                        "doc_id": _id, "decoded_ok": True,
+                        "member_name": name,
+                        "doc_format": out["format"],
+                        "n_bytes": len(data),
+                        "text": out["text"]})
+                except DocRouteError:
+                    doc_rows.append({
                         "doc_id": _id, "decoded_ok": False,
-                        "member_name": None, "doc_format": None,
-                        "n_bytes": None, "text": None})
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "decoded_ok", "member_name", "doc_format",
-                "n_bytes", "text"])
+                        "member_name": name, "n_bytes": len(data)})
+        except ArchiveError:
+            # corrupt outer OR explosion gate: all-or-nothing
+            doc_rows = [{"doc_id": _id, "decoded_ok": False}]
+        yield from doc_rows
 
     from pyspark.sql import functions as F
 
-    out = df.select(F.col(id_col), F.col(asset_col)).mapInPandas(
-        run, ARCHIVE_DOCUMENT_TEXTS_SCHEMA)
+    out = map_rows(df.select(F.col(id_col), F.col(asset_col)), run,
+                   ARCHIVE_DOCUMENT_TEXTS_SCHEMA)
     if id_col != "doc_id":
         out = out.withColumnRenamed("doc_id", id_col)
     return out

@@ -32,6 +32,8 @@ import zipfile
 import zlib
 import xml.etree.ElementTree as ET
 
+from verified_sources_spark.boundary import map_rows
+
 __all__ = [
     "EbookError", "encode_epub", "extract_epub", "epub_extract",
     "EPUB_EXTRACT_SCHEMA",
@@ -175,37 +177,25 @@ def epub_extract(df, id_col: str = "doc_id", asset_col: str = "asset"):
     """Arrow-batched EPUB → per-chapter text rows in spine order.
     Payloads never shuffle; corrupt books isolate as one
     ``decoded_ok=false`` row."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                try:
-                    out = extract_epub(bytes(payload))
-                    for ch in out["chapters"]:
-                        rows.append({
-                            "doc_id": _id, "decoded_ok": True,
-                            "book_title": out["title"],
-                            "chapter_idx": ch["idx"],
-                            "n_chapters": out["n_chapters"],
-                            "chapter_title": ch["title"],
-                            "text": ch["text"],
-                        })
-                except EbookError:
-                    rows.append({
-                        "doc_id": _id, "decoded_ok": False,
-                        "book_title": None, "chapter_idx": None,
-                        "n_chapters": None, "chapter_title": None,
-                        "text": None,
-                    })
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "decoded_ok", "book_title", "chapter_idx",
-                "n_chapters", "chapter_title", "text"])
+    def run(_id, payload):
+        try:
+            out = extract_epub(bytes(payload))
+            for ch in out["chapters"]:
+                yield {
+                    "doc_id": _id, "decoded_ok": True,
+                    "book_title": out["title"],
+                    "chapter_idx": ch["idx"],
+                    "n_chapters": out["n_chapters"],
+                    "chapter_title": ch["title"],
+                    "text": ch["text"],
+                }
+        except EbookError:
+            yield {"doc_id": _id, "decoded_ok": False}
 
     from pyspark.sql import functions as F
 
-    out = df.select(F.col(id_col), F.col(asset_col)).mapInPandas(
+    out = map_rows(
+        df.select(F.col(id_col), F.col(asset_col)),
         run, EPUB_EXTRACT_SCHEMA)
     if id_col != "doc_id":
         out = out.withColumnRenamed("doc_id", id_col)

@@ -31,6 +31,8 @@ import email.message
 import email.policy
 import re
 
+from verified_sources_spark.boundary import map_rows
+
 __all__ = [
     "EmailError",
     "encode_eml", "encode_mbox", "iter_mbox",
@@ -247,49 +249,38 @@ def email_extract(df, id_col: str = "doc_id", asset_col: str = "asset"):
     ``decoded_ok=false`` row (reference analogue:
     sources/inbox/__init__.py — the live-IMAP half of the same
     surface)."""
-    import pandas as pd
-
-    def run(batches):
+    def run(_id, payload):
         from verified_sources_spark.llm.msgdoc import MsgError, parse_msg
 
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                raw = bytes(payload)
+        raw = bytes(payload)
+        try:
+            if raw[:8] == b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1":
                 try:
-                    if raw[:8] == b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1":
-                        try:
-                            outs = [parse_msg(raw)]
-                        except MsgError as e:
-                            raise EmailError(str(e)) from None
-                    else:
-                        msgs = (list(iter_mbox(raw))
-                                if raw.startswith(b"From ") else [raw])
-                        if not msgs:
-                            raise EmailError("empty mbox")
-                        outs = [parse_eml(m) for m in msgs]
-                    for i, out in enumerate(outs):
-                        rows.append({
-                            "doc_id": _id, "decoded_ok": True, "msg_idx": i,
-                            "subject": out["subject"],
-                            "from_addr": out["from_addr"],
-                            "n_parts": out["n_parts"],
-                            "body_source": out["body_source"],
-                            "text": out["text"],
-                        })
-                except EmailError:
-                    rows.append({
-                        "doc_id": _id, "decoded_ok": False, "msg_idx": None,
-                        "subject": None, "from_addr": None, "n_parts": None,
-                        "body_source": None, "text": None,
-                    })
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "decoded_ok", "msg_idx", "subject", "from_addr",
-                "n_parts", "body_source", "text"])
+                    outs = [parse_msg(raw)]
+                except MsgError as e:
+                    raise EmailError(str(e)) from None
+            else:
+                msgs = (list(iter_mbox(raw))
+                        if raw.startswith(b"From ") else [raw])
+                if not msgs:
+                    raise EmailError("empty mbox")
+                outs = [parse_eml(m) for m in msgs]
+            for i, out in enumerate(outs):
+                yield {
+                    "doc_id": _id, "decoded_ok": True, "msg_idx": i,
+                    "subject": out["subject"],
+                    "from_addr": out["from_addr"],
+                    "n_parts": out["n_parts"],
+                    "body_source": out["body_source"],
+                    "text": out["text"],
+                }
+        except EmailError:
+            yield {"doc_id": _id, "decoded_ok": False}
 
     from pyspark.sql import functions as F
 
-    out = df.select(F.col(id_col), F.col(asset_col)).mapInPandas(
+    out = map_rows(
+        df.select(F.col(id_col), F.col(asset_col)),
         run, EMAIL_EXTRACT_SCHEMA)
     if id_col != "doc_id":
         out = out.withColumnRenamed("doc_id", id_col)
@@ -360,75 +351,52 @@ def email_attachment_texts(df, id_col: str = "doc_id",
     ``att_idx=null`` row; a corrupt mail OR a refused attachment
     (media, encrypted, garble) isolates as ``decoded_ok=false`` with
     the byte count kept — honest inventory, nothing silently dropped."""
-    import pandas as pd
-
-    def run(batches):
+    def run(_id, payload):
         from verified_sources_spark.llm.cfb import CfbError, list_streams
         from verified_sources_spark.llm.docrouter import (
             DocRouteError, extract_document,
         )
 
-        def emit(rows, _id, i, j, fn, payload):
+        def row(i, j, fn, data):
             try:
-                out = extract_document(payload)
-                rows.append({
-                    "doc_id": _id, "decoded_ok": True, "msg_idx": i,
-                    "att_idx": j, "filename": fn,
-                    "att_format": out["format"],
-                    "n_bytes": len(payload), "text": out["text"]})
+                out = extract_document(data)
+                return {"doc_id": _id, "decoded_ok": True, "msg_idx": i,
+                        "att_idx": j, "filename": fn,
+                        "att_format": out["format"],
+                        "n_bytes": len(data), "text": out["text"]}
             except DocRouteError:
-                rows.append({
-                    "doc_id": _id, "decoded_ok": False, "msg_idx": i,
-                    "att_idx": j, "filename": fn, "att_format": None,
-                    "n_bytes": len(payload), "text": None})
+                return {"doc_id": _id, "decoded_ok": False, "msg_idx": i,
+                        "att_idx": j, "filename": fn, "n_bytes": len(data)}
 
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                raw = bytes(payload)
-                n_before = len(rows)
+        raw = bytes(payload)
+        try:
+            if raw[:8] == b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1":
                 try:
-                    if raw[:8] == b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1":
-                        try:
-                            streams = list_streams(raw)
-                        except CfbError as e:
-                            raise EmailError(str(e)) from None
-                        for j, (fn, data) in enumerate(
-                                iter_msg_attachments(streams)):
-                            emit(rows, _id, 0, j, fn, data)
-                    else:
-                        msgs = (list(iter_mbox(raw))
-                                if raw.startswith(b"From ") else [raw])
-                        for i, m in enumerate(msgs):
-                            for j, (fn, _ct, data) in enumerate(
-                                    iter_attachments(m)):
-                                emit(rows, _id, i, j, fn, data)
-                    if len(rows) == n_before:  # mail, no attachments
-                        rows.append({
-                            "doc_id": _id, "decoded_ok": True,
-                            "msg_idx": 0, "att_idx": None,
-                            "filename": None, "att_format": None,
-                            "n_bytes": None, "text": None})
-                except EmailError:
-                    # all-or-nothing per payload: an EmailError on
-                    # message k of a multi-message mbox must not leave
-                    # messages <k's decoded rows behind next to the
-                    # false row (they would double-count text into the
-                    # dedup surface)
-                    del rows[n_before:]
-                    rows.append({
-                        "doc_id": _id, "decoded_ok": False,
-                        "msg_idx": None, "att_idx": None,
-                        "filename": None, "att_format": None,
-                        "n_bytes": None, "text": None})
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "decoded_ok", "msg_idx", "att_idx",
-                "filename", "att_format", "n_bytes", "text"])
+                    streams = list_streams(raw)
+                except CfbError as e:
+                    raise EmailError(str(e)) from None
+                rows = [row(0, j, fn, data) for j, (fn, data)
+                        in enumerate(iter_msg_attachments(streams))]
+            else:
+                msgs = (list(iter_mbox(raw))
+                        if raw.startswith(b"From ") else [raw])
+                rows = [row(i, j, fn, data) for i, m in enumerate(msgs)
+                        for j, (fn, _ct, data)
+                        in enumerate(iter_attachments(m))]
+            if not rows:  # mail, no attachments
+                rows = [{"doc_id": _id, "decoded_ok": True, "msg_idx": 0}]
+        except EmailError:
+            # all-or-nothing per payload: an EmailError on message k of
+            # a multi-message mbox must not leave messages <k's decoded
+            # rows behind next to the false row (they would
+            # double-count text into the dedup surface)
+            rows = [{"doc_id": _id, "decoded_ok": False}]
+        yield from rows
 
     from pyspark.sql import functions as F
 
-    out = df.select(F.col(id_col), F.col(asset_col)).mapInPandas(
-        run, EMAIL_ATTACHMENT_TEXTS_SCHEMA)
+    out = map_rows(df.select(F.col(id_col), F.col(asset_col)), run,
+                   EMAIL_ATTACHMENT_TEXTS_SCHEMA)
     if id_col != "doc_id":
         out = out.withColumnRenamed("doc_id", id_col)
     return out

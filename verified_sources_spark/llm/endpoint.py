@@ -252,6 +252,7 @@ def embed_texts(
             max_retries=max_retries,
             backoff_base=backoff_base,
         )
+        # not map_rows: one embeddings request per batch, not per row
         for pdf in batches:
             texts = [(t or "") for t in pdf[text_col]]
             vecs = client.embed_batch(texts)
@@ -308,6 +309,7 @@ def extract_fields_via_endpoint(
             max_retries=max_retries,
             backoff_base=backoff_base,
         )
+        # not map_rows: one completion request per batch, not per row
         for pdf in batches:
             texts = [(t or "") for t in pdf[text_col]]
             prompts = [
@@ -316,16 +318,15 @@ def extract_fields_via_endpoint(
                 for q in field_queries
             ]
             answers = client.complete_batch(prompts)
-            rows = []
             nf = len(fields)
-            for i, (_id, text) in enumerate(zip(pdf[id_col], texts)):
-                row = {
-                    id_col: _id,
-                    "content_hash": hashlib.md5(text.encode()).hexdigest(),
-                }
-                for j, fname in enumerate(fields):
-                    row[fname] = answers[i * nf + j]
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=[id_col, "content_hash", *fields])
+            yield pd.DataFrame(
+                {
+                    id_col: pdf[id_col].values,
+                    "content_hash": [hashlib.md5(t.encode()).hexdigest() for t in texts],
+                    # answers run document-major: field j of doc i is i * nf + j
+                    **{f: answers[j::nf] for j, f in enumerate(fields)},
+                },
+                columns=[id_col, "content_hash", *fields],
+            )
 
     return df.select(id_col, text_col).mapInPandas(run, out_schema)

@@ -26,6 +26,8 @@ from __future__ import annotations
 
 import struct
 
+from verified_sources_spark.boundary import map_rows
+
 __all__ = ["ExifError", "probe_exif", "strip_metadata", "build_exif_app1",
            "inject_app1"]
 
@@ -309,43 +311,26 @@ def exif_inventory(df, id_col: str = "doc_id", asset_col: str = "asset"):
     ``clean_after_scrub`` certifies the scrub removed every metadata
     segment.  Payloads never shuffle; a corrupt JPEG isolates as
     ``decoded_ok=false`` (never kills the task)."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                try:
-                    payload = bytes(payload)
-                    m = probe_exif(payload)
-                    clean = not probe_exif(strip_metadata(payload))["has_exif"]
-                    rows.append(
-                        {"doc_id": _id, "decoded_ok": True,
-                         "has_exif": m["has_exif"], "make": m["make"],
-                         "model": m["model"],
-                         "orientation": m["orientation"],
-                         "has_gps": m["has_gps"],
-                         "latitude": m["latitude"],
-                         "longitude": m["longitude"],
-                         "clean_after_scrub": clean}
-                    )
-                except ExifError:
-                    rows.append(
-                        {"doc_id": _id, "decoded_ok": False,
-                         "has_exif": None, "make": None, "model": None,
-                         "orientation": None, "has_gps": None,
-                         "latitude": None, "longitude": None,
-                         "clean_after_scrub": None}
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "decoded_ok", "has_exif", "make",
-                               "model", "orientation", "has_gps",
-                               "latitude", "longitude",
-                               "clean_after_scrub"])
+    def run(_id, payload):
+        try:
+            payload = bytes(payload)
+            m = probe_exif(payload)
+            clean = not probe_exif(strip_metadata(payload))["has_exif"]
+            yield {"doc_id": _id, "decoded_ok": True,
+                   "has_exif": m["has_exif"], "make": m["make"],
+                   "model": m["model"],
+                   "orientation": m["orientation"],
+                   "has_gps": m["has_gps"],
+                   "latitude": m["latitude"],
+                   "longitude": m["longitude"],
+                   "clean_after_scrub": clean}
+        except ExifError:
+            yield {"doc_id": _id, "decoded_ok": False}
 
     from pyspark.sql import functions as F
 
-    out = df.select(F.col(id_col), F.col(asset_col)).mapInPandas(
+    out = map_rows(
+        df.select(F.col(id_col), F.col(asset_col)),
         run, EXIF_INVENTORY_SCHEMA
     )
     if id_col != "doc_id":

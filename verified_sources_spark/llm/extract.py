@@ -15,12 +15,13 @@ what this module implements and tests."""
 from __future__ import annotations
 
 import re
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 
-import pandas as pd
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
+
+from verified_sources_spark.boundary import map_rows
 
 AnswerFn = Callable[[str, str], str | None]  # (document_text, query) -> answer
 
@@ -87,23 +88,19 @@ def extract_fields(
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(_id, text):
         import hashlib
 
-        for pdf in batches:
-            rows = []
-            for _id, text in zip(pdf[id_col], pdf[text_col]):
-                text = text or ""
-                row = {
-                    id_col: _id,
-                    "content_hash": hashlib.md5(text.encode()).hexdigest(),
-                }
-                for fname in fields:
-                    row[fname] = answer_fn(text, queries[fname])
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=[id_col, "content_hash", *fields])
+        text = text or ""
+        row = {
+            id_col: _id,
+            "content_hash": hashlib.md5(text.encode()).hexdigest(),
+        }
+        for fname in fields:
+            row[fname] = answer_fn(text, queries[fname])
+        yield row
 
-    return df.select(id_col, text_col).mapInPandas(run, out_schema)
+    return map_rows(df.select(id_col, text_col), run, out_schema)
 
 
 def filter_empty_extractions(extracted: DataFrame, fields: list[str]) -> DataFrame:

@@ -27,6 +27,8 @@ from __future__ import annotations
 import re
 import xml.etree.ElementTree as ET
 
+from verified_sources_spark.boundary import map_rows
+
 __all__ = ["FeedError", "sniff_feed", "feed_entries",
            "encode_rss", "encode_atom"]
 
@@ -227,35 +229,24 @@ FEED_ENTRIES_SCHEMA = ("doc_id long, decoded_ok boolean, kind string, "
 def feed_extract(df, id_col: str = "doc_id", asset_col: str = "asset"):
     """Arrow-batched feed → per-entry rows; payloads never shuffle,
     corrupt feeds isolate as one ``decoded_ok=false`` row."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                payload = bytes(payload)
-                kind = sniff_feed(payload)
-                try:
-                    for i, e in enumerate(feed_entries(payload)):
-                        rows.append({
-                            "doc_id": _id, "decoded_ok": True,
-                            "kind": kind, "entry_idx": i,
-                            "title": e["title"], "link": e["link"],
-                            "date": e["date"], "summary": e["summary"],
-                            "text": e["text"]})
-                except FeedError:
-                    rows.append({
-                        "doc_id": _id, "decoded_ok": False, "kind": None,
-                        "entry_idx": None, "title": None, "link": None,
-                        "date": None, "summary": None, "text": None})
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "decoded_ok", "kind",
-                               "entry_idx", "title", "link", "date",
-                               "summary", "text"])
+    def run(_id, payload):
+        payload = bytes(payload)
+        kind = sniff_feed(payload)
+        try:
+            for i, e in enumerate(feed_entries(payload)):
+                yield {
+                    "doc_id": _id, "decoded_ok": True,
+                    "kind": kind, "entry_idx": i,
+                    "title": e["title"], "link": e["link"],
+                    "date": e["date"], "summary": e["summary"],
+                    "text": e["text"]}
+        except FeedError:
+            yield {"doc_id": _id, "decoded_ok": False}
 
     from pyspark.sql import functions as F
 
-    out = df.select(F.col(id_col), F.col(asset_col)).mapInPandas(
+    out = map_rows(
+        df.select(F.col(id_col), F.col(asset_col)),
         run, FEED_ENTRIES_SCHEMA)
     if id_col != "doc_id":
         out = out.withColumnRenamed("doc_id", id_col)

@@ -34,6 +34,8 @@ decode exactly).
 
 from __future__ import annotations
 
+from verified_sources_spark.boundary import map_rows
+
 __all__ = [
     "IcsVcfError", "unfold_lines", "parse_ics", "parse_vcf",
     "encode_ics", "encode_vcf", "ics_events", "vcf_cards",
@@ -658,41 +660,25 @@ ICS_EVENTS_SCHEMA = (
 def ics_events(df, id_col: str = "doc_id", asset_col: str = "asset"):
     """Arrow-batched VEVENT explosion: one row per event; malformed
     calendars isolate as ``decoded_ok=false`` rows."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                _id = int(_id)
-                try:
-                    out = parse_ics(bytes(payload))
-                    evs = out["events"]
-                    if not evs:
-                        raise IcsVcfError("calendar with no VEVENTs")
-                    for i, ev in enumerate(evs):
-                        rows.append({
-                            "doc_id": _id, "decoded_ok": True,
-                            "event_idx": i, "n_events": len(evs),
-                            **ev})
-                except IcsVcfError:
-                    rows.append({
-                        "doc_id": _id, "decoded_ok": False,
-                        "event_idx": None, "n_events": None,
-                        "uid": None, "summary": None,
-                        "description": None, "location": None,
-                        "organizer": None, "status": None,
-                        "dtstart": None, "dtend": None,
-                        "start_ms": None, "end_ms": None})
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "decoded_ok", "event_idx", "n_events",
-                "uid", "summary", "description", "location",
-                "organizer", "status", "dtstart", "dtend",
-                "start_ms", "end_ms"])
+    def run(_id, payload):
+        _id = int(_id)
+        try:
+            out = parse_ics(bytes(payload))
+            evs = out["events"]
+            if not evs:
+                raise IcsVcfError("calendar with no VEVENTs")
+            for i, ev in enumerate(evs):
+                yield {
+                    "doc_id": _id, "decoded_ok": True,
+                    "event_idx": i, "n_events": len(evs),
+                    **ev}
+        except IcsVcfError:
+            yield {"doc_id": _id, "decoded_ok": False}
 
     from pyspark.sql import functions as F
 
-    out = df.select(F.col(id_col), F.col(asset_col)).mapInPandas(
+    out = map_rows(
+        df.select(F.col(id_col), F.col(asset_col)),
         run, ICS_EVENTS_SCHEMA)
     if id_col != "doc_id":
         out = out.withColumnRenamed("doc_id", id_col)
@@ -708,36 +694,25 @@ VCF_CARDS_SCHEMA = (
 def vcf_cards(df, id_col: str = "doc_id", asset_col: str = "asset"):
     """Arrow-batched vCard explosion: one row per card, emails/tels
     semicolon-joined in file order."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                _id = int(_id)
-                try:
-                    cards = parse_vcf(bytes(payload))["cards"]
-                    for i, c in enumerate(cards):
-                        rows.append({
-                            "doc_id": _id, "decoded_ok": True,
-                            "card_idx": i, "n_cards": len(cards),
-                            "fn": c["fn"], "org": c["org"],
-                            "title": c["title"],
-                            "emails": ";".join(c["emails"]),
-                            "tels": ";".join(c["tels"])})
-                except IcsVcfError:
-                    rows.append({
-                        "doc_id": _id, "decoded_ok": False,
-                        "card_idx": None, "n_cards": None,
-                        "fn": None, "org": None, "title": None,
-                        "emails": None, "tels": None})
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "decoded_ok", "card_idx", "n_cards",
-                "fn", "org", "title", "emails", "tels"])
+    def run(_id, payload):
+        _id = int(_id)
+        try:
+            cards = parse_vcf(bytes(payload))["cards"]
+            for i, c in enumerate(cards):
+                yield {
+                    "doc_id": _id, "decoded_ok": True,
+                    "card_idx": i, "n_cards": len(cards),
+                    "fn": c["fn"], "org": c["org"],
+                    "title": c["title"],
+                    "emails": ";".join(c["emails"]),
+                    "tels": ";".join(c["tels"])}
+        except IcsVcfError:
+            yield {"doc_id": _id, "decoded_ok": False}
 
     from pyspark.sql import functions as F
 
-    out = df.select(F.col(id_col), F.col(asset_col)).mapInPandas(
+    out = map_rows(
+        df.select(F.col(id_col), F.col(asset_col)),
         run, VCF_CARDS_SCHEMA)
     if id_col != "doc_id":
         out = out.withColumnRenamed("doc_id", id_col)

@@ -29,13 +29,11 @@ surface beyond reference parity.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
+from verified_sources_spark.boundary import map_rows
 from verified_sources_spark.cut import cut
 
 DHASH_SCHEMA = T.StructType(
@@ -98,47 +96,29 @@ def image_dhash(
     if hash_size * hash_size > 64:
         raise ValueError("hash_size too large for a 64-bit fingerprint")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(_id, payload):
         from verified_sources_spark.llm.image_io import decode_image
 
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                try:
-                    im = decode_image(bytes(payload))
-                    ch = 3 if im["mode"] == "RGB" else 4
-                    hv = _dhash_of_pixels(
-                        im["pixels"], im["width"], im["height"], ch, hash_size
-                    )
-                    # store as signed 64-bit long
-                    if hv >= 1 << 63:
-                        hv -= 1 << 64
-                    rows.append(
-                        {
-                            "doc_id": _id,
-                            "decoded_ok": True,
-                            "dhash": hv,
-                            "width": im["width"],
-                            "height": im["height"],
-                        }
-                    )
-                except Exception:
-                    rows.append(
-                        {
-                            "doc_id": _id,
-                            "decoded_ok": False,
-                            "dhash": None,
-                            "width": None,
-                            "height": None,
-                        }
-                    )
-            from verified_sources_spark.llm._frames import exact_frame
-            # dhash must stay nullable-Int64: a batch mixing refusal
-            # rows (None) with hashes must NOT demote to float64
-            yield exact_frame(rows, [f.name for f in DHASH_SCHEMA.fields],
-                              int64_cols=("dhash",))
+        try:
+            im = decode_image(bytes(payload))
+            ch = 3 if im["mode"] == "RGB" else 4
+            hv = _dhash_of_pixels(
+                im["pixels"], im["width"], im["height"], ch, hash_size
+            )
+            # store as signed 64-bit long
+            if hv >= 1 << 63:
+                hv -= 1 << 64
+            yield {
+                "doc_id": _id,
+                "decoded_ok": True,
+                "dhash": hv,
+                "width": im["width"],
+                "height": im["height"],
+            }
+        except Exception:
+            yield {"doc_id": _id, "decoded_ok": False}
 
-    out = df.select(F.col(id_col), F.col(asset_col)).mapInPandas(run, DHASH_SCHEMA)
+    out = map_rows(df.select(F.col(id_col), F.col(asset_col)), run, DHASH_SCHEMA)
     if id_col != "doc_id":
         out = out.withColumnRenamed("doc_id", id_col)
     return out
@@ -162,46 +142,33 @@ def tiff_pages(
     isolate as one ``decoded_ok=false`` row (a single bad PAGE also
     isolates as its own false row while its siblings decode)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(_id, payload):
         from verified_sources_spark.llm.tiff_codec import decode, probe
 
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                payload = bytes(payload)
-                try:
-                    n = probe(payload)["n_pages"]
-                except Exception:
-                    rows.append({"doc_id": _id, "decoded_ok": False,
-                                 "n_pages": None, "page_idx": None,
-                                 "width": None, "height": None,
-                                 "dhash": None})
-                    continue
-                for p in range(n):
-                    try:
-                        im = decode(payload, page=p)
-                        hv = _dhash_of_pixels(
-                            im["pixels"], im["width"], im["height"], 3,
-                            hash_size)
-                        if hv >= 1 << 63:
-                            hv -= 1 << 64
-                        rows.append({"doc_id": _id, "decoded_ok": True,
-                                     "n_pages": n, "page_idx": p,
-                                     "width": im["width"],
-                                     "height": im["height"], "dhash": hv})
-                    except Exception:
-                        rows.append({"doc_id": _id, "decoded_ok": False,
-                                     "n_pages": n, "page_idx": p,
-                                     "width": None, "height": None,
-                                     "dhash": None})
-            from verified_sources_spark.llm._frames import exact_frame
+        payload = bytes(payload)
+        try:
+            n = probe(payload)["n_pages"]
+        except Exception:
+            yield {"doc_id": _id, "decoded_ok": False}
+            return
+        for p in range(n):
+            try:
+                im = decode(payload, page=p)
+                hv = _dhash_of_pixels(
+                    im["pixels"], im["width"], im["height"], 3,
+                    hash_size)
+                if hv >= 1 << 63:
+                    hv -= 1 << 64
+                yield {"doc_id": _id, "decoded_ok": True,
+                       "n_pages": n, "page_idx": p,
+                       "width": im["width"],
+                       "height": im["height"], "dhash": hv}
+            except Exception:
+                yield {"doc_id": _id, "decoded_ok": False,
+                       "n_pages": n, "page_idx": p}
 
-            yield exact_frame(
-                rows, ["doc_id", "decoded_ok", "n_pages", "page_idx",
-                       "width", "height", "dhash"],
-                int64_cols=("dhash",))
-
-    out = df.select(F.col(id_col), F.col(asset_col)).mapInPandas(
+    out = map_rows(
+        df.select(F.col(id_col), F.col(asset_col)),
         run, TIFF_PAGES_SCHEMA)
     if id_col != "doc_id":
         out = out.withColumnRenamed("doc_id", id_col)

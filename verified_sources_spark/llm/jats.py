@@ -26,6 +26,8 @@ from __future__ import annotations
 
 import xml.etree.ElementTree as ET
 
+from verified_sources_spark.boundary import map_rows
+
 __all__ = [
     "JatsError", "jats_extract", "encode_jats", "jats_units",
     "JATS_UNITS_SCHEMA",
@@ -177,32 +179,22 @@ def jats_units(df, id_col: str = "doc_id", asset_col: str = "asset"):
     """Arrow-batched JATS → per-unit rows (title/abstract/sec-title/
     p/caption in document order); corrupt payloads isolate as
     ``decoded_ok=false``."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                try:
-                    out = jats_extract(bytes(payload))
-                    n = len(out["units"])
-                    for i, (kind, text) in enumerate(out["units"]):
-                        rows.append({
-                            "doc_id": _id, "decoded_ok": True,
-                            "unit_idx": i, "kind": kind,
-                            "n_units": n, "text": text})
-                except JatsError:
-                    rows.append({
-                        "doc_id": _id, "decoded_ok": False,
-                        "unit_idx": None, "kind": None,
-                        "n_units": None, "text": None})
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "decoded_ok", "unit_idx", "kind",
-                "n_units", "text"])
+    def run(_id, payload):
+        try:
+            out = jats_extract(bytes(payload))
+            n = len(out["units"])
+            for i, (kind, text) in enumerate(out["units"]):
+                yield {
+                    "doc_id": _id, "decoded_ok": True,
+                    "unit_idx": i, "kind": kind,
+                    "n_units": n, "text": text}
+        except JatsError:
+            yield {"doc_id": _id, "decoded_ok": False}
 
     from pyspark.sql import functions as F
 
-    out = df.select(F.col(id_col), F.col(asset_col)).mapInPandas(
+    out = map_rows(
+        df.select(F.col(id_col), F.col(asset_col)),
         run, JATS_UNITS_SCHEMA)
     if id_col != "doc_id":
         out = out.withColumnRenamed("doc_id", id_col)

@@ -39,6 +39,8 @@ from __future__ import annotations
 
 import re
 
+from verified_sources_spark.boundary import map_rows
+
 __all__ = [
     "LatexError", "latex_text", "latex_extract", "encode_latex",
     "latex_extract_op", "LATEX_EXTRACT_SCHEMA",
@@ -305,33 +307,23 @@ def latex_extract_op(df, id_col: str = "doc_id",
     """Arrow-batched .tex → text: one row per source, payloads never
     shuffle, non-LaTeX/corrupt payloads isolate as
     ``decoded_ok=false``."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                try:
-                    src = bytes(payload).decode("utf-8", "replace")
-                    out = latex_text(src)
-                    rows.append({
-                        "doc_id": _id, "decoded_ok": True,
-                        "title": out["title"],
-                        "n_headings": len(out["headings"]),
-                        "headings": ";".join(out["headings"]) or None,
-                        "text": out["text"]})
-                except LatexError:
-                    rows.append({
-                        "doc_id": _id, "decoded_ok": False,
-                        "title": None, "n_headings": None,
-                        "headings": None, "text": None})
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "decoded_ok", "title", "n_headings",
-                "headings", "text"])
+    def run(_id, payload):
+        try:
+            src = bytes(payload).decode("utf-8", "replace")
+            out = latex_text(src)
+            yield {
+                "doc_id": _id, "decoded_ok": True,
+                "title": out["title"],
+                "n_headings": len(out["headings"]),
+                "headings": ";".join(out["headings"]) or None,
+                "text": out["text"]}
+        except LatexError:
+            yield {"doc_id": _id, "decoded_ok": False}
 
     from pyspark.sql import functions as F
 
-    out = df.select(F.col(id_col), F.col(asset_col)).mapInPandas(
+    out = map_rows(
+        df.select(F.col(id_col), F.col(asset_col)),
         run, LATEX_EXTRACT_SCHEMA)
     if id_col != "doc_id":
         out = out.withColumnRenamed("doc_id", id_col)

@@ -31,6 +31,8 @@ from __future__ import annotations
 
 import re
 
+from verified_sources_spark.boundary import map_rows
+
 __all__ = ["markdown_extract", "MarkdownError"]
 
 
@@ -150,38 +152,27 @@ def markdown_docs_extract(df, id_col: str = "doc_id",
     """Arrow-batched markdown → one row per document: stripped prose,
     heading/link/code-block counts, the code blocks concatenated with
     their language tags (for the code-mixture side)."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                try:
-                    out = markdown_extract(bytes(payload))
-                    rows.append({
-                        "doc_id": _id, "decoded_ok": True,
-                        "text": out["text"],
-                        "n_headings": len(out["headings"]),
-                        "n_links": out["n_links"],
-                        "n_code_blocks": len(out["code_blocks"]),
-                        "code_langs": ",".join(
-                            b["lang"] or "" for b in out["code_blocks"]),
-                        "code": "\n\n".join(
-                            b["code"] for b in out["code_blocks"]),
-                    })
-                except MarkdownError:
-                    rows.append({"doc_id": _id, "decoded_ok": False,
-                                 "text": None, "n_headings": None,
-                                 "n_links": None, "n_code_blocks": None,
-                                 "code_langs": None, "code": None})
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "decoded_ok", "text",
-                               "n_headings", "n_links", "n_code_blocks",
-                               "code_langs", "code"])
+    def run(_id, payload):
+        try:
+            out = markdown_extract(bytes(payload))
+            yield {
+                "doc_id": _id, "decoded_ok": True,
+                "text": out["text"],
+                "n_headings": len(out["headings"]),
+                "n_links": out["n_links"],
+                "n_code_blocks": len(out["code_blocks"]),
+                "code_langs": ",".join(
+                    b["lang"] or "" for b in out["code_blocks"]),
+                "code": "\n\n".join(
+                    b["code"] for b in out["code_blocks"]),
+            }
+        except MarkdownError:
+            yield {"doc_id": _id, "decoded_ok": False}
 
     from pyspark.sql import functions as F
 
-    out = df.select(F.col(id_col), F.col(asset_col)).mapInPandas(
+    out = map_rows(
+        df.select(F.col(id_col), F.col(asset_col)),
         run, MARKDOWN_SCHEMA)
     if id_col != "doc_id":
         out = out.withColumnRenamed("doc_id", id_col)

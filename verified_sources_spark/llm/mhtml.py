@@ -25,6 +25,8 @@ from __future__ import annotations
 import email
 import email.policy
 
+from verified_sources_spark.boundary import map_rows
+
 __all__ = [
     "MhtmlError", "encode_mhtml", "parse_mhtml", "mhtml_extract",
     "MHTML_EXTRACT_SCHEMA",
@@ -143,34 +145,23 @@ def mhtml_extract(df, id_col: str = "doc_id", asset_col: str = "asset"):
     """Arrow-batched MHTML → text: one row per archive, payloads never
     shuffle, corrupt/non-MHTML payloads isolate as
     ``decoded_ok=false`` rows."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                try:
-                    out = parse_mhtml(bytes(payload))
-                    rows.append({
-                        "doc_id": _id, "decoded_ok": True,
-                        "location": out["location"],
-                        "title": out["title"],
-                        "n_resources": out["n_resources"],
-                        "resource_types": out["resource_types"],
-                        "text": out["text"]})
-                except MhtmlError:
-                    rows.append({
-                        "doc_id": _id, "decoded_ok": False,
-                        "location": None, "title": None,
-                        "n_resources": None, "resource_types": None,
-                        "text": None})
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "decoded_ok", "location", "title",
-                "n_resources", "resource_types", "text"])
+    def run(_id, payload):
+        try:
+            out = parse_mhtml(bytes(payload))
+            yield {
+                "doc_id": _id, "decoded_ok": True,
+                "location": out["location"],
+                "title": out["title"],
+                "n_resources": out["n_resources"],
+                "resource_types": out["resource_types"],
+                "text": out["text"]}
+        except MhtmlError:
+            yield {"doc_id": _id, "decoded_ok": False}
 
     from pyspark.sql import functions as F
 
-    out = df.select(F.col(id_col), F.col(asset_col)).mapInPandas(
+    out = map_rows(
+        df.select(F.col(id_col), F.col(asset_col)),
         run, MHTML_EXTRACT_SCHEMA)
     if id_col != "doc_id":
         out = out.withColumnRenamed("doc_id", id_col)

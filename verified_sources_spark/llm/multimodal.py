@@ -30,6 +30,8 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
+from verified_sources_spark.boundary import map_rows
+
 ASSET_META_TYPE = T.StructType(
     [
         T.StructField("mime", T.StringType()),
@@ -128,166 +130,106 @@ def extract_features(
     PLAN BUILD time on the driver so a missing dependency fails fast, not
     N-tasks-deep into a job."""
 
+    def refused(_id, p):
+        return {"doc_id": _id, "decoded_ok": False,
+                "n_bytes": len(p) if p is not None else 0}
+
     if decoder == "pil":
         _load_pil()  # fail fast on the driver; executors re-import below
 
-        def run_pil(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def run_pil(_id, p):
             import io
 
             Image = _load_pil()
-            for pdf in batches:
-                feats = []
-                for p in pdf[asset_col]:
-                    try:
-                        with Image.open(io.BytesIO(p)) as im:
-                            feats.append(
-                                {
-                                    "decoded_ok": True,
-                                    "width": im.width,
-                                    "height": im.height,
-                                    "mode": im.mode,
-                                    "format": im.format,
-                                    "n_bytes": len(p),
-                                }
-                            )
-                    except Exception:
-                        feats.append(
-                            {
-                                "decoded_ok": False,
-                                "width": None,
-                                "height": None,
-                                "mode": None,
-                                "format": None,
-                                "n_bytes": len(p) if p is not None else 0,
-                            }
-                        )
-                out = pd.DataFrame(feats)
-                out.insert(0, "doc_id", pdf[id_col].values)
-                yield out
+            try:
+                with Image.open(io.BytesIO(p)) as im:
+                    row = {"doc_id": _id, "decoded_ok": True,
+                           "width": im.width, "height": im.height,
+                           "mode": im.mode, "format": im.format,
+                           "n_bytes": len(p)}
+            except Exception:
+                row = refused(_id, p)
+            yield row
 
-        return df.select(id_col, asset_col).mapInPandas(run_pil, PIL_FEATURE_SCHEMA)
+        return map_rows(df.select(id_col, asset_col), run_pil, PIL_FEATURE_SCHEMA)
 
     if decoder == "png":
         # pure-stdlib real decode (llm/png_codec.py) — always available,
         # so the real path runs in codec-free environments too
-        def run_png(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def run_png(_id, p):
             from verified_sources_spark.llm.png_codec import probe
 
-            for pdf in batches:
-                feats = []
-                for p in pdf[asset_col]:
-                    try:
-                        info = probe(bytes(p))
-                        feats.append(
-                            {
-                                "decoded_ok": True,
-                                "width": info["width"],
-                                "height": info["height"],
-                                "mode": info["mode"],
-                                "format": "PNG",
-                                "n_bytes": len(p),
-                            }
-                        )
-                    except Exception:
-                        feats.append(
-                            {
-                                "decoded_ok": False,
-                                "width": None,
-                                "height": None,
-                                "mode": None,
-                                "format": None,
-                                "n_bytes": len(p) if p is not None else 0,
-                            }
-                        )
-                out = pd.DataFrame(feats)
-                out.insert(0, "doc_id", pdf[id_col].values)
-                yield out
+            try:
+                info = probe(bytes(p))
+                row = {"doc_id": _id, "decoded_ok": True,
+                       "width": info["width"], "height": info["height"],
+                       "mode": info["mode"], "format": "PNG",
+                       "n_bytes": len(p)}
+            except Exception:
+                row = refused(_id, p)
+            yield row
 
-        return df.select(id_col, asset_col).mapInPandas(run_png, PIL_FEATURE_SCHEMA)
+        return map_rows(df.select(id_col, asset_col), run_png, PIL_FEATURE_SCHEMA)
 
     if decoder == "image":
         # format-sniffing header probe (PNG or baseline JPEG) — the
         # manifest-building mode for mixed-format corpora, pure stdlib
-        def run_img(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def run_img(_id, p):
             from verified_sources_spark.llm.image_io import sniff_image_format
             from verified_sources_spark.llm.jpeg_codec import probe as jprobe
             from verified_sources_spark.llm.png_codec import probe as pprobe
 
-            for pdf in batches:
-                feats = []
-                for p in pdf[asset_col]:
-                    try:
-                        raw = bytes(p)
-                        fmt = sniff_image_format(raw)
-                        if fmt == "png":
-                            info = pprobe(raw)
-                            mode = info["mode"]
-                        elif fmt == "jpeg":
-                            info = jprobe(raw)
-                            mode = "L" if info["n_components"] == 1 else "RGB"
-                        elif fmt == "gif":
-                            from verified_sources_spark.llm.gif_codec import (
-                                probe as gprobe,
-                            )
+            try:
+                raw = bytes(p)
+                fmt = sniff_image_format(raw)
+                if fmt == "png":
+                    info = pprobe(raw)
+                    mode = info["mode"]
+                elif fmt == "jpeg":
+                    info = jprobe(raw)
+                    mode = "L" if info["n_components"] == 1 else "RGB"
+                elif fmt == "gif":
+                    from verified_sources_spark.llm.gif_codec import (
+                        probe as gprobe,
+                    )
 
-                            info = gprobe(raw)
-                            mode = "P"
-                        elif fmt == "bmp":
-                            from verified_sources_spark.llm.bmp_codec import (
-                                probe as bprobe,
-                            )
+                    info = gprobe(raw)
+                    mode = "P"
+                elif fmt == "bmp":
+                    from verified_sources_spark.llm.bmp_codec import (
+                        probe as bprobe,
+                    )
 
-                            info = bprobe(raw)
-                            mode = "RGB"
-                        elif fmt == "webp":
-                            from verified_sources_spark.llm.image_io import (
-                                probe_webp,
-                            )
+                    info = bprobe(raw)
+                    mode = "RGB"
+                elif fmt == "webp":
+                    from verified_sources_spark.llm.image_io import (
+                        probe_webp,
+                    )
 
-                            info = probe_webp(raw)
-                            mode = None  # header-only: pixel decode refuses
-                        else:
-                            raise ValueError("not an image")
-                        feats.append(
-                            {
-                                "decoded_ok": True,
-                                "width": info["width"],
-                                "height": info["height"],
-                                "mode": mode,
-                                "format": fmt.upper(),
-                                "n_bytes": len(p),
-                            }
-                        )
-                    except Exception:
-                        feats.append(
-                            {
-                                "decoded_ok": False,
-                                "width": None,
-                                "height": None,
-                                "mode": None,
-                                "format": None,
-                                "n_bytes": len(p) if p is not None else 0,
-                            }
-                        )
-                out = pd.DataFrame(feats)
-                out.insert(0, "doc_id", pdf[id_col].values)
-                yield out
+                    info = probe_webp(raw)
+                    mode = None  # header-only: pixel decode refuses
+                else:
+                    raise ValueError("not an image")
+                row = {"doc_id": _id, "decoded_ok": True,
+                       "width": info["width"], "height": info["height"],
+                       "mode": mode, "format": fmt.upper(),
+                       "n_bytes": len(p)}
+            except Exception:
+                row = refused(_id, p)
+            yield row
 
-        return df.select(id_col, asset_col).mapInPandas(run_img, PIL_FEATURE_SCHEMA)
+        return map_rows(df.select(id_col, asset_col), run_img, PIL_FEATURE_SCHEMA)
 
     if decoder != "fake":
         raise ValueError(
             f"decoder must be 'fake', 'png', 'image' or 'pil', got {decoder!r}"
         )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [_fake_decode(p) for p in pdf[asset_col]]
-            out = pd.DataFrame(feats)
-            out.insert(0, "doc_id", pdf[id_col].values)
-            yield out
+    def run(_id, p):
+        yield {"doc_id": _id, **_fake_decode(p)}
 
-    return df.select(id_col, asset_col).mapInPandas(run, FEATURE_SCHEMA)
+    return map_rows(df.select(id_col, asset_col), run, FEATURE_SCHEMA)
 
 
 AUDIO_FEATURE_SCHEMA = T.StructType(
@@ -318,55 +260,37 @@ def audio_features(
     ``decoded_ok=false`` row instead of a failed task."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(_id, p):
         from verified_sources_spark.llm.wav_codec import decode
 
-        for pdf in batches:
-            feats = []
-            for p in pdf[asset_col]:
-                try:
-                    m = decode(bytes(p))
-                    s = m["samples"]  # (frames, channels) float64
-                    zc = 0.0
-                    if s.shape[0] > 1:
-                        zc = float(
-                            np.mean(np.diff(np.signbit(s), axis=0).sum(axis=0))
-                            / (s.shape[0] - 1)
-                        )
-                    feats.append(
-                        {
-                            "decoded_ok": True,
-                            "sample_rate": m["sample_rate"],
-                            "channels": m["channels"],
-                            "bits_per_sample": m["bits_per_sample"],
-                            "duration_ms": m["duration_ms"],
-                            "n_frames": m["n_frames"],
-                            "rms": float(np.sqrt(np.mean(s**2))) if s.size else 0.0,
-                            "peak": float(np.max(np.abs(s))) if s.size else 0.0,
-                            "zero_crossing_rate": zc,
-                            "n_bytes": len(p),
-                        }
-                    )
-                except Exception:
-                    feats.append(
-                        {
-                            "decoded_ok": False,
-                            "sample_rate": None,
-                            "channels": None,
-                            "bits_per_sample": None,
-                            "duration_ms": None,
-                            "n_frames": None,
-                            "rms": None,
-                            "peak": None,
-                            "zero_crossing_rate": None,
-                            "n_bytes": len(p) if p is not None else 0,
-                        }
-                    )
-            out = pd.DataFrame(feats)
-            out.insert(0, "doc_id", pdf[id_col].values)
-            yield out
+        try:
+            m = decode(bytes(p))
+            s = m["samples"]  # (frames, channels) float64
+            zc = 0.0
+            if s.shape[0] > 1:
+                zc = float(
+                    np.mean(np.diff(np.signbit(s), axis=0).sum(axis=0))
+                    / (s.shape[0] - 1)
+                )
+            row = {
+                "doc_id": _id,
+                "decoded_ok": True,
+                "sample_rate": m["sample_rate"],
+                "channels": m["channels"],
+                "bits_per_sample": m["bits_per_sample"],
+                "duration_ms": m["duration_ms"],
+                "n_frames": m["n_frames"],
+                "rms": float(np.sqrt(np.mean(s**2))) if s.size else 0.0,
+                "peak": float(np.max(np.abs(s))) if s.size else 0.0,
+                "zero_crossing_rate": zc,
+                "n_bytes": len(p),
+            }
+        except Exception:
+            row = {"doc_id": _id, "decoded_ok": False,
+                   "n_bytes": len(p) if p is not None else 0}
+        yield row
 
-    return df.select(id_col, asset_col).mapInPandas(run, AUDIO_FEATURE_SCHEMA)
+    return map_rows(df.select(id_col, asset_col), run, AUDIO_FEATURE_SCHEMA)
 
 
 def frame_sample_plan(df: DataFrame, asset_col: str = "asset", every_ms: int = 1000) -> DataFrame:
@@ -431,6 +355,7 @@ def resize_images(
                 except Exception:
                     return None
 
+            # not map_rows: ids pass through as one array; sizes are scalars
             for pdf in batches:
                 yield pd.DataFrame(
                     {
@@ -469,6 +394,7 @@ def resize_images(
                 except Exception:
                     return None
 
+            # not map_rows: ids pass through as one array; sizes are scalars
             for pdf in batches:
                 yield pd.DataFrame(
                     {
@@ -487,6 +413,7 @@ def resize_images(
         )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # not map_rows: ids pass through as one array; sizes are scalars
         for pdf in batches:
             out = pd.DataFrame(
                 {

@@ -25,6 +25,8 @@ from __future__ import annotations
 
 import json
 
+from verified_sources_spark.boundary import map_rows
+
 __all__ = ["NotebookError", "notebook_cells", "encode_notebook"]
 
 
@@ -156,29 +158,17 @@ NOTEBOOK_CELLS_SCHEMA = ("doc_id long, decoded_ok boolean, "
 def notebook_extract(df, id_col: str = "doc_id", asset_col: str = "asset"):
     """Arrow-batched notebook → per-cell rows; payloads never shuffle,
     corrupt notebooks isolate as one ``decoded_ok=false`` row."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                try:
-                    for c in notebook_cells(bytes(payload)):
-                        rows.append({"doc_id": _id, "decoded_ok": True,
-                                     **c})
-                except NotebookError:
-                    rows.append({"doc_id": _id, "decoded_ok": False,
-                                 "cell_idx": None, "cell_type": None,
-                                 "source": None, "n_outputs": None,
-                                 "has_image_output": None})
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "decoded_ok", "cell_idx",
-                               "cell_type", "source", "n_outputs",
-                               "has_image_output"])
+    def run(_id, payload):
+        try:
+            for c in notebook_cells(bytes(payload)):
+                yield {"doc_id": _id, "decoded_ok": True, **c}
+        except NotebookError:
+            yield {"doc_id": _id, "decoded_ok": False}
 
     from pyspark.sql import functions as F
 
-    out = df.select(F.col(id_col), F.col(asset_col)).mapInPandas(
+    out = map_rows(
+        df.select(F.col(id_col), F.col(asset_col)),
         run, NOTEBOOK_CELLS_SCHEMA)
     if id_col != "doc_id":
         out = out.withColumnRenamed("doc_id", id_col)

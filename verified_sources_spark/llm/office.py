@@ -49,6 +49,8 @@ import zipfile
 import zlib
 import xml.etree.ElementTree as ET
 
+from verified_sources_spark.boundary import map_rows
+
 __all__ = [
     "OfficeError",
     "encode_docx", "encode_xlsx", "encode_pptx",
@@ -1126,39 +1128,28 @@ def office_extract(df, id_col: str = "doc_id", asset_col: str = "asset"):
     file isolates as a single ``decoded_ok=false`` row (reference
     analogue: sources/unstructured_data routes office files into text
     rows; sources/filesystem lands the raw bytes)."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                try:
-                    out = extract_office(bytes(payload))
-                    units = out["units"]
-                    for i, u in enumerate(units):
-                        rows.append({
-                            "doc_id": _id, "decoded_ok": True,
-                            "format": out["format"], "unit_idx": i,
-                            "n_units": len(units), "text": u,
-                        })
-                    if not units:
-                        rows.append({
-                            "doc_id": _id, "decoded_ok": True,
-                            "format": out["format"], "unit_idx": None,
-                            "n_units": 0, "text": None,
-                        })
-                except OfficeError:
-                    rows.append({
-                        "doc_id": _id, "decoded_ok": False, "format": None,
-                        "unit_idx": None, "n_units": None, "text": None,
-                    })
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "decoded_ok", "format", "unit_idx", "n_units",
-                "text"])
+    def run(_id, payload):
+        try:
+            out = extract_office(bytes(payload))
+            units = out["units"]
+            for i, u in enumerate(units):
+                yield {
+                    "doc_id": _id, "decoded_ok": True,
+                    "format": out["format"], "unit_idx": i,
+                    "n_units": len(units), "text": u,
+                }
+            if not units:
+                yield {
+                    "doc_id": _id, "decoded_ok": True,
+                    "format": out["format"], "n_units": 0,
+                }
+        except OfficeError:
+            yield {"doc_id": _id, "decoded_ok": False}
 
     from pyspark.sql import functions as F
 
-    out = df.select(F.col(id_col), F.col(asset_col)).mapInPandas(
+    out = map_rows(
+        df.select(F.col(id_col), F.col(asset_col)),
         run, OFFICE_EXTRACT_SCHEMA)
     if id_col != "doc_id":
         out = out.withColumnRenamed("doc_id", id_col)

@@ -45,6 +45,8 @@ import re
 import struct
 import zlib
 
+from verified_sources_spark.boundary import map_rows
+
 __all__ = ["PdfError", "extract_pdf_text", "encode_pdf",
            "extract_pdf_images", "pdf_images", "pdf_extract"]
 
@@ -1181,26 +1183,19 @@ def pdf_extract(df, id_col: str = "doc_id", asset_col: str = "asset"):
     unstructured_data pipeline shape).  Payloads never shuffle; a
     corrupt or refused (encrypted / exotic-filter) file isolates as
     ``decoded_ok=false``."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                try:
-                    out = extract_pdf_text(bytes(payload))
-                    rows.append({"doc_id": _id, "decoded_ok": True,
-                                 "n_pages": out["n_pages"],
-                                 "text": out["text"]})
-                except PdfError:
-                    rows.append({"doc_id": _id, "decoded_ok": False,
-                                 "n_pages": None, "text": None})
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "decoded_ok", "n_pages", "text"])
+    def run(_id, payload):
+        try:
+            out = extract_pdf_text(bytes(payload))
+            yield {"doc_id": _id, "decoded_ok": True,
+                   "n_pages": out["n_pages"],
+                   "text": out["text"]}
+        except PdfError:
+            yield {"doc_id": _id, "decoded_ok": False}
 
     from pyspark.sql import functions as F
 
-    out = df.select(F.col(id_col), F.col(asset_col)).mapInPandas(
+    out = map_rows(
+        df.select(F.col(id_col), F.col(asset_col)),
         run, PDF_EXTRACT_SCHEMA
     )
     if id_col != "doc_id":
@@ -1361,48 +1356,31 @@ def pdf_images(df, id_col: str = "doc_id", asset_col: str = "asset"):
     the scan's executor).  A PDF with no images emits one
     ``decoded_ok=true, image_idx=null`` row; corrupt/refused files
     isolate as ``decoded_ok=false``."""
-    import pandas as pd
-
-    def run(batches):
+    def run(_id, payload):
         from verified_sources_spark.llm.image_dedup import _dhash_of_pixels
 
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                try:
-                    ims = extract_pdf_images(bytes(payload))
-                    for i, im in enumerate(ims):
-                        ch = 3 if im["mode"] == "RGB" else 4
-                        hv = _dhash_of_pixels(
-                            im["pixels"], im["width"], im["height"], ch, 8)
-                        if hv >= 1 << 63:
-                            hv -= 1 << 64
-                        rows.append({
-                            "doc_id": _id, "decoded_ok": True,
-                            "image_idx": i, "width": im["width"],
-                            "height": im["height"], "codec": im["codec"],
-                            "dhash": hv})
-                    if not ims:
-                        rows.append({
-                            "doc_id": _id, "decoded_ok": True,
-                            "image_idx": None, "width": None,
-                            "height": None, "codec": None, "dhash": None})
-                except PdfError:
-                    rows.append({
-                        "doc_id": _id, "decoded_ok": False,
-                        "image_idx": None, "width": None, "height": None,
-                        "codec": None, "dhash": None})
-            from verified_sources_spark.llm._frames import exact_frame
-            # 64-bit hash column: keep nullable-Int64, never float64
-            yield exact_frame(
-                rows,
-                ["doc_id", "decoded_ok", "image_idx", "width", "height",
-                 "codec", "dhash"],
-                int64_cols=("dhash",))
+        try:
+            ims = extract_pdf_images(bytes(payload))
+            for i, im in enumerate(ims):
+                ch = 3 if im["mode"] == "RGB" else 4
+                hv = _dhash_of_pixels(
+                    im["pixels"], im["width"], im["height"], ch, 8)
+                if hv >= 1 << 63:
+                    hv -= 1 << 64
+                yield {
+                    "doc_id": _id, "decoded_ok": True,
+                    "image_idx": i, "width": im["width"],
+                    "height": im["height"], "codec": im["codec"],
+                    "dhash": hv}
+            if not ims:
+                yield {"doc_id": _id, "decoded_ok": True}
+        except PdfError:
+            yield {"doc_id": _id, "decoded_ok": False}
 
     from pyspark.sql import functions as F
 
-    out = df.select(F.col(id_col), F.col(asset_col)).mapInPandas(
+    out = map_rows(
+        df.select(F.col(id_col), F.col(asset_col)),
         run, PDF_IMAGES_SCHEMA)
     if id_col != "doc_id":
         out = out.withColumnRenamed("doc_id", id_col)

@@ -25,6 +25,8 @@ from __future__ import annotations
 
 import xml.etree.ElementTree as ET
 
+from verified_sources_spark.boundary import map_rows
+
 __all__ = [
     "SeDumpError", "iter_posts", "encode_posts", "se_posts",
     "SE_POSTS_SCHEMA",
@@ -114,35 +116,20 @@ SE_POSTS_SCHEMA = (
 def se_posts(df, id_col: str = "doc_id", asset_col: str = "asset"):
     """Arrow-batched Posts.xml → per-post rows; corrupt payloads
     isolate as ``decoded_ok=false``."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                try:
-                    # buffer per dump: a mid-generator refusal must be
-                    # all-or-nothing, never partial rows + a false row
-                    doc_rows = [{"doc_id": _id, "decoded_ok": True, **p}
-                                for p in iter_posts(bytes(payload))]
-                    rows += doc_rows
-                except SeDumpError:
-                    rows.append({
-                        "doc_id": _id, "decoded_ok": False,
-                        "post_id": None, "post_type": None,
-                        "parent_id": None, "title": None,
-                        "score": None, "tags": None, "text": None})
-            from verified_sources_spark.llm._frames import exact_frame
-
-            yield exact_frame(
-                rows, ["doc_id", "decoded_ok", "post_id", "post_type",
-                       "parent_id", "title", "score", "tags", "text"],
-                int64_cols=("post_id", "parent_id"))
+    def run(_id, payload):
+        try:
+            # buffer per dump: a mid-generator refusal must be
+            # all-or-nothing, never partial rows + a false row
+            doc_rows = [{"doc_id": _id, "decoded_ok": True, **p}
+                        for p in iter_posts(bytes(payload))]
+        except SeDumpError:
+            doc_rows = [{"doc_id": _id, "decoded_ok": False}]
+        yield from doc_rows
 
     from pyspark.sql import functions as F
 
-    out = df.select(F.col(id_col), F.col(asset_col)).mapInPandas(
-        run, SE_POSTS_SCHEMA)
+    out = map_rows(df.select(F.col(id_col), F.col(asset_col)), run,
+                   SE_POSTS_SCHEMA)
     if id_col != "doc_id":
         out = out.withColumnRenamed("doc_id", id_col)
     return out

@@ -117,6 +117,7 @@ def cosine_topk_vectorized(
     topk_per_batch = max(k + 1, 8)  # +1 covers self-match removal later
 
     def score(batches):
+        # not map_rows: numpy matrix math over the whole batch
         for pdf in batches:
             ids = pdf[id_col].to_numpy(dtype=np.int64)
             mat = np.array(list(pdf[vec_col]), dtype=np.float64)
@@ -126,12 +127,11 @@ def cosine_topk_vectorized(
             m = min(topk_per_batch, sims.shape[0])
             # partial top-m per query within this batch
             part = np.argpartition(-sims, m - 1, axis=0)[:m]
-            rows = {
+            yield pd.DataFrame({
                 "query_id": np.repeat(q_ids, m),
                 "neighbor_id": ids[part].T.ravel(),
                 "__cos": np.take_along_axis(sims, part, axis=0).T.ravel(),
-            }
-            yield pd.DataFrame(rows)
+            })
 
     candidates = corpus.select(id_col, vec_col).mapInPandas(score, out_schema)
     candidates = candidates.filter(F.col("neighbor_id") != F.col("query_id"))
@@ -241,6 +241,7 @@ def argmin_cluster(
     )
 
     def assign(batches):
+        # not map_rows: numpy matrix math over the whole batch
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -345,6 +346,7 @@ def rank_clusters_scaled(
     )
 
     def rank(batches):
+        # not map_rows: numpy matrix math over the whole batch
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -824,6 +826,7 @@ def assign_two_level(
     )
 
     def assign(batches):
+        # not map_rows: numpy matrix math over the whole batch
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -923,6 +926,7 @@ def pq_topk(
         bb = b_books.value
         dt = b_dtab.value
         qi = np.array(b_qids.value, dtype=np.int64)
+        # not map_rows: numpy matrix math over the whole batch
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -939,20 +943,16 @@ def pq_topk(
             ad = np.zeros((len(qi), len(ids)), dtype=np.int64)
             for s in range(m):
                 ad += dt[:, s, :][:, codes[:, s]]
-            rows = []
+            parts = []
             for q in range(len(qi)):
-                mask = ids != qi[q]
-                cand = np.where(mask)[0]
-                if not len(cand):
-                    continue
+                cand = np.where(ids != qi[q])[0]
                 # per-partition prune: k smallest (adist, id) leave
-                order = np.lexsort((ids[cand], ad[q][cand]))[:k]
-                for j in cand[order]:
-                    rows.append({"query_id": int(qi[q]),
-                                 "neighbor_id": int(ids[j]),
-                                 "adist": int(ad[q][j])})
-            yield pd.DataFrame(
-                rows, columns=["query_id", "neighbor_id", "adist"])
+                sel = cand[np.lexsort((ids[cand], ad[q][cand]))[:k]]
+                parts.append((np.full(len(sel), qi[q]), ids[sel], ad[q][sel]))
+            if parts:
+                qcol, ncol, dcol = (np.concatenate(c) for c in zip(*parts))
+                yield pd.DataFrame(
+                    {"query_id": qcol, "neighbor_id": ncol, "adist": dcol})
 
     from pyspark.sql import Window
 
@@ -1097,6 +1097,7 @@ def ivfpq_topk(
         pr = b_probe.value
         dt = b_dtabs.value
         qi_all = b_qids.value
+        # not map_rows: numpy matrix math over the whole batch
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -1110,25 +1111,22 @@ def ivfpq_topk(
                 rs = R[:, s * sub : (s + 1) * sub]
                 dd = rs[:, None, :] - bb[s][None, :, :]
                 codes[:, s] = (dd * dd).sum(axis=2).argmin(axis=1)
-            rows = []
+            parts = []
             for qi in range(len(qi_all)):
                 for p in range(pr.shape[1]):
                     c = pr[qi, p]
                     sel = np.where((cell == c)
                                    & (ids != qi_all[qi]))[0]
-                    if not len(sel):
-                        continue
                     ad = np.zeros(len(sel), dtype=np.int64)
                     for s in range(m):
                         ad += dt[qi, p, s][codes[sel, s]]
                     order = np.lexsort((ids[sel], ad))[:k]
-                    for j in order:
-                        rows.append({
-                            "query_id": int(qi_all[qi]),
-                            "neighbor_id": int(ids[sel[j]]),
-                            "adist": int(ad[j])})
-            yield pd.DataFrame(
-                rows, columns=["query_id", "neighbor_id", "adist"])
+                    parts.append((np.full(len(order), qi_all[qi]),
+                                  ids[sel[order]], ad[order]))
+            if parts:
+                qcol, ncol, dcol = (np.concatenate(c) for c in zip(*parts))
+                yield pd.DataFrame(
+                    {"query_id": qcol, "neighbor_id": ncol, "adist": dcol})
 
     cands = corpus.select(id_col, vec_col).mapInPandas(score, out_schema)
     w = (Window.partitionBy("query_id")

@@ -23,6 +23,8 @@ from __future__ import annotations
 
 import re
 
+from verified_sources_spark.boundary import map_rows
+
 __all__ = ["SubtitleError", "sniff_subtitle_format", "parse_subtitles",
            "subtitle_cues", "encode_srt", "encode_vtt", "encode_ass",
            "encode_ttml"]
@@ -269,34 +271,23 @@ def subtitle_cues(df, id_col: str = "doc_id", text_col: str = "payload"):
     """Arrow-batched subtitle explosion: one row per cue (the aligned
     text channel for caption/ASR corpora); malformed files isolate as
     ``decoded_ok=false`` rows."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[text_col]):
-                try:
-                    s = payload if isinstance(payload, str) else bytes(
-                        payload).decode("utf-8", errors="replace")
-                    fmt = sniff_subtitle_format(s)
-                    for cue in parse_subtitles(s):
-                        rows.append(
-                            {"doc_id": _id, "decoded_ok": True,
-                             "format": fmt, "idx": cue["idx"],
-                             "start_ms": cue["start_ms"],
-                             "end_ms": cue["end_ms"], "text": cue["text"]})
-                except SubtitleError:
-                    rows.append({"doc_id": _id, "decoded_ok": False,
-                                 "format": None, "idx": None,
-                                 "start_ms": None, "end_ms": None,
-                                 "text": None})
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "decoded_ok", "format", "idx",
-                               "start_ms", "end_ms", "text"])
+    def run(_id, payload):
+        try:
+            s = payload if isinstance(payload, str) else bytes(
+                payload).decode("utf-8", errors="replace")
+            fmt = sniff_subtitle_format(s)
+            for cue in parse_subtitles(s):
+                yield {"doc_id": _id, "decoded_ok": True,
+                       "format": fmt, "idx": cue["idx"],
+                       "start_ms": cue["start_ms"],
+                       "end_ms": cue["end_ms"], "text": cue["text"]}
+        except SubtitleError:
+            yield {"doc_id": _id, "decoded_ok": False}
 
     from pyspark.sql import functions as F
 
-    out = df.select(F.col(id_col), F.col(text_col)).mapInPandas(
+    out = map_rows(
+        df.select(F.col(id_col), F.col(text_col)),
         run, SUBTITLE_SCHEMA
     )
     if id_col != "doc_id":

@@ -29,6 +29,8 @@ from __future__ import annotations
 import csv
 import io
 
+from verified_sources_spark.boundary import map_rows
+
 __all__ = [
     "TabularError", "sniff_delimited", "parse_delimited",
     "delimited_rows", "encode_delimited", "DELIMITED_ROWS_SCHEMA",
@@ -140,43 +142,31 @@ def delimited_rows(df, id_col: str = "doc_id",
     cell), header carried on every row for downstream routing.
     Payloads never shuffle; non-tables isolate as
     ``decoded_ok=false``."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                try:
-                    out = parse_delimited(bytes(payload))
-                    hdr = ("\t".join(out["header"])
-                           if out["header"] else None)
-                    for i, r in enumerate(out["rows"]):
-                        rows.append({
-                            "doc_id": _id, "decoded_ok": True,
-                            "delimiter": out["delimiter"],
-                            "row_idx": i, "n_rows": out["n_rows"],
-                            "n_cols": out["n_cols"], "header": hdr,
-                            "line": "\t".join(r)})
-                    if not out["rows"]:
-                        rows.append({
-                            "doc_id": _id, "decoded_ok": True,
-                            "delimiter": out["delimiter"],
-                            "row_idx": None, "n_rows": 0,
-                            "n_cols": out["n_cols"], "header": hdr,
-                            "line": None})
-                except TabularError:
-                    rows.append({
-                        "doc_id": _id, "decoded_ok": False,
-                        "delimiter": None, "row_idx": None,
-                        "n_rows": None, "n_cols": None,
-                        "header": None, "line": None})
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "decoded_ok", "delimiter", "row_idx",
-                "n_rows", "n_cols", "header", "line"])
+    def run(_id, payload):
+        try:
+            out = parse_delimited(bytes(payload))
+            hdr = ("\t".join(out["header"])
+                   if out["header"] else None)
+            for i, r in enumerate(out["rows"]):
+                yield {
+                    "doc_id": _id, "decoded_ok": True,
+                    "delimiter": out["delimiter"],
+                    "row_idx": i, "n_rows": out["n_rows"],
+                    "n_cols": out["n_cols"], "header": hdr,
+                    "line": "\t".join(r)}
+            if not out["rows"]:
+                yield {
+                    "doc_id": _id, "decoded_ok": True,
+                    "delimiter": out["delimiter"],
+                    "n_rows": 0,
+                    "n_cols": out["n_cols"], "header": hdr}
+        except TabularError:
+            yield {"doc_id": _id, "decoded_ok": False}
 
     from pyspark.sql import functions as F
 
-    out = df.select(F.col(id_col), F.col(asset_col)).mapInPandas(
+    out = map_rows(
+        df.select(F.col(id_col), F.col(asset_col)),
         run, DELIMITED_ROWS_SCHEMA)
     if id_col != "doc_id":
         out = out.withColumnRenamed("doc_id", id_col)

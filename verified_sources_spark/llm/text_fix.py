@@ -39,6 +39,8 @@ from __future__ import annotations
 import re
 import unicodedata
 
+from verified_sources_spark.boundary import map_rows
+
 __all__ = [
     "fix_mojibake", "canonicalize_text", "fix_text", "FIX_TEXT_SCHEMA",
     "detect_bare_charset", "decode_bare_text",
@@ -356,26 +358,19 @@ def fix_text(df, id_col: str = "doc_id", text_col: str = "text"):
     the cleaned text and audit flags (how many mojibake layers were
     reversed; whether canonicalization changed anything).  Null text
     passes through as null."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _id, s in zip(pdf[id_col], pdf[text_col]):
-                if s is None:
-                    rows.append({"doc_id": _id, "mojibake_rounds": 0,
-                                 "canonicalized": False, "text": None})
-                    continue
-                repaired, rounds = fix_mojibake(str(s))
-                canon, changed = canonicalize_text(repaired)
-                rows.append({"doc_id": _id, "mojibake_rounds": rounds,
-                             "canonicalized": changed, "text": canon})
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "mojibake_rounds", "canonicalized", "text"])
+    def run(_id, s):
+        if s is None:
+            yield {"doc_id": _id, "mojibake_rounds": 0, "canonicalized": False}
+            return
+        repaired, rounds = fix_mojibake(str(s))
+        canon, changed = canonicalize_text(repaired)
+        yield {"doc_id": _id, "mojibake_rounds": rounds,
+               "canonicalized": changed, "text": canon}
 
     from pyspark.sql import functions as F
 
-    out = df.select(F.col(id_col), F.col(text_col)).mapInPandas(
+    out = map_rows(
+        df.select(F.col(id_col), F.col(text_col)),
         run, FIX_TEXT_SCHEMA)
     if id_col != "doc_id":
         out = out.withColumnRenamed("doc_id", id_col)

@@ -32,6 +32,8 @@ from __future__ import annotations
 
 import struct
 
+from verified_sources_spark.boundary import map_rows
+
 __all__ = [
     "TfRecordError", "crc32c", "encode_example", "parse_example",
     "encode_tfrecord", "iter_tfrecord", "tfrecord_rows",
@@ -284,8 +286,6 @@ def tfrecord_rows(df, id_col: str = "doc_id", asset_col: str = "asset"):
     header; bytes decode as UTF-8-replace, numbers render exactly).
     Corrupt framing / CRC mismatch / non-Example payloads isolate as
     ``decoded_ok=false`` rows."""
-    import pandas as pd
-
     def _cell(v):
         if isinstance(v, bytes):
             return v.decode("utf-8", errors="replace")
@@ -293,37 +293,29 @@ def tfrecord_rows(df, id_col: str = "doc_id", asset_col: str = "asset"):
             return repr(round(v, 6))
         return str(v)
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                _id = int(_id)
-                try:
-                    recs = [parse_example(r)
-                            for r in iter_tfrecord(bytes(payload))]
-                    if not recs:
-                        raise TfRecordError("empty TFRecord shard")
-                    names = sorted({k for r in recs for k in r})
-                    for i, r in enumerate(recs):
-                        rows.append({
-                            "doc_id": _id, "decoded_ok": True,
-                            "rec_idx": i, "n_records": len(recs),
-                            "header": "\t".join(names),
-                            "line": "\t".join(
-                                ";".join(_cell(v) for v in r.get(k, []))
-                                for k in names)})
-                except (TfRecordError, struct.error):
-                    rows.append({
-                        "doc_id": _id, "decoded_ok": False,
-                        "rec_idx": None, "n_records": None,
-                        "header": None, "line": None})
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "decoded_ok", "rec_idx", "n_records",
-                "header", "line"])
+    def run(_id, payload):
+        _id = int(_id)
+        try:
+            recs = [parse_example(r)
+                    for r in iter_tfrecord(bytes(payload))]
+            if not recs:
+                raise TfRecordError("empty TFRecord shard")
+            names = sorted({k for r in recs for k in r})
+            for i, r in enumerate(recs):
+                yield {
+                    "doc_id": _id, "decoded_ok": True,
+                    "rec_idx": i, "n_records": len(recs),
+                    "header": "\t".join(names),
+                    "line": "\t".join(
+                        ";".join(_cell(v) for v in r.get(k, []))
+                        for k in names)}
+        except (TfRecordError, struct.error):
+            yield {"doc_id": _id, "decoded_ok": False}
 
     from pyspark.sql import functions as F
 
-    out = df.select(F.col(id_col), F.col(asset_col)).mapInPandas(
+    out = map_rows(
+        df.select(F.col(id_col), F.col(asset_col)),
         run, TFRECORD_ROWS_SCHEMA)
     if id_col != "doc_id":
         out = out.withColumnRenamed("doc_id", id_col)

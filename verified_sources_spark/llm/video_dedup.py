@@ -43,13 +43,11 @@ so the SAME clip as an AVI and as a GIF dedups cross-container).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
+from verified_sources_spark.boundary import map_rows
 from verified_sources_spark.cut import cut
 
 VIDEO_PROBE_SCHEMA = T.StructType(
@@ -87,44 +85,26 @@ def video_probe(
     unknown compressed fourcc still PROBES fine (codec column carries
     the name) — only pixel decode refuses."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(_id, payload):
         from verified_sources_spark.llm.video_io import probe_video
 
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                try:
-                    m = probe_video(bytes(payload))
-                    rows.append(
-                        {
-                            "doc_id": _id,
-                            "decoded_ok": True,
-                            "width": m["width"],
-                            "height": m["height"],
-                            "n_frames": m["n_frames"],
-                            "fps": m["fps"],
-                            "codec": m["codec"],
-                            "duration_ms": m["duration_ms"],
-                        }
-                    )
-                except Exception:
-                    rows.append(
-                        {
-                            "doc_id": _id,
-                            "decoded_ok": False,
-                            "width": None,
-                            "height": None,
-                            "n_frames": None,
-                            "fps": None,
-                            "codec": None,
-                            "duration_ms": None,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in VIDEO_PROBE_SCHEMA.fields]
-            )
+        try:
+            m = probe_video(bytes(payload))
+            yield {
+                "doc_id": _id,
+                "decoded_ok": True,
+                "width": m["width"],
+                "height": m["height"],
+                "n_frames": m["n_frames"],
+                "fps": m["fps"],
+                "codec": m["codec"],
+                "duration_ms": m["duration_ms"],
+            }
+        except Exception:
+            yield {"doc_id": _id, "decoded_ok": False}
 
-    out = df.select(F.col(id_col), F.col(asset_col)).mapInPandas(
+    out = map_rows(
+        df.select(F.col(id_col), F.col(asset_col)),
         run, VIDEO_PROBE_SCHEMA
     )
     if id_col != "doc_id":
@@ -154,61 +134,45 @@ def video_fingerprint(
         raise ValueError("every_ms must be positive")
     nbits = hash_size * hash_size
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(_id, payload):
         from verified_sources_spark.llm.image_dedup import _dhash_of_pixels
         from verified_sources_spark.llm.video_io import probe_video, sample_frames
 
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                try:
-                    data = bytes(payload)
-                    meta = probe_video(data)
-                    picks = sample_frames(data, meta, every_ms)
-                    if not picks:
-                        raise ValueError("no sampleable frames")
-                    hashes = []
-                    ones = [0] * nbits
-                    for _idx, _ts, rgb in picks:
-                        hv = _dhash_of_pixels(
-                            rgb, meta["width"], meta["height"], 3, hash_size
-                        )
-                        for b in range(nbits):
-                            ones[b] += (hv >> (nbits - 1 - b)) & 1
-                        if hv >= 1 << 63:
-                            hv -= 1 << 64
-                        hashes.append(hv)
-                    n = len(hashes)
-                    vfp = 0
-                    for b in range(nbits):
-                        vfp = (vfp << 1) | int(ones[b] * 2 > n)
-                    if vfp >= 1 << 63:
-                        vfp -= 1 << 64
-                    rows.append(
-                        {
-                            "doc_id": _id,
-                            "decoded_ok": True,
-                            "vfp": vfp,
-                            "n_sampled": n,
-                            "frame_hashes": hashes,
-                        }
-                    )
-                except Exception:
-                    rows.append(
-                        {
-                            "doc_id": _id,
-                            "decoded_ok": False,
-                            "vfp": None,
-                            "n_sampled": None,
-                            "frame_hashes": None,
-                        }
-                    )
-            from verified_sources_spark.llm._frames import exact_frame
-            # vfp is a 64-bit hash: keep nullable-Int64, never float64
-            yield exact_frame(rows, [f.name for f in VIDEO_FP_SCHEMA.fields],
-                              int64_cols=("vfp",))
+        try:
+            data = bytes(payload)
+            meta = probe_video(data)
+            picks = sample_frames(data, meta, every_ms)
+            if not picks:
+                raise ValueError("no sampleable frames")
+            hashes = []
+            ones = [0] * nbits
+            for _idx, _ts, rgb in picks:
+                hv = _dhash_of_pixels(
+                    rgb, meta["width"], meta["height"], 3, hash_size
+                )
+                for b in range(nbits):
+                    ones[b] += (hv >> (nbits - 1 - b)) & 1
+                if hv >= 1 << 63:
+                    hv -= 1 << 64
+                hashes.append(hv)
+            n = len(hashes)
+            vfp = 0
+            for b in range(nbits):
+                vfp = (vfp << 1) | int(ones[b] * 2 > n)
+            if vfp >= 1 << 63:
+                vfp -= 1 << 64
+            yield {
+                "doc_id": _id,
+                "decoded_ok": True,
+                "vfp": vfp,
+                "n_sampled": n,
+                "frame_hashes": hashes,
+            }
+        except Exception:
+            yield {"doc_id": _id, "decoded_ok": False}
 
-    out = df.select(F.col(id_col), F.col(asset_col)).mapInPandas(
+    out = map_rows(
+        df.select(F.col(id_col), F.col(asset_col)),
         run, VIDEO_FP_SCHEMA
     )
     if id_col != "doc_id":
@@ -259,72 +223,54 @@ def video_shots(
     if not 0 <= threshold < hash_size * hash_size:
         raise ValueError("threshold must be within the fingerprint width")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(_id, payload):
         from verified_sources_spark.llm.image_dedup import _dhash_of_pixels
         from verified_sources_spark.llm.video_io import probe_video, sample_frames
 
-        cols = [f.name for f in VIDEO_SHOTS_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                try:
-                    data = bytes(payload)
-                    meta = probe_video(data)
-                    picks = sample_frames(data, meta, every_ms)
-                    if not picks:
-                        raise ValueError("no sampleable frames")
-                    hashes = []
-                    for _idx, _ts, rgb in picks:
-                        hashes.append(
-                            _dhash_of_pixels(
-                                rgb, meta["width"], meta["height"], 3, hash_size
-                            )
-                        )
-                    # cut positions in SAMPLED space -> shot spans
-                    starts = [0]
-                    for i in range(1, len(hashes)):
-                        if bin(hashes[i] ^ hashes[i - 1]).count("1") > threshold:
-                            starts.append(i)
-                    n_frames = meta["n_frames"]
-                    for s_idx, s in enumerate(starts):
-                        e = (
-                            starts[s_idx + 1]
-                            if s_idx + 1 < len(starts)
-                            else len(picks)
-                        )
-                        start_f = picks[s][0]
-                        end_f = picks[e][0] if e < len(picks) else n_frames
-                        khash = hashes[(s + e - 1) // 2]
-                        if khash >= 1 << 63:
-                            khash -= 1 << 64
-                        rows.append(
-                            {
-                                "doc_id": _id,
-                                "decoded_ok": True,
-                                "shot_idx": s_idx,
-                                "start_frame": start_f,
-                                "end_frame": end_f,
-                                "keyframe": picks[(s + e - 1) // 2][0],
-                                "keyframe_hash": khash,
-                            }
-                        )
-                except Exception:
-                    rows.append(
-                        {
-                            "doc_id": _id,
-                            "decoded_ok": False,
-                            "shot_idx": None,
-                            "start_frame": None,
-                            "end_frame": None,
-                            "keyframe": None,
-                            "keyframe_hash": None,
-                        }
+        try:
+            data = bytes(payload)
+            meta = probe_video(data)
+            picks = sample_frames(data, meta, every_ms)
+            if not picks:
+                raise ValueError("no sampleable frames")
+            hashes = []
+            for _idx, _ts, rgb in picks:
+                hashes.append(
+                    _dhash_of_pixels(
+                        rgb, meta["width"], meta["height"], 3, hash_size
                     )
-            from verified_sources_spark.llm._frames import exact_frame
-            # 64-bit hash column: keep nullable-Int64, never float64
-            yield exact_frame(rows, cols, int64_cols=("keyframe_hash",))
+                )
+            # cut positions in SAMPLED space -> shot spans
+            starts = [0]
+            for i in range(1, len(hashes)):
+                if bin(hashes[i] ^ hashes[i - 1]).count("1") > threshold:
+                    starts.append(i)
+            n_frames = meta["n_frames"]
+            for s_idx, s in enumerate(starts):
+                e = (
+                    starts[s_idx + 1]
+                    if s_idx + 1 < len(starts)
+                    else len(picks)
+                )
+                start_f = picks[s][0]
+                end_f = picks[e][0] if e < len(picks) else n_frames
+                khash = hashes[(s + e - 1) // 2]
+                if khash >= 1 << 63:
+                    khash -= 1 << 64
+                yield {
+                    "doc_id": _id,
+                    "decoded_ok": True,
+                    "shot_idx": s_idx,
+                    "start_frame": start_f,
+                    "end_frame": end_f,
+                    "keyframe": picks[(s + e - 1) // 2][0],
+                    "keyframe_hash": khash,
+                }
+        except Exception:
+            yield {"doc_id": _id, "decoded_ok": False}
 
-    out = df.select(F.col(id_col), F.col(asset_col)).mapInPandas(
+    out = map_rows(
+        df.select(F.col(id_col), F.col(asset_col)),
         run, VIDEO_SHOTS_SCHEMA
     )
     if id_col != "doc_id":
@@ -359,53 +305,47 @@ def video_keyframes(
     if every_ms <= 0:
         raise ValueError("every_ms must be positive")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(_id, payload):
         from verified_sources_spark.llm.image_dedup import _dhash_of_pixels
         from verified_sources_spark.llm.png_codec import encode as png_enc
         from verified_sources_spark.llm.video_io import probe_video, sample_frames
 
-        cols = [f.name for f in VIDEO_KEYFRAMES_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                try:
-                    data = bytes(payload)
-                    meta = probe_video(data)
-                    picks = sample_frames(data, meta, every_ms)
-                    if not picks:
-                        continue
-                    hashes = [
-                        _dhash_of_pixels(rgb, meta["width"], meta["height"], 3, 8)
-                        for _i, _t, rgb in picks
-                    ]
-                    starts = [0]
-                    for i in range(1, len(hashes)):
-                        if bin(hashes[i] ^ hashes[i - 1]).count("1") > threshold:
-                            starts.append(i)
-                    for s_idx, s in enumerate(starts):
-                        e = (
-                            starts[s_idx + 1]
-                            if s_idx + 1 < len(starts)
-                            else len(picks)
-                        )
-                        k = (s + e - 1) // 2
-                        idx, ts, rgb = picks[k]
-                        rows.append(
-                            {
-                                "doc_id": _id,
-                                "shot_idx": s_idx,
-                                "keyframe": idx,
-                                "ts_ms": ts,
-                                "image": png_enc(
-                                    meta["width"], meta["height"], rgb, "RGB"
-                                ),
-                            }
-                        )
-                except Exception:
-                    pass
-            yield pd.DataFrame(rows, columns=cols)
+        try:
+            data = bytes(payload)
+            meta = probe_video(data)
+            picks = sample_frames(data, meta, every_ms)
+            if not picks:
+                return
+            hashes = [
+                _dhash_of_pixels(rgb, meta["width"], meta["height"], 3, 8)
+                for _i, _t, rgb in picks
+            ]
+            starts = [0]
+            for i in range(1, len(hashes)):
+                if bin(hashes[i] ^ hashes[i - 1]).count("1") > threshold:
+                    starts.append(i)
+            for s_idx, s in enumerate(starts):
+                e = (
+                    starts[s_idx + 1]
+                    if s_idx + 1 < len(starts)
+                    else len(picks)
+                )
+                k = (s + e - 1) // 2
+                idx, ts, rgb = picks[k]
+                yield {
+                    "doc_id": _id,
+                    "shot_idx": s_idx,
+                    "keyframe": idx,
+                    "ts_ms": ts,
+                    "image": png_enc(
+                        meta["width"], meta["height"], rgb, "RGB"
+                    ),
+                }
+        except Exception:
+            pass
 
-    out = df.select(F.col(id_col), F.col(asset_col)).mapInPandas(
+    out = map_rows(
+        df.select(F.col(id_col), F.col(asset_col)),
         run, VIDEO_KEYFRAMES_SCHEMA
     )
     if id_col != "doc_id":

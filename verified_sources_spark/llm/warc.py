@@ -37,6 +37,8 @@ import re
 import zlib
 from html.parser import HTMLParser
 
+from verified_sources_spark.boundary import map_rows
+
 __all__ = [
     "WarcError",
     "iter_records",
@@ -493,46 +495,35 @@ def warc_extract(df, id_col: str = "doc_id", asset_col: str = "asset"):
     dedup/quality/lang-id surface.  Payloads never shuffle; a corrupt
     archive yields ``decoded_ok=false`` instead of failing the task (at
     100 TB a crawl WILL contain truncated members)."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                row = {"doc_id": _id, "decoded_ok": False, "warc_type": None,
-                       "uri": None, "status": None, "content_type": None,
-                       "charset": None, "decode_clean": None,
-                       "title": None, "text": None}
-                try:
-                    for hdrs, block in iter_records(bytes(payload)):
-                        if hdrs.get("WARC-Type") != "response":
-                            continue
-                        status, hh, body = http_payload(block)
-                        html, charset, clean = decode_body(hh, body)
-                        title, text = extract_text(html, collapse=False)
-                        row.update(
-                            decoded_ok=True,
-                            warc_type="response",
-                            uri=hdrs.get("WARC-Target-URI"),
-                            status=status,
-                            content_type=hh.get("content-type"),
-                            charset=charset,
-                            decode_clean=clean,
-                            title=title,
-                            text=text,
-                        )
-                        break
-                except WarcError:
-                    pass
-                rows.append(row)
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "decoded_ok", "warc_type", "uri",
-                               "status", "content_type", "charset",
-                               "decode_clean", "title", "text"])
+    def run(_id, payload):
+        row = {"doc_id": _id, "decoded_ok": False}
+        try:
+            for hdrs, block in iter_records(bytes(payload)):
+                if hdrs.get("WARC-Type") != "response":
+                    continue
+                status, hh, body = http_payload(block)
+                html, charset, clean = decode_body(hh, body)
+                title, text = extract_text(html, collapse=False)
+                row.update(
+                    decoded_ok=True,
+                    warc_type="response",
+                    uri=hdrs.get("WARC-Target-URI"),
+                    status=status,
+                    content_type=hh.get("content-type"),
+                    charset=charset,
+                    decode_clean=clean,
+                    title=title,
+                    text=text,
+                )
+                break
+        except WarcError:
+            pass
+        yield row
 
     from pyspark.sql import functions as F
 
-    out = df.select(F.col(id_col), F.col(asset_col)).mapInPandas(
+    out = map_rows(
+        df.select(F.col(id_col), F.col(asset_col)),
         run, WARC_EXTRACT_SCHEMA
     )
     if id_col != "doc_id":
@@ -594,54 +585,41 @@ def wet_extract(df, id_col: str = "doc_id", asset_col: str = "asset"):
     crawl text files by type; this is that front door for the WET
     flavor.  Payloads never shuffle.
     """
-    import pandas as pd
 
-    cols = ["doc_id", "decoded_ok", "record_idx", "n_conversion",
-            "n_skipped", "uri", "refers_to", "charset", "decode_clean",
-            "text"]
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                base = {"doc_id": _id, "decoded_ok": False,
-                        "record_idx": None, "n_conversion": None,
-                        "n_skipped": None, "uri": None, "refers_to": None,
-                        "charset": None, "decode_clean": None,
-                        "text": None}
-                try:
-                    recs = list(iter_records(bytes(payload)))
-                except WarcError:
-                    rows.append(base)
-                    continue
-                conv = [(h, b) for h, b in recs
-                        if h.get("WARC-Type") == "conversion"]
-                n_skipped = len(recs) - len(conv)
-                if not conv:
-                    rows.append({**base, "n_conversion": 0,
-                                 "n_skipped": n_skipped})
-                    continue
-                for idx, (hdrs, block) in enumerate(conv):
-                    ct = hdrs.get("Content-Type", "")
-                    # sniff_meta=False: WET conversion records are
-                    # extracted PLAIN TEXT — prose that QUOTES an
-                    # HTML meta tag must not hijack the charset
-                    text, charset, clean = decode_body(
-                        {"content-type": ct} if ct else None, block,
-                        sniff_meta=False)
-                    rows.append({
-                        "doc_id": _id, "decoded_ok": True,
-                        "record_idx": idx, "n_conversion": len(conv),
-                        "n_skipped": n_skipped,
-                        "uri": hdrs.get("WARC-Target-URI"),
-                        "refers_to": hdrs.get("WARC-Refers-To"),
-                        "charset": charset, "decode_clean": clean,
-                        "text": text})
-            yield pd.DataFrame(rows, columns=cols)
+    def run(_id, payload):
+        base = {"doc_id": _id, "decoded_ok": False}
+        try:
+            recs = list(iter_records(bytes(payload)))
+        except WarcError:
+            yield base
+            return
+        conv = [(h, b) for h, b in recs
+                if h.get("WARC-Type") == "conversion"]
+        n_skipped = len(recs) - len(conv)
+        if not conv:
+            yield {**base, "n_conversion": 0, "n_skipped": n_skipped}
+            return
+        for idx, (hdrs, block) in enumerate(conv):
+            ct = hdrs.get("Content-Type", "")
+            # sniff_meta=False: WET conversion records are
+            # extracted PLAIN TEXT — prose that QUOTES an
+            # HTML meta tag must not hijack the charset
+            text, charset, clean = decode_body(
+                {"content-type": ct} if ct else None, block,
+                sniff_meta=False)
+            yield {
+                "doc_id": _id, "decoded_ok": True,
+                "record_idx": idx, "n_conversion": len(conv),
+                "n_skipped": n_skipped,
+                "uri": hdrs.get("WARC-Target-URI"),
+                "refers_to": hdrs.get("WARC-Refers-To"),
+                "charset": charset, "decode_clean": clean,
+                "text": text}
 
     from pyspark.sql import functions as F
 
-    out = df.select(F.col(id_col), F.col(asset_col)).mapInPandas(
+    out = map_rows(
+        df.select(F.col(id_col), F.col(asset_col)),
         run, WET_EXTRACT_SCHEMA)
     if id_col != "doc_id":
         out = out.withColumnRenamed("doc_id", id_col)
@@ -717,47 +695,33 @@ def wat_extract(df, id_col: str = "doc_id", asset_col: str = "asset"):
     valid JSON.  Same isolation story as :func:`wet_extract`: corrupt
     archives yield one ``decoded_ok=false`` row, non-metadata records
     only ever count toward ``n_skipped``."""
-    import pandas as pd
 
-    cols = ["doc_id", "decoded_ok", "record_idx", "n_metadata",
-            "n_skipped", "uri", "refers_to", "json_ok", "http_status",
-            "n_links", "title"]
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                base = {"doc_id": _id, "decoded_ok": False,
-                        "record_idx": None, "n_metadata": None,
-                        "n_skipped": None, "uri": None,
-                        "refers_to": None, "json_ok": None,
-                        "http_status": None, "n_links": None,
-                        "title": None}
-                try:
-                    recs = list(iter_records(bytes(payload)))
-                except WarcError:
-                    rows.append(base)
-                    continue
-                meta = [(h, b) for h, b in recs
-                        if h.get("WARC-Type") == "metadata"]
-                n_skipped = len(recs) - len(meta)
-                if not meta:
-                    rows.append({**base, "n_metadata": 0,
-                                 "n_skipped": n_skipped})
-                    continue
-                for idx, (hdrs, block) in enumerate(meta):
-                    rows.append({
-                        **base, "doc_id": _id, "decoded_ok": True,
-                        "record_idx": idx, "n_metadata": len(meta),
-                        "n_skipped": n_skipped,
-                        "uri": hdrs.get("WARC-Target-URI"),
-                        "refers_to": hdrs.get("WARC-Refers-To"),
-                        **wat_payload_fields(block)})
-            yield pd.DataFrame(rows, columns=cols)
+    def run(_id, payload):
+        base = {"doc_id": _id, "decoded_ok": False}
+        try:
+            recs = list(iter_records(bytes(payload)))
+        except WarcError:
+            yield base
+            return
+        meta = [(h, b) for h, b in recs
+                if h.get("WARC-Type") == "metadata"]
+        n_skipped = len(recs) - len(meta)
+        if not meta:
+            yield {**base, "n_metadata": 0, "n_skipped": n_skipped}
+            return
+        for idx, (hdrs, block) in enumerate(meta):
+            yield {
+                **base, "doc_id": _id, "decoded_ok": True,
+                "record_idx": idx, "n_metadata": len(meta),
+                "n_skipped": n_skipped,
+                "uri": hdrs.get("WARC-Target-URI"),
+                "refers_to": hdrs.get("WARC-Refers-To"),
+                **wat_payload_fields(block)}
 
     from pyspark.sql import functions as F
 
-    out = df.select(F.col(id_col), F.col(asset_col)).mapInPandas(
+    out = map_rows(
+        df.select(F.col(id_col), F.col(asset_col)),
         run, WAT_EXTRACT_SCHEMA)
     if id_col != "doc_id":
         out = out.withColumnRenamed("doc_id", id_col)

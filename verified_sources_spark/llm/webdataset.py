@@ -25,6 +25,8 @@ the zip walk.
 
 from __future__ import annotations
 
+from verified_sources_spark.boundary import map_rows
+
 __all__ = [
     "WdsError", "iter_wds_samples", "encode_wds",
     "wds_samples", "wds_shards", "wds_multimodal_shards",
@@ -113,51 +115,40 @@ def wds_samples(df, id_col: str = "doc_id", asset_col: str = "asset"):
     ``exts`` + total byte count (media stays undecoded — the typed
     doors own pixels/samples).  Corrupt shards isolate as
     ``decoded_ok=false`` rows."""
-    import pandas as pd
-
-    def run(batches):
+    def run(_id, payload):
         from verified_sources_spark.llm.text_fix import decode_bare_text
 
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                _id = int(_id)
-                try:
-                    samples = list(iter_wds_samples(bytes(payload)))
-                    if not samples:
-                        raise WdsError("shard with no samples")
-                    for i, (key, exts) in enumerate(samples):
-                        text = None
-                        if "txt" in exts:
-                            if not exts["txt"]:
-                                text = ""  # empty member is empty text
-                            else:
-                                dec = decode_bare_text(exts["txt"])
-                                text = dec[0] if dec else None
-                        js = exts.get("json")
-                        rows.append({
-                            "doc_id": _id, "decoded_ok": True,
-                            "sample_idx": i, "n_samples": len(samples),
-                            "key": key,
-                            "exts": ";".join(sorted(exts)),
-                            "text": text,
-                            "json": (js.decode("utf-8", "replace")
-                                     if js is not None else None),
-                            "n_asset_bytes": sum(
-                                len(v) for v in exts.values())})
-                except WdsError:
-                    rows.append({
-                        "doc_id": _id, "decoded_ok": False,
-                        "sample_idx": None, "n_samples": None,
-                        "key": None, "exts": None, "text": None,
-                        "json": None, "n_asset_bytes": None})
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "decoded_ok", "sample_idx", "n_samples",
-                "key", "exts", "text", "json", "n_asset_bytes"])
+        _id = int(_id)
+        try:
+            samples = list(iter_wds_samples(bytes(payload)))
+            if not samples:
+                raise WdsError("shard with no samples")
+            for i, (key, exts) in enumerate(samples):
+                text = None
+                if "txt" in exts:
+                    if not exts["txt"]:
+                        text = ""  # empty member is empty text
+                    else:
+                        dec = decode_bare_text(exts["txt"])
+                        text = dec[0] if dec else None
+                js = exts.get("json")
+                yield {
+                    "doc_id": _id, "decoded_ok": True,
+                    "sample_idx": i, "n_samples": len(samples),
+                    "key": key,
+                    "exts": ";".join(sorted(exts)),
+                    "text": text,
+                    "json": (js.decode("utf-8", "replace")
+                             if js is not None else None),
+                    "n_asset_bytes": sum(
+                        len(v) for v in exts.values())}
+        except WdsError:
+            yield {"doc_id": _id, "decoded_ok": False}
 
     from pyspark.sql import functions as F
 
-    out = df.select(F.col(id_col), F.col(asset_col)).mapInPandas(
+    out = map_rows(
+        df.select(F.col(id_col), F.col(asset_col)),
         run, WDS_SAMPLES_SCHEMA)
     if id_col != "doc_id":
         out = out.withColumnRenamed("doc_id", id_col)

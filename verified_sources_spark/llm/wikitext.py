@@ -31,6 +31,8 @@ from __future__ import annotations
 import re
 import xml.etree.ElementTree as ET
 
+from verified_sources_spark.boundary import map_rows
+
 __all__ = [
     "WikiError", "strip_wikitext", "iter_dump_pages", "wiki_pages",
     "encode_dump", "WIKI_PAGES_SCHEMA",
@@ -222,40 +224,28 @@ def wiki_pages(df, id_col: str = "doc_id", asset_col: str = "asset"):
     """Arrow-batched dump → stripped-page rows: one row per <page>,
     wikitext stripped to prose; corrupt payloads isolate as
     ``decoded_ok=false``."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                try:
-                    # buffer per dump: mid-generator refusals are
-                    # all-or-nothing, never partial rows + a false row
-                    doc_rows = []
-                    for p in iter_dump_pages(bytes(payload)):
-                        out = strip_wikitext(p["wikitext"])
-                        doc_rows.append({
-                            "doc_id": _id, "decoded_ok": True,
-                            "page_id": p["page_id"],
-                            "title": p["title"], "ns": p["ns"],
-                            "redirect": p["redirect"],
-                            "n_headings": len(out["headings"]),
-                            "text": out["text"]})
-                    rows += doc_rows
-                except WikiError:
-                    rows.append({
-                        "doc_id": _id, "decoded_ok": False,
-                        "page_id": None, "title": None, "ns": None,
-                        "redirect": None, "n_headings": None,
-                        "text": None})
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "decoded_ok", "page_id", "title", "ns",
-                "redirect", "n_headings", "text"])
+    def run(_id, payload):
+        try:
+            # buffer per dump: mid-generator refusals are
+            # all-or-nothing, never partial rows + a false row
+            doc_rows = []
+            for p in iter_dump_pages(bytes(payload)):
+                out = strip_wikitext(p["wikitext"])
+                doc_rows.append({
+                    "doc_id": _id, "decoded_ok": True,
+                    "page_id": p["page_id"],
+                    "title": p["title"], "ns": p["ns"],
+                    "redirect": p["redirect"],
+                    "n_headings": len(out["headings"]),
+                    "text": out["text"]})
+        except WikiError:
+            doc_rows = [{"doc_id": _id, "decoded_ok": False}]
+        yield from doc_rows
 
     from pyspark.sql import functions as F
 
-    out = df.select(F.col(id_col), F.col(asset_col)).mapInPandas(
-        run, WIKI_PAGES_SCHEMA)
+    out = map_rows(df.select(F.col(id_col), F.col(asset_col)), run,
+                   WIKI_PAGES_SCHEMA)
     if id_col != "doc_id":
         out = out.withColumnRenamed("doc_id", id_col)
     return out

@@ -342,6 +342,7 @@ def expanded_delete_rows(spark, table_path: str, descs: list[tuple[str, dict]]):
     ).repartition(min(len(descs), 256))
 
     def expand(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # not map_rows: each DV frames its whole position array at once
         for pdf in batches:
             for fp, dv in zip(pdf["fp"], pdf["dv"]):
                 idx = dv_row_indexes(table_path, json.loads(dv))

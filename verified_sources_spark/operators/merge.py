@@ -183,33 +183,6 @@ class ParquetSink:
         walk(root, 0, [], [])
         return out
 
-    def _touched_partitions(
-        self, target: DataFrame, df: DataFrame, keys: Sequence[str]
-    ) -> list[tuple]:
-        """Partition tuples a merge may modify: the source's own partitions
-        plus partitions of target rows whose key appears in the source
-        (keys can move partitions — pruning by source partitions alone
-        would strand the old row). The key scan is column-pruned (keys +
-        partition columns only); the result is metadata-sized (a few
-        partition values per batch), like the engine's cursor collects.
-        This is the plain-parquet analogue of Delta MERGE file pruning."""
-        pcols = list(self.partition_by)
-        src_keys = df.select(*keys).distinct()
-        tgt_parts = (
-            target.join(src_keys, on=list(keys), how="left_semi").select(*pcols).distinct()
-        )
-        src_parts = df.select(*pcols).distinct()
-        rows = tgt_parts.unionByName(src_parts).distinct().collect()
-        # dedup by directory fragment: the same partition can surface twice
-        # with different Python types (partition-dir values read back
-        # type-inferred, e.g. date vs the string that was written)
-        seen: dict[tuple, tuple] = {}
-        for r in rows:
-            vals = tuple(r[c] for c in pcols)
-            frag = tuple(self._part_dir_value(v) for v in vals)
-            seen.setdefault(frag, vals)
-        return list(seen.values())
-
     def merge(
         self,
         df: DataFrame,
@@ -234,7 +207,7 @@ class ParquetSink:
             return
 
         pcols = list(self.partition_by)
-        touched = self._touched_partitions(target, df, keys)
+        touched = list(touched_partitions(target, df, keys, pcols).values())
         if not touched:
             return
         # partition-pruned target slice: filter on partition columns only,
@@ -292,3 +265,32 @@ class ParquetSink:
             self.merge(df, **kwargs)
         else:
             raise ValueError(f"unknown write_disposition: {disposition}")
+
+
+def touched_partitions(
+    target: DataFrame, df: DataFrame, keys: Sequence[str], partition_by: Sequence[str]
+) -> dict[tuple, tuple]:
+    """{canonical dir fragment: partition values} a keyed merge of ``df``
+    into ``target`` may modify: the source's own partitions plus
+    partitions of target rows whose key appears in the source (keys can
+    move partitions — pruning by source partitions alone would strand
+    the old row). The key scan is column-pruned (keys + partition
+    columns only); the result is metadata-sized (a few partition values
+    per batch), like the engine's cursor collects. This is the
+    plain-parquet analogue of Delta MERGE file pruning, shared by
+    ``ParquetSink.merge`` (filters on the values) and
+    ``ManifestTable.merge`` (matches manifest entries by the fragment)."""
+    pcols = list(partition_by)
+    src_keys = df.select(*keys).distinct()
+    tgt_parts = (
+        target.join(src_keys, on=list(keys), how="left_semi").select(*pcols).distinct()
+    )
+    src_parts = df.select(*pcols).distinct()
+    # keyed by directory fragment: the same partition can surface twice
+    # with different Python types (partition-dir values read back
+    # type-inferred, e.g. date vs the string that was written)
+    out: dict[tuple, tuple] = {}
+    for r in tgt_parts.unionByName(src_parts).distinct().collect():
+        vals = tuple(r[c] for c in pcols)
+        out.setdefault(tuple(ParquetSink._part_dir_value(v) for v in vals), vals)
+    return out

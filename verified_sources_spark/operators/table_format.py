@@ -51,7 +51,7 @@ from verified_sources_spark.operators.fs import (
     HadoopFS,
     _is_local_uri,
 )
-from verified_sources_spark.operators.merge import merge_dataframes
+from verified_sources_spark.operators.merge import merge_dataframes, touched_partitions
 
 
 class StatsNotServable(Exception):
@@ -741,18 +741,9 @@ class ManifestTable:
 
         target = self.read(version=base)
         pcols = self.partition_by
-        src_keys = df.select(*keys).distinct()
-        tgt_parts = target.join(src_keys, on=list(keys), how="left_semi").select(*pcols)
-        src_parts = df.select(*pcols)
-        # canonical rendering shared with the dir-name side (None →
+        # keyed by the canonical rendering manifest entries carry (None →
         # __HIVE_DEFAULT_PARTITION__, bools lowercase)
-        from verified_sources_spark.operators.merge import ParquetSink
-
-        canon = ParquetSink._part_dir_value
-        touched = {
-            tuple(canon(r[c]) for c in pcols)
-            for r in tgt_parts.unionByName(src_parts).distinct().collect()
-        }
+        touched = touched_partitions(target, df, keys, pcols).keys()
         prev_entries = self._manifest(base)["files"]
         keep = [
             e for e in prev_entries

@@ -21,6 +21,7 @@ from collections.abc import Callable
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from verified_sources_spark.boundary import map_rows
 from verified_sources_spark.cut import cut
 
 from verified_sources_spark.catalog import load_table, load_tables
@@ -1663,30 +1664,20 @@ def image_decode_probe_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop succeeded on exactly the uncorrupted set and echoed the true
     header dimensions.  The perceptual dHash itself (not SQL-expressible)
     is covered by tests/test_image_dedup.py."""
-    import pandas as pd
-
     from verified_sources_spark.llm.image_dedup import image_dhash
 
     d = _docs_parallel(spark, sf_dir).select("doc_id")
 
-    def mint(batches):
+    def mint(did):
         from verified_sources_spark.llm.png_codec import encode
 
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w = 16 + (did % 4) * 8
-                h = 12 + (did % 3) * 8
-                gray = bytes([did % 251]) * (w * h * 3)
-                png = encode(w, h, gray, "RGB")
-                rows.append(
-                    {"doc_id": did,
-                     "asset": png[:10] if did % 17 == 0 else png}
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        w = 16 + (did % 4) * 8
+        h = 12 + (did % 3) * 8
+        gray = bytes([did % 251]) * (w * h * 3)
+        png = encode(w, h, gray, "RGB")
+        yield {"doc_id": did, "asset": png[:10] if did % 17 == 0 else png}
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     return image_dhash(assets).select(
         "doc_id", "decoded_ok", "width", "height"
     )
@@ -1704,32 +1695,22 @@ def audio_decode_probe_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     encode→decode→fingerprint loop succeeded on exactly the uncorrupted
     set and echoed the true header metadata.  The fingerprint itself
     (FFT, not SQL-expressible) is covered by tests/test_audio_dedup.py."""
-    import pandas as pd
-
     from verified_sources_spark.llm.audio_dedup import audio_fingerprint
 
     d = _docs_parallel(spark, sf_dir).select("doc_id")
 
-    def mint(batches):
+    def mint(did):
         import numpy as np
 
         from verified_sources_spark.llm.wav_codec import encode
 
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                rate = 8000 + (did % 3) * 4000
-                n = 500 + (did % 7) * 100
-                x = 0.5 * np.sin(2 * np.pi * 440.0 * np.arange(n) / rate)
-                wav = encode(x, rate, bits=16)
-                rows.append(
-                    {"doc_id": did,
-                     "asset": wav[:10] if did % 19 == 0 else wav}
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        rate = 8000 + (did % 3) * 4000
+        n = 500 + (did % 7) * 100
+        x = 0.5 * np.sin(2 * np.pi * 440.0 * np.arange(n) / rate)
+        wav = encode(x, rate, bits=16)
+        yield {"doc_id": did, "asset": wav[:10] if did % 19 == 0 else wav}
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     return audio_fingerprint(assets).select(
         "doc_id", "decoded_ok", "sample_rate", "n_frames"
     )
@@ -1749,36 +1730,26 @@ def mp3_decode_probe_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_codec_refusals.py), so media ingestion treats MP3s
     exact-dedup-only with these manifests — the same posture as MP4
     video."""
-    import pandas as pd
-
     from verified_sources_spark.llm.audio_dedup import mp3_probe
 
     d = _docs_parallel(spark, sf_dir).select("doc_id")
 
-    def mint(batches):
+    def mint(did):
         from verified_sources_spark.llm.mp3_codec import encode_stub
 
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                rate = [32000, 44100, 48000][did % 3]
-                n = 10 + did % 7
-                mp3 = encode_stub(
-                    n_frames=n,
-                    sample_rate=rate,
-                    bitrate_kbps=[64, 96, 128, 160, 320][did % 5],
-                    channels=1 + did % 2,
-                    xing=did % 6 == 0,
-                    id3v2_bytes=64 if did % 4 == 0 else 0,
-                )
-                rows.append(
-                    {"doc_id": did,
-                     "asset": mp3[:50] if did % 19 == 0 else mp3}
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        rate = [32000, 44100, 48000][did % 3]
+        n = 10 + did % 7
+        mp3 = encode_stub(
+            n_frames=n,
+            sample_rate=rate,
+            bitrate_kbps=[64, 96, 128, 160, 320][did % 5],
+            channels=1 + did % 2,
+            xing=did % 6 == 0,
+            id3v2_bytes=64 if did % 4 == 0 else 0,
+        )
+        yield {"doc_id": did, "asset": mp3[:50] if did % 19 == 0 else mp3}
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     return mp3_probe(assets).select(
         "doc_id", "decoded_ok", "sample_rate", "channels", "n_frames",
         "duration_ms", "bitrate_kbps"
@@ -1801,13 +1772,11 @@ def audio_formats_probe_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     though the compressed formats' sample decode refuses by name
     (exact-dedup-only in media ingestion — the same posture as MP4
     video)."""
-    import pandas as pd
-
     from verified_sources_spark.llm.audio_dedup import audio_probe
 
     d = _docs_parallel(spark, sf_dir).select("doc_id")
 
-    def mint(batches):
+    def mint(did):
         import numpy as np
 
         from verified_sources_spark.llm.aiff_codec import encode as aiff_enc
@@ -1818,60 +1787,52 @@ def audio_formats_probe_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         from verified_sources_spark.llm.ogg_codec import encode_stub as ogg_enc
         from verified_sources_spark.llm.wav_codec import encode as wav_enc
 
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                fmt = did % 5
-                if fmt == 4:
-                    rate = 8000 * (1 + did % 3)
-                    n = 400 + (did % 7) * 100
-                    x = 0.3 * np.sin(
-                        2 * np.pi * 220.0 * np.arange(n) / rate
-                    )
-                    asset = aiff_enc(x, rate, sowt=did % 2 == 1)
-                elif fmt == 0:
-                    rate = 8000 * (1 + did % 2)
-                    n = 500 + (did % 7) * 100
-                    x = 0.4 * np.sin(
-                        2 * np.pi * 330.0 * np.arange(n) / rate
-                    )
-                    asset = wav_enc(x, rate, bits=16)
-                elif fmt == 1:
-                    asset = mp3_enc(
-                        n_frames=10 + did % 7,
-                        sample_rate=[32000, 44100, 48000][(did // 3) % 3],
-                        bitrate_kbps=128,
-                        channels=1 + did % 2,
-                    )
-                elif fmt == 2:
-                    asset = flac_enc(
-                        sample_rate=[8000, 22050, 44100, 48000][(did // 3) % 4],
-                        channels=1 + (did // 2) % 2,
-                        bits=16,
-                        total_samples=1000 + (did % 9) * 500,
-                    )
-                elif (did // 4) % 2 == 0:
-                    asset = ogg_enc(
-                        codec="opus",
-                        channels=1 + did % 2,
-                        sample_rate=[8000, 16000, 48000][(did // 3) % 3],
-                        granule=(10 + did % 7) * 960,
-                    )
-                else:
-                    asset = ogg_enc(
-                        codec="vorbis",
-                        channels=1 + did % 2,
-                        sample_rate=[22050, 44100][(did // 3) % 2],
-                        granule=1000 + (did % 9) * 500,
-                    )
-                rows.append(
-                    {"doc_id": did,
-                     "asset": asset[:12] if did % 19 == 0 else asset}
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        fmt = did % 5
+        if fmt == 4:
+            rate = 8000 * (1 + did % 3)
+            n = 400 + (did % 7) * 100
+            x = 0.3 * np.sin(
+                2 * np.pi * 220.0 * np.arange(n) / rate
+            )
+            asset = aiff_enc(x, rate, sowt=did % 2 == 1)
+        elif fmt == 0:
+            rate = 8000 * (1 + did % 2)
+            n = 500 + (did % 7) * 100
+            x = 0.4 * np.sin(
+                2 * np.pi * 330.0 * np.arange(n) / rate
+            )
+            asset = wav_enc(x, rate, bits=16)
+        elif fmt == 1:
+            asset = mp3_enc(
+                n_frames=10 + did % 7,
+                sample_rate=[32000, 44100, 48000][(did // 3) % 3],
+                bitrate_kbps=128,
+                channels=1 + did % 2,
+            )
+        elif fmt == 2:
+            asset = flac_enc(
+                sample_rate=[8000, 22050, 44100, 48000][(did // 3) % 4],
+                channels=1 + (did // 2) % 2,
+                bits=16,
+                total_samples=1000 + (did % 9) * 500,
+            )
+        elif (did // 4) % 2 == 0:
+            asset = ogg_enc(
+                codec="opus",
+                channels=1 + did % 2,
+                sample_rate=[8000, 16000, 48000][(did // 3) % 3],
+                granule=(10 + did % 7) * 960,
+            )
+        else:
+            asset = ogg_enc(
+                codec="vorbis",
+                channels=1 + did % 2,
+                sample_rate=[22050, 44100][(did // 3) % 2],
+                granule=1000 + (did % 9) * 500,
+            )
+        yield {"doc_id": did, "asset": asset[:12] if did % 19 == 0 else asset}
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     return audio_probe(assets).select(
         "doc_id", "decoded_ok", "container", "sample_rate", "channels",
         "n_samples", "duration_ms", "codec"
@@ -1902,13 +1863,11 @@ def warc_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     would change the hash) on exactly the uncorrupted set (the
     ingestion front door for the dedup/quality surface; reference
     analogue: sources/scraping landing)."""
-    import pandas as pd
-
     from verified_sources_spark.llm.warc import warc_extract
 
     d = _docs_parallel(spark, sf_dir).select("doc_id", "text")
 
-    def mint(batches):
+    def mint(did, text):
         import html as H
 
         from verified_sources_spark.llm.warc import (
@@ -1927,55 +1886,48 @@ def warc_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("gb18030", "GB18030", "你好，世界"),
             ("big5", "Big5", "繁體中文測試"),
         ]
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                text = text or ""
-                cs = legacy[did % 8]
-                meta = ""
-                ctype = "text/html"
-                codec = "utf-8"
-                if cs is not None:
-                    codec, label, marker = cs
-                    text = f"{marker} doc {did}"
-                    if (did // 4) % 2 == 0:
-                        ctype = f"text/html; charset={label}"
-                    else:
-                        meta = f'<meta charset="{label}">'
-                body = (
-                    f"<html><head>{meta}<title>doc-{did}</title>"
-                    f"<script>var x=1;</script>"
-                    f"<style>p{{color:red}}</style></head>"
-                    f"<body><p>{H.escape(text)}</p></body></html>"
-                ).encode(codec)
-                enc = None
-                if did % 7 == 0:
-                    enc = "gzip"
-                elif did % 13 == 0:
-                    enc = "zstd"
-                elif did % 11 == 0:
-                    enc = "br"
-                block = http_response_block(
-                    body,
-                    content_type=ctype,
-                    chunked=did % 5 == 0,
-                    encoding=enc,
-                )
-                rec = encode_record(
-                    uri=f"http://example.com/{did}", block=block
-                )
-                info = encode_record(warc_type="warcinfo", block=b"sw: t")
-                warc = encode_warc([info, rec],
-                                   gzip_members=did % 3 == 1,
-                                   zstd_frames=did % 3 == 2)
-                rows.append(
-                    {"doc_id": did,
-                     "asset": warc[:40] if did % 17 == 0 else warc}
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+        text = text or ""
+        cs = legacy[did % 8]
+        meta = ""
+        ctype = "text/html"
+        codec = "utf-8"
+        if cs is not None:
+            codec, label, marker = cs
+            text = f"{marker} doc {did}"
+            if (did // 4) % 2 == 0:
+                ctype = f"text/html; charset={label}"
+            else:
+                meta = f'<meta charset="{label}">'
+        body = (
+            f"<html><head>{meta}<title>doc-{did}</title>"
+            f"<script>var x=1;</script>"
+            f"<style>p{{color:red}}</style></head>"
+            f"<body><p>{H.escape(text)}</p></body></html>"
+        ).encode(codec)
+        enc = None
+        if did % 7 == 0:
+            enc = "gzip"
+        elif did % 13 == 0:
+            enc = "zstd"
+        elif did % 11 == 0:
+            enc = "br"
+        block = http_response_block(
+            body,
+            content_type=ctype,
+            chunked=did % 5 == 0,
+            encoding=enc,
+        )
+        rec = encode_record(
+            uri=f"http://example.com/{did}", block=block
+        )
+        info = encode_record(warc_type="warcinfo", block=b"sw: t")
+        warc = encode_warc([info, rec],
+                           gzip_members=did % 3 == 1,
+                           zstd_frames=did % 3 == 2)
+        yield {"doc_id": did, "asset": warc[:40] if did % 17 == 0 else warc}
+
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     return warc_extract(assets).select(
         "doc_id", "decoded_ok", "uri", "status", "content_type",
         "charset", "decode_clean", "title", "text"
@@ -1996,52 +1948,42 @@ def archive_members_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves each archive format inflated to byte-identical members (the
     explode step every corpus-as-archive delivery needs before the
     text operators run)."""
-    import pandas as pd
-
     from verified_sources_spark.llm.archives import archive_members
 
     d = _docs_parallel(spark, sf_dir).select("doc_id", "text")
 
-    def mint(batches):
+    def mint(did, text):
         from verified_sources_spark.llm.archives import encode_tar, encode_zip
 
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                members = {
-                    f"doc_{did}.txt": (text or "").encode(),
-                    f"meta/{did}.json": f'{{"id": {did}}}'.encode(),
-                }
-                fmt = did % 7
-                if fmt == 0:
-                    asset = encode_zip(members)
-                elif fmt == 1:
-                    asset = encode_tar(members)
-                elif fmt == 2:
-                    asset = encode_tar(members, gz=True)
-                elif fmt == 3:
-                    asset = encode_tar(members, compression="xz")
-                elif fmt == 4:
-                    asset = encode_tar(members, compression="bz2")
-                elif fmt == 5:
-                    asset = encode_tar(members, compression="zst")
-                else:
-                    from verified_sources_spark.llm.sevenzip import (
-                        encode_7z,
-                    )
+        members = {
+            f"doc_{did}.txt": (text or "").encode(),
+            f"meta/{did}.json": f'{{"id": {did}}}'.encode(),
+        }
+        fmt = did % 7
+        if fmt == 0:
+            asset = encode_zip(members)
+        elif fmt == 1:
+            asset = encode_tar(members)
+        elif fmt == 2:
+            asset = encode_tar(members, gz=True)
+        elif fmt == 3:
+            asset = encode_tar(members, compression="xz")
+        elif fmt == 4:
+            asset = encode_tar(members, compression="bz2")
+        elif fmt == 5:
+            asset = encode_tar(members, compression="zst")
+        else:
+            from verified_sources_spark.llm.sevenzip import (
+                encode_7z,
+            )
 
-                    asset = encode_7z(
-                        members,
-                        codec=("lzma2", "lzma1", "copy")[did % 3],
-                        encoded_header=did % 2 == 0)
-                rows.append(
-                    {"doc_id": did,
-                     "asset": asset[:25] if did % 13 == 0 else asset}
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+            asset = encode_7z(
+                members,
+                codec=("lzma2", "lzma1", "copy")[did % 3],
+                encoded_header=did % 2 == 0)
+        yield {"doc_id": did, "asset": asset[:25] if did % 13 == 0 else asset}
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     return archive_members(assets).select(
         "doc_id", "decoded_ok", "archive_format", "member_name",
         "n_bytes", "text"
@@ -2059,13 +2001,11 @@ def exif_inventory_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     match proves the TIFF walk decoded both byte orders exactly and
     the scrub verifiably removed every metadata segment
     (clean_after_scrub TRUE across the corpus)."""
-    import pandas as pd
-
     from verified_sources_spark.llm.exif import exif_inventory
 
     d = _docs_parallel(spark, sf_dir).select("doc_id")
 
-    def mint(batches):
+    def mint(did):
         import numpy as np
 
         from verified_sources_spark.llm.exif import (
@@ -2074,36 +2014,28 @@ def exif_inventory_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         from verified_sources_spark.llm.jpeg_codec import encode
 
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w = 16 + (did % 4) * 8
-                h = 12 + (did % 3) * 8
-                rng = np.random.default_rng(did)
-                coarse = rng.integers(0, 256, size=(6, 8))
-                gray = coarse[(np.arange(h) * 6) // h][:, (np.arange(w) * 8) // w]
-                rgb = np.stack([gray] * 3, axis=2).astype(np.uint8)
-                jpg = encode(w, h, rgb.tobytes(), quality=90)
-                if did % 2 == 0:
-                    gps = None
-                    if did % 4 == 0:
-                        gps = ((did % 90) + 0.5, -((did % 180) + 0.25))
-                    app1 = build_exif_app1(
-                        make=f"Cam{did % 5}",
-                        model=f"M{did % 7}",
-                        orientation=1 + did % 8,
-                        gps=gps,
-                        byte_order="MM" if did % 3 == 0 else "II",
-                    )
-                    jpg = inject_app1(jpg, app1)
-                rows.append(
-                    {"doc_id": did,
-                     "asset": jpg[:10] if did % 11 == 0 else jpg}
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        w = 16 + (did % 4) * 8
+        h = 12 + (did % 3) * 8
+        rng = np.random.default_rng(did)
+        coarse = rng.integers(0, 256, size=(6, 8))
+        gray = coarse[(np.arange(h) * 6) // h][:, (np.arange(w) * 8) // w]
+        rgb = np.stack([gray] * 3, axis=2).astype(np.uint8)
+        jpg = encode(w, h, rgb.tobytes(), quality=90)
+        if did % 2 == 0:
+            gps = None
+            if did % 4 == 0:
+                gps = ((did % 90) + 0.5, -((did % 180) + 0.25))
+            app1 = build_exif_app1(
+                make=f"Cam{did % 5}",
+                model=f"M{did % 7}",
+                orientation=1 + did % 8,
+                gps=gps,
+                byte_order="MM" if did % 3 == 0 else "II",
+            )
+            jpg = inject_app1(jpg, app1)
+        yield {"doc_id": did, "asset": jpg[:10] if did % 11 == 0 else jpg}
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     return exif_inventory(assets).select(
         "doc_id", "decoded_ok", "has_exif", "make", "model", "orientation",
         "has_gps", "latitude", "longitude", "clean_after_scrub"
@@ -2129,37 +2061,27 @@ def pdf_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     content-stream text walk recovered every document byte-for-byte
     (the document-corpus front door; reference analogue:
     sources/unstructured_data — PDFs into queryable text)."""
-    import pandas as pd
-
     from verified_sources_spark.llm.pdf_codec import pdf_extract
 
     d = _docs_parallel(spark, sf_dir).select("doc_id", "text")
 
-    def mint(batches):
+    def mint(did, text):
         from verified_sources_spark.llm.pdf_codec import encode_pdf
 
-        for pdf_ in batches:
-            rows = []
-            for did, text in zip(pdf_["doc_id"], pdf_["text"]):
-                did = int(did)
-                xref = did % 3 == 0
-                data = encode_pdf(
-                    [[text or ""]],
-                    compress=did % 2 == 1,
-                    xref_stream=xref,
-                    tj_arrays=did % 5 == 0,
-                    cid_font=did % 7 == 0,
-                    encrypt=(None if xref or did % 4 != 2 else
-                             ("rc4-40", "rc4-128", "aesv2",
-                              "aes256")[(did // 4) % 4]),
-                )
-                rows.append(
-                    {"doc_id": did,
-                     "asset": data[:60] if did % 13 == 0 else data}
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        xref = did % 3 == 0
+        data = encode_pdf(
+            [[text or ""]],
+            compress=did % 2 == 1,
+            xref_stream=xref,
+            tj_arrays=did % 5 == 0,
+            cid_font=did % 7 == 0,
+            encrypt=(None if xref or did % 4 != 2 else
+                     ("rc4-40", "rc4-128", "aesv2",
+                      "aes256")[(did // 4) % 4]),
+        )
+        yield {"doc_id": did, "asset": data[:60] if did % 13 == 0 else data}
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     return pdf_extract(assets).select(
         "doc_id", "decoded_ok", "n_pages", "text"
     )
@@ -2177,39 +2099,32 @@ def subtitle_cues_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     math and per-dialect trim semantics in SQL — a value-hash match
     proves all four parsers agree (the aligned text channel
     caption/ASR corpora train on)."""
-    import pandas as pd
-
     from verified_sources_spark.llm.subtitles import subtitle_cues
 
     d = _docs_parallel(spark, sf_dir).select("doc_id", "text")
 
-    def mint(batches):
+    def mint(did, text):
         from verified_sources_spark.llm.subtitles import (
             encode_ass, encode_srt, encode_ttml, encode_vtt,
         )
 
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                text = text or ""
-                n = 1 + did % 3
-                cues = []
-                for k in range(n):
-                    start = k * 2000 + (did % 7) * 100
-                    cues.append((start, start + 1500,
-                                 text[60 * k : 60 * (k + 1)]))
-                if did % 23 == 0:
-                    payload = "no timings here, not a subtitle file"
-                else:
-                    enc = (encode_vtt, encode_srt, encode_ass,
-                           encode_ttml)[did % 4]
-                    payload = (enc(cues, notes=True)
-                               if did % 4 == 0 else enc(cues))
-                rows.append({"doc_id": did, "payload": payload})
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
+        text = text or ""
+        n = 1 + did % 3
+        cues = []
+        for k in range(n):
+            start = k * 2000 + (did % 7) * 100
+            cues.append((start, start + 1500,
+                         text[60 * k : 60 * (k + 1)]))
+        if did % 23 == 0:
+            payload = "no timings here, not a subtitle file"
+        else:
+            enc = (encode_vtt, encode_srt, encode_ass,
+                   encode_ttml)[did % 4]
+            payload = (enc(cues, notes=True)
+                       if did % 4 == 0 else enc(cues))
+        yield {"doc_id": did, "payload": payload}
 
-    assets = d.mapInPandas(mint, "doc_id long, payload string")
+    assets = map_rows(d, mint, "doc_id long, payload string")
     return subtitle_cues(assets, text_col="payload").select(
         "doc_id", "decoded_ok", "format", "idx", "start_ms", "end_ms", "text"
     )
@@ -2228,7 +2143,6 @@ def caption_coverage_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays cue counts, summed cue time and the coverage ratio in SQL
     — a value-hash match proves the two independent parsers agree on
     the same clock."""
-    import pandas as pd
     import pyspark.sql.functions as FN
 
     from verified_sources_spark.llm.subtitles import subtitle_cues
@@ -2236,40 +2150,29 @@ def caption_coverage_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _docs_parallel(spark, sf_dir).select("doc_id")
 
-    def mint_video(batches):
+    def mint_video(did):
         from verified_sources_spark.llm.webm_codec import encode_stub
 
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n = 20 + did % 30  # 2.0s - 4.9s at 10 fps
-                rows.append({"doc_id": did,
-                             "asset": encode_stub(width=64, height=48,
-                                                  n_frames=n, fps=10.0)})
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        n = 20 + did % 30  # 2.0s - 4.9s at 10 fps
+        yield {"doc_id": did,
+               "asset": encode_stub(width=64, height=48,
+                                    n_frames=n, fps=10.0)}
 
-    def mint_vtt(batches):
+    def mint_vtt(did):
         from verified_sources_spark.llm.subtitles import encode_vtt
 
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n = 20 + did % 30
-                dur = n * 100
-                k = 1 + did % 3  # cues, each covering 25% of runtime
-                cues = []
-                for i in range(k):
-                    start = i * (dur // 4)
-                    cues.append((start, start + dur // 4, f"cue {i}"))
-                rows.append({"doc_id": did,
-                             "payload": encode_vtt(cues)})
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
+        n = 20 + did % 30
+        dur = n * 100
+        k = 1 + did % 3  # cues, each covering 25% of runtime
+        cues = []
+        for i in range(k):
+            start = i * (dur // 4)
+            cues.append((start, start + dur // 4, f"cue {i}"))
+        yield {"doc_id": did, "payload": encode_vtt(cues)}
 
-    videos = video_probe(d.mapInPandas(mint_video, "doc_id long, asset binary"))
+    videos = video_probe(map_rows(d, mint_video, "doc_id long, asset binary"))
     cues = subtitle_cues(
-        d.mapInPandas(mint_vtt, "doc_id long, payload string"),
+        map_rows(d, mint_vtt, "doc_id long, payload string"),
         text_col="payload",
     )
     cue_agg = cues.filter("decoded_ok").groupBy("doc_id").agg(
@@ -2303,53 +2206,43 @@ def flac_roundtrip_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves Rice residuals, fixed predictors and stereo decorrelation
     reconstructed every sample exactly (llm/flac_codec.decode;
     reference analogue: filesystem/media ingestion surface)."""
-    import pandas as pd
-
     d = _docs_parallel(spark, sf_dir).select("doc_id")
 
-    def run(batches):
+    def run(did):
         import numpy as np
 
         from verified_sources_spark.llm.flac_codec import decode, encode
 
         modes = ["independent", "left_side", "right_side", "mid_side"]
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n = 300 + (did % 5) * 100
-                l = [((did * 31 + i * 7) % 2000) - 1000 for i in range(n)]
-                if did % 2 == 1:
-                    r = [((did * 17 + i * 11) % 2000) - 1000
-                         for i in range(n)]
-                    data = encode([l, r], stereo_mode=modes[(did // 2) % 4],
-                                  blocksize=256)
-                else:
-                    data = encode(l, blocksize=256)
-                if did % 13 == 0:
-                    data = data[: len(data) - 25]
-                row = {"doc_id": did, "decoded_ok": False,
-                       "n_samples": None, "channels": None,
-                       "sum_abs": None, "dot": None}
-                try:
-                    out = decode(data)
-                    ints = np.round(out["samples"] * 32768).astype(np.int64)
-                    row.update(
-                        decoded_ok=True,
-                        n_samples=int(ints.shape[0]),
-                        channels=int(ints.shape[1]),
-                        sum_abs=int(np.abs(ints).sum()),
-                        dot=int((np.arange(n)[:, None] * ints).sum()),
-                    )
-                except Exception:
-                    pass
-                rows.append(row)
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "decoded_ok", "n_samples",
-                               "channels", "sum_abs", "dot"])
 
-    return d.mapInPandas(
-        run,
+        n = 300 + (did % 5) * 100
+        l = [((did * 31 + i * 7) % 2000) - 1000 for i in range(n)]
+        if did % 2 == 1:
+            r = [((did * 17 + i * 11) % 2000) - 1000
+                 for i in range(n)]
+            data = encode([l, r], stereo_mode=modes[(did // 2) % 4],
+                          blocksize=256)
+        else:
+            data = encode(l, blocksize=256)
+        if did % 13 == 0:
+            data = data[: len(data) - 25]
+        row = {"doc_id": did, "decoded_ok": False}
+        try:
+            out = decode(data)
+            ints = np.round(out["samples"] * 32768).astype(np.int64)
+            row.update(
+                decoded_ok=True,
+                n_samples=int(ints.shape[0]),
+                channels=int(ints.shape[1]),
+                sum_abs=int(np.abs(ints).sum()),
+                dot=int((np.arange(n)[:, None] * ints).sum()),
+            )
+        except Exception:
+            pass
+        yield row
+
+    return map_rows(
+        d, run,
         "doc_id long, decoded_ok boolean, n_samples int, channels int, "
         "sum_abs long, dot long",
     )
@@ -2372,13 +2265,9 @@ def metadata_scrub_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the APIC payload survived byte-for-byte, and the scrub verifiably
     removed it all (clean_after_scrub TRUE corpus-wide) — the
     provenance/PII release gate for a mixed-modality corpus."""
-    import pandas as pd
-
     d = _docs_parallel(spark, sf_dir).select("doc_id")
 
-    def mint(batches):
-        import numpy as np
-
+    def mint(did):
         from verified_sources_spark.llm.exif import (
             build_exif_app1,
             inject_app1,
@@ -2391,53 +2280,45 @@ def metadata_scrub_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         from verified_sources_spark.llm.png_codec import encode as png_enc
         from verified_sources_spark.llm.png_text import add_text
 
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                fmt = did % 3
-                tagged = did % 4 != 0
-                if fmt == 0:
-                    w, h = 16, 12
-                    asset = jpg_enc(w, h, bytes([did % 251]) * (w * h * 3),
-                                    quality=90)
-                    if tagged:
-                        asset = inject_app1(
-                            asset, build_exif_app1(make=f"Cam{did % 5}")
-                        )
-                elif fmt == 1:
-                    w, h = 16, 12
-                    asset = png_enc(w, h, bytes([did % 251]) * (w * h * 3),
-                                    "RGB")
-                    if tagged:
-                        kind = ["tEXt", "zTXt", "iTXt"][did % 9 % 3]
-                        asset = add_text(
-                            asset, [("Author", f"user-{did % 9}", kind)]
-                        )
-                else:
-                    asset = mp3_enc(n_frames=6 + did % 5)
-                    if tagged:
-                        major = [2, 3, 4][(did // 3) % 3]
-                        enc = ([0, 1][did % 2] if major == 2
-                               else [0, 1, 3][did % 9 % 3])
-                        pics = []
-                        if did % 5 == 0:
-                            cover = jpg_enc(
-                                8, 6, bytes([did % 251]) * (8 * 6 * 3),
-                                quality=90)
-                            pics = [("image/jpeg", 3, "cover", cover)]
-                        asset = build_id3v2(
-                            {("TT2" if major == 2 else "TIT2"):
-                             f"track-{did % 7}"},
-                            major=major, encoding=enc, pictures=pics,
-                        ) + asset
-                rows.append(
-                    {"doc_id": did,
-                     "asset": asset[:6] if did % 11 == 0 else asset}
+        fmt = did % 3
+        tagged = did % 4 != 0
+        if fmt == 0:
+            w, h = 16, 12
+            asset = jpg_enc(w, h, bytes([did % 251]) * (w * h * 3),
+                            quality=90)
+            if tagged:
+                asset = inject_app1(
+                    asset, build_exif_app1(make=f"Cam{did % 5}")
                 )
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        elif fmt == 1:
+            w, h = 16, 12
+            asset = png_enc(w, h, bytes([did % 251]) * (w * h * 3),
+                            "RGB")
+            if tagged:
+                kind = ["tEXt", "zTXt", "iTXt"][did % 9 % 3]
+                asset = add_text(
+                    asset, [("Author", f"user-{did % 9}", kind)]
+                )
+        else:
+            asset = mp3_enc(n_frames=6 + did % 5)
+            if tagged:
+                major = [2, 3, 4][(did // 3) % 3]
+                enc = ([0, 1][did % 2] if major == 2
+                       else [0, 1, 3][did % 9 % 3])
+                pics = []
+                if did % 5 == 0:
+                    cover = jpg_enc(
+                        8, 6, bytes([did % 251]) * (8 * 6 * 3),
+                        quality=90)
+                    pics = [("image/jpeg", 3, "cover", cover)]
+                asset = build_id3v2(
+                    {("TT2" if major == 2 else "TIT2"):
+                     f"track-{did % 7}"},
+                    major=major, encoding=enc, pictures=pics,
+                ) + asset
+        yield {"doc_id": did, "asset": asset[:6] if did % 11 == 0 else asset}
 
-    def inventory(batches):
+    def inventory(_id, payload):
         from verified_sources_spark.llm.exif import probe_exif, strip_metadata
         from verified_sources_spark.llm.id3 import (
             extract_pictures,
@@ -2447,73 +2328,59 @@ def metadata_scrub_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         from verified_sources_spark.llm.jpeg_codec import encode as jpg_enc
         from verified_sources_spark.llm.png_text import probe_text, strip_text
 
-        for pdf in batches:
-            rows = []
-            for _id, payload in zip(pdf["doc_id"], pdf["asset"]):
-                payload = bytes(payload)
-                n_pics = cover_ok = None
-                try:
-                    if payload[:2] == b"\xff\xd8":
-                        m = probe_exif(payload)
-                        has, label = m["has_exif"], m["make"]
-                        clean = not probe_exif(
-                            strip_metadata(payload))["has_exif"]
-                        container = "jpeg"
-                    elif payload[:8] == b"\x89PNG\r\n\x1a\n":
-                        m = probe_text(payload)
-                        has = m["has_text"]
-                        label = m["entries"][0][1] if m["entries"] else None
-                        clean = not probe_text(
-                            strip_text(payload))["has_text"]
-                        container = "png"
-                    elif payload[:3] == b"ID3" or (
-                        len(payload) > 1 and payload[0] == 0xFF
-                        and (payload[1] & 0xE0) == 0xE0
-                    ):
-                        from verified_sources_spark.llm.mp3_codec import (
-                            probe as mp3_probe,
-                        )
+        payload = bytes(payload)
+        n_pics = cover_ok = None
+        try:
+            if payload[:2] == b"\xff\xd8":
+                m = probe_exif(payload)
+                has, label = m["has_exif"], m["make"]
+                clean = not probe_exif(
+                    strip_metadata(payload))["has_exif"]
+                container = "jpeg"
+            elif payload[:8] == b"\x89PNG\r\n\x1a\n":
+                m = probe_text(payload)
+                has = m["has_text"]
+                label = m["entries"][0][1] if m["entries"] else None
+                clean = not probe_text(
+                    strip_text(payload))["has_text"]
+                container = "png"
+            elif payload[:3] == b"ID3" or (
+                len(payload) > 1 and payload[0] == 0xFF
+                and (payload[1] & 0xE0) == 0xE0
+            ):
+                from verified_sources_spark.llm.mp3_codec import (
+                    probe as mp3_probe,
+                )
 
-                        mp3_probe(payload)  # truncated streams must say so
-                        m = probe_id3(payload)
-                        has = m["has_id3v2"] or m["has_id3v1"]
-                        label = m["title"]
-                        # embedded cover art is an image asset: it must
-                        # byte-match an independently minted standalone
-                        # twin (the cross-modal exact-dedup join)
-                        pics = extract_pictures(payload)
-                        n_pics = len(pics)
-                        if pics:
-                            twin = jpg_enc(
-                                8, 6, bytes([int(_id) % 251]) * (8 * 6 * 3),
-                                quality=90)
-                            cover_ok = pics[0]["image"] == twin
-                        s = probe_id3(strip_id3(payload))
-                        clean = not (s["has_id3v2"] or s["has_id3v1"])
-                        container = "mp3"
-                    else:
-                        raise ValueError("unrecognized payload")
-                    rows.append(
-                        {"doc_id": _id, "decoded_ok": True,
-                         "container": container, "has_metadata": has,
-                         "label": label, "n_pictures": n_pics,
-                         "cover_ok": cover_ok, "clean_after_scrub": clean}
-                    )
-                except Exception:
-                    rows.append(
-                        {"doc_id": _id, "decoded_ok": False,
-                         "container": None, "has_metadata": None,
-                         "label": None, "n_pictures": None,
-                         "cover_ok": None, "clean_after_scrub": None}
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "decoded_ok", "container",
-                               "has_metadata", "label", "n_pictures",
-                               "cover_ok", "clean_after_scrub"])
+                mp3_probe(payload)  # truncated streams must say so
+                m = probe_id3(payload)
+                has = m["has_id3v2"] or m["has_id3v1"]
+                label = m["title"]
+                # embedded cover art is an image asset: it must
+                # byte-match an independently minted standalone
+                # twin (the cross-modal exact-dedup join)
+                pics = extract_pictures(payload)
+                n_pics = len(pics)
+                if pics:
+                    twin = jpg_enc(
+                        8, 6, bytes([int(_id) % 251]) * (8 * 6 * 3),
+                        quality=90)
+                    cover_ok = pics[0]["image"] == twin
+                s = probe_id3(strip_id3(payload))
+                clean = not (s["has_id3v2"] or s["has_id3v1"])
+                container = "mp3"
+            else:
+                raise ValueError("unrecognized payload")
+            yield {"doc_id": _id, "decoded_ok": True,
+                   "container": container, "has_metadata": has,
+                   "label": label, "n_pictures": n_pics,
+                   "cover_ok": cover_ok, "clean_after_scrub": clean}
+        except Exception:
+            yield {"doc_id": _id, "decoded_ok": False}
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
-    return assets.mapInPandas(
-        inventory,
+    assets = map_rows(d, mint, "doc_id long, asset binary")
+    return map_rows(
+        assets, inventory,
         "doc_id long, decoded_ok boolean, container string, "
         "has_metadata boolean, label string, n_pictures int, "
         "cover_ok boolean, clean_after_scrub boolean",
@@ -2533,36 +2400,26 @@ def video_decode_probe_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     echoed the true header metadata.  Pixel decode + the pooled
     fingerprint (not SQL-expressible) are covered by
     tests/test_avi_codec.py and tests/test_video_dedup.py."""
-    import pandas as pd
-
     from verified_sources_spark.llm.video_dedup import video_probe
 
     d = _docs_parallel(spark, sf_dir).select("doc_id")
 
-    def mint(batches):
+    def mint(did):
         import numpy as np
 
         from verified_sources_spark.llm.avi_codec import encode
 
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w = 16 + (did % 4) * 8
-                h = 12 + (did % 3) * 8
-                n = 3 + did % 5
-                rng = np.random.default_rng(did)
-                frames = rng.integers(
-                    0, 256, size=(n, h, w, 3)
-                ).astype(np.uint8)
-                avi = encode(list(frames), fps=10.0, width=w, height=h)
-                rows.append(
-                    {"doc_id": did,
-                     "asset": avi[:10] if did % 23 == 0 else avi}
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        w = 16 + (did % 4) * 8
+        h = 12 + (did % 3) * 8
+        n = 3 + did % 5
+        rng = np.random.default_rng(did)
+        frames = rng.integers(
+            0, 256, size=(n, h, w, 3)
+        ).astype(np.uint8)
+        avi = encode(list(frames), fps=10.0, width=w, height=h)
+        yield {"doc_id": did, "asset": avi[:10] if did % 23 == 0 else avi}
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     return video_probe(assets).select(
         "doc_id", "decoded_ok", "width", "height", "n_frames", "duration_ms"
     )
@@ -2581,13 +2438,11 @@ def jpeg_decode_probe_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     full entropy decode (including the successive-approximation scan
     series) succeeded on exactly the uncorrupted set and echoed the
     true frame dimensions."""
-    import pandas as pd
-
     from verified_sources_spark.llm.image_dedup import image_dhash
 
     d = _docs_parallel(spark, sf_dir).select("doc_id")
 
-    def mint(batches):
+    def mint(did):
         import numpy as np
 
         from verified_sources_spark.llm.jpeg_codec import encode
@@ -2595,32 +2450,24 @@ def jpeg_decode_probe_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             encode_progressive,
         )
 
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w = 16 + (did % 4) * 8
-                h = 12 + (did % 3) * 8
-                rng = np.random.default_rng(did)
-                coarse = rng.integers(0, 256, size=(6, 8))
-                gray = coarse[(np.arange(h) * 6) // h][:, (np.arange(w) * 8) // w]
-                rgb = np.stack([gray] * 3, axis=2).astype(np.uint8)
-                variant = did % 4
-                if variant == 3:
-                    jpg = encode_progressive(
-                        w, h, rgb.tobytes(), quality=90, subsampling="4:2:0"
-                    )
-                else:
-                    kw = [{}, {"subsampling": "4:2:0"},
-                          {"grayscale": True}][variant]
-                    jpg = encode(w, h, rgb.tobytes(), quality=90, **kw)
-                rows.append(
-                    {"doc_id": did,
-                     "asset": jpg[:10] if did % 13 == 0 else jpg}
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        w = 16 + (did % 4) * 8
+        h = 12 + (did % 3) * 8
+        rng = np.random.default_rng(did)
+        coarse = rng.integers(0, 256, size=(6, 8))
+        gray = coarse[(np.arange(h) * 6) // h][:, (np.arange(w) * 8) // w]
+        rgb = np.stack([gray] * 3, axis=2).astype(np.uint8)
+        variant = did % 4
+        if variant == 3:
+            jpg = encode_progressive(
+                w, h, rgb.tobytes(), quality=90, subsampling="4:2:0"
+            )
+        else:
+            kw = [{}, {"subsampling": "4:2:0"},
+                  {"grayscale": True}][variant]
+            jpg = encode(w, h, rgb.tobytes(), quality=90, **kw)
+        yield {"doc_id": did, "asset": jpg[:10] if did % 13 == 0 else jpg}
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     return image_dhash(assets).select(
         "doc_id", "decoded_ok", "width", "height"
     )
@@ -2644,13 +2491,11 @@ def image_formats_probe_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays the arithmetic — a value-hash match proves each
     codec decoded its share and echoed the true dims (the real
     mixed-corpus shape: a scraped image column is never one format)."""
-    import pandas as pd
-
     from verified_sources_spark.llm.image_dedup import image_dhash
 
     d = _docs_parallel(spark, sf_dir).select("doc_id")
 
-    def mint(batches):
+    def mint(did):
         import numpy as np
 
         from verified_sources_spark.llm.bmp_codec import encode as bmp_enc
@@ -2665,100 +2510,93 @@ def image_formats_probe_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
         _webp_lossy = _webp_avail()
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w = 16 + (did % 4) * 8
-                h = 12 + (did % 3) * 8
-                rng = np.random.default_rng(did)
-                levels = rng.integers(0, 256, size=16).astype(np.uint8)
-                coarse = levels[rng.integers(0, 16, size=(6, 8))]
-                gray = coarse[(np.arange(h) * 6) // h][:, (np.arange(w) * 8) // w]
-                rgb = np.stack([gray] * 3, axis=2).astype(np.uint8).tobytes()
-                fmt = did % 7
-                if fmt == 6:
-                    # favicon container: DIB (BGRA+AND-mask) payloads on
-                    # even rows, embedded-PNG payloads on odd
-                    asset = ico_enc(w, h, rgb, "RGB", png=bool(did % 2))
-                elif fmt == 0:
-                    # cycle the four PNG layouts: sequential/Adam7 ×
-                    # 8/16-bit — all lossless, so dims and pixels (and
-                    # therefore the oracle arithmetic) are identical
-                    asset = png_enc(w, h, rgb, "RGB",
-                                    interlace=did % 4 >= 2,
-                                    bit_depth=16 if did % 8 >= 4 else 8)
-                elif fmt == 1:
-                    asset = jpg_enc(w, h, rgb, quality=90)
-                elif fmt == 2:
-                    asset = gif_enc(w, h, rgb)
-                elif fmt == 3:
-                    if did % 3 == 1:
-                        # RLE4: the 16-level gray field quantizes to a
-                        # 16-entry palette exactly
-                        from verified_sources_spark.llm.bmp_codec import (
-                            encode_rle4,
-                        )
 
-                        uniq = sorted(set(gray.ravel().tolist()))
-                        lut = {v: i for i, v in enumerate(uniq)}
-                        idxb = bytes(lut[v]
-                                     for v in gray.ravel().tolist())
-                        asset = encode_rle4(
-                            w, h, idxb, [(v, v, v) for v in uniq])
-                    elif did % 3 == 2:
-                        from verified_sources_spark.llm.bmp_codec import (
-                            encode_bitfields,
-                        )
-
-                        asset = encode_bitfields(
-                            w, h, rgb,
-                            bits=16 if did % 2 else 32,
-                            masks=((0xF800, 0x07E0, 0x001F)
-                                   if did % 2 else
-                                   (0xFF0000, 0x00FF00, 0x0000FF)))
-                    else:
-                        asset = bmp_enc(w, h, rgb)
-                elif fmt == 4:
-                    if did % 4 == 2 and _webp_lossy:
-                        # lossy VP8 via the system-libwebp seam: dims
-                        # land on the same oracle arithmetic
-                        from verified_sources_spark.llm.webp_system import (
-                            encode_rgb,
-                        )
-
-                        asset = encode_rgb(w, h, rgb, quality=90)
-                    else:
-                        asset = webp_enc(w, h, rgb, cache_bits=4,
-                                         predictor=2 if did % 2 else None)
-                elif did % 5 == 0:
-                    # bilevel CCITT fax scan: threshold the same gray
-                    # field; dims land on the same oracle arithmetic
-                    from verified_sources_spark.llm.tiff_codec import (
-                        encode_bilevel,
-                    )
-
-                    asset = encode_bilevel(
-                        w, h, (gray < 128).astype(np.uint8).tobytes(),
-                        compression=("rle", "g3", "g3-2d",
-                                     "g4")[did % 4],
-                        byte_order="MM" if did % 2 else "II",
-                        rows_per_strip=5)
-                else:
-                    asset = tiff_enc(w, h, rgb,
-                                     byte_order="MM" if did % 2 else "II",
-                                     deflate=did % 4 == 1,
-                                     lzw=did % 4 == 3,
-                                     packbits=did % 4 == 2,
-                                     predictor=did % 8 >= 4,
-                                     rows_per_strip=5)
-                rows.append(
-                    {"doc_id": did,
-                     "asset": asset[:8] if did % 11 == 0 else asset}
+        w = 16 + (did % 4) * 8
+        h = 12 + (did % 3) * 8
+        rng = np.random.default_rng(did)
+        levels = rng.integers(0, 256, size=16).astype(np.uint8)
+        coarse = levels[rng.integers(0, 16, size=(6, 8))]
+        gray = coarse[(np.arange(h) * 6) // h][:, (np.arange(w) * 8) // w]
+        rgb = np.stack([gray] * 3, axis=2).astype(np.uint8).tobytes()
+        fmt = did % 7
+        if fmt == 6:
+            # favicon container: DIB (BGRA+AND-mask) payloads on
+            # even rows, embedded-PNG payloads on odd
+            asset = ico_enc(w, h, rgb, "RGB", png=bool(did % 2))
+        elif fmt == 0:
+            # cycle the four PNG layouts: sequential/Adam7 ×
+            # 8/16-bit — all lossless, so dims and pixels (and
+            # therefore the oracle arithmetic) are identical
+            asset = png_enc(w, h, rgb, "RGB",
+                            interlace=did % 4 >= 2,
+                            bit_depth=16 if did % 8 >= 4 else 8)
+        elif fmt == 1:
+            asset = jpg_enc(w, h, rgb, quality=90)
+        elif fmt == 2:
+            asset = gif_enc(w, h, rgb)
+        elif fmt == 3:
+            if did % 3 == 1:
+                # RLE4: the 16-level gray field quantizes to a
+                # 16-entry palette exactly
+                from verified_sources_spark.llm.bmp_codec import (
+                    encode_rle4,
                 )
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+                uniq = sorted(set(gray.ravel().tolist()))
+                lut = {v: i for i, v in enumerate(uniq)}
+                idxb = bytes(lut[v]
+                             for v in gray.ravel().tolist())
+                asset = encode_rle4(
+                    w, h, idxb, [(v, v, v) for v in uniq])
+            elif did % 3 == 2:
+                from verified_sources_spark.llm.bmp_codec import (
+                    encode_bitfields,
+                )
+
+                asset = encode_bitfields(
+                    w, h, rgb,
+                    bits=16 if did % 2 else 32,
+                    masks=((0xF800, 0x07E0, 0x001F)
+                           if did % 2 else
+                           (0xFF0000, 0x00FF00, 0x0000FF)))
+            else:
+                asset = bmp_enc(w, h, rgb)
+        elif fmt == 4:
+            if did % 4 == 2 and _webp_lossy:
+                # lossy VP8 via the system-libwebp seam: dims
+                # land on the same oracle arithmetic
+                from verified_sources_spark.llm.webp_system import (
+                    encode_rgb,
+                )
+
+                asset = encode_rgb(w, h, rgb, quality=90)
+            else:
+                asset = webp_enc(w, h, rgb, cache_bits=4,
+                                 predictor=2 if did % 2 else None)
+        elif did % 5 == 0:
+            # bilevel CCITT fax scan: threshold the same gray
+            # field; dims land on the same oracle arithmetic
+            from verified_sources_spark.llm.tiff_codec import (
+                encode_bilevel,
+            )
+
+            asset = encode_bilevel(
+                w, h, (gray < 128).astype(np.uint8).tobytes(),
+                compression=("rle", "g3", "g3-2d",
+                             "g4")[did % 4],
+                byte_order="MM" if did % 2 else "II",
+                rows_per_strip=5)
+        else:
+            asset = tiff_enc(w, h, rgb,
+                             byte_order="MM" if did % 2 else "II",
+                             deflate=did % 4 == 1,
+                             lzw=did % 4 == 3,
+                             packbits=did % 4 == 2,
+                             predictor=did % 8 >= 4,
+                             rows_per_strip=5)
+        yield {"doc_id": did, "asset": asset[:8] if did % 11 == 0 else asset}
+
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     return image_dhash(assets).select(
         "doc_id", "decoded_ok", "width", "height"
     )
@@ -2782,13 +2620,11 @@ def video_formats_probe_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     refuses — the exact "manifest-first, bytes opaque" posture a
     scraped 100 TB web video column needs (mux analogue:
     /root/reference/sources/mux/__init__.py:15-28)."""
-    import pandas as pd
-
     from verified_sources_spark.llm.video_dedup import video_probe
 
     d = _docs_parallel(spark, sf_dir).select("doc_id")
 
-    def mint(batches):
+    def mint(did):
         import numpy as np
 
         from verified_sources_spark.llm.avi_codec import encode as avi_enc
@@ -2801,48 +2637,40 @@ def video_formats_probe_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             encode_stub as webm_enc,
         )
 
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w = 16 + (did % 4) * 8
-                h = 12 + (did % 3) * 8
-                n = 3 + did % 5
-                rng = np.random.default_rng(did)
-                # ≤16 distinct colors so the GIF palette encoder accepts
-                levels = rng.integers(0, 256, size=16).astype(np.uint8)
-                gray = levels[rng.integers(0, 16, size=(n, h, w))]
-                frames = np.stack([gray] * 3, axis=3)
-                fmt = did % 4
-                if fmt == 0:
-                    asset = avi_enc(list(frames), fps=10.0, width=w, height=h)
-                elif fmt == 1:
-                    asset = encode_animated(
-                        w, h, [f.tobytes() for f in frames], delay_ms=100
-                    )
-                elif fmt == 2:
-                    if (did // 4) % 2:
-                        # fragmented (CMAF-shaped): init moov with
-                        # mvex/trex + a moof run — same manifest facts,
-                        # so the SAME oracle arithmetic must hold
-                        asset = encode_fragmented_stub(
-                            n_fragments=1, samples_per_fragment=n,
-                            sample_duration=100, timescale=1000,
-                            init_moov=True, with_sidx=did % 2 == 0,
-                            width=w, height=h)
-                    else:
-                        asset = encode_stub(width=w, height=h,
-                                            n_frames=n, fps=10.0)
-                else:
-                    asset = webm_enc(width=w, height=h, n_frames=n, fps=10.0,
-                                     audio=did % 2 == 1)
-                rows.append(
-                    {"doc_id": did,
-                     "asset": asset[:10] if did % 23 == 0 else asset}
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        w = 16 + (did % 4) * 8
+        h = 12 + (did % 3) * 8
+        n = 3 + did % 5
+        rng = np.random.default_rng(did)
+        # ≤16 distinct colors so the GIF palette encoder accepts
+        levels = rng.integers(0, 256, size=16).astype(np.uint8)
+        gray = levels[rng.integers(0, 16, size=(n, h, w))]
+        frames = np.stack([gray] * 3, axis=3)
+        fmt = did % 4
+        if fmt == 0:
+            asset = avi_enc(list(frames), fps=10.0, width=w, height=h)
+        elif fmt == 1:
+            asset = encode_animated(
+                w, h, [f.tobytes() for f in frames], delay_ms=100
+            )
+        elif fmt == 2:
+            if (did // 4) % 2:
+                # fragmented (CMAF-shaped): init moov with
+                # mvex/trex + a moof run — same manifest facts,
+                # so the SAME oracle arithmetic must hold
+                asset = encode_fragmented_stub(
+                    n_fragments=1, samples_per_fragment=n,
+                    sample_duration=100, timescale=1000,
+                    init_moov=True, with_sidx=did % 2 == 0,
+                    width=w, height=h)
+            else:
+                asset = encode_stub(width=w, height=h,
+                                    n_frames=n, fps=10.0)
+        else:
+            asset = webm_enc(width=w, height=h, n_frames=n, fps=10.0,
+                             audio=did % 2 == 1)
+        yield {"doc_id": did, "asset": asset[:10] if did % 23 == 0 else asset}
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     return video_probe(assets).select(
         "doc_id", "decoded_ok", "width", "height", "n_frames",
         "duration_ms", "codec"
@@ -2863,13 +2691,11 @@ def video_shots_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scene arithmetic in SQL — a value-hash match proves the
     detector found exactly the planted cut (never a phantom one inside
     a static scene) and the keyframe/end-frame math is exact."""
-    import pandas as pd
-
     from verified_sources_spark.llm.video_dedup import video_shots
 
     d = _docs_parallel(spark, sf_dir).select("doc_id")
 
-    def mint(batches):
+    def mint(did):
         import numpy as np
 
         from verified_sources_spark.llm.avi_codec import encode
@@ -2880,21 +2706,13 @@ def video_shots_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             gray = coarse[(np.arange(h) * 6) // h][:, (np.arange(w) * 8) // w]
             return np.stack([gray] * 3, axis=2).astype(np.uint8)
 
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n = 4 + did % 4
-                k = 1 + did % (n - 1)
-                frames = [scene(2 * did)] * k + [scene(2 * did + 1)] * (n - k)
-                avi = encode(frames, fps=10.0, width=32, height=24)
-                rows.append(
-                    {"doc_id": did,
-                     "asset": avi[:10] if did % 29 == 0 else avi}
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        n = 4 + did % 4
+        k = 1 + did % (n - 1)
+        frames = [scene(2 * did)] * k + [scene(2 * did + 1)] * (n - k)
+        avi = encode(frames, fps=10.0, width=32, height=24)
+        yield {"doc_id": did, "asset": avi[:10] if did % 29 == 0 else avi}
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     return video_shots(assets, every_ms=100, threshold=8).select(
         "doc_id", "decoded_ok", "shot_idx", "start_frame", "end_frame",
         "keyframe",
@@ -2914,13 +2732,11 @@ def video_scene_pairs_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-dHash collisions among distinct scene patterns and every
     within-clip cut ≥14 bits (threshold 8) — the planted pairs are the
     ONLY pairs."""
-    import pandas as pd
-
     from verified_sources_spark.llm.video_dedup import video_scene_pairs
 
     d = _docs_parallel(spark, sf_dir).select("doc_id")
 
-    def mint(batches):
+    def mint(did):
         import numpy as np
 
         from verified_sources_spark.llm.avi_codec import encode
@@ -2931,24 +2747,16 @@ def video_scene_pairs_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             gray = coarse[(np.arange(h) * 6) // h][:, (np.arange(w) * 8) // w]
             return np.stack([gray] * 3, axis=2).astype(np.uint8)
 
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                s0 = scene(3 * did)
-                s1 = (
-                    scene(3 * (did - 1))
-                    if (did % 17 == 4 and did > 0)
-                    else scene(3 * did + 1)
-                )
-                avi = encode([s0] * 3 + [s1] * 3, fps=10.0, width=32, height=24)
-                rows.append(
-                    {"doc_id": did,
-                     "asset": avi[:10] if did % 37 == 0 else avi}
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        s0 = scene(3 * did)
+        s1 = (
+            scene(3 * (did - 1))
+            if (did % 17 == 4 and did > 0)
+            else scene(3 * did + 1)
+        )
+        avi = encode([s0] * 3 + [s1] * 3, fps=10.0, width=32, height=24)
+        yield {"doc_id": did, "asset": avi[:10] if did % 37 == 0 else avi}
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     return video_scene_pairs(
         assets, every_ms=100, threshold=8, max_hamming=0
     ).select(
@@ -2967,13 +2775,11 @@ def audio_segments_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays the layout arithmetic in SQL, so a value-hash match
     proves the gate found exactly the planted bursts with exact
     millisecond boundaries."""
-    import pandas as pd
-
     from verified_sources_spark.llm.audio_dedup import audio_segments
 
     d = _docs_parallel(spark, sf_dir).select("doc_id")
 
-    def mint(batches):
+    def mint(did):
         import numpy as np
 
         from verified_sources_spark.llm.wav_codec import encode
@@ -2983,22 +2789,15 @@ def audio_segments_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         t = np.arange(w) / rate
         tone = 0.5 * np.sin(2 * np.pi * 440 * t)
         sil = np.zeros(w)
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                p, g, q = 1 + did % 3, 1 + did % 2, 1 + did % 4
-                x = np.concatenate(
-                    [sil, sil] + [tone] * p + [sil] * g + [tone] * q + [sil]
-                )
-                wav = encode(x, rate)
-                rows.append(
-                    {"doc_id": did,
-                     "asset": wav[:10] if did % 31 == 0 else wav}
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+        p, g, q = 1 + did % 3, 1 + did % 2, 1 + did % 4
+        x = np.concatenate(
+            [sil, sil] + [tone] * p + [sil] * g + [tone] * q + [sil]
+        )
+        wav = encode(x, rate)
+        yield {"doc_id": did, "asset": wav[:10] if did % 31 == 0 else wav}
+
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     return audio_segments(assets).select(
         "doc_id", "decoded_ok", "seg_idx", "start_ms", "end_ms"
     )
@@ -3014,8 +2813,6 @@ def video_image_matches_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     image dHash, banded join, exact verify) must recover exactly the
     planted (video, image, shot 1) matches — the oracle replays the
     arithmetic."""
-    import pandas as pd
-
     from verified_sources_spark.llm.video_dedup import video_image_matches
 
     d = _docs_parallel(spark, sf_dir).select("doc_id")
@@ -3029,37 +2826,23 @@ def video_image_matches_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         gray = coarse[(np.arange(h) * 6) // h][:, (np.arange(w) * 8) // w]
         return np.stack([gray] * 3, axis=2).astype(np.uint8)
 
-    def mint_images(batches):
+    def mint_images(did):
         from verified_sources_spark.llm.png_codec import encode
 
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                rgb = scene_of(did)
-                rows.append(
-                    {"doc_id": did, "asset": encode(32, 24, rgb.tobytes(), "RGB")}
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        rgb = scene_of(did)
+        yield {"doc_id": did, "asset": encode(32, 24, rgb.tobytes(), "RGB")}
 
-    def mint_videos(batches):
+    def mint_videos(did):
         from verified_sources_spark.llm.avi_codec import encode
 
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                if did % 23 != 7 or did == 0:
-                    continue
-                frames = [scene_of(10_000_000 + did)] * 3 + [scene_of(did - 1)] * 3
-                rows.append(
-                    {"doc_id": did,
-                     "asset": encode(frames, fps=10.0, width=32, height=24)}
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        if did % 23 != 7 or did == 0:
+            return
+        frames = [scene_of(10_000_000 + did)] * 3 + [scene_of(did - 1)] * 3
+        yield {"doc_id": did,
+               "asset": encode(frames, fps=10.0, width=32, height=24)}
 
-    images = d.mapInPandas(mint_images, "doc_id long, asset binary")
-    videos = d.mapInPandas(mint_videos, "doc_id long, asset binary")
+    images = map_rows(d, mint_images, "doc_id long, asset binary")
+    videos = map_rows(d, mint_videos, "doc_id long, asset binary")
     return video_image_matches(
         videos, images, every_ms=100, threshold=8, max_hamming=0
     ).select(
@@ -3084,14 +2867,12 @@ def media_ingest_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     as exact-only singletons — not dropped."""
     import tempfile
 
-    import pandas as pd
-
     from verified_sources_spark.operators.table_format import ManifestTable
     from verified_sources_spark.streaming.media_ingest import MediaIngest
 
     d = _docs_parallel(spark, sf_dir).select("doc_id")
 
-    def mint(batches):
+    def mint(did):
         import numpy as np
 
         from verified_sources_spark.llm.png_codec import encode
@@ -3106,23 +2887,18 @@ def media_ingest_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rgb[flip % h, flip % w] = [255, 0, 0]
             return encode(w, h, rgb.tobytes(), "RGB")
 
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                r = did % 10
-                if r == 7:
-                    asset = pattern(did - 1, flip=did)   # near-dup of did-1
-                elif r == 8:
-                    asset = pattern(did - 2)             # exact dup of did-2
-                elif r == 9:
-                    asset = b"corrupt:" + str(did).encode()
-                else:
-                    asset = pattern(did)
-                rows.append({"doc_id": did, "asset": asset})
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        r = did % 10
+        if r == 7:
+            asset = pattern(did - 1, flip=did)   # near-dup of did-1
+        elif r == 8:
+            asset = pattern(did - 2)             # exact dup of did-2
+        elif r == 9:
+            asset = b"corrupt:" + str(did).encode()
+        else:
+            asset = pattern(did)
+        yield {"doc_id": did, "asset": asset}
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     root = tempfile.mkdtemp(prefix="vss_mi_")
     ing = MediaIngest(
         ManifestTable(spark, root + "/media"),
@@ -3213,8 +2989,6 @@ def pdf_filters_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     match proves every filter chain inflates to byte-identical
     content streams (ISO 32000-1 §7.4; reference analogue:
     sources/unstructured_data's PDF path)."""
-    import pandas as pd
-
     from verified_sources_spark.llm.pdf_codec import pdf_extract
 
     d = _docs_parallel(spark, sf_dir).select("doc_id", "text")
@@ -3222,24 +2996,17 @@ def pdf_filters_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     SPECS = [None, "flate", "lzw", "ahx", "a85", "rl",
              "flate+ahx", "lzw+a85"]
 
-    def mint(batches):
+    def mint(did, text):
         from verified_sources_spark.llm.pdf_codec import encode_pdf
 
-        for pdf_ in batches:
-            rows = []
-            for did, text in zip(pdf_["doc_id"], pdf_["text"]):
-                did = int(did)
-                data = encode_pdf(
-                    [[text or ""]],
-                    content_filter=SPECS[did % 8],
-                    xref_stream=did % 3 == 0,
-                )
-                rows.append(
-                    {"doc_id": did,
-                     "asset": data[:60] if did % 13 == 0 else data})
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        data = encode_pdf(
+            [[text or ""]],
+            content_filter=SPECS[did % 8],
+            xref_stream=did % 3 == 0,
+        )
+        yield {"doc_id": did, "asset": data[:60] if did % 13 == 0 else data}
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     out = pdf_extract(assets)
     return out.select(
         "doc_id", "decoded_ok",
@@ -3276,8 +3043,6 @@ def pdf_image_matches_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas (payloads never shuffle, pixels reduce to 64-bit
     hashes in the scan's executor); the join is on doc_id after both
     sides are metadata-sized."""
-    import pandas as pd
-
     from verified_sources_spark.llm.image_dedup import image_dhash
     from verified_sources_spark.llm.pdf_codec import pdf_images
 
@@ -3294,156 +3059,144 @@ def pdf_image_matches_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         rgb = np.stack([gray] * 3, axis=2).astype(np.uint8)
         return w, h, rgb.tobytes(), gray.astype(np.uint8).tobytes()
 
-    def mint_pdf(batches):
+    def mint_pdf(did):
         import zlib
 
         from verified_sources_spark.llm.jpeg_codec import encode as jenc
         from verified_sources_spark.llm.pdf_codec import encode_pdf
 
-        for pdf_ in batches:
-            rows = []
-            for did in pdf_["doc_id"]:
-                did = int(did)
-                w, h, rgb, gray = _pixels(did)
-                if did % 2 == 0:
-                    img = {"width": w, "height": h,
-                           "data": jenc(w, h, rgb, quality=90),
-                           "pdf_filter": "DCTDecode"}
-                elif did % 5 == 0:
-                    img = {"width": w, "height": h,
-                           "data": zlib.compress(gray),
-                           "pdf_filter": "FlateDecode",
-                           "colorspace": "DeviceGray"}
-                elif did % 3 == 0:
-                    # scanned figure: threshold to bilevel; every did
-                    # % 9 == 3 ships as JBIG2 with an MMR-coded generic
-                    # region (the post-2005 scanned-PDF codec, T.6
-                    # payload via llm/jbig2), the rest as CCITT-G4
-                    from verified_sources_spark.llm import fax_codec
-                    from verified_sources_spark.llm.jbig2 import (
-                        encode_jbig2_mmr,
-                    )
+        w, h, rgb, gray = _pixels(did)
+        if did % 2 == 0:
+            img = {"width": w, "height": h,
+                   "data": jenc(w, h, rgb, quality=90),
+                   "pdf_filter": "DCTDecode"}
+        elif did % 5 == 0:
+            img = {"width": w, "height": h,
+                   "data": zlib.compress(gray),
+                   "pdf_filter": "FlateDecode",
+                   "colorspace": "DeviceGray"}
+        elif did % 3 == 0:
+            # scanned figure: threshold to bilevel; every did
+            # % 9 == 3 ships as JBIG2 with an MMR-coded generic
+            # region (the post-2005 scanned-PDF codec, T.6
+            # payload via llm/jbig2), the rest as CCITT-G4
+            from verified_sources_spark.llm import fax_codec
+            from verified_sources_spark.llm.jbig2 import (
+                encode_jbig2_mmr,
+            )
 
-                    bits = bytes(1 if g < 128 else 0 for g in gray)
-                    rows_ = [bits[y * w:(y + 1) * w] for y in range(h)]
-                    if did % 9 == 3:
-                        # rotate the SIX JBIG2 backends: MMR (T.6),
-                        # MQ-ARITHMETIC template 0 with TPGDON
-                        # (llm/mq_coder), SYMBOL/TEXT coding (the
-                        # real-world majority: the page cut into six
-                        # glyphs re-placed by a text region),
-                        # HALFTONE (pattern dict + Gray-coded grid),
-                        # (r15) STANDARD-HUFFMAN symbol/text
-                        # (SDHUFF/SBHUFF=1, Annex-B tables, MMR or
-                        # uncompressed collective bitmaps), and (r15)
-                        # CUSTOM-TABLE Huffman (§B.2 table segments
-                        # re-encoding B.4/B.3/B.6/B.8, selector 3) —
-                        # identical pixels, so the dhash oracle is
-                        # codec-blind
-                        from verified_sources_spark.llm.jbig2 import (
-                            encode_jbig2_arith,
-                            encode_jbig2_halftone,
-                            encode_jbig2_symbol_text,
-                            encode_jbig2_symbol_text_huffman,
-                        )
+            bits = bytes(1 if g < 128 else 0 for g in gray)
+            rows_ = [bits[y * w:(y + 1) * w] for y in range(h)]
+            if did % 9 == 3:
+                # rotate the SIX JBIG2 backends: MMR (T.6),
+                # MQ-ARITHMETIC template 0 with TPGDON
+                # (llm/mq_coder), SYMBOL/TEXT coding (the
+                # real-world majority: the page cut into six
+                # glyphs re-placed by a text region),
+                # HALFTONE (pattern dict + Gray-coded grid),
+                # (r15) STANDARD-HUFFMAN symbol/text
+                # (SDHUFF/SBHUFF=1, Annex-B tables, MMR or
+                # uncompressed collective bitmaps), and (r15)
+                # CUSTOM-TABLE Huffman (§B.2 table segments
+                # re-encoding B.4/B.3/B.6/B.8, selector 3) —
+                # identical pixels, so the dhash oracle is
+                # codec-blind
+                from verified_sources_spark.llm.jbig2 import (
+                    encode_jbig2_arith,
+                    encode_jbig2_halftone,
+                    encode_jbig2_symbol_text,
+                    encode_jbig2_symbol_text_huffman,
+                )
 
-                        mode = (did // 9) % 6
-                        if mode == 3:
-                            # halftone with 1x1 two-pattern cells: the
-                            # full §6.6/§6.7 chain (pattern dict,
-                            # Gray-coded bitplane, grid placement)
-                            # reproducing the exact thresholded pixels
-                            blob = encode_jbig2_halftone(
-                                [[rows_[yy][xx] for xx in range(w)]
-                                 for yy in range(h)],
-                                [[bytes([0])], [bytes([1])]],
-                                mmr_patterns=(did // 45) % 2 == 1)
-                        elif mode == 2:
-                            h1 = h // 2
-                            w1 = w // 3
-                            cuts = [(0, 0, w1, h1), (w1, 0, w1, h1),
-                                    (2 * w1, 0, w - 2 * w1, h1),
-                                    (0, h1, w1, h - h1),
-                                    (w1, h1, w1, h - h1),
-                                    (2 * w1, h1, w - 2 * w1, h - h1)]
-                            gsyms = [
-                                [rows_[gy + ry][gx:gx + gw]
-                                 for ry in range(gh)]
-                                for gx, gy, gw, gh in cuts]
-                            insts = [(gx, gy, k) for k, (gx, gy, _,
-                                     _) in enumerate(cuts)]
-                            blob = encode_jbig2_symbol_text(
-                                gsyms, insts, (w, h))
-                        elif mode in (4, 5):
-                            h1 = h // 2
-                            w1 = w // 3
-                            cuts = [(0, 0, w1, h1), (w1, 0, w1, h1),
-                                    (2 * w1, 0, w - 2 * w1, h1),
-                                    (0, h1, w1, h - h1),
-                                    (w1, h1, w1, h - h1),
-                                    (2 * w1, h1, w - 2 * w1, h - h1)]
-                            gsyms = [
-                                [rows_[gy + ry][gx:gx + gw]
-                                 for ry in range(gh)]
-                                for gx, gy, gw, gh in cuts]
-                            insts = [(gx, gy, k) for k, (gx, gy, _,
-                                     _) in enumerate(cuts)]
-                            blob = encode_jbig2_symbol_text_huffman(
-                                gsyms, insts, (w, h),
-                                mmr_bitmaps=(did // 45) % 2 == 0,
-                                custom_tables=mode == 5)
-                        elif mode == 0:
-                            blob = encode_jbig2_arith(
-                                rows_, tpgdon=True)
-                        else:
-                            blob = encode_jbig2_mmr(rows_)
-                        img = {"width": w, "height": h,
-                               "data": blob,
-                               "pdf_filter": "JBIG2Decode",
-                               "colorspace": "DeviceGray", "bpc": 1}
-                    else:
-                        img = {"width": w, "height": h,
-                               "data": fax_codec.encode_g4(rows_),
-                               "pdf_filter": "CCITTFaxDecode",
-                               "colorspace": "DeviceGray", "bpc": 1,
-                               "decode_parms":
-                                   f"<< /K -1 /Columns {w} /Rows {h} >>"}
+                mode = (did // 9) % 6
+                if mode == 3:
+                    # halftone with 1x1 two-pattern cells: the
+                    # full §6.6/§6.7 chain (pattern dict,
+                    # Gray-coded bitplane, grid placement)
+                    # reproducing the exact thresholded pixels
+                    blob = encode_jbig2_halftone(
+                        [[rows_[yy][xx] for xx in range(w)]
+                         for yy in range(h)],
+                        [[bytes([0])], [bytes([1])]],
+                        mmr_patterns=(did // 45) % 2 == 1)
+                elif mode == 2:
+                    h1 = h // 2
+                    w1 = w // 3
+                    cuts = [(0, 0, w1, h1), (w1, 0, w1, h1),
+                            (2 * w1, 0, w - 2 * w1, h1),
+                            (0, h1, w1, h - h1),
+                            (w1, h1, w1, h - h1),
+                            (2 * w1, h1, w - 2 * w1, h - h1)]
+                    gsyms = [
+                        [rows_[gy + ry][gx:gx + gw]
+                         for ry in range(gh)]
+                        for gx, gy, gw, gh in cuts]
+                    insts = [(gx, gy, k) for k, (gx, gy, _,
+                             _) in enumerate(cuts)]
+                    blob = encode_jbig2_symbol_text(
+                        gsyms, insts, (w, h))
+                elif mode in (4, 5):
+                    h1 = h // 2
+                    w1 = w // 3
+                    cuts = [(0, 0, w1, h1), (w1, 0, w1, h1),
+                            (2 * w1, 0, w - 2 * w1, h1),
+                            (0, h1, w1, h - h1),
+                            (w1, h1, w1, h - h1),
+                            (2 * w1, h1, w - 2 * w1, h - h1)]
+                    gsyms = [
+                        [rows_[gy + ry][gx:gx + gw]
+                         for ry in range(gh)]
+                        for gx, gy, gw, gh in cuts]
+                    insts = [(gx, gy, k) for k, (gx, gy, _,
+                             _) in enumerate(cuts)]
+                    blob = encode_jbig2_symbol_text_huffman(
+                        gsyms, insts, (w, h),
+                        mmr_bitmaps=(did // 45) % 2 == 0,
+                        custom_tables=mode == 5)
+                elif mode == 0:
+                    blob = encode_jbig2_arith(
+                        rows_, tpgdon=True)
                 else:
-                    img = {"width": w, "height": h,
-                           "data": zlib.compress(rgb),
-                           "pdf_filter": "FlateDecode"}
-                data = encode_pdf([[f"figure {did}"]], image=img)
-                rows.append(
-                    {"doc_id": did,
-                     "asset": data[:40] if did % 11 == 0 else data})
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+                    blob = encode_jbig2_mmr(rows_)
+                img = {"width": w, "height": h,
+                       "data": blob,
+                       "pdf_filter": "JBIG2Decode",
+                       "colorspace": "DeviceGray", "bpc": 1}
+            else:
+                img = {"width": w, "height": h,
+                       "data": fax_codec.encode_g4(rows_),
+                       "pdf_filter": "CCITTFaxDecode",
+                       "colorspace": "DeviceGray", "bpc": 1,
+                       "decode_parms":
+                           f"<< /K -1 /Columns {w} /Rows {h} >>"}
+        else:
+            img = {"width": w, "height": h,
+                   "data": zlib.compress(rgb),
+                   "pdf_filter": "FlateDecode"}
+        data = encode_pdf([[f"figure {did}"]], image=img)
+        yield {"doc_id": did, "asset": data[:40] if did % 11 == 0 else data}
 
-    def mint_standalone(batches):
+    def mint_standalone(did):
         from verified_sources_spark.llm.jpeg_codec import encode as jenc
         from verified_sources_spark.llm.png_codec import encode as penc
 
-        for pdf_ in batches:
-            rows = []
-            for did in pdf_["doc_id"]:
-                did = int(did)
-                w, h, rgb, gray = _pixels(did)
-                if did % 2 == 0:
-                    asset = jenc(w, h, rgb, quality=90)
-                elif did % 5 != 0 and did % 3 == 0:
-                    # the CCITT scan's twin: PNG of the same
-                    # thresholded bilevel pixels
-                    bl = bytes(0 if g < 128 else 255 for g in gray)
-                    asset = penc(w, h,
-                                 b"".join(bytes([v, v, v]) for v in bl))
-                else:
-                    asset = penc(w, h, rgb)
-                rows.append({"doc_id": did, "asset": asset})
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        w, h, rgb, gray = _pixels(did)
+        if did % 2 == 0:
+            asset = jenc(w, h, rgb, quality=90)
+        elif did % 5 != 0 and did % 3 == 0:
+            # the CCITT scan's twin: PNG of the same
+            # thresholded bilevel pixels
+            bl = bytes(0 if g < 128 else 255 for g in gray)
+            asset = penc(w, h,
+                         b"".join(bytes([v, v, v]) for v in bl))
+        else:
+            asset = penc(w, h, rgb)
+        yield {"doc_id": did, "asset": asset}
 
     embedded = pdf_images(
-        d.mapInPandas(mint_pdf, "doc_id long, asset binary"))
+        map_rows(d, mint_pdf, "doc_id long, asset binary"))
     standalone = image_dhash(
-        d.mapInPandas(mint_standalone, "doc_id long, asset binary"))
+        map_rows(d, mint_standalone, "doc_id long, asset binary"))
     return (
         embedded.filter(F.col("decoded_ok"))
         .join(standalone.filter(F.col("decoded_ok"))
@@ -3473,13 +3226,11 @@ def office_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenizer) recovered every unit byte-for-byte (the office-document
     front door of a training corpus; reference analogue:
     sources/unstructured_data routes local office files into text)."""
-    import pandas as pd
-
     from verified_sources_spark.llm.office import office_extract
 
     d = _docs_parallel(spark, sf_dir).select("doc_id", "text")
 
-    def mint(batches):
+    def mint(did, text):
         from verified_sources_spark.llm.office import (
             encode_docx, encode_ods, encode_odt, encode_pptx,
             encode_rtf, encode_xlsx,
@@ -3494,61 +3245,55 @@ def office_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         encoders = [encode_docx, None, encode_pptx, encode_odt, None,
                     encode_rtf, encode_doc, None, encode_ppt,
                     encode_odp]
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                t = text or ""
-                units = [t[80 * k : 80 * (k + 1)]
-                         for k in range(1 + did % 3)]
-                fmt = did % 10
-                if fmt == 1:
-                    asset = encode_xlsx([[u] for u in units])
-                elif fmt == 4:
-                    asset = encode_ods([[u] for u in units])
-                elif fmt == 7:
-                    # legacy binary Excel, CONTINUE-split SST on
-                    # alternating files
-                    asset = encode_xls({"Sheet1": [[u] for u in units]},
-                                       split_sst=bool(did % 16 == 7))
-                elif fmt == 6:
-                    # legacy binary Word, both table-stream names
-                    asset = encode_doc(units,
-                                       which_table=(did // 8) % 2)
-                elif fmt == 0 and (did // 10) % 2 == 0:
-                    # structural docx: header/footer parts, a w:tbl
-                    # (row-major, cell-tab-joined unit) and a footnote
-                    # part — prose a body-paragraph-only walk drops
-                    asset = encode_docx(
-                        units,
-                        tables=[[[f"k{did}", "v1"],
-                                 ["total", str(did % 100)]]],
-                        headers=[f"Header doc {did}"],
-                        footers=["page 1"],
-                        footnotes=[f"note for doc {did}"])
-                elif fmt == 2 and (did // 10) % 2 == 0:
-                    # pptx with SPEAKER NOTES on slide 0 — a real
-                    # notesSlide part linked via the slide's rels
-                    asset = encode_pptx(
-                        units, notes={0: f"note for doc {did}"})
-                elif fmt == 3 and (did // 10) % 2 == 1:
-                    # structural odt: styles.xml master-page header/
-                    # footer, a table:table and a text:note
-                    asset = encode_odt(
-                        units,
-                        tables=[[[f"k{did}", "v1"],
-                                 ["total", str(did % 100)]]],
-                        header=[f"Header doc {did}"],
-                        footer=["page 1"],
-                        footnotes=[f"note for doc {did}"])
-                else:
-                    asset = encoders[fmt](units)
-                rows.append(
-                    {"doc_id": did,
-                     "asset": asset[:4] if did % 17 == 0 else asset})
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+        t = text or ""
+        units = [t[80 * k : 80 * (k + 1)]
+                 for k in range(1 + did % 3)]
+        fmt = did % 10
+        if fmt == 1:
+            asset = encode_xlsx([[u] for u in units])
+        elif fmt == 4:
+            asset = encode_ods([[u] for u in units])
+        elif fmt == 7:
+            # legacy binary Excel, CONTINUE-split SST on
+            # alternating files
+            asset = encode_xls({"Sheet1": [[u] for u in units]},
+                               split_sst=bool(did % 16 == 7))
+        elif fmt == 6:
+            # legacy binary Word, both table-stream names
+            asset = encode_doc(units,
+                               which_table=(did // 8) % 2)
+        elif fmt == 0 and (did // 10) % 2 == 0:
+            # structural docx: header/footer parts, a w:tbl
+            # (row-major, cell-tab-joined unit) and a footnote
+            # part — prose a body-paragraph-only walk drops
+            asset = encode_docx(
+                units,
+                tables=[[[f"k{did}", "v1"],
+                         ["total", str(did % 100)]]],
+                headers=[f"Header doc {did}"],
+                footers=["page 1"],
+                footnotes=[f"note for doc {did}"])
+        elif fmt == 2 and (did // 10) % 2 == 0:
+            # pptx with SPEAKER NOTES on slide 0 — a real
+            # notesSlide part linked via the slide's rels
+            asset = encode_pptx(
+                units, notes={0: f"note for doc {did}"})
+        elif fmt == 3 and (did // 10) % 2 == 1:
+            # structural odt: styles.xml master-page header/
+            # footer, a table:table and a text:note
+            asset = encode_odt(
+                units,
+                tables=[[[f"k{did}", "v1"],
+                         ["total", str(did % 100)]]],
+                header=[f"Header doc {did}"],
+                footer=["page 1"],
+                footnotes=[f"note for doc {did}"])
+        else:
+            asset = encoders[fmt](units)
+        yield {"doc_id": did, "asset": asset[:4] if did % 17 == 0 else asset}
+
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     return office_extract(assets).select(
         "doc_id", "decoded_ok", "format", "unit_idx", "n_units", "text")
 
@@ -3566,65 +3311,58 @@ def email_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     walk, QP/base64 decode and mbox From-stuffing recovery are exact
     (the mail-archive front door; reference analogue: sources/inbox —
     the live-IMAP half of the same surface)."""
-    import pandas as pd
-
     from verified_sources_spark.llm.email_ingest import email_extract
 
     d = _docs_parallel(spark, sf_dir).select("doc_id", "text")
 
-    def mint(batches):
+    def mint(did, text):
         from verified_sources_spark.llm.email_ingest import (
             encode_eml, encode_mbox,
         )
 
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                t = text or ""
-                frm = f"user{did % 7}@example.com"
-                if did % 19 == 0:
-                    asset = b"\x00\x01 not mail"
-                elif did % 4 == 2:
-                    # Outlook .msg: MAPI property streams in a CFB
-                    # container (llm/msgdoc), with attachments
-                    from verified_sources_spark.llm.msgdoc import (
-                        encode_msg,
-                    )
+        t = text or ""
+        frm = f"user{did % 7}@example.com"
+        if did % 19 == 0:
+            asset = b"\x00\x01 not mail"
+        elif did % 4 == 2:
+            # Outlook .msg: MAPI property streams in a CFB
+            # container (llm/msgdoc), with attachments
+            from verified_sources_spark.llm.msgdoc import (
+                encode_msg,
+            )
 
-                    asset = encode_msg(f"Doc {did}", frm, t,
-                                       to_addr="rcpt@example.com",
-                                       attachments=did % 3)
-                elif did % 2 == 0:
-                    # body charsets cycle the CJK email families:
-                    # ISO-2022-JP (the classic 7-bit JIS mail coding),
-                    # EUC-JP and GB18030 — the decoder must honor the
-                    # per-part charset= label or the hash gate breaks
-                    cs, marker = (
-                        ("utf-8", None),
-                        ("iso-2022-jp", "日本語メール"),
-                        ("euc-jp", "日本語テキスト"),
-                        ("gb18030", "你好，世界"),
-                    )[(did // 4) % 4]
-                    body = (t if marker is None
-                            else f"{marker} doc {did}")
-                    asset = encode_eml(
-                        f"Doc {did}", body + "\n", from_addr=frm,
-                        charset=cs,
-                        html_body=(f"<p>Doc {did}</p>"
-                                   if did % 4 == 0 else None))
-                else:
-                    msgs = [
-                        encode_eml(f"Doc {did} msg {j}",
-                                   t[100 * j : 100 * (j + 1)] + "\n",
-                                   from_addr=frm)
-                        for j in range(2)
-                    ]
-                    asset = encode_mbox(msgs)
-                rows.append({"doc_id": did, "asset": asset})
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+            asset = encode_msg(f"Doc {did}", frm, t,
+                               to_addr="rcpt@example.com",
+                               attachments=did % 3)
+        elif did % 2 == 0:
+            # body charsets cycle the CJK email families:
+            # ISO-2022-JP (the classic 7-bit JIS mail coding),
+            # EUC-JP and GB18030 — the decoder must honor the
+            # per-part charset= label or the hash gate breaks
+            cs, marker = (
+                ("utf-8", None),
+                ("iso-2022-jp", "日本語メール"),
+                ("euc-jp", "日本語テキスト"),
+                ("gb18030", "你好，世界"),
+            )[(did // 4) % 4]
+            body = (t if marker is None
+                    else f"{marker} doc {did}")
+            asset = encode_eml(
+                f"Doc {did}", body + "\n", from_addr=frm,
+                charset=cs,
+                html_body=(f"<p>Doc {did}</p>"
+                           if did % 4 == 0 else None))
+        else:
+            msgs = [
+                encode_eml(f"Doc {did} msg {j}",
+                           t[100 * j : 100 * (j + 1)] + "\n",
+                           from_addr=frm)
+                for j in range(2)
+            ]
+            asset = encode_mbox(msgs)
+        yield {"doc_id": did, "asset": asset}
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     return email_extract(assets).select(
         "doc_id", "decoded_ok", "msg_idx", "subject", "from_addr",
         "n_parts", "body_source", "text")
@@ -3642,32 +3380,23 @@ def ebook_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the same one the WARC front door uses) recovered every chapter
     exactly (the long-form-text front door; reference analogue:
     sources/filesystem + unstructured_data on local documents)."""
-    import pandas as pd
-
     from verified_sources_spark.llm.ebook import epub_extract
 
     d = _docs_parallel(spark, sf_dir).select("doc_id", "text")
 
-    def mint(batches):
+    def mint(did, text):
         from verified_sources_spark.llm.ebook import encode_epub
 
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                t = text or ""
-                chapters = [("Chapter 1", t[:160])]
-                for k in range(1, 1 + did % 3):
-                    chapters.append(
-                        (f"Chapter {k + 1}",
-                         f"Contents of chapter {k + 1} in document {did}."))
-                asset = encode_epub(chapters, title=f"Book {did}")
-                rows.append(
-                    {"doc_id": did,
-                     "asset": asset[:20] if did % 23 == 0 else asset})
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        t = text or ""
+        chapters = [("Chapter 1", t[:160])]
+        for k in range(1, 1 + did % 3):
+            chapters.append(
+                (f"Chapter {k + 1}",
+                 f"Contents of chapter {k + 1} in document {did}."))
+        asset = encode_epub(chapters, title=f"Book {did}")
+        yield {"doc_id": did, "asset": asset[:20] if did % 23 == 0 else asset}
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     return epub_extract(assets).select(
         "doc_id", "decoded_ok", "book_title", "chapter_idx", "n_chapters",
         "chapter_title", "text")
@@ -3689,8 +3418,6 @@ def shard_lines_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the bomb-gated stream walks preserved line boundaries.  Shape:
     mint and explode are both mapInPandas; compressed payloads never
     shuffle."""
-    import pandas as pd
-
     from verified_sources_spark.llm.archives import shard_lines
 
     d = _docs_parallel(spark, sf_dir).select("doc_id", "text")
@@ -3698,29 +3425,22 @@ def shard_lines_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sort_array(F.collect_list(F.struct("doc_id", "text"))).alias(
             "docs"))
 
-    def mint(batches):
+    def mint(sid, docs):
         from verified_sources_spark.llm.archives import encode_shard
 
-        for pdf in batches:
-            rows = []
-            for sid, docs in zip(pdf["shard_id"], pdf["docs"]):
-                sid = int(sid)
-                lines = []
-                for rec in docs:
-                    txt = (rec["text"] or "").replace("\r", " ").replace(
-                        "\n", " ")
-                    lines.append(f"{int(rec['doc_id'])}\t{txt}")
-                payload = ("\n".join(lines) + "\n").encode()
-                codec = ("gzip", "xz", "bz2", "zstd", "zstd",
-                         "lz4")[sid % 6]
-                asset = encode_shard(payload, codec,
-                                     streamed=sid % 6 == 4)
-                rows.append({"shard_id": sid,
-                             "asset": asset[:10] if sid % 7 == 0
-                             else asset})
-            yield pd.DataFrame(rows, columns=["shard_id", "asset"])
+        lines = []
+        for rec in docs:
+            txt = (rec["text"] or "").replace("\r", " ").replace(
+                "\n", " ")
+            lines.append(f"{int(rec['doc_id'])}\t{txt}")
+        payload = ("\n".join(lines) + "\n").encode()
+        codec = ("gzip", "xz", "bz2", "zstd", "zstd",
+                 "lz4")[sid % 6]
+        asset = encode_shard(payload, codec,
+                             streamed=sid % 6 == 4)
+        yield {"shard_id": sid, "asset": asset[:10] if sid % 7 == 0 else asset}
 
-    assets = grouped.mapInPandas(mint, "shard_id long, asset binary")
+    assets = map_rows(grouped, mint, "shard_id long, asset binary")
     return shard_lines(assets).select(
         "shard_id", "decoded_ok", "codec", "line_idx", "text")
 
@@ -3736,43 +3456,34 @@ def tiff_pages_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     page dHash, not file hash).  The oracle replays the page-count and
     per-page dims arithmetic in SQL — a value-hash match proves every
     chained IFD walked and every page's CCITT strips decoded."""
-    import pandas as pd
-
     from verified_sources_spark.llm.image_dedup import tiff_pages
 
     d = _docs_parallel(spark, sf_dir).select("doc_id")
 
-    def mint(batches):
+    def mint(did):
         import numpy as np
 
         from verified_sources_spark.llm.tiff_codec import (
             encode_multipage_bilevel,
         )
 
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n = 2 + did % 3
-                pages = []
-                for p in range(n):
-                    w = 16 + ((did + p) % 4) * 8
-                    h = 12 + ((did + p) % 3) * 8
-                    rng = np.random.default_rng(did * 7 + p)
-                    bits = (rng.integers(0, 256, size=(h, w))
-                            < 128).astype(np.uint8)
-                    pages.append((w, h, bits.tobytes()))
-                asset = encode_multipage_bilevel(
-                    pages,
-                    compression=("rle", "g3", "g3-2d", "g4")[did % 4],
-                    byte_order="MM" if did % 2 else "II",
-                    rows_per_strip=7)
-                rows.append({"doc_id": did,
-                             "asset": asset[:8] if did % 11 == 0
-                             else asset})
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        n = 2 + did % 3
+        pages = []
+        for p in range(n):
+            w = 16 + ((did + p) % 4) * 8
+            h = 12 + ((did + p) % 3) * 8
+            rng = np.random.default_rng(did * 7 + p)
+            bits = (rng.integers(0, 256, size=(h, w))
+                    < 128).astype(np.uint8)
+            pages.append((w, h, bits.tobytes()))
+        asset = encode_multipage_bilevel(
+            pages,
+            compression=("rle", "g3", "g3-2d", "g4")[did % 4],
+            byte_order="MM" if did % 2 else "II",
+            rows_per_strip=7)
+        yield {"doc_id": did, "asset": asset[:8] if did % 11 == 0 else asset}
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     return tiff_pages(assets).select(
         "doc_id", "decoded_ok", "n_pages", "page_idx", "width", "height")
 
@@ -3789,57 +3500,37 @@ def heif_probe_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     refuses by name (HEVC/AV1); the manifest-first posture web video
     already has (mux analogue:
     /root/reference/sources/mux/__init__.py:15-28)."""
-    import pandas as pd
-
     d = _docs_parallel(spark, sf_dir).select("doc_id")
 
-    def mint(batches):
+    def mint(did):
         from verified_sources_spark.llm.heif_codec import encode_stub
 
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w = 320 + (did % 5) * 64
-                h = 240 + (did % 3) * 64
-                brand, codec = (
-                    (b"heic", b"hvc1"), (b"avif", b"av01"),
-                    (b"mif1", b"hvc1"))[did % 3]
-                asset = encode_stub(w, h, codec=codec, brand=brand,
-                                    thumb=did % 2 == 0)
-                rows.append({"doc_id": did,
-                             "asset": asset[:20] if did % 9 == 0
-                             else asset})
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        w = 320 + (did % 5) * 64
+        h = 240 + (did % 3) * 64
+        brand, codec = (
+            (b"heic", b"hvc1"), (b"avif", b"av01"),
+            (b"mif1", b"hvc1"))[did % 3]
+        asset = encode_stub(w, h, codec=codec, brand=brand,
+                            thumb=did % 2 == 0)
+        yield {"doc_id": did, "asset": asset[:20] if did % 9 == 0 else asset}
 
-    def run(batches):
+    def run(did, payload):
         from verified_sources_spark.llm.heif_codec import HeifError, probe
 
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["asset"]):
-                try:
-                    m = probe(bytes(payload))
-                    rows.append({"doc_id": did, "decoded_ok": True,
-                                 "brand": m["brand"], "codec": m["codec"],
-                                 "width": m["width"],
-                                 "height": m["height"],
-                                 "n_items": m["n_items"]})
-                except HeifError:
-                    rows.append({"doc_id": did, "decoded_ok": False,
-                                 "brand": None, "codec": None,
-                                 "width": None, "height": None,
-                                 "n_items": None})
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "decoded_ok", "brand", "codec",
-                               "width", "height", "n_items"])
+        try:
+            m = probe(bytes(payload))
+            yield {"doc_id": did, "decoded_ok": True,
+                   "brand": m["brand"], "codec": m["codec"],
+                   "width": m["width"],
+                   "height": m["height"],
+                   "n_items": m["n_items"]}
+        except HeifError:
+            yield {"doc_id": did, "decoded_ok": False}
 
-    import pandas as pd  # noqa: F811
-
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
-    return assets.mapInPandas(
-        run, "doc_id long, decoded_ok boolean, brand string, "
-             "codec string, width int, height int, n_items int")
+    assets = map_rows(d, mint, "doc_id long, asset binary")
+    return map_rows(assets, run,
+                    "doc_id long, decoded_ok boolean, brand string, "
+                    "codec string, width int, height int, n_items int")
 
 
 def svg_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3855,59 +3546,42 @@ def svg_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sniff, dimension resolution, escape handling and tspan folding
     are exact (SVG is the web's vector format: a scraped image column
     always contains them, and their text belongs in the corpus)."""
-    import pandas as pd
-
     d = _docs_parallel(spark, sf_dir).select("doc_id")
 
     def label(did: int, k: int) -> str:
         return f"label<{did}> & run {k} = {(did * 7 + k) % 1000}"
 
-    def mint(batches):
+    def mint(did):
         from verified_sources_spark.llm.svg_codec import encode_svg
 
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w = 160 + (did % 4) * 40
-                h = 90 + (did % 3) * 30
-                texts = [label(did, k) for k in range(1 + did % 3)]
-                asset = encode_svg(w, h, texts,
-                                   title=f"Figure {did}",
-                                   viewbox_only=did % 2 == 1)
-                rows.append({"doc_id": did,
-                             "asset": asset[:30] if did % 13 == 0
-                             else asset})
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        w = 160 + (did % 4) * 40
+        h = 90 + (did % 3) * 30
+        texts = [label(did, k) for k in range(1 + did % 3)]
+        asset = encode_svg(w, h, texts,
+                           title=f"Figure {did}",
+                           viewbox_only=did % 2 == 1)
+        yield {"doc_id": did, "asset": asset[:30] if did % 13 == 0 else asset}
 
-    def run(batches):
+    def run(did, payload):
         from verified_sources_spark.llm.svg_codec import (
             SvgError, extract_text, probe,
         )
 
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["asset"]):
-                payload = bytes(payload)
-                try:
-                    m = probe(payload)
-                    for i, t in enumerate(extract_text(payload)):
-                        rows.append({"doc_id": did, "decoded_ok": True,
-                                     "width": m["width"],
-                                     "height": m["height"],
-                                     "run_idx": i, "text": t})
-                except SvgError:
-                    rows.append({"doc_id": did, "decoded_ok": False,
-                                 "width": None, "height": None,
-                                 "run_idx": None, "text": None})
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "decoded_ok", "width",
-                               "height", "run_idx", "text"])
+        payload = bytes(payload)
+        try:
+            m = probe(payload)
+            for i, t in enumerate(extract_text(payload)):
+                yield {"doc_id": did, "decoded_ok": True,
+                       "width": m["width"],
+                       "height": m["height"],
+                       "run_idx": i, "text": t}
+        except SvgError:
+            yield {"doc_id": did, "decoded_ok": False}
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
-    return assets.mapInPandas(
-        run, "doc_id long, decoded_ok boolean, width int, height int, "
-             "run_idx int, text string")
+    assets = map_rows(d, mint, "doc_id long, asset binary")
+    return map_rows(assets, run,
+                    "doc_id long, decoded_ok boolean, width int, height int, "
+                    "run_idx int, text string")
 
 
 def feed_entries_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3923,41 +3597,32 @@ def feed_entries_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     description preference and the canonical HTML-to-text pass are
     exact (feeds are the crawl handing you page content
     pre-structured; reference analogue: sources/scraping)."""
-    import pandas as pd
-
     from verified_sources_spark.llm.feeds import feed_extract
 
     d = _docs_parallel(spark, sf_dir).select("doc_id")
 
-    def mint(batches):
+    def mint(did):
         from verified_sources_spark.llm.feeds import (
             encode_atom, encode_rss,
         )
 
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                full = did % 4 in (0, 1)
-                items = []
-                for k in range(1 + did % 3):
-                    it = {"title": f"Doc {did} post {k}",
-                          "link": f"http://example.com/{did}/{k}",
-                          "date": f"2026-01-{1 + k:02d}",
-                          "description" if did % 2 == 0 else "summary":
-                              f"<p>summary {did} item {k} &amp; tail</p>"}
-                    if full:
-                        it["content"] = (f"<b>body {did} item {k}</b> "
-                                         f"<p>rest</p>")
-                    items.append(it)
-                asset = (encode_rss(items) if did % 2 == 0
-                         else encode_atom(items))
-                rows.append({"doc_id": did,
-                             "asset": asset[:25] if did % 11 == 0
-                             else asset})
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        full = did % 4 in (0, 1)
+        items = []
+        for k in range(1 + did % 3):
+            it = {"title": f"Doc {did} post {k}",
+                  "link": f"http://example.com/{did}/{k}",
+                  "date": f"2026-01-{1 + k:02d}",
+                  "description" if did % 2 == 0 else "summary":
+                      f"<p>summary {did} item {k} &amp; tail</p>"}
+            if full:
+                it["content"] = (f"<b>body {did} item {k}</b> "
+                                 f"<p>rest</p>")
+            items.append(it)
+        asset = (encode_rss(items) if did % 2 == 0
+                 else encode_atom(items))
+        yield {"doc_id": did, "asset": asset[:25] if did % 11 == 0 else asset}
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     return feed_extract(assets).select(
         "doc_id", "decoded_ok", "kind", "entry_idx", "title", "link",
         "date", "summary", "text")
@@ -3977,36 +3642,27 @@ def notebook_cells_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL — a value-hash match proves both nbformat walks choose the
     right text and keep blobs out of it (notebooks are a major share
     of GitHub-derived code corpora)."""
-    import pandas as pd
-
     from verified_sources_spark.llm.notebooks import notebook_extract
 
     d = _docs_parallel(spark, sf_dir).select("doc_id")
 
-    def mint(batches):
+    def mint(did):
         from verified_sources_spark.llm.notebooks import encode_notebook
 
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n = 2 + did % 3
-                cells = [("markdown" if k % 2 == 0 else "code",
-                          f"cell {k} of doc {did}\nline two {k}")
-                         for k in range(n)]
-                outputs_for = {k: k % 3 for k in range(n) if k % 2 == 1}
-                image_for = ({k for k in range(n) if k % 2 == 1}
-                             if did % 4 == 0 else set())
-                asset = encode_notebook(
-                    cells, nbformat=4 if did % 2 == 0 else 3,
-                    outputs_for=outputs_for,
-                    image_output_for=image_for)
-                rows.append({"doc_id": did,
-                             "asset": asset[:15] if did % 10 == 0
-                             else asset})
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        n = 2 + did % 3
+        cells = [("markdown" if k % 2 == 0 else "code",
+                  f"cell {k} of doc {did}\nline two {k}")
+                 for k in range(n)]
+        outputs_for = {k: k % 3 for k in range(n) if k % 2 == 1}
+        image_for = ({k for k in range(n) if k % 2 == 1}
+                     if did % 4 == 0 else set())
+        asset = encode_notebook(
+            cells, nbformat=4 if did % 2 == 0 else 3,
+            outputs_for=outputs_for,
+            image_output_for=image_for)
+        yield {"doc_id": did, "asset": asset[:15] if did % 10 == 0 else asset}
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     return notebook_extract(assets).select(
         "doc_id", "decoded_ok", "cell_idx", "cell_type", "source",
         "n_outputs", "has_image_output")
@@ -4024,42 +3680,35 @@ def markdown_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-for-byte in SQL — a value-hash match proves syntax strips,
     links keep their text, and CODE STAYS OUT OF PROSE (the
     fence-in-prose failure mode that poisons both mixtures)."""
-    import pandas as pd
-
     from verified_sources_spark.llm.markdown import markdown_docs_extract
 
     d = _docs_parallel(spark, sf_dir).select("doc_id")
 
-    def mint(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                parts = [
-                    f"# Doc {did} heading", "",
-                    f"Intro **bold {did}** with "
-                    f"[link {did}](http://e.com/{did}).", "",
-                    "```python",
-                    f"code line {did}",
-                    f"x = {did}",
-                    "```", "",
-                    f"- item one {did}",
-                ]
-                if did % 2 == 1:
-                    parts += ["", f"Second {did}", "---"]
-                if did % 3 == 0:
-                    parts += ["", "```", f"plain {did}", "```"]
-                md = "\n".join(parts).encode()
-                if did % 12 == 0:
-                    # truncate INSIDE the first fence: the prose above
-                    # survives and the partial code must still be kept
-                    cut = md.index(b"```python") + 9 + 1 + len(
-                        f"code line {did}")
-                    md = md[:cut]
-                rows.append({"doc_id": did, "asset": md})
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+    def mint(did):
+        parts = [
+            f"# Doc {did} heading", "",
+            f"Intro **bold {did}** with "
+            f"[link {did}](http://e.com/{did}).", "",
+            "```python",
+            f"code line {did}",
+            f"x = {did}",
+            "```", "",
+            f"- item one {did}",
+        ]
+        if did % 2 == 1:
+            parts += ["", f"Second {did}", "---"]
+        if did % 3 == 0:
+            parts += ["", "```", f"plain {did}", "```"]
+        md = "\n".join(parts).encode()
+        if did % 12 == 0:
+            # truncate INSIDE the first fence: the prose above
+            # survives and the partial code must still be kept
+            cut = md.index(b"```python") + 9 + 1 + len(
+                f"code line {did}")
+            md = md[:cut]
+        yield {"doc_id": did, "asset": md}
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     return markdown_docs_extract(assets).select(
         "doc_id", "decoded_ok", "text", "n_headings", "n_links",
         "n_code_blocks", "code_langs", "code")
@@ -4078,43 +3727,34 @@ def crawl_dedup_pipeline_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     in SQL: a value-hash match proves the front door, the text layer
     and the dedup operator COMPOSE exactly (the actual shape of a
     100 TB crawl→corpus job, not an isolated operator)."""
-    import pandas as pd
-
     from verified_sources_spark.llm.warc import warc_extract
 
     d = _docs_parallel(spark, sf_dir).select("doc_id")
 
-    def mint(batches):
+    def mint(did):
         import html as H
 
         from verified_sources_spark.llm.warc import (
             encode_record, encode_warc, http_response_block,
         )
 
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                g = did // 3
-                text = (f"shared page content of group {g}"
-                        + " filler" * (g % 3))
-                body = (f"<html><head><title>g{g}</title></head>"
-                        f"<body><p>{H.escape(text)}</p></body>"
-                        f"</html>").encode()
-                enc = None
-                if did % 7 == 0:
-                    enc = "br"
-                block = http_response_block(
-                    body, chunked=did % 5 == 0, encoding=enc)
-                rec = encode_record(uri=f"http://example.com/{did}",
-                                    block=block)
-                warc = encode_warc([rec], gzip_members=did % 2 == 1)
-                rows.append({"doc_id": did,
-                             "asset": warc[:30] if did % 13 == 0
-                             else warc})
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        g = did // 3
+        text = (f"shared page content of group {g}"
+                + " filler" * (g % 3))
+        body = (f"<html><head><title>g{g}</title></head>"
+                f"<body><p>{H.escape(text)}</p></body>"
+                f"</html>").encode()
+        enc = None
+        if did % 7 == 0:
+            enc = "br"
+        block = http_response_block(
+            body, chunked=did % 5 == 0, encoding=enc)
+        rec = encode_record(uri=f"http://example.com/{did}",
+                            block=block)
+        warc = encode_warc([rec], gzip_members=did % 2 == 1)
+        yield {"doc_id": did, "asset": warc[:30] if did % 13 == 0 else warc}
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     pages = (warc_extract(assets)
              .filter(F.col("decoded_ok"))
              .select("doc_id", "text"))
@@ -4145,41 +3785,31 @@ def nested_archive_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays the nesting paths, byte counts and the recovered
     text in SQL — a value-hash match proves three container layers
     and the depth-capped walk compose exactly."""
-    import pandas as pd
-
     d = _docs_parallel(spark, sf_dir).select("doc_id", "text")
 
-    def run(batches):
+    def run(did, text):
         from verified_sources_spark.llm.archives import (
             encode_tar, encode_zip, iter_members_recursive,
         )
         from verified_sources_spark.llm.sevenzip import encode_7z
 
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                t = (text or "").encode()
-                inner = encode_tar({f"doc_{did}.txt": t}, gz=True)
-                if did % 13 == 0:
-                    inner = inner[:20]  # corrupt: degrades to bytes
-                mid = encode_zip({"inner.tgz": inner,
-                                  "side.txt": b"sidecar %d" % did})
-                asset = (encode_7z({"mid.zip": mid}, codec="lzma2")
-                         if did % 2 == 0 else mid)
-                for name, data in iter_members_recursive(asset):
-                    rows.append({
-                        "doc_id": did, "member_path": name,
-                        "n_bytes": len(data),
-                        "text": data.decode("utf-8", errors="replace")
-                        if name.endswith(".txt") else None})
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "member_path", "n_bytes",
-                               "text"])
+        t = (text or "").encode()
+        inner = encode_tar({f"doc_{did}.txt": t}, gz=True)
+        if did % 13 == 0:
+            inner = inner[:20]  # corrupt: degrades to bytes
+        mid = encode_zip({"inner.tgz": inner,
+                          "side.txt": b"sidecar %d" % did})
+        asset = (encode_7z({"mid.zip": mid}, codec="lzma2")
+                 if did % 2 == 0 else mid)
+        for name, data in iter_members_recursive(asset):
+            yield {
+                "doc_id": did, "member_path": name,
+                "n_bytes": len(data),
+                "text": data.decode("utf-8", errors="replace")
+                if name.endswith(".txt") else None}
 
-    return d.mapInPandas(
-        run, "doc_id long, member_path string, n_bytes long, "
-             "text string")
+    return map_rows(d, run,
+                    "doc_id long, member_path string, n_bytes long, text string")
 
 
 def scan_dedup_pipeline_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4201,8 +3831,6 @@ def scan_dedup_pipeline_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     group membership, per-format copy counts and canonical ids in SQL
     — a value-hash match proves decryption, two image codecs, the TIFF
     page walk and the dedup operator COMPOSE exactly."""
-    import pandas as pd
-
     from verified_sources_spark.llm.image_dedup import tiff_pages
     from verified_sources_spark.llm.pdf_codec import pdf_images
 
@@ -4218,70 +3846,56 @@ def scan_dedup_pipeline_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _shared_dims(gid: int) -> tuple[int, int]:
         return 24 + (gid % 3) * 8, 16 + (gid % 2) * 8
 
-    def mint_pdf(batches):
+    def mint_pdf(did):
         from verified_sources_spark.llm import fax_codec
         from verified_sources_spark.llm.jbig2 import encode_jbig2_mmr
         from verified_sources_spark.llm.pdf_codec import encode_pdf
 
-        for pdf_ in batches:
-            rows = []
-            for did in pdf_["doc_id"]:
-                did = int(did)
-                gid = did // 3
-                w, h = _shared_dims(gid)
-                rows_ = _page_bits(gid, w, h)
-                if did % 2 == 0:
-                    img = {"width": w, "height": h, "bpc": 1,
-                           "colorspace": "DeviceGray",
-                           "pdf_filter": "JBIG2Decode",
-                           "data": encode_jbig2_mmr(rows_)}
-                else:
-                    img = {"width": w, "height": h, "bpc": 1,
-                           "colorspace": "DeviceGray",
-                           "pdf_filter": "CCITTFaxDecode",
-                           "decode_parms":
-                               f"<< /K -1 /Columns {w} /Rows {h} >>",
-                           "data": fax_codec.encode_g4(rows_)}
-                data = encode_pdf(
-                    [[f"scanned page, group {gid}"]], image=img,
-                    encrypt=(("rc4-40", "rc4-128", "aesv2", "aes256")
-                             [(did // 3) % 4] if did % 3 == 1 else None))
-                rows.append({"doc_id": did,
-                             "asset": data[:40] if did % 13 == 0
-                             else data})
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        gid = did // 3
+        w, h = _shared_dims(gid)
+        rows_ = _page_bits(gid, w, h)
+        if did % 2 == 0:
+            img = {"width": w, "height": h, "bpc": 1,
+                   "colorspace": "DeviceGray",
+                   "pdf_filter": "JBIG2Decode",
+                   "data": encode_jbig2_mmr(rows_)}
+        else:
+            img = {"width": w, "height": h, "bpc": 1,
+                   "colorspace": "DeviceGray",
+                   "pdf_filter": "CCITTFaxDecode",
+                   "decode_parms":
+                       f"<< /K -1 /Columns {w} /Rows {h} >>",
+                   "data": fax_codec.encode_g4(rows_)}
+        data = encode_pdf(
+            [[f"scanned page, group {gid}"]], image=img,
+            encrypt=(("rc4-40", "rc4-128", "aesv2", "aes256")
+                     [(did // 3) % 4] if did % 3 == 1 else None))
+        yield {"doc_id": did, "asset": data[:40] if did % 13 == 0 else data}
 
-    def mint_tiff(batches):
+    def mint_tiff(did):
         from verified_sources_spark.llm.tiff_codec import (
             encode_multipage_bilevel,
         )
 
-        for pdf_ in batches:
-            rows = []
-            for did in pdf_["doc_id"]:
-                did = int(did)
-                gid = did // 3
-                w, h = _shared_dims(gid)
-                w2, h2 = 16 + (did % 4) * 8, 12 + (did % 3) * 8
-                pages = [
-                    (w, h, b"".join(_page_bits(gid, w, h))),
-                    (w2, h2, b"".join(_page_bits(did * 31 + 7, w2, h2))),
-                ]
-                asset = encode_multipage_bilevel(
-                    pages, compression="g4",
-                    byte_order="MM" if did % 2 else "II",
-                    rows_per_strip=7)
-                rows.append({"doc_id": did,
-                             "asset": asset[:8] if did % 11 == 0
-                             else asset})
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        gid = did // 3
+        w, h = _shared_dims(gid)
+        w2, h2 = 16 + (did % 4) * 8, 12 + (did % 3) * 8
+        pages = [
+            (w, h, b"".join(_page_bits(gid, w, h))),
+            (w2, h2, b"".join(_page_bits(did * 31 + 7, w2, h2))),
+        ]
+        asset = encode_multipage_bilevel(
+            pages, compression="g4",
+            byte_order="MM" if did % 2 else "II",
+            rows_per_strip=7)
+        yield {"doc_id": did, "asset": asset[:8] if did % 11 == 0 else asset}
 
     pdf_side = (
-        pdf_images(d.mapInPandas(mint_pdf, "doc_id long, asset binary"))
+        pdf_images(map_rows(d, mint_pdf, "doc_id long, asset binary"))
         .filter(F.col("decoded_ok") & F.col("dhash").isNotNull())
         .select("doc_id", "dhash", F.lit(1).alias("is_pdf")))
     tiff_side = (
-        tiff_pages(d.mapInPandas(mint_tiff, "doc_id long, asset binary"))
+        tiff_pages(map_rows(d, mint_tiff, "doc_id long, asset binary"))
         .filter(F.col("decoded_ok") & F.col("dhash").isNotNull())
         .select("doc_id", "dhash", F.lit(0).alias("is_pdf")))
     return (
@@ -4314,15 +3928,13 @@ def email_attachment_pipeline_docs(
     SQL — a hash match proves MIME decode, base64 reversal, four
     document extractors and per-attachment refusal isolation COMPOSE
     exactly (the mail-archive half of a corpus intake)."""
-    import pandas as pd
-
     from verified_sources_spark.llm.email_ingest import (
         email_attachment_texts,
     )
 
     d = _docs_parallel(spark, sf_dir).select("doc_id", "text")
 
-    def mint(batches):
+    def mint(did, text):
         import html as H
 
         from verified_sources_spark.llm.email_ingest import encode_eml
@@ -4332,75 +3944,69 @@ def email_attachment_pipeline_docs(
         )
         from verified_sources_spark.llm.pdf_codec import encode_pdf
 
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                t80 = (text or "")[:80]
-                if did % 19 == 0:
-                    rows.append({"doc_id": did,
-                                 "asset": b"\x00\x01 not mail"})
-                    continue
-                atts = []
-                if did % 7 != 3:
-                    fmt = did % 4
-                    if fmt == 0:
-                        fn, ct, payload = (
-                            f"doc{did}.pdf", "application/pdf",
-                            encode_pdf([[t80]]))
-                    elif fmt == 1:
-                        fn, ct, payload = (
-                            f"doc{did}.docx",
-                            "application/vnd.openxmlformats-officedocu"
-                            "ment.wordprocessingml.document",
-                            encode_docx([t80]))
-                    elif fmt == 2:
-                        fn, ct, payload = (f"doc{did}.rtf",
-                                           "application/rtf",
-                                           encode_rtf([t80]))
-                    else:
-                        fn, ct, payload = (
-                            f"doc{did}.html", "text/html",
-                            (f"<html><body><p>{H.escape(t80)}</p>"
-                             f"</body></html>").encode())
-                    atts.append((fn, ct, payload))
-                    if did % 6 == 0:
-                        atts.append((f"img{did}.png", "image/png",
-                                     b"\x89PNG\r\n\x1a\n" + bytes(8)))
-                    if did % 9 == 4:
-                        # legacy-charset attachment (never co-occurs
-                        # with the png: did%9==4 and did%6==0 have no
-                        # common solution, so att_idx is always 1)
-                        lv = did % 4
-                        if lv == 0:
-                            lp = (f"Résumé {did}: naïve café — mémo "
-                                  "archivé.".encode("cp1252"))
-                            lf = f"note{did}.txt"
-                        elif lv == 1:
-                            lp = (f"归档说明：这是一个中文文本文件，"
-                                  f"编号 {did}。".encode("gb18030"))
-                            lf = f"note{did}.txt"
-                        elif lv == 2:
-                            lp = (f"name,city\nRené {did},Zürich\n"
-                                  "François,Genève".encode("cp1252"))
-                            lf = f"note{did}.csv"
-                        else:
-                            lp = (f"城市,人口\n北京,{did}\n上海,"
-                                  f"{did + 7}".encode("gb18030"))
-                            lf = f"note{did}.csv"
-                        atts.append((lf, "text/plain", lp))
-                if did % 5 == 0:
-                    asset = encode_msg(
-                        f"Doc {did}", f"user{did % 7}@example.com",
-                        "mail body",
-                        attachments=[(fn, p) for fn, _ct, p in atts])
+        t80 = (text or "")[:80]
+        if did % 19 == 0:
+            yield {"doc_id": did, "asset": b"\x00\x01 not mail"}
+            return
+        atts = []
+        if did % 7 != 3:
+            fmt = did % 4
+            if fmt == 0:
+                fn, ct, payload = (
+                    f"doc{did}.pdf", "application/pdf",
+                    encode_pdf([[t80]]))
+            elif fmt == 1:
+                fn, ct, payload = (
+                    f"doc{did}.docx",
+                    "application/vnd.openxmlformats-officedocu"
+                    "ment.wordprocessingml.document",
+                    encode_docx([t80]))
+            elif fmt == 2:
+                fn, ct, payload = (f"doc{did}.rtf",
+                                   "application/rtf",
+                                   encode_rtf([t80]))
+            else:
+                fn, ct, payload = (
+                    f"doc{did}.html", "text/html",
+                    (f"<html><body><p>{H.escape(t80)}</p>"
+                     f"</body></html>").encode())
+            atts.append((fn, ct, payload))
+            if did % 6 == 0:
+                atts.append((f"img{did}.png", "image/png",
+                             b"\x89PNG\r\n\x1a\n" + bytes(8)))
+            if did % 9 == 4:
+                # legacy-charset attachment (never co-occurs
+                # with the png: did%9==4 and did%6==0 have no
+                # common solution, so att_idx is always 1)
+                lv = did % 4
+                if lv == 0:
+                    lp = (f"Résumé {did}: naïve café — mémo "
+                          "archivé.".encode("cp1252"))
+                    lf = f"note{did}.txt"
+                elif lv == 1:
+                    lp = (f"归档说明：这是一个中文文本文件，"
+                          f"编号 {did}。".encode("gb18030"))
+                    lf = f"note{did}.txt"
+                elif lv == 2:
+                    lp = (f"name,city\nRené {did},Zürich\n"
+                          "François,Genève".encode("cp1252"))
+                    lf = f"note{did}.csv"
                 else:
-                    asset = encode_eml(f"Doc {did}", "mail body\n",
-                                       attachments=atts or None)
-                rows.append({"doc_id": did, "asset": asset})
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+                    lp = (f"城市,人口\n北京,{did}\n上海,"
+                          f"{did + 7}".encode("gb18030"))
+                    lf = f"note{did}.csv"
+                atts.append((lf, "text/plain", lp))
+        if did % 5 == 0:
+            asset = encode_msg(
+                f"Doc {did}", f"user{did % 7}@example.com",
+                "mail body",
+                attachments=[(fn, p) for fn, _ct, p in atts])
+        else:
+            asset = encode_eml(f"Doc {did}", "mail body\n",
+                               attachments=atts or None)
+        yield {"doc_id": did, "asset": asset}
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     return email_attachment_texts(assets).select(
         "doc_id", "decoded_ok", "att_idx", "filename", "att_format",
         "text")
@@ -4417,40 +4023,32 @@ def mhtml_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays location/title/resource inventory and the text
     itself in SQL (the saved-web-page share of a document drop;
     reference analogue: filesystem + unstructured routing)."""
-    import pandas as pd
-
     from verified_sources_spark.llm.mhtml import mhtml_extract
 
     d = _docs_parallel(spark, sf_dir).select("doc_id", "text")
 
-    def mint(batches):
+    def mint(did, text):
         import html as H
 
         from verified_sources_spark.llm.mhtml import encode_mhtml
 
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                if did % 21 == 0:
-                    rows.append({"doc_id": did,
-                                 "asset": b"plain bytes, not mhtml"})
-                    continue
-                res = [("http://e/img.png", "image/png",
-                        b"\x89PNG\r\n\x1a\n" + bytes(4)),
-                       ("http://e/style.css", "text/css",
-                        b"p{margin:0}")][: did % 3]
-                page = (f"<html><head><title>doc-{did}</title></head>"
-                        f"<body><p>{H.escape(text or '')}</p>"
-                        f"</body></html>")
-                rows.append({
-                    "doc_id": did,
-                    "asset": encode_mhtml(
-                        page, location=f"http://example.com/{did}",
-                        resources=res)})
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        if did % 21 == 0:
+            yield {"doc_id": did, "asset": b"plain bytes, not mhtml"}
+            return
+        res = [("http://e/img.png", "image/png",
+                b"\x89PNG\r\n\x1a\n" + bytes(4)),
+               ("http://e/style.css", "text/css",
+                b"p{margin:0}")][: did % 3]
+        page = (f"<html><head><title>doc-{did}</title></head>"
+                f"<body><p>{H.escape(text or '')}</p>"
+                f"</body></html>")
+        yield {
+            "doc_id": did,
+            "asset": encode_mhtml(
+                page, location=f"http://example.com/{did}",
+                resources=res)}
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     return mhtml_extract(assets).select(
         "doc_id", "decoded_ok", "location", "title", "n_resources",
         "resource_types", "text")
@@ -4469,35 +4067,25 @@ def latex_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves comment/math/float removal, caption rescue, command
     semantics and whitespace canonicalization are exact (reference
     analogue: unstructured file routing, a .tex drop)."""
-    import pandas as pd
-
     from verified_sources_spark.llm.latex import latex_extract_op
 
     d = _docs_parallel(spark, sf_dir).select("doc_id", "text")
 
-    def mint(batches):
+    def mint(did, text):
         from verified_sources_spark.llm.latex import encode_latex
 
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                if did % 23 == 0:
-                    rows.append({
-                        "doc_id": did,
-                        "asset": b"Just plain prose, no TeX here."})
-                    continue
-                t = text or ""
-                secs = []
-                for k in range(1 + did % 3):
-                    s = t[80 * k : 80 * (k + 1)].strip()
-                    secs.append((f"Section {k + 1}",
-                                 s or f"filler {did} {k}"))
-                rows.append({"doc_id": did,
-                             "asset": encode_latex(f"Paper {did}", secs)})
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        if did % 23 == 0:
+            yield {"doc_id": did, "asset": b"Just plain prose, no TeX here."}
+            return
+        t = text or ""
+        secs = []
+        for k in range(1 + did % 3):
+            s = t[80 * k : 80 * (k + 1)].strip()
+            secs.append((f"Section {k + 1}",
+                         s or f"filler {did} {k}"))
+        yield {"doc_id": did, "asset": encode_latex(f"Paper {did}", secs)}
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     return latex_extract_op(assets).select(
         "doc_id", "decoded_ok", "title", "n_headings", "headings",
         "text")
@@ -4517,40 +4105,32 @@ def delimited_rows_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sniffing and RFC 4180 quote/newline recovery are exact (the
     attached-spreadsheet share of a document drop; reference analogue:
     sources/filesystem CSV reading)."""
-    import pandas as pd
-
     from verified_sources_spark.llm.tabular import delimited_rows
 
     d = _docs_parallel(spark, sf_dir).select("doc_id", "text")
 
-    def mint(batches):
+    def mint(did, text):
         from verified_sources_spark.llm.tabular import encode_delimited
 
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                if did % 29 == 0:
-                    rows.append({"doc_id": did,
-                                 "asset": b"\x00\xffnot a table\x01"})
-                    continue
-                t = text or ""
-                delim = [",", ";", "\t", "|"][did % 4]
-                recs = []
-                for k in range(2 + did % 3):
-                    c2 = t[40 * k : 40 * (k + 1)]
-                    if did % 4 == 0:
-                        c2 += ',"x"\nend'
-                    recs.append([str(did * 10 + k), f"item {k}", c2])
-                rows.append({
-                    "doc_id": did,
-                    "asset": encode_delimited(
-                        recs, delimiter=delim,
-                        header=["id", "name", "note"],
-                        crlf=did % 2 == 1)})
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        if did % 29 == 0:
+            yield {"doc_id": did, "asset": b"\x00\xffnot a table\x01"}
+            return
+        t = text or ""
+        delim = [",", ";", "\t", "|"][did % 4]
+        recs = []
+        for k in range(2 + did % 3):
+            c2 = t[40 * k : 40 * (k + 1)]
+            if did % 4 == 0:
+                c2 += ',"x"\nend'
+            recs.append([str(did * 10 + k), f"item {k}", c2])
+        yield {
+            "doc_id": did,
+            "asset": encode_delimited(
+                recs, delimiter=delim,
+                header=["id", "name", "note"],
+                crlf=did % 2 == 1)}
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     return delimited_rows(assets).select(
         "doc_id", "decoded_ok", "delimiter", "row_idx", "n_rows",
         "n_cols", "header", "line")
@@ -4568,13 +4148,11 @@ def fix_text_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     repair is an exact inverse of every damage flavor and a fixed
     point on already-clean rows (unrepaired mojibake hashes every
     damaged copy differently and poisons dedup)."""
-    import pandas as pd
-
     from verified_sources_spark.llm.text_fix import fix_text
 
     d = _docs_parallel(spark, sf_dir).select("doc_id", "text")
 
-    def mint(batches):
+    def mint(did, text):
         import unicodedata
 
         def misdecode_cp1252(raw: bytes) -> str:
@@ -4586,26 +4164,21 @@ def fix_text_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
                     out.append(chr(b))
             return "".join(out)
 
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                base = f"café №{did} — {text or ''}"
-                mode = did % 4
-                if mode == 0:
-                    damaged = (unicodedata.normalize("NFD", base)
-                               + "\u00a0trailer\u200b\x07!")
-                elif mode == 1:
-                    damaged = base.encode("utf-8").decode("latin-1")
-                elif mode == 2:
-                    damaged = (base.encode("utf-8").decode("latin-1")
-                               .encode("utf-8").decode("latin-1"))
-                else:
-                    damaged = misdecode_cp1252(base.encode("utf-8"))
-                rows.append({"doc_id": did, "text": damaged})
-            yield pd.DataFrame(rows, columns=["doc_id", "text"])
+        base = f"café №{did} — {text or ''}"
+        mode = did % 4
+        if mode == 0:
+            damaged = (unicodedata.normalize("NFD", base)
+                       + "\u00a0trailer\u200b\x07!")
+        elif mode == 1:
+            damaged = base.encode("utf-8").decode("latin-1")
+        elif mode == 2:
+            damaged = (base.encode("utf-8").decode("latin-1")
+                       .encode("utf-8").decode("latin-1"))
+        else:
+            damaged = misdecode_cp1252(base.encode("utf-8"))
+        yield {"doc_id": did, "text": damaged}
 
-    damaged = d.mapInPandas(mint, "doc_id long, text string")
+    damaged = map_rows(d, mint, "doc_id long, text string")
     return fix_text(damaged).select(
         "doc_id", "mojibake_rounds", "canonicalized", "text")
 
@@ -4632,15 +4205,13 @@ def document_drop_pipeline_docs(
     the typed extraction equals the raw text byte-for-byte (the
     cross-format equality exact dedup depends on) and refusals isolate
     per member."""
-    import pandas as pd
-
     from verified_sources_spark.llm.docrouter import (
         archive_document_texts,
     )
 
     d = _docs_parallel(spark, sf_dir).select("doc_id", "text")
 
-    def mint(batches):
+    def mint(did, text):
         from verified_sources_spark.llm.archives import (
             encode_tar, encode_zip,
         )
@@ -4649,63 +4220,56 @@ def document_drop_pipeline_docs(
         )
         from verified_sources_spark.llm.pdf_codec import encode_pdf
 
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                t80 = (text or "")[:80]
-                fmt = did % 3
-                if fmt == 0:
-                    name, payload = "doc.pdf", encode_pdf([[t80]])
-                elif fmt == 1:
-                    name, payload = "doc.docx", encode_docx([t80])
-                else:
-                    name, payload = "doc.rtf", encode_rtf([t80])
-                members = {name: payload,
-                           "copy.txt": t80.encode()}
-                # legacy-charset member: cp1252 / GB18030 text and
-                # CSV files (the non-UTF-8 share of real drops) must
-                # decode through the router's bare-charset probe, not
-                # drop as "binary"
-                lv = did % 4
-                if lv == 0:
-                    members["legacy.txt"] = (
-                        f"Résumé {did}: naïve café — mémo archivé."
-                        .encode("cp1252"))
-                elif lv == 1:
-                    members["legacy.txt"] = (
-                        f"归档说明：这是一个中文文本文件，编号 {did}。"
-                        .encode("gb18030"))
-                elif lv == 2:
-                    members["legacy.csv"] = (
-                        f"name,city\nRené {did},Zürich\nFrançois,"
-                        "Genève".encode("cp1252"))
-                else:
-                    members["legacy.csv"] = (
-                        f"城市,人口\n北京,{did}\n上海,{did + 7}"
-                        .encode("gb18030"))
-                if did % 10 == 5:
-                    # the SAME Russian sentence koi8-r- or
-                    # cp1251-encoded by (did//10)%2: the probe's
-                    # Cyrillic letter-frequency prior must pick the
-                    # right codec BOTH ways (they read each other's
-                    # bytes as a letter permutation) or the decoded
-                    # text — hence the hash — garbles
-                    ru = (f"Архивная записка {did}: проверка "
-                          "кодировки текста.")
-                    members["cyr.txt"] = ru.encode(
-                        "koi8_r" if (did // 10) % 2 else "cp1251")
-                if did % 6 == 0:
-                    members["img.png"] = (b"\x89PNG\r\n\x1a\n"
-                                          + bytes(8))
-                asset = (encode_zip(members) if did % 2 == 0
-                         else encode_tar(members, gz=True))
-                rows.append({"doc_id": did,
-                             "asset": asset[:24] if did % 13 == 0
-                             else asset})
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        t80 = (text or "")[:80]
+        fmt = did % 3
+        if fmt == 0:
+            name, payload = "doc.pdf", encode_pdf([[t80]])
+        elif fmt == 1:
+            name, payload = "doc.docx", encode_docx([t80])
+        else:
+            name, payload = "doc.rtf", encode_rtf([t80])
+        members = {name: payload,
+                   "copy.txt": t80.encode()}
+        # legacy-charset member: cp1252 / GB18030 text and
+        # CSV files (the non-UTF-8 share of real drops) must
+        # decode through the router's bare-charset probe, not
+        # drop as "binary"
+        lv = did % 4
+        if lv == 0:
+            members["legacy.txt"] = (
+                f"Résumé {did}: naïve café — mémo archivé."
+                .encode("cp1252"))
+        elif lv == 1:
+            members["legacy.txt"] = (
+                f"归档说明：这是一个中文文本文件，编号 {did}。"
+                .encode("gb18030"))
+        elif lv == 2:
+            members["legacy.csv"] = (
+                f"name,city\nRené {did},Zürich\nFrançois,"
+                "Genève".encode("cp1252"))
+        else:
+            members["legacy.csv"] = (
+                f"城市,人口\n北京,{did}\n上海,{did + 7}"
+                .encode("gb18030"))
+        if did % 10 == 5:
+            # the SAME Russian sentence koi8-r- or
+            # cp1251-encoded by (did//10)%2: the probe's
+            # Cyrillic letter-frequency prior must pick the
+            # right codec BOTH ways (they read each other's
+            # bytes as a letter permutation) or the decoded
+            # text — hence the hash — garbles
+            ru = (f"Архивная записка {did}: проверка "
+                  "кодировки текста.")
+            members["cyr.txt"] = ru.encode(
+                "koi8_r" if (did // 10) % 2 else "cp1251")
+        if did % 6 == 0:
+            members["img.png"] = (b"\x89PNG\r\n\x1a\n"
+                                  + bytes(8))
+        asset = (encode_zip(members) if did % 2 == 0
+                 else encode_tar(members, gz=True))
+        yield {"doc_id": did, "asset": asset[:24] if did % 13 == 0 else asset}
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     return archive_document_texts(assets).select(
         "doc_id", "decoded_ok", "member_name", "doc_format", "text")
 
@@ -4723,42 +4287,34 @@ def wiki_pages_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     template/table/ref removal and link resolution recover the prose
     exactly (naive regex stripping eats nested templates and fails
     this gate)."""
-    import pandas as pd
-
     from verified_sources_spark.llm.wikitext import wiki_pages
 
     d = _docs_parallel(spark, sf_dir).select("doc_id", "text")
 
-    def mint(batches):
+    def mint(did, text):
         from verified_sources_spark.llm.wikitext import encode_dump
 
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                if did % 27 == 0:
-                    rows.append({"doc_id": did,
-                                 "asset": b"<html>not a dump</html>"})
-                    continue
-                t80 = (text or "")[:80]
-                wt = (
-                    "{{Infobox thing\n| id = {{formatnum:%d}}\n}}\n"
-                    "'''Page %d''' begins.<ref>cite %d</ref>\n\n"
-                    "== Body ==\n"
-                    "<!-- hidden -->[[Target|X%s]] and "
-                    "[http://e/%d ext] end.\n" % (did, did, did,
-                                                  t80, did))
-                dump = encode_dump([
-                    {"title": f"Page {did}", "page_id": 1,
-                     "wikitext": wt},
-                    {"title": f"R{did}", "page_id": 2,
-                     "redirect": f"Page {did}",
-                     "wikitext": f"#REDIRECT [[Page {did}]]"},
-                ])
-                rows.append({"doc_id": did, "asset": dump})
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        if did % 27 == 0:
+            yield {"doc_id": did, "asset": b"<html>not a dump</html>"}
+            return
+        t80 = (text or "")[:80]
+        wt = (
+            "{{Infobox thing\n| id = {{formatnum:%d}}\n}}\n"
+            "'''Page %d''' begins.<ref>cite %d</ref>\n\n"
+            "== Body ==\n"
+            "<!-- hidden -->[[Target|X%s]] and "
+            "[http://e/%d ext] end.\n" % (did, did, did,
+                                          t80, did))
+        dump = encode_dump([
+            {"title": f"Page {did}", "page_id": 1,
+             "wikitext": wt},
+            {"title": f"R{did}", "page_id": 2,
+             "redirect": f"Page {did}",
+             "wikitext": f"#REDIRECT [[Page {did}]]"},
+        ])
+        yield {"doc_id": did, "asset": dump}
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     return wiki_pages(assets).select(
         "doc_id", "decoded_ok", "page_id", "title", "ns", "redirect",
         "n_headings", "text")
@@ -4776,37 +4332,29 @@ def jats_units_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     kinds, order and text in SQL — a hash match proves the inline
     keep/drop semantics and the section walk are exact (splicing
     citation labels into sentences would break the hash)."""
-    import pandas as pd
-
     from verified_sources_spark.llm.jats import jats_units
 
     d = _docs_parallel(spark, sf_dir).select("doc_id", "text")
 
-    def mint(batches):
+    def mint(did, text):
         from verified_sources_spark.llm.jats import encode_jats
 
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                if did % 25 == 0:
-                    rows.append({"doc_id": did,
-                                 "asset": b"<notjats/>"})
-                    continue
-                t = text or ""
-                abstract = t[:60].strip() or f"abs {did}"
-                secs = []
-                for k in range(1 + did % 2):
-                    s = t[60 * (k + 1) : 60 * (k + 2)].strip()
-                    secs.append((f"Section {k + 1}",
-                                 s or f"filler {did} {k}"))
-                rows.append({
-                    "doc_id": did,
-                    "asset": encode_jats(f"Article {did}", abstract,
-                                         secs)})
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        if did % 25 == 0:
+            yield {"doc_id": did, "asset": b"<notjats/>"}
+            return
+        t = text or ""
+        abstract = t[:60].strip() or f"abs {did}"
+        secs = []
+        for k in range(1 + did % 2):
+            s = t[60 * (k + 1) : 60 * (k + 2)].strip()
+            secs.append((f"Section {k + 1}",
+                         s or f"filler {did} {k}"))
+        yield {
+            "doc_id": did,
+            "asset": encode_jats(f"Article {did}", abstract,
+                                 secs)}
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     return jats_units(assets).select(
         "doc_id", "decoded_ok", "unit_idx", "kind", "n_units", "text")
 
@@ -4823,45 +4371,36 @@ def se_posts_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     scores, the parsed tag list and every body's prose in SQL — a
     hash match proves the double-decode (XML attribute → HTML → text)
     is exact and the question↔answer pairing survives."""
-    import pandas as pd
-
     from verified_sources_spark.llm.sedump import se_posts
 
     d = _docs_parallel(spark, sf_dir).select("doc_id", "text")
 
-    def mint(batches):
+    def mint(did, text):
         import html as H
 
         from verified_sources_spark.llm.sedump import encode_posts
 
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                if did % 31 == 0:
-                    rows.append({"doc_id": did,
-                                 "asset": b"<rows>wrong root</rows>"})
-                    continue
-                t = text or ""
-                posts = [{
-                    "post_id": 1, "post_type": 1,
-                    "title": f"Q {did}?", "score": did % 11,
-                    "tags": [f"tag{did % 5}", "engine"],
-                    "body_html":
-                        f"<p>{H.escape(t[:70])}</p>"}]
-                for k in range(1 + did % 2):
-                    posts.append({
-                        "post_id": k + 2, "post_type": 2,
-                        "parent_id": 1, "score": (did + k) % 7,
-                        "body_html":
-                            "<p>" + H.escape(
-                                t[70 * (k + 1) : 70 * (k + 2)])
-                            + "</p>"})
-                rows.append({"doc_id": did,
-                             "asset": encode_posts(posts)})
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        if did % 31 == 0:
+            yield {"doc_id": did, "asset": b"<rows>wrong root</rows>"}
+            return
+        t = text or ""
+        posts = [{
+            "post_id": 1, "post_type": 1,
+            "title": f"Q {did}?", "score": did % 11,
+            "tags": [f"tag{did % 5}", "engine"],
+            "body_html":
+                f"<p>{H.escape(t[:70])}</p>"}]
+        for k in range(1 + did % 2):
+            posts.append({
+                "post_id": k + 2, "post_type": 2,
+                "parent_id": 1, "score": (did + k) % 7,
+                "body_html":
+                    "<p>" + H.escape(
+                        t[70 * (k + 1) : 70 * (k + 2)])
+                    + "</p>"})
+        yield {"doc_id": did, "asset": encode_posts(posts)}
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     return se_posts(assets).select(
         "doc_id", "decoded_ok", "post_id", "post_type", "parent_id",
         "title", "score", "tags", "text")
@@ -4884,60 +4423,52 @@ def chat_turns_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     roles, turn order, alternation flags and every turn's text in SQL
     — a hash match proves dialect normalization and the pairing gate
     are exact."""
-    import pandas as pd
-
     from verified_sources_spark.llm.chatlog import chat_turns
 
     d = _docs_parallel(spark, sf_dir).select("doc_id", "text")
 
-    def mint(batches):
+    def mint(did, text):
         import json
 
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                if did % 33 == 0:
-                    rows.append({"doc_id": did, "line": "{not json"})
-                    continue
-                t = text or ""
-                u1, a1, u2 = t[:60], t[60:120], t[120:180]
-                mode = did % 3
-                if mode == 0:
-                    msgs = [
-                        {"role": "system", "content": "be helpful"},
-                        {"role": "user", "content": [
-                            {"type": "text", "text": u1},
-                            {"type": "image_url",
-                             "image_url": {"url": "http://e/i.png"}}]},
-                        {"role": "assistant", "content": a1}]
-                    if did % 5 == 1:
-                        # mid-dialog system injection: the pairing
-                        # gate must FLAG it (only a leading system
-                        # turn is exempt), not drop it
-                        msgs.insert(2, {"role": "system",
-                                        "content": "be extra helpful"})
-                    elif did % 5 == 3:
-                        # tool turn: dropped at parse, must NOT count
-                        # toward n_turns — output matches the base
-                        msgs.append({"role": "tool",
-                                     "content": "tool result"})
-                    rec = {"messages": msgs}
-                elif mode == 1:
-                    conv = [{"from": "human", "value": u1},
-                            {"from": "gpt", "value": a1}]
-                    if did % 7 == 2:
-                        conv = conv[::-1]  # gpt-first: violation
-                    else:
-                        conv.append({"from": "human", "value": u2})
-                    rec = {"conversations": conv}
-                else:
-                    rec = {"prompt": u1, "completion": a1}
-                rows.append({"doc_id": did,
-                             "line": json.dumps(rec)})
-            yield pd.DataFrame(rows, columns=["doc_id", "line"])
+        if did % 33 == 0:
+            yield {"doc_id": did, "line": "{not json"}
+            return
+        t = text or ""
+        u1, a1, u2 = t[:60], t[60:120], t[120:180]
+        mode = did % 3
+        if mode == 0:
+            msgs = [
+                {"role": "system", "content": "be helpful"},
+                {"role": "user", "content": [
+                    {"type": "text", "text": u1},
+                    {"type": "image_url",
+                     "image_url": {"url": "http://e/i.png"}}]},
+                {"role": "assistant", "content": a1}]
+            if did % 5 == 1:
+                # mid-dialog system injection: the pairing
+                # gate must FLAG it (only a leading system
+                # turn is exempt), not drop it
+                msgs.insert(2, {"role": "system",
+                                "content": "be extra helpful"})
+            elif did % 5 == 3:
+                # tool turn: dropped at parse, must NOT count
+                # toward n_turns — output matches the base
+                msgs.append({"role": "tool",
+                             "content": "tool result"})
+            rec = {"messages": msgs}
+        elif mode == 1:
+            conv = [{"from": "human", "value": u1},
+                    {"from": "gpt", "value": a1}]
+            if did % 7 == 2:
+                conv = conv[::-1]  # gpt-first: violation
+            else:
+                conv.append({"from": "human", "value": u2})
+            rec = {"conversations": conv}
+        else:
+            rec = {"prompt": u1, "completion": a1}
+        yield {"doc_id": did, "line": json.dumps(rec)}
 
-    lines = d.mapInPandas(mint, "doc_id long, line string")
+    lines = map_rows(d, mint, "doc_id long, line string")
     return chat_turns(lines).select(
         "doc_id", "decoded_ok", "turn_idx", "n_turns", "role",
         "alternation_ok", "text")
@@ -4954,49 +4485,42 @@ def code_signals_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     as literals — a hash match proves language detection (shebang >
     content markers), line-shape stats, comment/alnum ratios and the
     license/generated detectors are all exact."""
-    import pandas as pd
-
     from verified_sources_spark.llm.codefile import code_signals
 
     d = _docs_parallel(spark, sf_dir).select("doc_id")
 
-    def mint(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                mode = did % 4
-                if mode == 0:
-                    t = (f"#!/usr/bin/env python3\n"
-                         f"# Licensed under the MIT License\n"
-                         f"# helper number {did:06d}\n"
-                         f"import os\n"
-                         f"def f_{did:06d}():\n"
-                         f"    return {did:06d}\n"
-                         f'x = os.getenv("A{did:06d}")\n'
-                         f'y = x or "{did:06d}"\n'
-                         f"print(y)\n")
-                elif mode == 1:
-                    t = (f"// Code generated by fixture-gen. "
-                         f"DO NOT EDIT.\n"
-                         f"const a{did:06d} = 1;\n"
-                         f"function f() {{ return {did:06d}; }}\n"
-                         f"let b = (a) => a + {did:06d};\n")
-                elif mode == 2:
-                    t = (f"#include <stdio.h>\n"
-                         f"/* SPDX-License-Identifier: MIT */\n"
-                         f"int main(void) {{\n"
-                         f'    printf("%d", {did:06d});\n'
-                         f"    return 0;\n"
-                         f"}}\n")
-                else:
-                    t = (f"plain notes {did:06d}\n"
-                         f"just prose lines, nothing codelike\n"
-                         f"the quick brown fox {did:06d}\n")
-                rows.append({"doc_id": did, "text": t})
-            yield pd.DataFrame(rows, columns=["doc_id", "text"])
+    def mint(did):
+        mode = did % 4
+        if mode == 0:
+            t = (f"#!/usr/bin/env python3\n"
+                 f"# Licensed under the MIT License\n"
+                 f"# helper number {did:06d}\n"
+                 f"import os\n"
+                 f"def f_{did:06d}():\n"
+                 f"    return {did:06d}\n"
+                 f'x = os.getenv("A{did:06d}")\n'
+                 f'y = x or "{did:06d}"\n'
+                 f"print(y)\n")
+        elif mode == 1:
+            t = (f"// Code generated by fixture-gen. "
+                 f"DO NOT EDIT.\n"
+                 f"const a{did:06d} = 1;\n"
+                 f"function f() {{ return {did:06d}; }}\n"
+                 f"let b = (a) => a + {did:06d};\n")
+        elif mode == 2:
+            t = (f"#include <stdio.h>\n"
+                 f"/* SPDX-License-Identifier: MIT */\n"
+                 f"int main(void) {{\n"
+                 f'    printf("%d", {did:06d});\n'
+                 f"    return 0;\n"
+                 f"}}\n")
+        else:
+            t = (f"plain notes {did:06d}\n"
+                 f"just prose lines, nothing codelike\n"
+                 f"the quick brown fox {did:06d}\n")
+        yield {"doc_id": did, "text": t}
 
-    files = d.mapInPandas(mint, "doc_id long, text string")
+    files = map_rows(d, mint, "doc_id long, text string")
     return code_signals(files).select(
         "doc_id", "language", "n_lines", "max_line_len",
         "mean_line_len", "comment_ratio", "alnum_fraction",
@@ -5019,8 +4543,6 @@ def cross_source_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup group no matter which ingestion path carried it, with
     missing carriers exactly the corrupted ones.  The oracle replays
     per-doc copy counts and the surviving source sets in SQL."""
-    import pandas as pd
-
     from verified_sources_spark.llm.docrouter import (
         archive_document_texts,
     )
@@ -5031,7 +4553,7 @@ def cross_source_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _docs_parallel(spark, sf_dir).select("doc_id", "text")
 
-    def mint(batches):
+    def mint(did, text):
         import html as H
 
         from verified_sources_spark.llm.archives import encode_zip
@@ -5040,43 +4562,37 @@ def cross_source_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             encode_record, encode_warc, http_response_block,
         )
 
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                # every 3rd ± 1 doc carries the SAME text in a LEGACY
-                # charset on the mail/archive legs (web stays UTF-8):
-                # dedup still lands in ONE group only if the bare-
-                # charset probe decodes cp1252/GB18030 exactly
-                lv = did % 3
-                if lv == 1:
-                    t = (f"doc {did} — résumé café naïve: "
-                         + (text or "").strip()[:60])
-                    leg = t.encode("cp1252")
-                elif lv == 2:
-                    t = (f"doc {did} 中文说明文档归档测试: "
-                         + (text or "").strip()[:60])
-                    leg = t.encode("gb18030")
-                else:
-                    t = f"doc {did}: " + (text or "").strip()[:80]
-                    leg = t.encode()
-                body = (f"<html><body><p>{H.escape(t)}</p></body>"
-                        f"</html>").encode()
-                warc = encode_warc([encode_record(
-                    uri=f"http://example.com/{did}",
-                    block=http_response_block(body))])
-                eml = encode_eml(
-                    f"Doc {did}", "see attachment\n",
-                    attachments=[(f"d{did}.txt", "text/plain", leg)])
-                zipped = encode_zip({f"d{did}.txt": leg})
-                rows.append({
-                    "doc_id": did,
-                    "warc": warc[:30] if did % 13 == 0 else warc,
-                    "mail": eml,
-                    "archive": (zipped[:20] if did % 11 == 0
-                                else zipped)})
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "warc", "mail", "archive"])
+        # every 3rd ± 1 doc carries the SAME text in a LEGACY
+        # charset on the mail/archive legs (web stays UTF-8):
+        # dedup still lands in ONE group only if the bare-
+        # charset probe decodes cp1252/GB18030 exactly
+        lv = did % 3
+        if lv == 1:
+            t = (f"doc {did} — résumé café naïve: "
+                 + (text or "").strip()[:60])
+            leg = t.encode("cp1252")
+        elif lv == 2:
+            t = (f"doc {did} 中文说明文档归档测试: "
+                 + (text or "").strip()[:60])
+            leg = t.encode("gb18030")
+        else:
+            t = f"doc {did}: " + (text or "").strip()[:80]
+            leg = t.encode()
+        body = (f"<html><body><p>{H.escape(t)}</p></body>"
+                f"</html>").encode()
+        warc = encode_warc([encode_record(
+            uri=f"http://example.com/{did}",
+            block=http_response_block(body))])
+        eml = encode_eml(
+            f"Doc {did}", "see attachment\n",
+            attachments=[(f"d{did}.txt", "text/plain", leg)])
+        zipped = encode_zip({f"d{did}.txt": leg})
+        yield {
+            "doc_id": did,
+            "warc": warc[:30] if did % 13 == 0 else warc,
+            "mail": eml,
+            "archive": (zipped[:20] if did % 11 == 0
+                        else zipped)}
 
     # assets feeds the three extract legs; uncut, the mint chain (every
     # doc encoded as WARC + EML + zip) executed once PER LEG — three
@@ -5089,8 +4605,8 @@ def cross_source_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # real wall clock (interleaved A/B at sf0.01: unconditional cut
     # 1.7-3.1 s vs uncut 1.5-1.9 s warm); on big-or-unknown inputs the
     # duplicate mint is a genuine 3x of the dominant compute.
-    assets = d.mapInPandas(
-        mint, "doc_id long, warc binary, mail binary, archive binary")
+    assets = map_rows(
+        d, mint, "doc_id long, warc binary, mail binary, archive binary")
     if should_cut(d):
         assets = assets.transform(cut)
     web = (warc_extract(assets.select("doc_id",
@@ -5187,13 +4703,11 @@ def data_blob_rows_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays format, header and every rendered cell in SQL — a
     hash match proves the two binary table readers land byte-identical
     text (the machine-readable share of a document drop)."""
-    import pandas as pd
-
     from verified_sources_spark.llm.datablob import data_blob_rows
 
     d = _docs_parallel(spark, sf_dir).select("doc_id", "text")
 
-    def mint(batches):
+    def mint(did, text):
         import io
 
         import pyarrow as pa
@@ -5207,78 +4721,73 @@ def data_blob_rows_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"name": "id", "type": "long"},
             {"name": "name", "type": "string"},
             {"name": "note", "type": "string"}]}
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                if did % 37 == 0:
-                    rows.append({"doc_id": did,
-                                 "asset": b"\x00\x01 not columnar"})
-                    continue
-                t = text or ""
-                recs = [{"id": did * 10 + k, "name": f"item {k}",
-                         "note": t[30 * k : 30 * (k + 1)]}
-                        for k in range(2 + did % 3)]
-                if did % 11 == 5:
-                    # SQLite database blob: TWO user tables (the
-                    # container fan-out — each emits its own
-                    # fmt='sqlite:<table>' row group), written by
-                    # the stdlib sqlite3 C library (an external
-                    # writer cross-checking our read path)
-                    import sqlite3
 
-                    con = sqlite3.connect(":memory:")
-                    con.execute("CREATE TABLE items "
-                                "(id INTEGER, name TEXT, note TEXT)")
-                    con.executemany(
-                        "INSERT INTO items VALUES (?,?,?)",
-                        [(r["id"], r["name"], r["note"])
-                         for r in recs])
-                    con.execute("CREATE TABLE meta "
-                                "(doc INTEGER, n INTEGER)")
-                    con.execute("INSERT INTO meta VALUES (?,?)",
-                                (did, len(recs)))
-                    asset = con.serialize()
-                    con.close()
-                elif did % 2 == 0:
-                    buf = io.BytesIO()
-                    table = pa.table({
-                        "id": [r["id"] for r in recs],
-                        "name": [r["name"] for r in recs],
-                        "note": [r["note"] for r in recs]})
-                    if did % 6 == 4:
-                        import pyarrow.orc as orc
+        if did % 37 == 0:
+            yield {"doc_id": did, "asset": b"\x00\x01 not columnar"}
+            return
+        t = text or ""
+        recs = [{"id": did * 10 + k, "name": f"item {k}",
+                 "note": t[30 * k : 30 * (k + 1)]}
+                for k in range(2 + did % 3)]
+        if did % 11 == 5:
+            # SQLite database blob: TWO user tables (the
+            # container fan-out — each emits its own
+            # fmt='sqlite:<table>' row group), written by
+            # the stdlib sqlite3 C library (an external
+            # writer cross-checking our read path)
+            import sqlite3
 
-                        orc.write_table(table, buf)
-                    elif did % 6 == 2:
-                        # Arrow IPC FILE format (Feather v2):
-                        # ARROW1 magic both ends
-                        with pa.ipc.new_file(buf, table.schema) as wr:
-                            wr.write_table(table)
-                    else:
-                        pq.write_table(table, buf)
-                    asset = buf.getvalue()
-                elif did % 9 == 7:
-                    # Arrow IPC STREAM format: continuation-marker
-                    # framing, no file footer
-                    buf = io.BytesIO()
-                    table = pa.table({
-                        "id": [r["id"] for r in recs],
-                        "name": [r["name"] for r in recs],
-                        "note": [r["note"] for r in recs]})
-                    with pa.ipc.new_stream(buf, table.schema) as wr:
-                        wr.write_table(table)
-                    asset = buf.getvalue()
-                else:
-                    # cycle the full container codec set — null /
-                    # deflate / snappy (the repo's own block codec,
-                    # CRC32-checked) — on one hash gate
-                    codec = ("null", "deflate", "snappy")[did % 3]
-                    asset = write_container(schema, recs, codec=codec)
-                rows.append({"doc_id": did, "asset": asset})
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+            con = sqlite3.connect(":memory:")
+            con.execute("CREATE TABLE items "
+                        "(id INTEGER, name TEXT, note TEXT)")
+            con.executemany(
+                "INSERT INTO items VALUES (?,?,?)",
+                [(r["id"], r["name"], r["note"])
+                 for r in recs])
+            con.execute("CREATE TABLE meta "
+                        "(doc INTEGER, n INTEGER)")
+            con.execute("INSERT INTO meta VALUES (?,?)",
+                        (did, len(recs)))
+            asset = con.serialize()
+            con.close()
+        elif did % 2 == 0:
+            buf = io.BytesIO()
+            table = pa.table({
+                "id": [r["id"] for r in recs],
+                "name": [r["name"] for r in recs],
+                "note": [r["note"] for r in recs]})
+            if did % 6 == 4:
+                import pyarrow.orc as orc
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+                orc.write_table(table, buf)
+            elif did % 6 == 2:
+                # Arrow IPC FILE format (Feather v2):
+                # ARROW1 magic both ends
+                with pa.ipc.new_file(buf, table.schema) as wr:
+                    wr.write_table(table)
+            else:
+                pq.write_table(table, buf)
+            asset = buf.getvalue()
+        elif did % 9 == 7:
+            # Arrow IPC STREAM format: continuation-marker
+            # framing, no file footer
+            buf = io.BytesIO()
+            table = pa.table({
+                "id": [r["id"] for r in recs],
+                "name": [r["name"] for r in recs],
+                "note": [r["note"] for r in recs]})
+            with pa.ipc.new_stream(buf, table.schema) as wr:
+                wr.write_table(table)
+            asset = buf.getvalue()
+        else:
+            # cycle the full container codec set — null /
+            # deflate / snappy (the repo's own block codec,
+            # CRC32-checked) — on one hash gate
+            codec = ("null", "deflate", "snappy")[did % 3]
+            asset = write_container(schema, recs, codec=codec)
+        yield {"doc_id": did, "asset": asset}
+
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     return data_blob_rows(assets).select(
         "doc_id", "decoded_ok", "fmt", "row_idx", "n_rows", "n_cols",
         "header", "line")
@@ -5308,8 +4817,6 @@ def curation_pipeline_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup is one hash-agg on md5(norm), domain_cap is the salted
     two-stage top-N, and the mixture is a broadcast-rate hash
     filter."""
-    import pandas as pd
-
     from verified_sources_spark.functions.text import (
         normalized_text, token_count,
     )
@@ -5335,7 +4842,7 @@ def curation_pipeline_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         return b
 
     def mint(genre: int):
-        def run(batches):
+        def run(did):
             import html as H
             import json
 
@@ -5343,62 +4850,52 @@ def curation_pipeline_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             from verified_sources_spark.llm.sedump import encode_posts
             from verified_sources_spark.llm.wikitext import encode_dump
 
-            for pdf in batches:
-                rows = []
-                for did in pdf["doc_id"]:
-                    did = int(did)
-                    g, dom = did // 12, _DOMAINS[genre]
-                    beff = _body(dom, did)
-                    if genre == 0:
-                        dmg = beff.encode("utf-8").decode("latin-1")
-                        asset = encode_dump([{
-                            "title": f"Page {g}", "page_id": 1,
-                            "wikitext": dmg}])
-                    elif genre == 1:
-                        asset = encode_posts([{
-                            "post_id": 1, "post_type": 1,
-                            "title": f"Q {g}?", "score": 0,
-                            "body_html": f"<p>{H.escape(beff)}</p>"}])
-                    elif genre == 2:
-                        asset = json.dumps(
-                            {"prompt": beff,
-                             "completion": "acknowledged."}).encode()
-                    elif genre == 3:
-                        asset = (f"# {beff}\nVALUE = {g}\n"
-                                 "print(VALUE)\n").encode()
-                    elif genre == 4:
-                        asset = ("\\documentclass{article}\n"
-                                 "\\begin{document}\n" + beff
-                                 + "\n\\end{document}\n").encode()
-                    else:
-                        asset = encode_jats(f"Article {g}", beff, [],
-                                            with_apparatus=False)
-                    rows.append({"doc_id": did, "asset": asset})
-                yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+            g, dom = did // 12, _DOMAINS[genre]
+            beff = _body(dom, did)
+            if genre == 0:
+                dmg = beff.encode("utf-8").decode("latin-1")
+                asset = encode_dump([{
+                    "title": f"Page {g}", "page_id": 1,
+                    "wikitext": dmg}])
+            elif genre == 1:
+                asset = encode_posts([{
+                    "post_id": 1, "post_type": 1,
+                    "title": f"Q {g}?", "score": 0,
+                    "body_html": f"<p>{H.escape(beff)}</p>"}])
+            elif genre == 2:
+                asset = json.dumps(
+                    {"prompt": beff,
+                     "completion": "acknowledged."}).encode()
+            elif genre == 3:
+                asset = (f"# {beff}\nVALUE = {g}\n"
+                         "print(VALUE)\n").encode()
+            elif genre == 4:
+                asset = ("\\documentclass{article}\n"
+                         "\\begin{document}\n" + beff
+                         + "\n\\end{document}\n").encode()
+            else:
+                asset = encode_jats(f"Article {g}", beff, [],
+                                    with_apparatus=False)
+            yield {"doc_id": did, "asset": asset}
 
         return run
 
-    def _route(batches):
+    def _route(did, payload):
         # latex / jats / code all dispatch through the document
         # router's magic-byte junction, exactly like a real drop
         from verified_sources_spark.llm.docrouter import (
             DocRouteError, extract_document,
         )
 
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["asset"]):
-                try:
-                    out = extract_document(bytes(payload))
-                    rows.append({"doc_id": int(did),
-                                 "text": out["text"]})
-                except DocRouteError:
-                    pass
-            yield pd.DataFrame(rows, columns=["doc_id", "text"])
+        try:
+            out = extract_document(bytes(payload))
+            yield {"doc_id": int(did), "text": out["text"]}
+        except DocRouteError:
+            pass
 
     def genre_assets(genre: int):
-        return (d.filter(F.col("doc_id") % 6 == genre)
-                .mapInPandas(mint(genre), "doc_id long, asset binary"))
+        return map_rows(d.filter(F.col("doc_id") % 6 == genre), mint(genre),
+                        "doc_id long, asset binary")
 
     wiki = (wiki_pages(genre_assets(0))
             .filter(F.col("decoded_ok") & ~F.col("redirect"))
@@ -5418,8 +4915,8 @@ def curation_pipeline_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", F.lit("chat").alias("domain"), "text"))
     routed = {}
     for genre, dom in ((3, "code"), (4, "latex"), (5, "jats")):
-        routed[dom] = (genre_assets(genre)
-                       .mapInPandas(_route, "doc_id long, text string")
+        routed[dom] = (map_rows(genre_assets(genre), _route,
+                                "doc_id long, text string")
                        .select("doc_id", F.lit(dom).alias("domain"),
                                "text"))
     texts = (wiki.unionByName(se).unionByName(chat)
@@ -5525,41 +5022,33 @@ def ics_events_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     llm/ics_vcf.ics_events (RFC 5545 unfolding, escaping, component
     walk, UTC epoch for the Z forms).  The oracle replays properties
     and epochs in SQL."""
-    import pandas as pd
-
     from verified_sources_spark.llm.ics_vcf import ics_events
 
     d = _docs_parallel(spark, sf_dir).select("doc_id", "text")
 
-    def mint(batches):
+    def mint(did, text):
         from verified_sources_spark.llm.ics_vcf import encode_ics
 
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                if did % 35 == 0:
-                    rows.append({"doc_id": did,
-                                 "asset": b"not a calendar at all"})
-                    continue
-                t = text or ""
-                evs = []
-                for k in range(1 + did % 3):
-                    evs.append({
-                        "uid": f"ev{did}-{k}@example.com",
-                        "summary": t[40 * k : 40 * (k + 1)]
-                        + f", loc; {k}",
-                        "description": f"L1 {did}\nL2 {k}",
-                        "location": f"Room {did % 7}",
-                        "status": "CONFIRMED",
-                        "dtstart": f"202403{did % 27 + 1:02d}"
-                                   f"T{k:02d}0000Z",
-                        "dtend": f"202403{did % 27 + 1:02d}"
-                                 f"T{k + 1:02d}0000Z"})
-                rows.append({"doc_id": did, "asset": encode_ics(evs)})
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        if did % 35 == 0:
+            yield {"doc_id": did, "asset": b"not a calendar at all"}
+            return
+        t = text or ""
+        evs = []
+        for k in range(1 + did % 3):
+            evs.append({
+                "uid": f"ev{did}-{k}@example.com",
+                "summary": t[40 * k : 40 * (k + 1)]
+                + f", loc; {k}",
+                "description": f"L1 {did}\nL2 {k}",
+                "location": f"Room {did % 7}",
+                "status": "CONFIRMED",
+                "dtstart": f"202403{did % 27 + 1:02d}"
+                           f"T{k:02d}0000Z",
+                "dtend": f"202403{did % 27 + 1:02d}"
+                         f"T{k + 1:02d}0000Z"})
+        yield {"doc_id": did, "asset": encode_ics(evs)}
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     return ics_events(assets).select(
         "doc_id", "decoded_ok", "event_idx", "n_events", "uid",
         "summary", "description", "location", "status", "dtstart",
@@ -5574,38 +5063,29 @@ def vcf_cards_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from text slices, multiple EMAIL/TEL properties — every 33rd doc
     a non-vCard payload; explode through llm/ics_vcf.vcf_cards.  The
     oracle replays every field in SQL."""
-    import pandas as pd
-
     from verified_sources_spark.llm.ics_vcf import vcf_cards
 
     d = _docs_parallel(spark, sf_dir).select("doc_id", "text")
 
-    def mint(batches):
+    def mint(did, text):
         from verified_sources_spark.llm.ics_vcf import encode_vcf
 
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                if did % 33 == 0:
-                    rows.append({"doc_id": did,
-                                 "asset": b"\x00 not a vcard"})
-                    continue
-                t = text or ""
-                cards = []
-                for k in range(1 + did % 2):
-                    cards.append({
-                        "fn": f"Person {did}-{k}",
-                        "org": f"Org; Unit {did % 9}",
-                        "title": t[25 * k : 25 * (k + 1)],
-                        "emails": [f"p{did}.{k}@example.com",
-                                   f"alt{k}@example.com"],
-                        "tels": [f"+1-555-{did % 10000:04d}"]})
-                rows.append({"doc_id": did,
-                             "asset": encode_vcf(cards)})
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        if did % 33 == 0:
+            yield {"doc_id": did, "asset": b"\x00 not a vcard"}
+            return
+        t = text or ""
+        cards = []
+        for k in range(1 + did % 2):
+            cards.append({
+                "fn": f"Person {did}-{k}",
+                "org": f"Org; Unit {did % 9}",
+                "title": t[25 * k : 25 * (k + 1)],
+                "emails": [f"p{did}.{k}@example.com",
+                           f"alt{k}@example.com"],
+                "tels": [f"+1-555-{did % 10000:04d}"]})
+        yield {"doc_id": did, "asset": encode_vcf(cards)}
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     return vcf_cards(assets).select(
         "doc_id", "decoded_ok", "card_idx", "n_cards", "fn", "org",
         "title", "emails", "tels")
@@ -5645,42 +5125,34 @@ def robots_rules_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     on every ``% 3 != 0`` — every 31st doc a binary payload; explode
     through llm/crawlgov.robots_rules (RFC 9309 group model).  The
     oracle replays groups, rule order, patterns and delays in SQL."""
-    import pandas as pd
-
     from verified_sources_spark.llm.crawlgov import robots_rules
 
     d = _docs_parallel(spark, sf_dir).select("doc_id")
 
-    def mint(batches):
+    def mint(did):
         from verified_sources_spark.llm.crawlgov import encode_robots
 
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                if did % 31 == 0:
-                    rows.append({"doc_id": did,
-                                 "asset": b"\x00\x01 not robots"})
-                    continue
-                groups = [{
-                    "agents": ["*"],
-                    "rules": [("disallow", f"/private{did % 5}/"),
-                              ("allow",
-                               f"/private{did % 5}/ok.html")],
-                    "crawl_delay": float(did % 4) + 0.5}]
-                if did % 3 != 0:
-                    groups.append({
-                        "agents": [f"bot{did % 7}"],
-                        "rules": [("disallow",
-                                   f"/tmp{did}/*.pdf$")]})
-                rows.append({
-                    "doc_id": did,
-                    "asset": encode_robots(
-                        groups,
-                        sitemaps=[f"https://e.com/{did}/sm.xml"])})
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        if did % 31 == 0:
+            yield {"doc_id": did, "asset": b"\x00\x01 not robots"}
+            return
+        groups = [{
+            "agents": ["*"],
+            "rules": [("disallow", f"/private{did % 5}/"),
+                      ("allow",
+                       f"/private{did % 5}/ok.html")],
+            "crawl_delay": float(did % 4) + 0.5}]
+        if did % 3 != 0:
+            groups.append({
+                "agents": [f"bot{did % 7}"],
+                "rules": [("disallow",
+                           f"/tmp{did}/*.pdf$")]})
+        yield {
+            "doc_id": did,
+            "asset": encode_robots(
+                groups,
+                sitemaps=[f"https://e.com/{did}/sm.xml"])}
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     return robots_rules(assets).select(
         "doc_id", "decoded_ok", "group_idx", "agents", "rule_idx",
         "directive", "pattern", "crawl_delay", "n_sitemaps")
@@ -5694,39 +5166,31 @@ def sitemap_urls_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     29th a non-sitemap payload; explode through
     llm/crawlgov.sitemap_urls.  The oracle replays kinds, entry order
     and every field in SQL."""
-    import pandas as pd
-
     from verified_sources_spark.llm.crawlgov import sitemap_urls
 
     d = _docs_parallel(spark, sf_dir).select("doc_id")
 
-    def mint(batches):
+    def mint(did):
         from verified_sources_spark.llm.crawlgov import encode_sitemap
 
         freqs = ("daily", "weekly", "monthly")
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                if did % 29 == 0:
-                    rows.append({"doc_id": did,
-                                 "asset": b"<html>not a sitemap"
-                                          b"</html>"})
-                    continue
-                kind = ("sitemapindex" if did % 4 == 0 else "urlset")
-                entries = [{
-                    "loc": f"https://example.com/{did}/{k}",
-                    "lastmod": f"2024-03-{did % 27 + 1:02d}",
-                    "changefreq": freqs[k % 3],
-                    "priority": f"0.{k + 1}"}
-                    for k in range(1 + did % 3)]
-                rows.append({
-                    "doc_id": did,
-                    "asset": encode_sitemap(entries, kind=kind,
-                                            gz=did % 3 == 0)})
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+        if did % 29 == 0:
+            yield {"doc_id": did, "asset": b"<html>not a sitemap" b"</html>"}
+            return
+        kind = ("sitemapindex" if did % 4 == 0 else "urlset")
+        entries = [{
+            "loc": f"https://example.com/{did}/{k}",
+            "lastmod": f"2024-03-{did % 27 + 1:02d}",
+            "changefreq": freqs[k % 3],
+            "priority": f"0.{k + 1}"}
+            for k in range(1 + did % 3)]
+        yield {
+            "doc_id": did,
+            "asset": encode_sitemap(entries, kind=kind,
+                                    gz=did % 3 == 0)}
+
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     return sitemap_urls(assets).select(
         "doc_id", "decoded_ok", "kind", "url_idx", "n_urls", "loc",
         "lastmod", "changefreq", "priority")
@@ -5744,47 +5208,37 @@ def frontier_audit_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``enginebot/1.0``.  Every 23rd robots and every 19th sitemap is
     corrupt (either failing isolates the host).  The oracle replays
     group selection, precedence verdicts and delays in SQL."""
-    import pandas as pd
-
     from verified_sources_spark.llm.crawlgov import frontier_audit
 
     d = _docs_parallel(spark, sf_dir).select("doc_id")
 
-    def mint(batches):
+    def mint(did):
         from verified_sources_spark.llm.crawlgov import (
             encode_robots, encode_sitemap,
         )
 
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                groups = [{
-                    "agents": ["*"],
-                    "rules": [("disallow", f"/block{did % 5}/"),
-                              ("allow", f"/block{did % 5}/open/")],
-                    "crawl_delay": float(did % 3) + 1.0}]
-                if did % 2 == 1:
-                    groups.append({
-                        "agents": ["enginebot"],
-                        "rules": [("disallow", "/paper/*.pdf$")]})
-                robots = (b"\x00 not robots" if did % 23 == 0
-                          else encode_robots(groups))
-                paths = [f"/open/page{did}",
-                         f"/block{did % 5}/x",
-                         f"/block{did % 5}/open/x",
-                         f"/paper/doc{did}.pdf"]
-                sitemap = (b"<html>not a sitemap</html>"
-                           if did % 19 == 0 else encode_sitemap(
-                               [{"loc": f"https://h{did}.com{p}"}
-                                for p in paths]))
-                rows.append({"doc_id": did, "robots": robots,
-                             "sitemap": sitemap})
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "robots", "sitemap"])
+        groups = [{
+            "agents": ["*"],
+            "rules": [("disallow", f"/block{did % 5}/"),
+                      ("allow", f"/block{did % 5}/open/")],
+            "crawl_delay": float(did % 3) + 1.0}]
+        if did % 2 == 1:
+            groups.append({
+                "agents": ["enginebot"],
+                "rules": [("disallow", "/paper/*.pdf$")]})
+        robots = (b"\x00 not robots" if did % 23 == 0
+                  else encode_robots(groups))
+        paths = [f"/open/page{did}",
+                 f"/block{did % 5}/x",
+                 f"/block{did % 5}/open/x",
+                 f"/paper/doc{did}.pdf"]
+        sitemap = (b"<html>not a sitemap</html>"
+                   if did % 19 == 0 else encode_sitemap(
+                       [{"loc": f"https://h{did}.com{p}"}
+                        for p in paths]))
+        yield {"doc_id": did, "robots": robots, "sitemap": sitemap}
 
-    assets = d.mapInPandas(
-        mint, "doc_id long, robots binary, sitemap binary")
+    assets = map_rows(d, mint, "doc_id long, robots binary, sitemap binary")
     return frontier_audit(assets, agent="enginebot/1.0").select(
         "doc_id", "decoded_ok", "url_idx", "loc", "path", "allowed",
         "crawl_delay")
@@ -5879,57 +5333,48 @@ def ics_tzid_events_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``decoded_ok=false``.  The oracle replays every epoch as offset
     arithmetic in SQL — if the observance selection or the RRULE
     last-Sunday arithmetic is off by anything, the hashes split."""
-    import pandas as pd
-
     from verified_sources_spark.llm.ics_vcf import ics_events
 
     d = _docs_parallel(spark, sf_dir).select("doc_id")
 
-    def mint(batches):
+    def mint(did):
         from verified_sources_spark.llm.ics_vcf import encode_ics
 
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                if did % 41 == 0:
-                    rows.append({"doc_id": did,
-                                 "asset": b"no calendar here"})
-                    continue
-                c, mm = did % 5, did % 30
-                tz = {"tzid": f"City{c}", "observances": [
-                    {"kind": "DAYLIGHT",
-                     "dtstart": "19700329T020000",
-                     "from": f"+0{1 + c}00", "to": f"+0{2 + c}00",
-                     "rrule": "FREQ=YEARLY;BYMONTH=3;BYDAY=-1SU"},
-                    {"kind": "STANDARD",
-                     "dtstart": "19701025T030000",
-                     "from": f"+0{2 + c}00", "to": f"+0{1 + c}00",
-                     "rrule": "FREQ=YEARLY;BYMONTH=10;BYDAY=-1SU"},
-                ]}
-                evs = [
-                    {"uid": f"tz{did}-0@example.com",
-                     "summary": "spring",
-                     "dtstart": f"20240331T01{mm:02d}00",
-                     "dtstart_tzid": f"City{c}",
-                     "dtend": f"20240331T03{mm:02d}00",
-                     "dtend_tzid": f"City{c}"},
-                    {"uid": f"tz{did}-1@example.com",
-                     "summary": "autumn",
-                     "dtstart": f"20241027T04{mm:02d}00",
-                     "dtstart_tzid": f"City{c}",
-                     "dtend": f"20241027T05{mm:02d}00",
-                     "dtend_tzid": f"City{c}"},
-                    {"uid": f"tz{did}-2@example.com",
-                     "summary": "lost",
-                     "dtstart": f"20240601T12{mm:02d}00",
-                     "dtstart_tzid": "Atlantis"},
-                ]
-                rows.append({"doc_id": did,
-                             "asset": encode_ics(evs, timezones=[tz])})
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        if did % 41 == 0:
+            yield {"doc_id": did, "asset": b"no calendar here"}
+            return
+        c, mm = did % 5, did % 30
+        tz = {"tzid": f"City{c}", "observances": [
+            {"kind": "DAYLIGHT",
+             "dtstart": "19700329T020000",
+             "from": f"+0{1 + c}00", "to": f"+0{2 + c}00",
+             "rrule": "FREQ=YEARLY;BYMONTH=3;BYDAY=-1SU"},
+            {"kind": "STANDARD",
+             "dtstart": "19701025T030000",
+             "from": f"+0{2 + c}00", "to": f"+0{1 + c}00",
+             "rrule": "FREQ=YEARLY;BYMONTH=10;BYDAY=-1SU"},
+        ]}
+        evs = [
+            {"uid": f"tz{did}-0@example.com",
+             "summary": "spring",
+             "dtstart": f"20240331T01{mm:02d}00",
+             "dtstart_tzid": f"City{c}",
+             "dtend": f"20240331T03{mm:02d}00",
+             "dtend_tzid": f"City{c}"},
+            {"uid": f"tz{did}-1@example.com",
+             "summary": "autumn",
+             "dtstart": f"20241027T04{mm:02d}00",
+             "dtstart_tzid": f"City{c}",
+             "dtend": f"20241027T05{mm:02d}00",
+             "dtend_tzid": f"City{c}"},
+            {"uid": f"tz{did}-2@example.com",
+             "summary": "lost",
+             "dtstart": f"20240601T12{mm:02d}00",
+             "dtstart_tzid": "Atlantis"},
+        ]
+        yield {"doc_id": did, "asset": encode_ics(evs, timezones=[tz])}
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     return ics_events(assets).select(
         "doc_id", "decoded_ok", "event_idx", "n_events", "uid",
         "summary", "dtstart", "dtend", "start_ms", "end_ms")
@@ -5957,76 +5402,67 @@ def frontier_build_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     entry whose child was never fetched (%31), and an index nested
     past the depth gate (%29==7).  The oracle replays expansion
     counts, canonical collapse, verdicts, depths and delays."""
-    import pandas as pd
-
     from verified_sources_spark.functions.url import canonical_url
     from verified_sources_spark.llm.crawlgov import frontier_expand
 
     d = _docs_parallel(spark, sf_dir).select("doc_id")
 
-    def mint(batches):
+    def mint(did):
         from verified_sources_spark.llm.crawlgov import (
             encode_robots,
             encode_sitemap,
         )
 
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                base = f"http://h{did}.example.com"
-                robots = encode_robots([{
-                    "agents": ["*"],
-                    "rules": [("disallow", "/block/"),
-                              ("allow", "/block/ok.html")],
-                    "crawl_delay": (did % 4) / 2.0}])
-                s1 = encode_sitemap([
-                    {"loc": f"HTTP://H{did}.EXAMPLE.COM:80"
-                            f"/p/{did}#x"},
-                    {"loc": f"{base}/p/{did}"},
-                    {"loc": f"{base}/block/z{did}"}])
-                s2 = encode_sitemap([
-                    {"loc": f"{base}//p//{did}?"},
-                    {"loc": f"{base}/block/ok.html"}], gz=True)
-                s1loc, s2loc = f"{base}/s1.xml", f"{base}/s2.xml.gz"
-                idx = encode_sitemap(
-                    [{"loc": s1loc}, {"loc": s2loc}],
-                    kind="sitemapindex")
-                if did % 23 == 0:       # truncated-gzip child
-                    root, locs, blobs = idx, [s1loc, s2loc], \
-                        [s1, s2[:20]]
-                elif did % 31 == 0:     # unfetched child
-                    root, locs, blobs = idx, [s1loc], [s1]
-                elif did % 29 == 7:     # nested past the depth gate
-                    ia, ib = f"{base}/ia.xml", f"{base}/ib.xml"
-                    root = encode_sitemap([{"loc": ia}],
-                                          kind="sitemapindex")
-                    locs = [ia, ib, s1loc]
-                    blobs = [encode_sitemap([{"loc": ib}],
-                                            kind="sitemapindex"),
-                             encode_sitemap([{"loc": s1loc}],
-                                            kind="sitemapindex"),
-                             s1]
-                elif did % 7 == 3:      # flat urlset root
-                    root, locs, blobs = s1, [], []
-                elif did % 7 == 5:      # double index (depth 2)
-                    i2loc = f"{base}/idx2.xml"
-                    root = encode_sitemap([{"loc": i2loc}],
-                                          kind="sitemapindex")
-                    locs, blobs = [i2loc, s1loc, s2loc], \
-                        [idx, s1, s2]
-                else:                   # single index (depth 1)
-                    root, locs, blobs = idx, [s1loc, s2loc], [s1, s2]
-                rows.append({"doc_id": did, "robots": robots,
-                             "root": root, "child_locs": locs,
-                             "child_blobs": blobs})
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "robots", "root", "child_locs",
-                "child_blobs"])
+        base = f"http://h{did}.example.com"
+        robots = encode_robots([{
+            "agents": ["*"],
+            "rules": [("disallow", "/block/"),
+                      ("allow", "/block/ok.html")],
+            "crawl_delay": (did % 4) / 2.0}])
+        s1 = encode_sitemap([
+            {"loc": f"HTTP://H{did}.EXAMPLE.COM:80"
+                    f"/p/{did}#x"},
+            {"loc": f"{base}/p/{did}"},
+            {"loc": f"{base}/block/z{did}"}])
+        s2 = encode_sitemap([
+            {"loc": f"{base}//p//{did}?"},
+            {"loc": f"{base}/block/ok.html"}], gz=True)
+        s1loc, s2loc = f"{base}/s1.xml", f"{base}/s2.xml.gz"
+        idx = encode_sitemap(
+            [{"loc": s1loc}, {"loc": s2loc}],
+            kind="sitemapindex")
+        if did % 23 == 0:       # truncated-gzip child
+            root, locs, blobs = idx, [s1loc, s2loc], \
+                [s1, s2[:20]]
+        elif did % 31 == 0:     # unfetched child
+            root, locs, blobs = idx, [s1loc], [s1]
+        elif did % 29 == 7:     # nested past the depth gate
+            ia, ib = f"{base}/ia.xml", f"{base}/ib.xml"
+            root = encode_sitemap([{"loc": ia}],
+                                  kind="sitemapindex")
+            locs = [ia, ib, s1loc]
+            blobs = [encode_sitemap([{"loc": ib}],
+                                    kind="sitemapindex"),
+                     encode_sitemap([{"loc": s1loc}],
+                                    kind="sitemapindex"),
+                     s1]
+        elif did % 7 == 3:      # flat urlset root
+            root, locs, blobs = s1, [], []
+        elif did % 7 == 5:      # double index (depth 2)
+            i2loc = f"{base}/idx2.xml"
+            root = encode_sitemap([{"loc": i2loc}],
+                                  kind="sitemapindex")
+            locs, blobs = [i2loc, s1loc, s2loc], \
+                [idx, s1, s2]
+        else:                   # single index (depth 1)
+            root, locs, blobs = idx, [s1loc, s2loc], [s1, s2]
+        yield {"doc_id": did, "robots": robots,
+               "root": root, "child_locs": locs,
+               "child_blobs": blobs}
 
-    assets = d.mapInPandas(
-        mint, "doc_id long, robots binary, root binary, "
-              "child_locs array<string>, child_blobs array<binary>")
+    assets = map_rows(d, mint,
+                      "doc_id long, robots binary, root binary, "
+                      "child_locs array<string>, child_blobs array<binary>")
     # rows feeds the ok-aggregation AND the bad passthrough; uncut, the
     # union re-ran the Python mint+expand chain once per branch (r16,
     # §2.4 — plan census: the MapInPandas mint twice).  rows is
@@ -6077,8 +5513,6 @@ def wds_multimodal_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a null dedup group.  The 17 pattern dHashes are pairwise
     distinct (pinned in tests), so the oracle replays group sizes as
     ``%17`` arithmetic and the md5 shard layout in SQL."""
-    import pandas as pd
-
     from verified_sources_spark.llm.webdataset import (
         wds_multimodal_shards,
     )
@@ -6099,87 +5533,65 @@ def wds_multimodal_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
                    for _ in range(3))
         return w, h, px
 
-    def mint(batches):
-        from verified_sources_spark.llm.png_codec import encode
+    from verified_sources_spark.llm.png_codec import encode
 
-        pngs = {}
-        for g in range(17):
-            wi, hi, px = _img_bytes(g)
-            ws, hs, ps = _seg_bytes(g)
-            pngs[g] = (encode(wi, hi, px, "RGB"),
-                       encode(ws, hs, ps, "RGB"))
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                g = did % 17
-                png, seg = pngs[g]
-                if did % 19 == 0:
-                    png = png[:10]
-                rows.append({
-                    "doc_id": did, "png": png, "seg": seg,
-                    "caption": f"caption g{g} doc {did}"})
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "png", "seg", "caption"])
+    # the 17 (png, seg) pairs, encoded once and shipped with both stages
+    pngs = {g: (encode(*_img_bytes(g), "RGB"), encode(*_seg_bytes(g), "RGB"))
+            for g in range(17)}
 
-    framed = d.mapInPandas(
-        mint, "doc_id long, png binary, seg binary, caption string")
+    def mint(did):
+        g = did % 17
+        png, seg = pngs[g]
+        if did % 19 == 0:
+            png = png[:10]
+        yield {
+            "doc_id": did, "png": png, "seg": seg,
+            "caption": f"caption g{g} doc {did}"}
+
+    framed = map_rows(
+        d, mint, "doc_id long, png binary, seg binary, caption string")
     shards = wds_multimodal_shards(framed, n_shards=16)
 
-    def readback(batches):
+    def readback(shard_id, _n_samples, blob):
         from verified_sources_spark.llm.image_dedup import (
             _dhash_of_pixels,
         )
         from verified_sources_spark.llm.image_io import decode_image
-        from verified_sources_spark.llm.png_codec import encode
         from verified_sources_spark.llm.webdataset import (
             iter_wds_samples,
         )
 
-        expected = {}
-        for g in range(17):
-            wi, hi, px = _img_bytes(g)
-            ws, hs, ps = _seg_bytes(g)
-            expected[g] = (encode(wi, hi, px, "RGB"),
-                           encode(ws, hs, ps, "RGB"))
-        for pdf in batches:
-            rows = []
-            for shard_id, blob in zip(pdf["shard_id"], pdf["asset"]):
-                samples = list(iter_wds_samples(bytes(blob)))
-                for i, (key, exts) in enumerate(samples):
-                    did = int(key)
-                    g = did % 17
-                    png = exts.get("png", b"")
-                    width = height = dhash = None
-                    try:
-                        dec = decode_image(png)
-                        width, height = dec["width"], dec["height"]
-                        ch = 4 if dec["mode"] == "RGBA" else 3
-                        dhash = format(_dhash_of_pixels(
-                            dec["pixels"], width, height, ch, 8),
-                            "016x")
-                    except Exception:  # noqa: BLE001 — truncated png
-                        pass
-                    rows.append({
-                        "doc_id": did, "shard_id": int(shard_id),
-                        "sample_idx": i, "n_samples": len(samples),
-                        "key": key, "exts": ";".join(sorted(exts)),
-                        "caption": exts.get("txt", b"").decode(
-                            "utf-8", "replace"),
-                        "meta_json": exts.get("json", b"").decode(
-                            "utf-8", "replace"),
-                        "png_exact": png == expected[g][0],
-                        "seg_exact":
-                            exts.get("seg.png") == expected[g][1],
-                        "width": width, "height": height,
-                        "dhash": dhash})
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "shard_id", "sample_idx", "n_samples",
-                "key", "exts", "caption", "meta_json", "png_exact",
-                "seg_exact", "width", "height", "dhash"])
+        samples = list(iter_wds_samples(bytes(blob)))
+        for i, (key, exts) in enumerate(samples):
+            did = int(key)
+            g = did % 17
+            png = exts.get("png", b"")
+            width = height = dhash = None
+            try:
+                dec = decode_image(png)
+                width, height = dec["width"], dec["height"]
+                ch = 4 if dec["mode"] == "RGBA" else 3
+                dhash = format(_dhash_of_pixels(
+                    dec["pixels"], width, height, ch, 8),
+                    "016x")
+            except Exception:  # noqa: BLE001 — truncated png
+                pass
+            yield {
+                "doc_id": did, "shard_id": int(shard_id),
+                "sample_idx": i, "n_samples": len(samples),
+                "key": key, "exts": ";".join(sorted(exts)),
+                "caption": exts.get("txt", b"").decode(
+                    "utf-8", "replace"),
+                "meta_json": exts.get("json", b"").decode(
+                    "utf-8", "replace"),
+                "png_exact": png == pngs[g][0],
+                "seg_exact":
+                    exts.get("seg.png") == pngs[g][1],
+                "width": width, "height": height,
+                "dhash": dhash}
 
-    rows = shards.mapInPandas(
-        readback,
+    rows = map_rows(
+        shards, readback,
         "doc_id long, shard_id long, sample_idx int, n_samples int, "
         "key string, exts string, caption string, meta_json string, "
         "png_exact boolean, seg_exact boolean, width int, "
@@ -6229,11 +5641,9 @@ def crawl_corpus_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fetch record it could not read.  The oracle replays paths,
     verdicts, fetch status, page text and the cross-host dedup
     arithmetic in SQL."""
-    import pandas as pd
-
     d = _docs_parallel(spark, sf_dir).select("doc_id")
 
-    def walk(batches):
+    def walk(did):
         from verified_sources_spark.llm.crawlgov import (
             CrawlGovError,
             _url_path,
@@ -6252,84 +5662,73 @@ def crawl_corpus_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             iter_records,
         )
 
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                g = did % 5
-                base = f"http://h{did}.example.com"
-                robots = encode_robots([{
-                    "agents": ["*"],
-                    "rules": [("disallow", "/block/")]}])
-                paths = [f"/p/{did}", f"/shared/{g}",
-                         f"/block/secret{did}", f"/gone/{did}"]
-                root = encode_sitemap(
-                    [{"loc": base + p} for p in paths])
-                texts = {
-                    paths[0]: f"unique page {did} body prose.",
-                    paths[1]: f"shared corpus page g{g} common text.",
-                    paths[2]: f"SECRET {did} must never ingest.",
-                }
-                recs = []
-                for p in paths:
-                    if p in texts:
-                        body = (
-                            "<html><head><title>t</title></head>"
-                            f"<body><p>{texts[p]}</p></body></html>"
-                        ).encode()
-                        block = http_response_block(body)
-                    else:
-                        block = http_response_block(
-                            b"<html><body>gone</body></html>",
-                            status=404)
-                    recs.append(encode_record(uri=base + p,
-                                              block=block))
-                warc = encode_warc(recs,
-                                   gzip_members=(did % 2 == 1))
-                if did % 19 == 0:
-                    warc = warc[:30]
-                try:
-                    frontier = expand_host(robots, root, {},
-                                           "enginebot/1.0")
-                    pages: dict = {}
-                    for hdrs, blk in iter_records(warc):
-                        if hdrs.get("WARC-Type") != "response":
-                            continue
-                        status, hh, body = http_payload(blk)
-                        path = _url_path(
-                            hdrs.get("WARC-Target-URI", ""))
-                        if status == 200:
-                            html, _cs, _clean = decode_body(hh, body)
-                            _title, txt = extract_text(html)
-                            pages[path] = txt
-                        else:
-                            pages[path] = None
-                    for u in frontier:
-                        p = u["path"]
-                        if not u["allowed"]:
-                            rows.append({
-                                "doc_id": did, "decoded_ok": True,
-                                "path": p, "allowed": False,
-                                "fetched": None, "text": None})
-                            continue
-                        txt = pages.get(p)
-                        rows.append({
-                            "doc_id": did, "decoded_ok": True,
-                            "path": p, "allowed": True,
-                            "fetched": txt is not None,
-                            "text": txt})
-                except (CrawlGovError, WarcError):
-                    rows.append({
-                        "doc_id": did, "decoded_ok": False,
-                        "path": None, "allowed": None,
-                        "fetched": None, "text": None})
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "decoded_ok", "path", "allowed",
-                "fetched", "text"])
+        g = did % 5
+        base = f"http://h{did}.example.com"
+        robots = encode_robots([{
+            "agents": ["*"],
+            "rules": [("disallow", "/block/")]}])
+        paths = [f"/p/{did}", f"/shared/{g}",
+                 f"/block/secret{did}", f"/gone/{did}"]
+        root = encode_sitemap(
+            [{"loc": base + p} for p in paths])
+        texts = {
+            paths[0]: f"unique page {did} body prose.",
+            paths[1]: f"shared corpus page g{g} common text.",
+            paths[2]: f"SECRET {did} must never ingest.",
+        }
+        recs = []
+        for p in paths:
+            if p in texts:
+                body = (
+                    "<html><head><title>t</title></head>"
+                    f"<body><p>{texts[p]}</p></body></html>"
+                ).encode()
+                block = http_response_block(body)
+            else:
+                block = http_response_block(
+                    b"<html><body>gone</body></html>",
+                    status=404)
+            recs.append(encode_record(uri=base + p,
+                                      block=block))
+        warc = encode_warc(recs,
+                           gzip_members=(did % 2 == 1))
+        if did % 19 == 0:
+            warc = warc[:30]
+        try:
+            frontier = expand_host(robots, root, {},
+                                   "enginebot/1.0")
+            pages: dict = {}
+            for hdrs, blk in iter_records(warc):
+                if hdrs.get("WARC-Type") != "response":
+                    continue
+                status, hh, body = http_payload(blk)
+                path = _url_path(
+                    hdrs.get("WARC-Target-URI", ""))
+                if status == 200:
+                    html, _cs, _clean = decode_body(hh, body)
+                    _title, txt = extract_text(html)
+                    pages[path] = txt
+                else:
+                    pages[path] = None
+            for u in frontier:
+                p = u["path"]
+                if not u["allowed"]:
+                    yield {
+                        "doc_id": did, "decoded_ok": True,
+                        "path": p, "allowed": False}
+                    continue
+                txt = pages.get(p)
+                yield {
+                    "doc_id": did, "decoded_ok": True,
+                    "path": p, "allowed": True,
+                    "fetched": txt is not None,
+                    "text": txt}
+        except (CrawlGovError, WarcError):
+            yield {"doc_id": did, "decoded_ok": False}
 
-    rows = d.mapInPandas(
-        walk, "doc_id long, decoded_ok boolean, path string, "
-              "allowed boolean, fetched boolean, text string")
+    rows = map_rows(d, walk,
+                    "doc_id long, decoded_ok boolean, path string, "
+                    "allowed boolean, fetched boolean, text string")
     # Window key: 16-byte md5 of the page text, never the raw text —
     # at crawl scale the shuffle sorts/compares keys, and a megabyte
     # page as the key is pure waste (same law as exact_dedup.py).
@@ -6371,13 +5770,11 @@ def wet_text_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     yielded zero rows), closed and hash-gated.  Reference analogue: the
     file→loader dispatch at
     /root/reference/sources/unstructured_data/helpers.py:30-63."""
-    import pandas as pd
-
     from verified_sources_spark.llm.warc import wet_extract
 
     d = _docs_parallel(spark, sf_dir).select("doc_id", "text")
 
-    def mint(batches):
+    def mint(did, text):
         import codecs as C
 
         from verified_sources_spark.llm.warc import (
@@ -6386,56 +5783,50 @@ def wet_text_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             http_response_block,
         )
 
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                doc_text = text or ""
-                cs = did % 4
-                ct = "text/plain"
-                if cs == 2:
-                    body0 = f"привет wet {did}".encode("windows-1251")
-                    ct = "text/plain; charset=windows-1251"
-                elif cs == 3:
-                    body0 = (f"你好，世界。这是一段用于测试的中文文本 "
-                             f"wet {did}").encode("gb18030")
-                else:
-                    body0 = f"wet {did}: {doc_text}".encode("utf-8")
-                    if cs == 1:
-                        body0 = C.BOM_UTF8 + body0
-                recs = [
-                    encode_record(warc_type="warcinfo", block=b"sw: t"),
-                    encode_record(
-                        warc_type="request",
-                        uri=f"http://example.com/wet/{did}/0",
-                        block=(b"GET / HTTP/1.1\r\n"
-                               b"Host: example.com\r\n\r\n")),
-                    encode_record(
-                        warc_type="conversion",
-                        uri=f"http://example.com/wet/{did}/0",
-                        block=body0,
-                        extra_headers={
-                            "Content-Type": ct,
-                            "WARC-Refers-To": f"<urn:uuid:{did}-0>"}),
-                    encode_record(
-                        warc_type="response",
-                        uri=f"http://example.com/wet/{did}/0",
-                        block=http_response_block(
-                            f"<p>poison {did}</p>".encode())),
-                    encode_record(
-                        warc_type="conversion",
-                        uri=f"http://example.com/wet/{did}/1",
-                        block=f"wet {did} part two".encode(),
-                        extra_headers={
-                            "Content-Type": "text/plain",
-                            "WARC-Refers-To": f"<urn:uuid:{did}-1>"}),
-                ]
-                wet = encode_warc(recs, gzip_members=did % 2 == 1)
-                rows.append({"doc_id": did,
-                             "asset": wet[:40] if did % 17 == 0 else wet})
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        doc_text = text or ""
+        cs = did % 4
+        ct = "text/plain"
+        if cs == 2:
+            body0 = f"привет wet {did}".encode("windows-1251")
+            ct = "text/plain; charset=windows-1251"
+        elif cs == 3:
+            body0 = (f"你好，世界。这是一段用于测试的中文文本 "
+                     f"wet {did}").encode("gb18030")
+        else:
+            body0 = f"wet {did}: {doc_text}".encode("utf-8")
+            if cs == 1:
+                body0 = C.BOM_UTF8 + body0
+        recs = [
+            encode_record(warc_type="warcinfo", block=b"sw: t"),
+            encode_record(
+                warc_type="request",
+                uri=f"http://example.com/wet/{did}/0",
+                block=(b"GET / HTTP/1.1\r\n"
+                       b"Host: example.com\r\n\r\n")),
+            encode_record(
+                warc_type="conversion",
+                uri=f"http://example.com/wet/{did}/0",
+                block=body0,
+                extra_headers={
+                    "Content-Type": ct,
+                    "WARC-Refers-To": f"<urn:uuid:{did}-0>"}),
+            encode_record(
+                warc_type="response",
+                uri=f"http://example.com/wet/{did}/0",
+                block=http_response_block(
+                    f"<p>poison {did}</p>".encode())),
+            encode_record(
+                warc_type="conversion",
+                uri=f"http://example.com/wet/{did}/1",
+                block=f"wet {did} part two".encode(),
+                extra_headers={
+                    "Content-Type": "text/plain",
+                    "WARC-Refers-To": f"<urn:uuid:{did}-1>"}),
+        ]
+        wet = encode_warc(recs, gzip_members=did % 2 == 1)
+        yield {"doc_id": did, "asset": wet[:40] if did % 17 == 0 else wet}
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     return wet_extract(assets).select(
         "doc_id", "decoded_ok", "record_idx", "n_conversion",
         "n_skipped", "uri", "refers_to", "charset", "decode_clean",
@@ -6454,13 +5845,11 @@ def wat_metadata_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc (``json_ok=false``, fields null — parse failures surface, never
     crash the task) and a minimal valid envelope otherwise.  Every 13th
     archive truncated → one ``decoded_ok=false`` row."""
-    import pandas as pd
-
     from verified_sources_spark.llm.warc import wat_extract
 
     d = _docs_parallel(spark, sf_dir).select("doc_id")
 
-    def mint(batches):
+    def mint(did):
         import json as J
 
         from verified_sources_spark.llm.warc import (
@@ -6469,54 +5858,48 @@ def wat_metadata_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             http_response_block,
         )
 
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                env0 = {"Envelope": {"Payload-Metadata": {
-                    "HTTP-Response-Metadata": {
-                        "Response-Message": {
-                            "Status": str(200 + did % 5)},
-                        "HTML-Metadata": {
-                            "Head": {"Title": f"title {did}"},
-                            "Links": [{"url": f"/l{i}"}
-                                      for i in range(did % 7)]}}}}}
-                blk1 = (b"{not json" if did % 3 == 0 else
-                        J.dumps({"Envelope": {
-                            "Payload-Metadata": {}}}).encode())
-                recs = [
-                    encode_record(warc_type="warcinfo", block=b"sw: t"),
-                    encode_record(
-                        warc_type="request",
-                        uri=f"http://example.com/page/{did}/0",
-                        block=(b"GET / HTTP/1.1\r\n"
-                               b"Host: example.com\r\n\r\n")),
-                    encode_record(
-                        warc_type="metadata",
-                        uri=f"http://example.com/page/{did}/0",
-                        block=J.dumps(env0).encode(),
-                        extra_headers={
-                            "Content-Type": "application/json",
-                            "WARC-Refers-To": f"<urn:uuid:{did}-0>"}),
-                    encode_record(
-                        warc_type="response",
-                        uri=f"http://example.com/page/{did}/0",
-                        block=http_response_block(
-                            f"<p>page {did}</p>".encode())),
-                    encode_record(
-                        warc_type="metadata",
-                        uri=f"http://example.com/page/{did}/1",
-                        block=blk1,
-                        extra_headers={
-                            "Content-Type": "application/json",
-                            "WARC-Refers-To": f"<urn:uuid:{did}-1>"}),
-                ]
-                wat = encode_warc(recs, gzip_members=did % 2 == 0)
-                rows.append({"doc_id": did,
-                             "asset": wat[:40] if did % 13 == 0 else wat})
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
+        env0 = {"Envelope": {"Payload-Metadata": {
+            "HTTP-Response-Metadata": {
+                "Response-Message": {
+                    "Status": str(200 + did % 5)},
+                "HTML-Metadata": {
+                    "Head": {"Title": f"title {did}"},
+                    "Links": [{"url": f"/l{i}"}
+                              for i in range(did % 7)]}}}}}
+        blk1 = (b"{not json" if did % 3 == 0 else
+                J.dumps({"Envelope": {
+                    "Payload-Metadata": {}}}).encode())
+        recs = [
+            encode_record(warc_type="warcinfo", block=b"sw: t"),
+            encode_record(
+                warc_type="request",
+                uri=f"http://example.com/page/{did}/0",
+                block=(b"GET / HTTP/1.1\r\n"
+                       b"Host: example.com\r\n\r\n")),
+            encode_record(
+                warc_type="metadata",
+                uri=f"http://example.com/page/{did}/0",
+                block=J.dumps(env0).encode(),
+                extra_headers={
+                    "Content-Type": "application/json",
+                    "WARC-Refers-To": f"<urn:uuid:{did}-0>"}),
+            encode_record(
+                warc_type="response",
+                uri=f"http://example.com/page/{did}/0",
+                block=http_response_block(
+                    f"<p>page {did}</p>".encode())),
+            encode_record(
+                warc_type="metadata",
+                uri=f"http://example.com/page/{did}/1",
+                block=blk1,
+                extra_headers={
+                    "Content-Type": "application/json",
+                    "WARC-Refers-To": f"<urn:uuid:{did}-1>"}),
+        ]
+        wat = encode_warc(recs, gzip_members=did % 2 == 0)
+        yield {"doc_id": did, "asset": wat[:40] if did % 13 == 0 else wat}
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     return wat_extract(assets).select(
         "doc_id", "decoded_ok", "record_idx", "n_metadata", "n_skipped",
         "uri", "refers_to", "json_ok", "http_status", "n_links",
@@ -6537,56 +5920,49 @@ def wet_corpus_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     text's own), the shared-group counts and the canonical mins in
     SQL — Common Crawl's WET format feeding the same dedup surface the
     response door feeds."""
-    import pandas as pd
-
     from verified_sources_spark.functions.text import token_count
     from verified_sources_spark.llm.warc import wet_extract
 
     d = _docs_parallel(spark, sf_dir).select("doc_id", "text")
 
-    def mint(batches):
+    def mint(did, text):
         from verified_sources_spark.llm.warc import (
             encode_record,
             encode_warc,
         )
 
         ct = {"Content-Type": "text/plain"}
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                doc_text = text or ""
-                recs = [
-                    encode_record(warc_type="warcinfo", block=b"sw: t"),
-                    encode_record(
-                        warc_type="request",
-                        uri=f"http://wet.test/{did}/a",
-                        block=(b"GET /a HTTP/1.1\r\n"
-                               b"Host: wet.test\r\n\r\n")),
-                    encode_record(
-                        warc_type="conversion",
-                        uri=f"http://wet.test/{did}/a",
-                        block=(f"wet corpus {did} unique page body "
-                               f"{doc_text}").encode(),
-                        extra_headers=ct),
-                    encode_record(
-                        warc_type="conversion",
-                        uri=f"http://wet.test/{did}/b",
-                        block=(f"shared wet corpus page number "
-                               f"{did % 7}").encode(),
-                        extra_headers=ct),
-                    encode_record(
-                        warc_type="conversion",
-                        uri=f"http://wet.test/{did}/c",
-                        block=b"tiny",
-                        extra_headers=ct),
-                ]
-                wet = encode_warc(recs, gzip_members=did % 3 == 0)
-                rows.append({"doc_id": did,
-                             "asset": wet[:40] if did % 19 == 0 else wet})
-            yield pd.DataFrame(rows, columns=["doc_id", "asset"])
 
-    assets = d.mapInPandas(mint, "doc_id long, asset binary")
+        doc_text = text or ""
+        recs = [
+            encode_record(warc_type="warcinfo", block=b"sw: t"),
+            encode_record(
+                warc_type="request",
+                uri=f"http://wet.test/{did}/a",
+                block=(b"GET /a HTTP/1.1\r\n"
+                       b"Host: wet.test\r\n\r\n")),
+            encode_record(
+                warc_type="conversion",
+                uri=f"http://wet.test/{did}/a",
+                block=(f"wet corpus {did} unique page body "
+                       f"{doc_text}").encode(),
+                extra_headers=ct),
+            encode_record(
+                warc_type="conversion",
+                uri=f"http://wet.test/{did}/b",
+                block=(f"shared wet corpus page number "
+                       f"{did % 7}").encode(),
+                extra_headers=ct),
+            encode_record(
+                warc_type="conversion",
+                uri=f"http://wet.test/{did}/c",
+                block=b"tiny",
+                extra_headers=ct),
+        ]
+        wet = encode_warc(recs, gzip_members=did % 3 == 0)
+        yield {"doc_id": did, "asset": wet[:40] if did % 19 == 0 else wet}
+
+    assets = map_rows(d, mint, "doc_id long, asset binary")
     pages = wet_extract(assets).filter(
         F.col("decoded_ok") & (token_count(F.col("text")) >= 5))
     w = Window.partitionBy(F.md5("text"))

@@ -348,6 +348,7 @@ def write_postgres(
         client = None
         n = 0
         try:
+            # not map_rows: a sink that writes each batch in one transaction
             for pdf in batches:
                 if len(pdf) == 0:
                     continue

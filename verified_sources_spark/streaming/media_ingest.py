@@ -38,12 +38,10 @@ chess archive dedup) to the multimodal surface.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from verified_sources_spark.boundary import map_rows
 from verified_sources_spark.cut import cut
 
 from verified_sources_spark.operators.table_format import ManifestTable
@@ -183,26 +181,19 @@ class MediaIngest(TwoTableIngest):
         read them."""
         id_col, asset_col, every_ms = self.id_col, self.asset_col, self.every_ms
 
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = []
-                for _id, payload in zip(pdf[id_col], pdf[asset_col]):
-                    try:
-                        modality, fp = perceptual_fingerprint(
-                            bytes(payload), every_ms
-                        )
-                        rows.append(
-                            {"_mid": _id, "modality": modality, "pfp": fp}
-                        )
-                    except Exception:
-                        pass  # exact-only dedup for undecodable assets
-                yield pd.DataFrame(rows, columns=["_mid", "modality", "pfp"])
+        def run(_id, payload):
+            try:
+                modality, fp = perceptual_fingerprint(
+                    bytes(payload), every_ms
+                )
+                yield {"_mid": _id, "modality": modality, "pfp": fp}
+            except Exception:
+                pass  # exact-only dedup for undecodable assets
 
-        return (
-            df.select(F.col(id_col), F.col(asset_col))
-            .mapInPandas(run, "_mid long, modality string, pfp long")
-            .withColumnRenamed("_mid", id_col)
-        )
+        return map_rows(
+            df.select(F.col(id_col), F.col(asset_col)), run,
+            "_mid long, modality string, pfp long",
+        ).withColumnRenamed("_mid", id_col)
 
     def _band_rows(self, pfps: DataFrame) -> DataFrame:
         """(id, modality, band_idx, band_val) — the n_bands fixed-width
