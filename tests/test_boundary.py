@@ -13,7 +13,7 @@ PKG = pathlib.Path(__file__).resolve().parent.parent / "verified_sources_spark"
 # the batch loops that stay outside map_rows: file -> (count, reason)
 BATCH_LOOPS = {
     "boundary.py": (1, "the one per-row loop"),
-    "llm/similarity.py": (6, "numpy matrix math over the whole batch"),
+    "llm/similarity.py": (6, "numpy matrix math over the whole batch; the Lloyd fold sums a whole partition"),
     "llm/multimodal.py": (3, "resize: ids pass through as one array"),
     "llm/endpoint.py": (2, "one HTTP request per batch, not per row"),
     "llm/bpe.py": (1, "adds a column; input columns pass through as-is"),

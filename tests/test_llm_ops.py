@@ -172,29 +172,50 @@ def test_quantized_kmeans_partitioning_invariant(spark):
     """The exact-integer trainer's whole point: centroids (and therefore
     every downstream bucketing decision) must be bit-identical no matter
     how the corpus is partitioned — float64-avg training is summation-
-    order dependent and could never carry a cross-engine value hash."""
+    order dependent and could never carry a cross-engine value hash —
+    and equal to a plain numpy exact Lloyd over the collected matrix."""
+    import numpy as np
+
     from verified_sources_spark.catalog import load_table
     from verified_sources_spark.llm.similarity import (
+        KMEANS_SCALE,
         ivf_topk,
-        rank_clusters_scaled,
+        rank_clusters,
         train_kmeans_quantized,
     )
 
     e = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    c1 = train_kmeans_quantized(e.repartition(7), "vec_id", "embedding",
-                                n_centroids=8, lloyd_iters=2)
-    c2 = train_kmeans_quantized(e.repartition(3), "vec_id", "embedding",
-                                n_centroids=8, lloyd_iters=2)
-    assert c1 == c2  # exact integer centroids, no float drift
+    c1, c3, c7 = (
+        train_kmeans_quantized(e.repartition(p), "vec_id", "embedding",
+                               n_centroids=8, lloyd_iters=2)
+        for p in (1, 3, 7)
+    )
+    assert c1 == c3 == c7  # exact integer centroids, no float drift
     assert all(isinstance(x, int) for cv in c1 for x in cv)
+
+    # reference: lowest-id init, explicit-difference squared L2 (first
+    # minimum on ties), rounded-half-away integer means in Python ints
+    rows = sorted((r["vec_id"], r["embedding"]) for r in e.collect())
+    X = np.floor(np.array([v for _, v in rows], dtype=np.float64)
+                 * KMEANS_SCALE + 0.5).astype(np.int64)
+    C = X[:8].copy()
+    for _ in range(2):
+        a = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
+        for j in range(len(C)):
+            if (a == j).any():
+                n = int((a == j).sum())
+                C[j] = [(-1 if s < 0 else 1) * ((2 * abs(s) + n) // (2 * n))
+                        for s in map(int, X[a == j].sum(axis=0))]
+    assert c1 == C.tolist()
+
     a1 = sorted(
         (r["vec_id"], r["cluster"])
-        for r in rank_clusters_scaled(e, "vec_id", "embedding", c1).collect()
+        for r in rank_clusters(e, "vec_id", "embedding", c1).collect()
     )
     a2 = sorted(
         (r["vec_id"], r["cluster"])
-        for r in rank_clusters_scaled(
-            e.repartition(5), "vec_id", "embedding", c2).collect()
+        for r in rank_clusters(
+            e.repartition(5), "vec_id", "embedding", c3).collect()
     )
     assert a1 == a2
     # and the trained IVF keeps useful recall vs brute force

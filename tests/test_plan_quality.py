@@ -145,20 +145,23 @@ def test_leakage_split_reuses_banded_pipeline(spark):
 
 
 def test_gemm_assignment_plan_has_no_cross_join(spark):
-    """Nearest-centroid assignment (similarity.argmin_cluster) must not
-    plan a cartesian/broadcast-nested-loop product — the round-6 GEMM
-    form is one mapInPandas over the vector scan."""
-    from verified_sources_spark.llm.similarity import argmin_cluster
+    """Nearest-centroid ranking (similarity.rank_clusters) must not plan
+    a cartesian/broadcast-nested-loop product — the round-6 GEMM form is
+    one mapInPandas over the vector scan — and neither may float
+    ``ivf_topk``, whose query probes rank through the same kernel."""
+    from verified_sources_spark.llm.similarity import ivf_topk, rank_clusters
 
     df = spark.createDataFrame(
         [(i, [float(i), 0.0]) for i in range(10)],
         "vec_id long, embedding array<double>",
     )
-    out = argmin_cluster(df, "vec_id", "embedding", [[0.0, 0.0], [9.0, 0.0]])
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "MapInPandas" in plan
+    out = rank_clusters(df, "vec_id", "embedding", [[0.0, 0.0], [9.0, 0.0]])
+    ivf = ivf_topk(df, df.filter("vec_id < 2"), k=2, n_centroids=2, n_probe=2)
+    for plan in (out._jdf.queryExecution().executedPlan().toString(),
+                 ivf._jdf.queryExecution().executedPlan().toString()):
+        assert "CartesianProduct" not in plan
+        assert "BroadcastNestedLoopJoin" not in plan
+        assert "MapInPandas" in plan
 
 
 def test_multimodal_fingerprint_plans_never_shuffle_payloads(spark):

@@ -1,8 +1,58 @@
-"""Product-quantization ANN (llm/similarity.pq_topk)."""
+"""Product-quantization ANN (llm/similarity.pq_topk) and the k-means
+nearest-centroid kernel every quantizer shares."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
+
+from verified_sources_spark.llm.similarity import KMEANS_SCALE, _nearest
+
+
+class TestNearestKernel:
+    """No Spark: ``_nearest`` is the one argmin/argsort behind every
+    k-means quantizer."""
+
+    @pytest.mark.parametrize("dtype", [np.int64, np.float64])
+    def test_ties_go_to_the_lowest_cluster(self, dtype):
+        X = np.array([[0, 0], [2, 0]], dtype=dtype)
+        C = np.array([[1, 0], [-1, 0], [1, 0]], dtype=dtype)
+        assert _nearest(X, C).tolist() == [0, 0]
+        assert _nearest(X, C, 3).tolist() == [[0, 1, 2], [0, 2, 1]]
+
+    def test_probe_order_is_stable_argsort_of_true_distances(self):
+        rng = np.random.default_rng(7)
+        # a tiny value range forces many exact ties
+        X = rng.integers(-3, 4, size=(200, 5))
+        C = rng.integers(-3, 4, size=(9, 5))
+        got = _nearest(X, C, 4)
+        for x, row in zip(X.tolist(), got.tolist()):
+            d = [sum((a - b) ** 2 for a, b in zip(x, c)) for c in C.tolist()]
+            assert row == sorted(range(len(C)), key=lambda j: (d[j], j))[:4]
+
+    def test_float_argmin_matches_half_norm_form(self):
+        rng = np.random.default_rng(3)
+        X = rng.normal(size=(2000, 64))
+        C = rng.normal(size=(32, 64))
+        old = np.argmin(0.5 * (C * C).sum(axis=1)[None, :] - X @ C.T, axis=1)
+        assert (_nearest(X, C) == old).all()
+
+    def test_exact_int_overflow_raises(self):
+        def scaled(v):
+            return np.floor(np.asarray(v, dtype=np.float64) * KMEANS_SCALE
+                            + 0.5).astype(np.int64)
+
+        # 40.0 is nearer 36.0 (cluster 1), but 64-dim int64 distances
+        # at this scale wrap; refuse instead of answering cluster 0
+        q = scaled(np.full((1, 64), 40.0))
+        C = scaled(np.stack([np.full(64, -40.0), np.full(64, 36.0)]))
+        with pytest.raises(ValueError, match="overflow exact int64"):
+            _nearest(q, C)
+        # inside the bound (|c|² + 2·|x|·|c| < 2**63) the answer is exact
+        q = scaled(np.full((1, 64), 18.0))
+        C = scaled(np.stack([np.full(64, -18.0), np.full(64, 16.0)]))
+        assert _nearest(q, C).tolist() == [1]
+
 
 class TestProductQuantization:
     def _embeddings(self, spark, n=200, d=64, seed=5):

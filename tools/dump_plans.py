@@ -24,6 +24,9 @@ from contextlib import redirect_stdout
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+# the Python workers inherit this environment when the JVM starts: they
+# then import this checkout too, from any working directory
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [REPO, os.environ.get("PYTHONPATH")]))
 
 from bench import HEADLINE  # noqa: E402
 from verified_sources_spark.plans.queries import QUERIES  # noqa: E402

@@ -31,7 +31,11 @@ import tempfile
 import time
 from typing import Callable, NamedTuple
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# the Python workers inherit this environment when the JVM starts: they
+# then import this checkout too, from any working directory
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, os.environ.get("PYTHONPATH")]))
 
 from pyspark.sql import functions as F  # noqa: E402
 

@@ -44,8 +44,9 @@ from verified_sources_spark.llm.minhash import minhash_signatures
 from verified_sources_spark.llm.similarity import (
     _dot,
     _norm,
-    argmin_cluster,
+    rank_clusters,
     train_kmeans,
+    train_kmeans_quantized,
 )
 from verified_sources_spark.operators.prefix import (
     BUCKET_COL,
@@ -731,13 +732,14 @@ def semantic_dedup(
     """SemDeDup-style embedding dedup: k-means partition, cosine pairs only
     within a cluster, keep the lowest id of each near-identical pair group.
 
-    ``quantizer="exact-int"`` swaps the float Lloyd loop for
-    ``similarity.train_kmeans_quantized`` + exact int64 assignment:
-    bit-identical clustering across engines and partitionings, so the
-    TRAINED pipeline replays in DuckDB SQL and carries a value hash.
+    ``quantizer="exact-int"`` trains and assigns in exact scaled int64
+    (``similarity.train_kmeans_quantized``): bit-identical clustering
+    across engines and partitionings, so the TRAINED pipeline replays in
+    DuckDB SQL and carries a value hash.
 
-    The quantizer is the shared deterministic Lloyd loop
-    (``similarity.train_kmeans`` — centroid-only collects).  The pairwise
+    The quantizer is the shared deterministic Lloyd loop (one
+    per-partition numpy fold per iteration, centroid-only collects) and
+    assignment is ``similarity.rank_clusters``.  The pairwise
     stage runs only within a cluster, so its cost is Σ|cluster|², never
     |corpus|²; ``n_clusters=None`` applies SemDeDup's published recipe —
     scale the cluster count with the corpus (``max(16, n //
@@ -797,21 +799,9 @@ def semantic_dedup(
             c, "_id", "_v", n_clusters, lloyd_iters
         )
         assigned = assign_two_level(c, "_id", "_v", coarse, fine)
-    elif quantizer == "exact-int":
-        from verified_sources_spark.llm.similarity import (
-            rank_clusters_scaled,
-            train_kmeans_quantized,
-        )
-
-        cents = train_kmeans_quantized(
-            c, "_id", "_v", n_clusters, lloyd_iters
-        )
-        assigned = rank_clusters_scaled(c, "_id", "_v", cents).select(
-            "_id", "_v", "cluster"
-        )
     else:
-        centroids = train_kmeans(c, "_id", "_v", n_clusters, lloyd_iters)
-        assigned = argmin_cluster(c, "_id", "_v", centroids)
+        train = train_kmeans_quantized if quantizer == "exact-int" else train_kmeans
+        assigned = rank_clusters(c, "_id", "_v", train(c, "_id", "_v", n_clusters, lloyd_iters))
     # assigned feeds the pair stage AND the final kept-join (3 copies of
     # the quantize+assign subtree in the uncut final plan — each one a
     # full Python-boundary pass); pairs feeds drops and the absorption

@@ -11,8 +11,11 @@
   multi-probes neighboring buckets).  Hyperplanes are derived
   deterministically from a seed via md5 bits, so results are reproducible
   across runs/engines.  At 100 TB: bucketing is one map pass + a shuffle
-  on bucket id; an IVF-style coarse quantizer would follow the same plan
-  shape with learned centroids.
+  on bucket id.
+- k-means quantizers (IVF, SemDeDup, PQ, IVF-PQ, two-level): one
+  nearest-centroid kernel (``_nearest``) and one Lloyd loop (``_lloyd``,
+  a per-partition numpy fold of per-cluster counts and sums, one job per
+  iteration), in float64 or in exact scaled int64.
 """
 
 from __future__ import annotations
@@ -173,126 +176,10 @@ def cosine_topk_adaptive(
     return cosine_topk(corpus, queries, id_col, vec_col, k)
 
 
-def _centroid_df(spark, centroids: list[list[float]]) -> DataFrame:
-    rows = [(i, [float(x) for x in cv]) for i, cv in enumerate(centroids)]
-    return spark.createDataFrame(rows, "cluster int, cvec array<double>")
-
-
-def assign_clusters(
-    df: DataFrame, id_name: str, vec_col: str, centroids: list[list[float]]
-) -> DataFrame:
-    """Nearest-centroid ranking: broadcast cross join against the (tiny)
-    centroid table, squared-L2 distance as a zip_with fold, ``__rn`` ranks
-    centroids per row (rn=1 is the assignment; rn<=p gives multi-probe)."""
-    cd = _centroid_df(df.sparkSession, centroids)
-    scored = df.crossJoin(F.broadcast(cd)).withColumn(
-        "__dist",
-        F.aggregate(
-            F.zip_with(
-                F.col(vec_col),
-                F.col("cvec"),
-                lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-    )
-    w = Window.partitionBy(id_name).orderBy(F.col("__dist").asc(), F.col("cluster").asc())
-    return scored.withColumn("__rn", F.row_number().over(w))
-
-
-def argmin_cluster(
-    df: DataFrame, id_name: str, vec_col: str, centroids: list[list[float]]
-) -> DataFrame:
-    """Nearest-centroid ASSIGNMENT as an Arrow-batched numpy GEMM.
-
-    Round-6 sf10 soak finding: the former broadcast-crossJoin +
-    per-element zip_with fold materialized n×k rows of
-    Catalyst-interpreted array arithmetic — and because SemDeDup grows k
-    with n (k = n/512 keeps cluster sizes bounded for the pair stage),
-    assignment cost rose as n² in wall clock (8.2s at sf1 → 192s at
-    sf10).  The GEMM form does the same n×k×d FLOPs in BLAS inside each
-    Arrow batch — exactly the treatment the SemDeDup PAIR stage got in
-    round 5 — with no cross join, no shuffle, and only the (tiny)
-    centroid matrix broadcast in the task closure.  sf10: 192s → single
-    seconds.  (The asymptotic fix past ~10^6 centroids is a two-level
-    coarse/fine quantizer — n×2√k — noted in SCALE.md; at SemDeDup's
-    k = n/512 the flat GEMM carries 10^8-vector corpora comfortably.)
-
-    argmin over d² = |x|² − 2x·c + |c|² ≡ argmin over |c|²/2 − x·c
-    (the |x|² term is constant per row); numpy argmin takes the FIRST
-    minimum, i.e. the lowest cluster id on ties — the same tie-break as
-    the window/agg forms.  Returns (id, vec, cluster)."""
-    import numpy as np
-    import pandas as pd
-    import pyspark.sql.types as T
-
-    C = np.asarray(centroids, dtype=np.float64)  # k × d
-    half_cn = 0.5 * (C * C).sum(axis=1)
-
-    id_f = df.schema[id_name]
-    vec_f = df.schema[vec_col]
-    schema = T.StructType(
-        [
-            T.StructField(id_name, id_f.dataType, id_f.nullable),
-            T.StructField(vec_col, vec_f.dataType, vec_f.nullable),
-            T.StructField("cluster", T.IntegerType()),
-        ]
-    )
-
-    def assign(batches):
-        # not map_rows: numpy matrix math over the whole batch
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.array(list(pdf[vec_col]), dtype=np.float64)  # B × d
-            scores = half_cn[None, :] - X @ C.T
-            cl = np.argmin(scores, axis=1).astype("int32")
-            yield pd.DataFrame(
-                {id_name: pdf[id_name], vec_col: pdf[vec_col], "cluster": cl}
-            )
-
-    return df.select(id_name, vec_col).mapInPandas(assign, schema)
-
-
-def train_kmeans(
-    vectors: DataFrame,
-    id_name: str,
-    vec_col: str,
-    n_centroids: int = 16,
-    lloyd_iters: int = 2,
-) -> list[list[float]]:
-    """Deterministic Lloyd k-means over a vector column, as DataFrame ops.
-
-    Initialization is the ``n_centroids`` lowest-id vectors; each iteration
-    is one broadcast-assignment pass plus a posexplode → (cluster, dim) avg.
-    Only the centroid table (n_centroids × dim doubles — metadata-sized)
-    ever reaches the driver; the corpus never collects, so the same loop
-    runs unchanged against a 100 TB embedding table."""
-    init = vectors.orderBy(id_name).limit(n_centroids).select(vec_col).collect()
-    centroids = [list(r[vec_col]) for r in init]
-    for _ in range(lloyd_iters):
-        assigned = argmin_cluster(vectors, id_name, vec_col, centroids).select(
-            vec_col, "cluster"
-        )
-        new_rows = (
-            assigned.select("cluster", F.posexplode(vec_col).alias("dim", "x"))
-            .groupBy("cluster", "dim")
-            .agg(F.avg("x").alias("m"))
-            .groupBy("cluster")
-            .agg(F.array_sort(F.collect_list(F.struct("dim", "m"))).alias("dm"))
-            .select("cluster", F.col("dm.m").alias("cvec"))
-            .collect()
-        )
-        for r in new_rows:
-            centroids[r["cluster"]] = list(r["cvec"])
-    return centroids
-
-
 # scale for the exact-integer quantizer: 1e-7 resolution is far beyond
-# float32 embedding precision, and |x| <= ~430 still keeps every
-# intermediate (64-dim squared distances, per-cluster coordinate sums)
-# inside int64 — one source of truth shared with the DuckDB oracle
+# float32 embedding precision — one source of truth shared with the
+# DuckDB oracle.  int64 headroom is checked by _nearest's guard
+# (vector norms up to ~175), not assumed
 KMEANS_SCALE = 10_000_000
 
 
@@ -306,33 +193,91 @@ def _scaled_int_matrix(col):
     return np.floor(X * KMEANS_SCALE + 0.5).astype(np.int64)
 
 
-def _round_div(s: int, n: int) -> int:
+def _round_div(s, n):
     """round(s/n) half away from zero with pure integer ops (truncating
     division on magnitudes — DuckDB's ``//`` truncates toward zero, so
-    this form replays identically there)."""
+    this form replays identically there); elementwise over numpy
+    object arrays of Python ints."""
+    import numpy as np
+
     q = (2 * abs(s) + n) // (2 * n)
-    return -q if s < 0 else q
+    return np.where(s < 0, -q, q)
 
 
-def rank_clusters_scaled(
+def _is_scaled(df: DataFrame, vec_col: str) -> bool:
+    """An array<long> vector column already holds exact scaled int64
+    (e.g. IVF-PQ residuals); array<float|double> holds raw vectors."""
+    import pyspark.sql.types as T
+
+    elem = df.schema[vec_col].dataType.elementType
+    return isinstance(elem, (T.LongType, T.IntegerType))
+
+
+def _matrix(col, exact: bool, scaled: bool):
+    """Vectors as the matrix the centroids' arithmetic needs: exact
+    scaled int64 for int centroids, float64 for float ones."""
+    import numpy as np
+
+    if exact and not scaled:
+        return _scaled_int_matrix(col)
+    return np.array(list(col), dtype=np.int64 if exact else np.float64)
+
+
+def _nearest(X, C, n_probe: int | None = None):
+    """The one nearest-centroid kernel: squared L2 minus the per-row
+    |x|² constant, ``|c|² − 2·x·c``.  ``n_probe=None`` returns each
+    row's nearest cluster (numpy argmin takes the FIRST minimum, so ties
+    go to the lowest cluster id); otherwise each row's ``n_probe``
+    nearest, in order, by a stable argsort (same tie-break).
+
+    int64 is exact — the DuckDB oracle replays the same integers — but
+    only while nothing wraps: by Cauchy–Schwarz every partial sum is
+    bounded by |c|² + 2·|x|·|c|, so a batch whose largest norms reach
+    2**63 there raises (at ``KMEANS_SCALE``: vector norms up to ~175,
+    e.g. |x| < ~21 in all of 64 dims).  In float64 the factor 2 is
+    exact, so the argmin is bit-for-bit that of ``0.5·|c|² − x·c``."""
+    import numpy as np
+
+    if C.dtype.kind == "i":
+        xn, cn = (np.sqrt(np.square(M, dtype=np.float64).sum(axis=1).max(initial=0))
+                  for M in (X, C))
+        if cn * cn + 2 * xn * cn >= 0.999 * 2.0**63:
+            raise ValueError(f"scaled norms {xn:.3g}, {cn:.3g} overflow exact int64 distances")
+    scores = (C * C).sum(axis=1)[None, :] - 2 * (X @ C.T)
+    if n_probe is None:
+        return scores.argmin(axis=1)
+    return np.argsort(scores, axis=1, kind="stable")[:, :n_probe]
+
+
+def rank_clusters(
     df: DataFrame,
     id_name: str,
     vec_col: str,
-    centroids: list[list[int]],
+    centroids,
     n_probe: int | None = None,
-    already_scaled: bool = False,
 ) -> DataFrame:
-    """Exact-integer nearest-centroid ranking against integer-scaled
-    centroids: squared-L2 in int64 (no float rounding anywhere), ties
-    broken by lowest cluster id via a stable argsort.  ``n_probe=None``
-    keeps only rn=1 (plain assignment); otherwise rows explode to the
-    ``n_probe`` nearest clusters.  Returns (id, vec, cluster, __rn)."""
+    """Nearest-centroid ranking as one Arrow-batched mapInPandas over
+    the vectors — no cross join, no shuffle; only the (tiny) centroid
+    matrix travels, in the task closure.  A cross join against the
+    centroids materializes n×k rows, and SemDeDup's k = n/512 makes that
+    n² (SCALE.md); past ~10^6 centroids the two-level quantizer takes
+    over.
+
+    The arithmetic follows the centroids: int centroids rank by exact
+    int64 distances over ``KMEANS_SCALE``-scaled vectors (an array<long>
+    column counts as already scaled), float centroids rank in float64.
+    ``n_probe=None`` emits each row once with its nearest cluster;
+    otherwise one row per probed cluster, the ``n_probe`` nearest.  Ties
+    go to the lowest cluster id (:func:`_nearest`).
+    Returns (id, vec, cluster)."""
     import numpy as np
     import pandas as pd
     import pyspark.sql.types as T
 
-    C = np.asarray(centroids, dtype=np.int64)  # k x d
-    keep = 1 if n_probe is None else n_probe
+    C = np.asarray(centroids)
+    exact = C.dtype.kind in "iu"
+    C = C.astype(np.int64 if exact else np.float64)
+    scaled = _is_scaled(df, vec_col)
 
     id_f = df.schema[id_name]
     vec_f = df.schema[vec_col]
@@ -341,7 +286,6 @@ def rank_clusters_scaled(
             T.StructField(id_name, id_f.dataType, id_f.nullable),
             T.StructField(vec_col, vec_f.dataType, vec_f.nullable),
             T.StructField("cluster", T.IntegerType()),
-            T.StructField("__rn", T.IntegerType()),
         ]
     )
 
@@ -350,27 +294,103 @@ def rank_clusters_scaled(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            if already_scaled:
-                X = np.array(list(pdf[vec_col]), dtype=np.int64)
-            else:
-                X = _scaled_int_matrix(pdf[vec_col])  # B x d int64
-            # d² = |x|² - 2x·c + |c|² — drop the per-row |x|² constant;
-            # int64 matmul is exact, so ranking and ties are exact
-            scores = (C * C).sum(axis=1)[None, :] - 2 * (X @ C.T)
-            order = np.argsort(scores, axis=1, kind="stable")[:, :keep]
-            ids = np.repeat(np.arange(len(pdf)), keep)
+            near = _nearest(_matrix(pdf[vec_col], exact, scaled), C, n_probe)
+            near = near.reshape(len(pdf), -1)
+            rows = np.repeat(np.arange(len(pdf)), near.shape[1])
             yield pd.DataFrame(
                 {
-                    id_name: pdf[id_name].iloc[ids].values,
-                    vec_col: pdf[vec_col].iloc[ids].values,
-                    "cluster": order.ravel().astype("int32"),
-                    "__rn": np.tile(
-                        np.arange(1, keep + 1, dtype="int32"), len(pdf)
-                    ),
+                    id_name: pdf[id_name].values[rows],
+                    vec_col: pdf[vec_col].values[rows],
+                    "cluster": near.ravel().astype("int32"),
                 }
             )
 
     return df.select(id_name, vec_col).mapInPandas(rank, schema)
+
+
+def _cluster_sums(X, C):
+    """The Lloyd update's input: per-cluster (count, coordinate sum) of
+    the rows of X under the nearest-centroid assignment.  int64 sums are
+    exact, so any split of the rows adds up to the same totals."""
+    import numpy as np
+
+    a = _nearest(X, C)
+    S = np.zeros(C.shape, dtype=X.dtype)
+    np.add.at(S, a, X)
+    return np.bincount(a, minlength=len(C)), S
+
+
+def _lloyd_step(C, n, S):
+    """New centroids from the cluster totals: the mean — for int
+    centroids the half-away-from-zero rounded integer mean, in Python
+    ints — while an empty cluster keeps its previous centroid."""
+    C = C.copy()
+    m = n > 0
+    if C.dtype.kind == "i":
+        C[m] = _round_div(S[m], n[m, None].astype(object))
+    else:
+        C[m] = S[m] / n[m, None]
+    return C
+
+
+def _first_vectors(df: DataFrame, id_name: str, vec_col: str, k: int, exact: bool):
+    """The ``k`` lowest-id vectors — the deterministic init of every
+    quantizer here — as a float64 or exact scaled int64 matrix."""
+    rows = df.orderBy(id_name).limit(k).select(vec_col).collect()
+    return _matrix([r[0] for r in rows], exact, _is_scaled(df, vec_col))
+
+
+def _lloyd(vectors: DataFrame, vec_col: str, C, iters: int):
+    """The one Lloyd loop behind every Spark-trained quantizer, exact
+    when the centroids are int.  Each iteration is ONE job: a
+    mapInPandas folds :func:`_cluster_sums` over its whole partition and
+    yields at most k rows; the driver adds the at most k × partitions
+    rows (Python ints when exact: no overflow, no order dependence) and
+    finishes with :func:`_lloyd_step`.  Only centroid-sized state ever
+    reaches the driver; the corpus never collects."""
+    import numpy as np
+    import pandas as pd
+
+    exact = C.dtype.kind == "i"
+    scaled = _is_scaled(vectors, vec_col)
+    schema = f"cluster int, n long, s array<{'long' if exact else 'double'}>"
+    for _ in range(iters if len(C) else 0):
+
+        def fold(batches, C=C):
+            n, S = np.zeros(len(C), dtype=np.int64), np.zeros_like(C)
+            # not map_rows: one (count, sum) fold over the whole partition
+            for pdf in batches:
+                if len(pdf):
+                    dn, dS = _cluster_sums(_matrix(pdf[vec_col], exact, scaled), C)
+                    n, S = n + dn, S + dS
+            nz = np.flatnonzero(n)
+            yield pd.DataFrame({"cluster": nz.astype("int32"), "n": n[nz], "s": list(S[nz])})
+
+        n = np.zeros(len(C), dtype=np.int64)
+        S = np.zeros(C.shape, dtype=object if exact else np.float64)
+        for r in vectors.select(vec_col).mapInPandas(fold, schema).collect():
+            n[r["cluster"]] += r["n"]
+            S[r["cluster"]] += np.array(r["s"], dtype=S.dtype)
+        C = _lloyd_step(C, n, S)
+    return C
+
+
+def train_kmeans(
+    vectors: DataFrame,
+    id_name: str,
+    vec_col: str,
+    n_centroids: int = 16,
+    lloyd_iters: int = 2,
+) -> list[list[float]]:
+    """Deterministic float64 Lloyd k-means over a vector column: init is
+    the ``n_centroids`` lowest-id vectors, then :func:`_lloyd` — one
+    per-partition numpy fold per iteration, centroid-sized collects only,
+    so the same loop runs unchanged against a 100 TB embedding table.
+    Float sums depend on their order, so the last bits of the centroids
+    may move with the partitioning; :func:`train_kmeans_quantized` is
+    the exact form."""
+    C = _first_vectors(vectors, id_name, vec_col, n_centroids, exact=False)
+    return _lloyd(vectors, vec_col, C, lloyd_iters).tolist()
 
 
 def train_kmeans_quantized(
@@ -379,64 +399,18 @@ def train_kmeans_quantized(
     vec_col: str,
     n_centroids: int = 16,
     lloyd_iters: int = 2,
-    already_scaled: bool = False,
 ) -> list[list[int]]:
     """Lloyd k-means with EXACT integer arithmetic, bit-identical across
     engines and partitionings: vectors quantize to scaled int64
-    (``KMEANS_SCALE``), per-cluster coordinate sums are exact long
-    aggregations (order-independent, unlike float64 avg — the reason the
-    float trainer could never carry a cross-engine value hash), and each
-    new centroid coordinate is the half-away-from-zero rounded integer
-    average.  The same two unrolled iterations replay in DuckDB SQL
-    (plans/oracle.py), putting trained-quantizer ANN on the value-hash
-    gate.  Only per-cluster sums (k × d longs) ever reach the driver."""
-    if already_scaled:
-        # input is already exact scaled int64 (e.g. IVF-PQ residuals)
-        sv = vectors.select(
-            F.col(id_name).alias("_id"),
-            F.transform(F.col(vec_col),
-                        lambda x: x.cast("long")).alias("_sx"),
-        )
-    else:
-        sv = vectors.select(
-            F.col(id_name).alias("_id"),
-            F.transform(
-                F.col(vec_col),
-                lambda x: F.floor(
-                    x.cast("double") * F.lit(float(KMEANS_SCALE))
-                    + F.lit(0.5)
-                ).cast("long"),
-            ).alias("_sx"),
-        )
-    init = sv.orderBy("_id").limit(n_centroids).select("_sx").collect()
-    cents = [list(r["_sx"]) for r in init]
-    for _ in range(lloyd_iters):
-        assigned = rank_clusters_scaled(
-            sv, "_id", "_sx", cents, already_scaled=True
-        )
-        # exact long sums per (cluster, dim); empty clusters keep their
-        # previous centroid (no row → no update)
-        rows = (
-            assigned.select(
-                "cluster", F.posexplode("_sx").alias("dim", "x")
-            )
-            .groupBy("cluster", "dim")
-            .agg(F.sum("x").alias("s"), F.count(F.lit(1)).alias("n"))
-            .groupBy("cluster")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("dim", "s"))
-                ).alias("ds"),
-                F.first("n").alias("n"),
-            )
-            .select("cluster", F.col("ds.s").alias("svec"), "n")
-            .collect()
-        )
-        for r in rows:
-            cents[r["cluster"]] = [
-                _round_div(int(s), int(r["n"])) for s in r["svec"]
-            ]
-    return cents
+    (``KMEANS_SCALE``; an array<long> column is taken as already
+    scaled), per-cluster coordinate sums are exact integers
+    (order-independent, unlike float64 — the reason the float trainer
+    could never carry a cross-engine value hash), and each new centroid
+    coordinate is the half-away-from-zero rounded integer average.  The
+    same two unrolled iterations replay in DuckDB SQL (plans/oracle.py),
+    putting trained-quantizer ANN on the value-hash gate."""
+    C = _first_vectors(vectors, id_name, vec_col, n_centroids, exact=True)
+    return _lloyd(vectors, vec_col, C, lloyd_iters).tolist()
 
 
 def ivf_topk(
@@ -453,14 +427,14 @@ def ivf_topk(
     """IVF approximate top-k: k-means coarse quantizer → inverted lists →
     probe the ``n_probe`` nearest lists per query → exact rerank.
 
-    The quantizer is trained with Lloyd iterations expressed as DataFrame
-    ops: assignment is a broadcast cross join against the (tiny) centroid
-    set; the update step is posexplode → groupBy(cluster, dim) avg.  Only
-    the centroid table (n_centroids x dim floats — metadata-sized) ever
+    The quantizer is trained by the shared Lloyd loop (``_lloyd``: one
+    per-partition numpy fold per iteration); assignment and probing are
+    :func:`rank_clusters`, one mapInPandas per side with no cross join.
+    Only the centroid table (n_centroids x dim — metadata-sized) ever
     reaches the driver; corpus vectors never collect.  At 100 TB the same
-    plan holds: one narrow assignment pass per iteration plus a
-    dim-keyed aggregate, then the probe join shuffles only (bucket, query)
-    pairs.  Initialization is deterministic (first n_centroids by id).
+    plan holds: one narrow pass per iteration, then the probe join
+    shuffles only (bucket, query) pairs.  Initialization is deterministic
+    (first n_centroids by id).
 
     ``quantizer="exact-int"`` trains with ``train_kmeans_quantized``
     (exact integer Lloyd, bit-identical across engines/partitionings)
@@ -469,31 +443,10 @@ def ivf_topk(
     TRAINED pipeline carries a full value-hash oracle."""
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv"))
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
-    if quantizer == "exact-int":
-        cents = train_kmeans_quantized(
-            c, "neighbor_id", "__cv", n_centroids, lloyd_iters
-        )
-        buckets = rank_clusters_scaled(
-            c, "neighbor_id", "__cv", cents
-        ).select("neighbor_id", "__cv", "cluster")
-        q_probes = rank_clusters_scaled(
-            q, "query_id", "__qv", cents, n_probe=n_probe
-        ).select("query_id", "__qv", "cluster")
-    else:
-        centroids = train_kmeans(
-            c, "neighbor_id", "__cv", n_centroids, lloyd_iters
-        )
-        # corpus side: plain assignment — the GEMM form, not the n×k
-        # ranking cross join (the query side below genuinely needs the
-        # rn<=p ranking, and queries are small)
-        buckets = argmin_cluster(c, "neighbor_id", "__cv", centroids).select(
-            "neighbor_id", "__cv", "cluster"
-        )
-        q_probes = (
-            assign_clusters(q, "query_id", "__qv", centroids)
-            .filter(F.col("__rn") <= n_probe)
-            .select("query_id", "__qv", "cluster")
-        )
+    train = train_kmeans_quantized if quantizer == "exact-int" else train_kmeans
+    cents = train(c, "neighbor_id", "__cv", n_centroids, lloyd_iters)
+    buckets = rank_clusters(c, "neighbor_id", "__cv", cents)
+    q_probes = rank_clusters(q, "query_id", "__qv", cents, n_probe=n_probe)
     prod = buckets.join(F.broadcast(q_probes), "cluster").filter(
         F.col("neighbor_id") != F.col("query_id")
     )
@@ -696,12 +649,13 @@ def near_dup_keep(corpus: DataFrame, pairs: DataFrame, id_col: str = "vec_id") -
 
 
 def _local_lloyd(X, ids, k: int, iters: int):
-    """Deterministic in-memory Lloyd over one coarse cell (numpy GEMM
-    form).  Init is greedy FARTHEST-POINT (start at the lowest id, then
-    repeatedly take the vector farthest from its nearest chosen seed,
-    lowest id on ties) — deterministic like a lowest-id init but it
-    cannot collapse all seeds into one dense blob; empty clusters keep
-    their previous centroid.  Returns k' x d (k' = min(k, |cell|))."""
+    """Deterministic in-memory Lloyd over one coarse cell: the same
+    :func:`_cluster_sums` / :func:`_lloyd_step` as the Spark loop, over
+    the whole cell at once.  Init is greedy FARTHEST-POINT (start at the
+    lowest id, then repeatedly take the vector farthest from its nearest
+    chosen seed, lowest id on ties) — deterministic like a lowest-id init
+    but it cannot collapse all seeds into one dense blob; empty clusters
+    keep their previous centroid.  Returns k' x d (k' = min(k, |cell|))."""
     import numpy as np
 
     k = min(k, len(X))
@@ -713,14 +667,9 @@ def _local_lloyd(X, ids, k: int, iters: int):
         best = order[np.argmax(d2[order])]
         seeds.append(best)
         d2 = np.minimum(d2, ((X - X[best]) ** 2).sum(axis=1))
-    C = X[seeds].astype(np.float64).copy()
+    C = X[seeds].astype(np.float64)
     for _ in range(iters):
-        scores = 0.5 * (C * C).sum(axis=1)[None, :] - X @ C.T
-        a = np.argmin(scores, axis=1)
-        for j in range(k):
-            m = a == j
-            if m.any():
-                C[j] = X[m].mean(axis=0)
+        C = _lloyd_step(C, *_cluster_sums(X, C))
     return C
 
 
@@ -756,7 +705,7 @@ def train_kmeans_two_level(
         coarse_k = max(1, int(math.isqrt(max(1, n_centroids - 1))) + 1)
     coarse = train_kmeans(vectors, id_name, vec_col, coarse_k, lloyd_iters)
 
-    assigned = argmin_cluster(vectors, id_name, vec_col, coarse)
+    assigned = rank_clusters(vectors, id_name, vec_col, coarse)
     total_n = max(1, vectors.count())
 
     out_schema = "cell int, centroids array<array<double>>"
@@ -798,19 +747,17 @@ def assign_two_level(
     coarse: list[list[float]],
     fine: list[list[list[float]]],
 ) -> DataFrame:
-    """Two-stage nearest-centroid assignment: coarse GEMM argmin picks
-    the cell, a per-cell fine GEMM argmin picks the cluster — n x
-    O(sqrt(k)) total.  Returns (id, vec, cluster) with GLOBAL fine ids
-    (offset[cell] + local index), same output shape as
-    :func:`argmin_cluster`."""
+    """Two-stage nearest-centroid assignment: the coarse :func:`_nearest`
+    picks the cell, a per-cell fine :func:`_nearest` picks the cluster —
+    n x O(sqrt(k)) total.  Returns (id, vec, cluster) with GLOBAL fine
+    ids (offset[cell] + local index), same output shape as
+    :func:`rank_clusters`."""
     import numpy as np
     import pandas as pd
     import pyspark.sql.types as T
 
     Cc = np.asarray(coarse, dtype=np.float64)
-    half_cc = 0.5 * (Cc * Cc).sum(axis=1)
     Fs = [np.asarray(f, dtype=np.float64) for f in fine]
-    half_fs = [0.5 * (Fm * Fm).sum(axis=1) for Fm in Fs]
     offsets = np.zeros(len(Fs) + 1, dtype=np.int64)
     for i, Fm in enumerate(Fs):
         offsets[i + 1] = offsets[i] + len(Fm)
@@ -831,13 +778,11 @@ def assign_two_level(
             if len(pdf) == 0:
                 continue
             X = np.array(list(pdf[vec_col]), dtype=np.float64)
-            cells = np.argmin(half_cc[None, :] - X @ Cc.T, axis=1)
+            cells = _nearest(X, Cc)
             out = np.empty(len(X), dtype=np.int64)
             for cell in np.unique(cells):
                 m = cells == cell
-                Fm, hf = Fs[cell], half_fs[cell]
-                local = np.argmin(hf[None, :] - X[m] @ Fm.T, axis=1)
-                out[m] = offsets[cell] + local
+                out[m] = offsets[cell] + _nearest(X[m], Fs[cell])
             yield pd.DataFrame(
                 {
                     id_name: pdf[id_name],
@@ -889,8 +834,7 @@ def pq_topk(
     sub = dim // m
 
     # ---- codebooks (collected: n_codes rows, codebook-sized)
-    base = corpus.orderBy(id_col).limit(n_codes).select(vec_col).collect()
-    X0 = _scaled_int_matrix([r[0] for r in base])
+    X0 = _first_vectors(corpus, id_col, vec_col, n_codes, exact=True)
     books = [X0[:, s * sub : (s + 1) * sub].copy() for s in range(m)]
     if train_iters > 0:
         for s in range(m):
@@ -932,13 +876,11 @@ def pq_topk(
                 continue
             ids = pdf[id_col].to_numpy(dtype=np.int64)
             X = _scaled_int_matrix(pdf[vec_col])
-            # encode: per subspace argmin (numpy argmin = first min,
-            # the lowest-code tie-break the oracle replays)
+            # encode: per subspace nearest code (lowest code on ties,
+            # the tie-break the oracle replays)
             codes = np.empty((len(ids), m), dtype=np.int64)
             for s in range(m):
-                xs = X[:, s * sub : (s + 1) * sub]
-                d = xs[:, None, :] - bb[s][None, :, :]
-                codes[:, s] = (d * d).sum(axis=2).argmin(axis=1)
+                codes[:, s] = _nearest(X[:, s * sub : (s + 1) * sub], bb[s])
             # ADC: adist[q, v] = sum_s dtab[q, s, codes[v, s]]
             ad = np.zeros((len(qi), len(ids)), dtype=np.int64)
             for s in range(m):
@@ -991,7 +933,7 @@ def ivfpq_topk(
     ``train_iters > 0`` instead trains BOTH quantizers with the
     exact-integer Lloyd trainer — coarse cells over the raw vectors,
     then per-subspace residual codebooks over the distributed
-    residual frame (assignment via rank_clusters_scaled, residual =
+    residual frame (assignment via rank_clusters, residual =
     zip_with subtraction, all DataFrame ops; only centroid-sized
     state collects) — the FAISS-recipe trained index, still
     bit-deterministic across partitionings.  100 TB shape: the scan side is
@@ -1008,17 +950,10 @@ def ivfpq_topk(
     if train_iters == 0:
         # pinned SQL-witness form: coarse centroids and residual
         # codebooks from the lowest-id vectors
-        base = corpus.orderBy(id_col).limit(max(n_cells, n_codes)) \
-            .select(id_col, vec_col).collect()
-        Xb = _scaled_int_matrix([r[1] for r in base])
+        Xb = _first_vectors(corpus, id_col, vec_col, max(n_cells, n_codes), exact=True)
         cents = Xb[:n_cells]                   # coarse centroids
-
-        def _assign(X):
-            d = X[:, None, :] - cents[None, :, :]
-            return (d * d).sum(axis=2).argmin(axis=1)
-
         cb_base = Xb[:n_codes]
-        rb = cb_base - cents[_assign(cb_base)]
+        rb = cb_base - cents[_nearest(cb_base, cents)]
         books = [rb[:, s * sub : (s + 1) * sub].copy()
                  for s in range(m)]
     else:
@@ -1030,6 +965,7 @@ def ivfpq_topk(
         books = [None] * m
         # distributed residual frame: exact-int assignment + zip_with
         # subtraction, then the exact-int Lloyd trainer per subspace
+        # (array<long> residuals count as already scaled)
         spark_ = corpus.sparkSession
         sv = corpus.select(
             F.col(id_col).alias("_id"),
@@ -1038,8 +974,7 @@ def ivfpq_topk(
                 lambda x: F.floor(
                     x.cast("double") * F.lit(float(KMEANS_SCALE))
                     + F.lit(0.5)).cast("long")).alias("_sx"))
-        assigned = rank_clusters_scaled(
-            sv, "_id", "_sx", cents.tolist(), already_scaled=True)
+        assigned = rank_clusters(sv, "_id", "_sx", cents)
         cent_df = spark_.createDataFrame(
             [(int(c), [int(v) for v in cents[c]])
              for c in range(n_cells)], "cluster int, _cv array<long>")
@@ -1059,8 +994,7 @@ def ivfpq_topk(
             books[s] = np.array(
                 train_kmeans_quantized(sliced, "_id", "_v",
                                        n_centroids=n_codes,
-                                       lloyd_iters=train_iters,
-                                       already_scaled=True),
+                                       lloyd_iters=train_iters),
                 dtype=np.int64)
 
 
@@ -1068,9 +1002,7 @@ def ivfpq_topk(
     qids = np.array([int(r[0]) for r in qrows], dtype=np.int64)
     Q = _scaled_int_matrix([r[1] for r in qrows])
     # probe lists + per-(query, probed-cell) ADC tables
-    dq = Q[:, None, :] - cents[None, :, :]
-    cell_d = (dq * dq).sum(axis=2)             # (nq, n_cells)
-    probe = np.argsort(cell_d, kind="stable", axis=1)[:, :n_probe]
+    probe = _nearest(Q, cents, n_probe)        # (nq, n_probe)
     # dtabs[qi][p][s][c]
     dtabs = np.empty((len(qids), n_probe, m, n_codes), dtype=np.int64)
     for qi in range(len(qids)):
@@ -1103,14 +1035,11 @@ def ivfpq_topk(
                 continue
             ids = pdf[id_col].to_numpy(dtype=np.int64)
             X = _scaled_int_matrix(pdf[vec_col])
-            d = X[:, None, :] - C[None, :, :]
-            cell = (d * d).sum(axis=2).argmin(axis=1)
+            cell = _nearest(X, C)
             R = X - C[cell]
             codes = np.empty((len(ids), m), dtype=np.int64)
             for s in range(m):
-                rs = R[:, s * sub : (s + 1) * sub]
-                dd = rs[:, None, :] - bb[s][None, :, :]
-                codes[:, s] = (dd * dd).sum(axis=2).argmin(axis=1)
+                codes[:, s] = _nearest(R[:, s * sub : (s + 1) * sub], bb[s])
             parts = []
             for qi in range(len(qi_all)):
                 for p in range(pr.shape[1]):

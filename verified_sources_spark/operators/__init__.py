@@ -35,7 +35,6 @@ from verified_sources_spark.operators.quality import (  # noqa: F401
     profile,
     table_counts,
 )
-from verified_sources_spark.operators.grouped import apply_grouped  # noqa: F401
 from verified_sources_spark.operators.delta_interop import (  # noqa: F401
     export_manifest_as_delta,
     read_delta_table,

@@ -7,7 +7,6 @@ state machines), ``applyInPandas`` is the Arrow-batched escape hatch:
 one shuffle on the group key, then vectorized pandas per group.
 
 Provided here:
-- ``apply_grouped``: thin typed wrapper (keeps schema handling in one place).
 - ``session_stats_pandas``: reference implementation of a custom stateful
   per-user pass (session statistics with gap logic) used by tests to
   cross-check the pure-SQL sessionize operator — demonstrating that the
@@ -16,19 +15,8 @@ Provided here:
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 import pandas as pd
 from pyspark.sql import DataFrame
-
-
-def apply_grouped(
-    df: DataFrame,
-    keys: list[str],
-    fn: Callable[[pd.DataFrame], pd.DataFrame],
-    schema: str,
-) -> DataFrame:
-    return df.groupBy(*keys).applyInPandas(fn, schema)
 
 
 def session_stats_pandas(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
@@ -52,9 +40,8 @@ def session_stats_pandas(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
             }
         )
 
-    return apply_grouped(
-        events.select("user_id", "ts", "event_id"),
-        ["user_id"],
-        per_user,
-        "user_id long, n_sessions long, max_session_events long",
+    return (
+        events.select("user_id", "ts", "event_id")
+        .groupBy("user_id")
+        .applyInPandas(per_user, "user_id long, n_sessions long, max_session_events long")
     )
