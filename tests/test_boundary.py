@@ -6,7 +6,10 @@ from __future__ import annotations
 import pathlib
 import re
 
+from pyspark.sql import functions as F
+
 from verified_sources_spark.boundary import map_rows
+from verified_sources_spark.cut import cut
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "verified_sources_spark"
 
@@ -86,6 +89,72 @@ def test_plan_names_the_stage_after_its_enclosing_function(spark):
     plan = map_rows(df, probe, "i long")._jdf.queryExecution().optimizedPlan().toString()
     assert "MapInPandas" in plan
     assert "test_plan_names_the_stage_after_its_enclosing_function.probe(" in plan
+
+
+def test_nullable_integral_input_arrives_as_int_and_none(spark):
+    # one batch holding a null: pandas would hand both columns over as
+    # float64, rounding the long to 4611686018427387904
+    big = (1 << 62) + 1
+    df = spark.createDataFrame([(big, None), (None, 7)], "h long, n int").coalesce(1)
+
+    def seen(h, n):
+        yield {"h": h, "n": n, "types": f"{type(h).__name__},{type(n).__name__}"}
+
+    out = map_rows(df, seen, "h long, n int, types string").collect()
+    assert sorted(out, key=str) == sorted(
+        [(big, None, "int,NoneType"), (None, 7, "NoneType,int")], key=str)
+
+
+def _chain(df, between):
+    """Three stages: fan-out with zero-row inputs, a null long and
+    binary, each read through a select/alias projection."""
+    def a(n):
+        for k in range(n % 3):
+            yield {"n": n, "h": None if k else (1 << 62) + n,
+                   "blob": None if n == 4 else bytes([n, k])}
+
+    def b(h, blob, m):
+        yield {"id": m, "h": h, "b2": None if blob is None else blob + b"!",
+               "types": f"{type(h).__name__},{type(blob).__name__},{type(m).__name__}"}
+        if m == 5:
+            yield {"id": -m}
+
+    def c(i, b2, h, types):
+        yield {"out": f"{i}:{b2!r}:{h}:{types}", "h": h}
+
+    s1 = between(map_rows(df, a, "n long, h long, blob binary"))
+    s2 = between(map_rows(s1.select("h", "blob", F.col("n").alias("m")), b,
+                          "id long, h long, b2 binary, types string"))
+    return map_rows(s2.select(F.col("id").alias("i"), "b2", "h", "types").alias("x"),
+                    c, "out string, h long")
+
+
+def test_chained_stages_fuse_into_one_python_node(spark):
+    df = spark.createDataFrame([(i,) for i in range(8)], "n long").repartition(2)
+    fused = _chain(df, lambda s: s)
+    plan = fused._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("MapInPandas") == 1
+    assert "MapInPandas _chain.a+_chain.b+_chain.c(" in plan
+    # cut() between the stages forces one Python node each
+    assert sorted(fused.collect()) == sorted(_chain(df, cut).collect())
+    assert len(fused.collect()) == 9
+
+
+def test_filter_or_computed_column_between_stages_does_not_fuse(spark):
+    df = spark.range(4)
+
+    def a(i):
+        yield {"n": i, "s": str(i)}
+
+    def b(n, s):
+        yield {"t": f"{n}{s}"}
+
+    first = map_rows(df, a, "n long, s string")
+    for between in (first.filter("n > 1"),
+                    first.select((F.col("n") + 1).alias("n"), "s")):
+        plan = map_rows(between, b, "t string")._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("MapInPandas") == 2
+    assert sorted(r.t for r in map_rows(first.filter("n > 1"), b, "t string").collect()) == ["22", "33"]
 
 
 def test_no_hand_written_row_loops_outside_boundary():

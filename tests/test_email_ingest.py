@@ -186,3 +186,37 @@ def test_multi_message_mbox_failure_is_all_or_nothing(spark):
     rows = email_attachment_texts(df).collect()
     assert len(rows) == 1
     assert rows[0]["decoded_ok"] is False
+
+
+def test_header_memo_parity_on_encoded_filenames(monkeypatch):
+    """parse_eml / iter_attachments parse each header once per message;
+    an RFC 2231 ``filename*=UTF-8''…`` parameter and an RFC 2047
+    encoded-word filename decode exactly as under a plain
+    ``policy.default`` parse."""
+    import email
+    import email.policy
+
+    from verified_sources_spark.llm import email_ingest
+
+    raw = (b"From: a@example.com\r\nTo: b@example.com\r\n"
+           b"Subject: =?UTF-8?B?5pel5pys6Kqe?=\r\nMIME-Version: 1.0\r\n"
+           b"Content-Type: multipart/mixed; boundary=\"XX\"\r\n\r\n"
+           b"--XX\r\nContent-Type: text/plain; charset=utf-8\r\n\r\nbody\r\n"
+           b"--XX\r\nContent-Type: text/plain; charset=utf-8\r\n"
+           b"Content-Disposition: attachment; "
+           b"filename*=UTF-8''r%C3%A9sum%C3%A9.txt\r\n\r\nfirst\r\n"
+           b"--XX\r\nContent-Type: application/octet-stream; "
+           b"name=\"=?UTF-8?B?5pel5pys6Kqe?=.bin\"\r\n"
+           b"Content-Disposition: attachment; "
+           b"filename=\"=?UTF-8?B?5pel5pys6Kqe?=.bin\"\r\n"
+           b"Content-Transfer-Encoding: base64\r\n\r\nAAEC\r\n--XX--\r\n")
+
+    def both():
+        return list(email_ingest.iter_attachments(raw)), email_ingest.parse_eml(raw)
+
+    memo = both()
+    assert memo[0] == [("résumé.txt", "text/plain", b"first"),
+                       ("日本語.bin", "application/octet-stream", b"\x00\x01\x02")]
+    monkeypatch.setattr(email_ingest, "_message", lambda data: email.message_from_bytes(
+        data, policy=email.policy.default))
+    assert both() == memo

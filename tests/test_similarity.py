@@ -6,7 +6,12 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from verified_sources_spark.llm.similarity import KMEANS_SCALE, _nearest
+from verified_sources_spark.llm.similarity import KMEANS_SCALE, _adc_tables, _nearest
+
+
+def scaled(v):
+    return np.floor(np.asarray(v, dtype=np.float64) * KMEANS_SCALE
+                    + 0.5).astype(np.int64)
 
 
 class TestNearestKernel:
@@ -38,10 +43,6 @@ class TestNearestKernel:
         assert (_nearest(X, C) == old).all()
 
     def test_exact_int_overflow_raises(self):
-        def scaled(v):
-            return np.floor(np.asarray(v, dtype=np.float64) * KMEANS_SCALE
-                            + 0.5).astype(np.int64)
-
         # 40.0 is nearer 36.0 (cluster 1), but 64-dim int64 distances
         # at this scale wrap; refuse instead of answering cluster 0
         q = scaled(np.full((1, 64), 40.0))
@@ -52,6 +53,20 @@ class TestNearestKernel:
         q = scaled(np.full((1, 64), 18.0))
         C = scaled(np.stack([np.full(64, -18.0), np.full(64, 16.0)]))
         assert _nearest(q, C).tolist() == [1]
+
+    def test_adc_tables_refuse_int64_wrap(self):
+        q = scaled(np.full((1, 64), 40.0))
+        # against -40.0 each 16-dim cell wraps; against 0.0 each cell
+        # fits and only the 4-cell sum the scorer adds would wrap
+        for code in (-40.0, 0.0):
+            books = [scaled(np.full((2, 16), code))] * 4
+            with pytest.raises(ValueError, match="overflow exact int64"):
+                _adc_tables(q, books)
+        q = scaled(np.full((1, 64), 20.0))
+        books = [scaled(np.full((2, 16), v)) for v in (-9.0, 0.0, 5.0, 11.0)]
+        want = [[[sum((int(a) - int(b)) ** 2 for a, b in zip(q[0, s * 16:(s + 1) * 16], c))
+                  for c in books[s]] for s in range(4)]]
+        assert _adc_tables(q, books).tolist() == want
 
 
 class TestProductQuantization:
@@ -82,6 +97,15 @@ class TestProductQuantization:
         # sane overlap, not parity (that's what rerank stages are for)
         recall = len(ex & ap) / len(ex)
         assert recall >= 0.2, recall
+
+    def test_pq_refuses_wrapping_adc_distances(self, spark):
+        from verified_sources_spark.llm.similarity import pq_topk
+
+        schema = "vec_id long, embedding array<float>"
+        corpus = spark.createDataFrame([(i, [-40.0] * 64) for i in range(4)], schema)
+        queries = spark.createDataFrame([(9, [40.0] * 64)], schema)
+        with pytest.raises(ValueError, match="overflow exact int64"):
+            pq_topk(corpus, queries, m=4, n_codes=2, k=2).collect()
 
     def test_pq_deterministic_across_partitionings(self, spark):
         from verified_sources_spark.llm.similarity import pq_topk

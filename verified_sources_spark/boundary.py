@@ -2,29 +2,87 @@
 
 A per-row stage is a function of one input row that yields zero, one or
 many output rows as dicts.  ``map_rows`` owns everything around it: the
-pandas batch loop of ``mapInPandas``, building each output batch with
-the schema's column types, and a stable name for the plan node.
+pandas batch loop of ``mapInPandas``, the Python values each row
+arrives as, building each output batch with the schema's column types,
+and a stable name for the plan node.
 
-The int64 trap this module exists for: ``pd.DataFrame(list_of_dicts)``
-infers a MIXED int+None column as float64, silently truncating 64-bit
-values to the 53-bit mantissa.  For perceptual-hash columns this is data
-corruption that equality tests DON'T catch when both sides of a join
-corrupt identically — it only surfaces when one operator's batch
-contains a refusal row (None) and the other's doesn't, making the same
-asset hash differently in different pipelines.  So every ``long`` field
-of the output schema is built as pandas nullable Int64
-(``pd.array(..., dtype="Int64")``), which keeps all 64 bits and
-round-trips through Arrow as int64 + validity bitmap.
+Handoff contract: a stage receives a ``long``/``int``/``short``/``byte``
+value as a Python ``int`` or ``None``, ``binary`` as ``bytes`` or
+``None`` and ``string`` as ``str`` or ``None``.  Other types arrive as
+pandas delivers them (a null ``double`` as NaN, an array as a numpy
+array).
+
+The int64 trap this module exists for, on both sides of the stage.
+Output: ``pd.DataFrame(list_of_dicts)`` infers a MIXED int+None column
+as float64, silently truncating 64-bit values to the 53-bit mantissa.
+For perceptual-hash columns this is data corruption that equality tests
+DON'T catch when both sides of a join corrupt identically — it only
+surfaces when one operator's batch contains a refusal row (None) and the
+other's doesn't.  So every ``long`` field of the output schema is built
+as pandas nullable Int64 (``pd.array(..., dtype="Int64")``), which keeps
+all 64 bits and round-trips through Arrow as int64 + validity bitmap.
+Input: PySpark's Arrow-to-pandas step hands a ``long`` column with a
+null in the batch over as float64 too, with no option to avoid it, so a
+nullable ``long`` input column crosses as ``decimal(20,0)`` and is
+``int()``-ed in the batch loop (about 1 µs a value, against 0.04 µs
+for plain int64).
+
+Fusion.  When ``df`` is a ``map_rows`` output seen through attribute-only
+projections (``select`` of columns, ``alias``, renames, ``drop``),
+``map_rows`` builds ONE ``mapInPandas`` over the first stage's input:
+each dict the first stage yields goes straight into the next stage, as
+the contract's values, with no Arrow round trip and no second Python
+runner per task.  Chains of any length fold the same way, and the plan
+node is named ``<stage1>+<stage2>+…``.  It does not fuse across
+anything else — a filter, a computed column, a join or union, a
+``cut()`` (the way to share an intermediate: each consumer of an
+uncut stage runs it anyway) — or when the next stage reads a field of a
+type the contract above does not fix, so a fused and an unfused chain
+hand over the same values.  The producer is found by its node's text
+in the analyzed plan, which holds the exprIds of its output attributes,
+unique to that node; only the last ``_REMEMBERED`` stages are kept, so
+a long-lived driver does not keep every DataFrame alive (an evicted
+stage is still read correctly, as a second Python node).
 """
 
 from __future__ import annotations
 
+import re
+import threading
+from collections import OrderedDict
 from collections.abc import Callable, Iterator
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
-from pyspark.sql.types import DataType, LongType, StructType
+from pyspark.sql.types import (
+    BinaryType, ByteType, DataType, IntegerType, LongType, ShortType,
+    StringType, StructType,
+)
 
 __all__ = ["map_rows"]
+
+_INTEGRAL = (ByteType, ShortType, IntegerType, LongType)
+_REMEMBERED = 256
+
+
+@dataclass(frozen=True)
+class _Stage:
+    """How one ``map_rows`` node was built: ``fn`` maps each row of
+    ``source`` (the first stage's input as it crosses, ``ints`` its
+    integral columns) to its output dicts."""
+
+    source: DataFrame
+    ints: frozenset
+    fn: Callable[..., Iterator[dict]]
+    struct: StructType
+    name: str
+
+
+# the last _REMEMBERED stages, keyed by their plan node's text, which
+# holds the exprIds of its output attributes (unique in the one JVM a
+# PySpark process talks to, across sessions)
+_stages: OrderedDict[str, _Stage] = OrderedDict()
+_stages_lock = threading.Lock()
 
 
 def map_rows(df: DataFrame,
@@ -36,22 +94,73 @@ def map_rows(df: DataFrame,
     ``df``'s column order, and yields 0..n dicts keyed by ``schema``'s
     field names; a missing key is null.  The plan node is named
     ``<enclosing>.<fn>`` from ``fn``'s qualified name (its module when
-    ``fn`` is top-level)."""
+    ``fn`` is top-level); a stage fused onto the one it reads (module
+    docstring) is named ``<producer>+<enclosing>.<fn>``."""
     struct = schema if isinstance(schema, StructType) else DataType.fromDDL(schema)
+    name = _stage_name(fn)
+    producer = _producer(df)
+    if producer is None:
+        source, ints = _crossing(df)
+    else:
+        stage, feed = producer
+        source, ints = stage.source, stage.ints
+        fn, name = _compose(stage.fn, feed, fn), f"{stage.name}+{name}"
+    out = _map_in_pandas(source, ints, fn, struct, name)
+    key = _node_text(out._jdf.queryExecution().analyzed())
+    with _stages_lock:
+        _stages[key] = _Stage(source, ints, fn, struct, name)
+        if len(_stages) > _REMEMBERED:
+            _stages.popitem(last=False)
+    return out
+
+
+def _stage_name(fn) -> str:
+    scope = [p for p in fn.__qualname__.split(".") if p != "<locals>"]
+    if len(scope) < 2:
+        scope.insert(0, fn.__module__.rpartition(".")[2])
+    return ".".join(scope[-2:])
+
+
+def _crossing(df: DataFrame):
+    """``df`` as it crosses into Python, nullable ``long`` columns as
+    ``decimal(20,0)``, and the indices of its integral columns."""
+    fields = df.schema.fields
+    ints = frozenset(i for i, f in enumerate(fields)
+                     if isinstance(f.dataType, _INTEGRAL))
+    carried = [f.nullable and isinstance(f.dataType, LongType) for f in fields]
+    if any(carried):
+        quoted = ["`" + f.name.replace("`", "``") + "`" for f in fields]
+        df = df.selectExpr(*(f"CAST({q} AS DECIMAL(20,0)) AS {q}" if c else q
+                             for q, c in zip(quoted, carried)))
+    return df, ints
+
+
+def _map_in_pandas(source: DataFrame, ints: frozenset, fn, struct: StructType,
+                   name: str) -> DataFrame:
+    """The one ``mapInPandas``: input values per the handoff contract,
+    ``fn`` per row, one output frame per input batch."""
     columns = struct.fieldNames()
     longs = frozenset(f.name for f in struct.fields
                       if isinstance(f.dataType, LongType))
 
     def run(batches):
         for pdf in batches:
-            values = zip(*(pdf.iloc[:, i].tolist() for i in range(pdf.shape[1])))
+            values = zip(*(_ints(pdf.iloc[:, i]) if i in ints
+                           else pdf.iloc[:, i].tolist()
+                           for i in range(pdf.shape[1])))
             yield _frame([r for v in values for r in fn(*v)], columns, longs)
 
-    scope = [p for p in fn.__qualname__.split(".") if p != "<locals>"]
-    if len(scope) < 2:
-        scope.insert(0, fn.__module__.rpartition(".")[2])
-    run.__name__ = ".".join(scope[-2:])
-    return df.mapInPandas(run, schema)
+    run.__name__ = name
+    return source.mapInPandas(run, struct)
+
+
+def _ints(col) -> list:
+    """An integral input column as Python ints and None: int64 as is,
+    float64 (a narrower type with a null in the batch) and the decimals
+    a nullable ``long`` crosses as, converted."""
+    if col.dtype.kind in "iu":
+        return col.tolist()
+    return [None if v is None or v != v else int(v) for v in col.tolist()]
 
 
 def _frame(rows: list, columns: list, longs: frozenset):
@@ -63,3 +172,101 @@ def _frame(rows: list, columns: list, longs: frozenset):
         {c: pd.array([r.get(c) for r in rows], dtype="Int64") if c in longs
          else [r.get(c) for r in rows] for c in columns},
         columns=columns)
+
+
+# ---------------------------------------------------------------------------
+# fusion
+
+
+def _int(v):
+    return None if v is None else int(v)
+
+
+def _bytes(v):
+    return None if v is None else v.encode() if isinstance(v, str) else bytes(v)
+
+
+def _str(v):
+    return v
+
+
+# what a value yielded for a field of each type reaches the next stage as,
+# the same as it would after an Arrow round trip
+_HANDOFF = {
+    ByteType: _int, ShortType: _int, IntegerType: _int, LongType: _int,
+    BinaryType: _bytes, StringType: _str,
+}
+
+
+def _compose(first, feed, then):
+    """``then`` over every dict ``first`` yields, ``feed`` picking its
+    arguments: ``(field, handoff)`` per argument."""
+    def chained(*v):
+        for r in first(*v):
+            yield from then(*(h(r.get(k)) for k, h in feed))
+    return chained
+
+
+def _node_text(plan) -> str:
+    """One logical plan node (not its children) as Spark prints it."""
+    return plan.simpleString(1 << 20)
+
+
+# a Project item that only passes or renames an attribute, e.g. ``doc_id#3L``
+# or ``warc#4 AS asset#9``; names outside this charset do not fuse
+_NAME = r"[A-Za-z_][A-Za-z0-9_]*"
+_PASS = re.compile(rf"({_NAME})#(\d+)L?(?: AS ({_NAME})#(\d+)L?)?")
+_OUTPUT = re.compile(r"\[([^\[\]]*)\], (?:true|false)$")
+
+
+def _producer(df: DataFrame):
+    """``(stage, feed)`` when ``df`` reads a remembered stage through
+    attribute-only projections and every field it reads has a handoff,
+    else None.  Reads node texts of the analyzed plan: a few driver
+    round trips, none per column."""
+    plan = df._jdf.queryExecution().analyzed()
+    projects = []
+    while (kind := plan.nodeName()) in ("Project", "SubqueryAlias"):
+        if kind == "Project":
+            projects.append(plan)
+        plan = plan.child()
+    if kind != "MapInPandas":
+        return None
+    key = _node_text(plan)
+    with _stages_lock:
+        stage = _stages.get(key)
+        if stage is not None:
+            _stages.move_to_end(key)
+    if stage is None:
+        return None
+    # exprId -> (name, field of the stage), carried up through each projection
+    found = _OUTPUT.search(key)
+    if found is None:
+        return None
+    reads = {}
+    for item, f in zip(found[1].split(", "), stage.struct.fields):
+        m = _PASS.fullmatch(item)
+        if m is None or m[1] != f.name or m[3]:
+            return None
+        reads[m[2]] = (f.name, f)
+    if len(reads) != len(stage.struct.fields):
+        return None
+    order = list(reads)
+    for proj in reversed(projects):
+        above, order = {}, []
+        for item in _node_text(proj).removeprefix("Project [").removesuffix("]").split(", "):
+            m = _PASS.fullmatch(item)
+            if m is None or reads.get(m[2], ("",))[0] != m[1]:
+                return None
+            out_id = m[4] or m[2]
+            above[out_id] = (m[3] or m[1], reads[m[2]][1])
+            order.append(out_id)
+        reads = above
+    feed = []
+    for i in order:
+        f = reads[i][1]
+        handoff = _HANDOFF.get(type(f.dataType))
+        if handoff is None:
+            return None
+        feed.append((f.name, handoff))
+    return stage, tuple(feed)

@@ -27,6 +27,7 @@ one ``>`` from ``^>+From `` lines.
 from __future__ import annotations
 
 import email
+import email.headerregistry
 import email.message
 import email.policy
 import re
@@ -175,6 +176,33 @@ def iter_mbox(data: bytes):
 # ---------------------------------------------------------------------------
 # parser (stdlib email package — the reader side)
 
+class _HeadersOnce(email.headerregistry.HeaderRegistry):
+    """A header factory that parses each distinct header once.  Under
+    ``policy.default`` every ``msg.get`` re-parses the raw header, and
+    the part walks below read each part's Content-Type many times over
+    (``get_content_type``, ``get_filename``, ``get_content_charset``
+    ...).  Header objects are immutable, so one parse serves them all;
+    :func:`_message` makes a fresh memo per message, so nothing outlives
+    it."""
+
+    def __init__(self):
+        super().__init__()
+        self._parsed = {}
+
+    def __call__(self, name, value):
+        header = self._parsed.get((name, value))
+        if header is None:
+            header = self._parsed[name, value] = super().__call__(name, value)
+        return header
+
+
+def _message(data: bytes) -> email.message.EmailMessage:
+    """``data`` parsed under ``email.policy.default``, with its own
+    header memo."""
+    return email.message_from_bytes(
+        data, policy=email.policy.default.clone(header_factory=_HeadersOnce()))
+
+
 def _part_text(part) -> str | None:
     payload = part.get_payload(decode=True)
     if payload is None:
@@ -198,7 +226,7 @@ def parse_eml(data: bytes) -> dict:
     no parseable header block."""
     if b":" not in data.split(b"\n", 3)[0] and not data.startswith(b"From"):
         raise EmailError("no RFC 5322 header block")
-    msg = email.message_from_bytes(data, policy=email.policy.default)
+    msg = _message(data)
     if msg.get("Subject") is None and msg.get("From") is None:
         raise EmailError("no Subject/From headers — not an email")
     n_parts = 0
@@ -298,7 +326,7 @@ def iter_attachments(data: bytes):
     attachments the same way (sources/inbox — body + attachment
     extraction); at rest, every attachment is a candidate DOCUMENT for
     the corpus, not mail metadata."""
-    msg = email.message_from_bytes(data, policy=email.policy.default)
+    msg = _message(data)
     if msg.get("Subject") is None and msg.get("From") is None:
         raise EmailError("no Subject/From headers — not an email")
     for part in msg.walk():

@@ -249,6 +249,27 @@ def _nearest(X, C, n_probe: int | None = None):
     return np.argsort(scores, axis=1, kind="stable")[:, :n_probe]
 
 
+def _adc_tables(Q, books):
+    """Asymmetric-distance tables, exact in int64: ``t[q, s, c]`` is
+    Σ(q_s − books[s][c])² for query ``q``'s ``s``-th sub-vector.  The
+    scorers add one cell per subspace into a vector's distance, so a
+    query whose largest cells sum to 2**63 raises ``ValueError`` (the
+    explicit difference wraps where ``_nearest``'s norm bound does not
+    look: the |q|² term)."""
+    import numpy as np
+
+    sub = books[0].shape[1]
+    t = np.empty((len(Q), len(books), len(books[0])), dtype=np.int64)
+    worst = np.zeros(len(Q))
+    for s, book in enumerate(books):
+        d = Q[:, None, s * sub : (s + 1) * sub] - book[None, :, :]
+        worst += np.square(d, dtype=np.float64).sum(axis=2).max(axis=1, initial=0)
+        t[:, s, :] = (d * d).sum(axis=2)
+    if (worst >= 0.999 * 2.0**63).any():
+        raise ValueError(f"ADC distances up to {worst.max():.3g} overflow exact int64")
+    return t
+
+
 def rank_clusters(
     df: DataFrame,
     id_name: str,
@@ -851,11 +872,7 @@ def pq_topk(
     qids = [int(r[0]) for r in qrows]
     Q = _scaled_int_matrix([r[1] for r in qrows])
     # dtab[qi, s, c] = exact L2^2 between query sub-vector and code c
-    dtab = np.empty((len(qids), m, n_codes), dtype=np.int64)
-    for s in range(m):
-        qs = Q[:, s * sub : (s + 1) * sub]
-        d = qs[:, None, :] - books[s][None, :, :]
-        dtab[:, s, :] = (d * d).sum(axis=2)
+    dtab = _adc_tables(Q, books)
 
     spark = corpus.sparkSession
     b_books = spark.sparkContext.broadcast([b.copy() for b in books])
@@ -1003,14 +1020,10 @@ def ivfpq_topk(
     Q = _scaled_int_matrix([r[1] for r in qrows])
     # probe lists + per-(query, probed-cell) ADC tables
     probe = _nearest(Q, cents, n_probe)        # (nq, n_probe)
-    # dtabs[qi][p][s][c]
-    dtabs = np.empty((len(qids), n_probe, m, n_codes), dtype=np.int64)
-    for qi in range(len(qids)):
-        for p in range(n_probe):
-            qr = Q[qi] - cents[probe[qi, p]]
-            for s in range(m):
-                d = qr[s * sub : (s + 1) * sub][None, :] - books[s]
-                dtabs[qi, p, s] = (d * d).sum(axis=1)
+    # dtabs[qi][p][s][c]: the tables of each query's residual to its
+    # p-th probed cell
+    dtabs = np.stack([_adc_tables(Q - cents[probe[:, p]], books)
+                      for p in range(probe.shape[1])], axis=1)
 
     spark = corpus.sparkSession
     b_cents = spark.sparkContext.broadcast(cents.copy())

@@ -4595,7 +4595,8 @@ def cross_source_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
                         else zipped)}
 
     # assets feeds the three extract legs; uncut, the mint chain (every
-    # doc encoded as WARC + EML + zip) executed once PER LEG — three
+    # doc encoded as WARC + EML + zip) executes once PER LEG, fused into
+    # that leg's Python stage (boundary.map_rows) — three
     # full mint passes with two of the three blobs discarded each time
     # (r16, §2.4; found by the Python-node plan census: the same
     # MapInPandas mint appeared 3x in the final plan).  Cut only when
