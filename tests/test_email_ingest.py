@@ -220,3 +220,18 @@ def test_header_memo_parity_on_encoded_filenames(monkeypatch):
     monkeypatch.setattr(email_ingest, "_message", lambda data: email.message_from_bytes(
         data, policy=email.policy.default))
     assert both() == memo
+
+
+def test_header_classes_are_built_once():
+    """Every factory hands out one shared class per registry class, in
+    any header-name case; unknown names share the default class."""
+    import email.headerregistry
+
+    from verified_sources_spark.llm.email_ingest import _HeadersOnce
+
+    first, second = _HeadersOnce(), _HeadersOnce()
+    assert first["Subject"] is second["subject"]
+    assert first["X-One"] is second["X-Two"]
+    assert first["Content-Type"] is not first["Subject"]
+    assert issubclass(first["Content-Type"], email.headerregistry.ContentTypeHeader)
+    assert issubclass(first["Content-Type"], email.headerregistry.BaseHeader)

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from verified_sources_spark.llm.exact_dedup import exact_dedup, exact_dedup_groups
 from verified_sources_spark.llm.minhash import (
@@ -326,15 +327,132 @@ def test_vector_index_backends_same_contract(spark, tmp_path):
     assert got == {1: 1, 2: 2}  # store includes self; cosine(1,1)=1 tops
 
 
-def test_connected_components_beats_greedy_keep(spark):
+# sizing.LOCAL_GRAPH_MAX_EDGES that sends every graph, even an empty one,
+# to each connected-components branch
+CC_BRANCHES = {"driver": 10**9, "spark_loop": -1}
+
+
+def _components(monkeypatch, fn):
+    """``fn()``'s sorted rows with the graph labelled on the driver and by
+    the Spark loop; the two branches must return the same rows."""
+    from verified_sources_spark import sizing
+
+    out = {}
+    for branch, cap in CC_BRANCHES.items():
+        monkeypatch.setattr(sizing, "LOCAL_GRAPH_MAX_EDGES", cap)
+        df = fn()
+        out[branch] = (df.schema.simpleString(), sorted(tuple(r) for r in df.collect()))
+    assert out["driver"] == out["spark_loop"]
+    return out["driver"][1]
+
+
+def _cc(monkeypatch, pairs, **kwargs):
+    from verified_sources_spark.llm.neardup import connected_components
+
+    return dict(_components(monkeypatch, lambda: connected_components(pairs, **kwargs)))
+
+
+def test_connected_components_beats_greedy_keep(spark, monkeypatch):
     """Edges (2,3),(1,3): node 2 never appears as id_b, so greedy
     drop-id_b keeps both 1 and 2 — components collapse the cluster to
     its true minimum."""
+    pairs = spark.createDataFrame([(2, 3), (1, 3), (7, 8)], "id_a long, id_b long")
+    assert _cc(monkeypatch, pairs) == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
+
+
+def test_connected_components_edge_cases(spark, monkeypatch):
+    """Duplicate and reversed pairs are one edge, a self-pair is a
+    one-node component, pairs with a null end are not edges, no pairs
+    give no nodes, int ids stay int and int with long widens to long, on
+    both branches."""
+    long_pairs = "id_a long, id_b long"
+    dups = spark.createDataFrame([(2, 3), (3, 2), (2, 3), (5, 5), (9, 4)], long_pairs)
+    assert _cc(monkeypatch, dups) == {2: 2, 3: 2, 4: 4, 5: 5, 9: 4}
+    nulls = spark.createDataFrame([(1, None), (None, 2), (3, 4)], long_pairs)
+    assert _cc(monkeypatch, nulls) == {3: 3, 4: 3}
+    assert _cc(monkeypatch, spark.createDataFrame([], long_pairs)) == {}
+    ints = spark.createDataFrame([(8, 6), (7, 8)], "a int, b int")
+    assert _cc(monkeypatch, ints, id_a="a", id_b="b") == {6: 6, 7: 6, 8: 6}
+    mixed = spark.createDataFrame([(8, 6), (7, 8)], "id_a int, id_b long")
+    assert _cc(monkeypatch, mixed) == {6: 6, 7: 6, 8: 6}
     from verified_sources_spark.llm.neardup import connected_components
 
-    pairs = spark.createDataFrame([(2, 3), (1, 3), (7, 8)], "id_a long, id_b long")
-    comp = {r["node"]: r["component"] for r in connected_components(pairs).collect()}
-    assert comp == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
+    assert connected_components(ints, "a", "b").schema.simpleString() == (
+        "struct<node:int,component:int>"
+    )
+
+
+def test_connected_components_reliable_cut_mode(spark, monkeypatch, tmp_path):
+    """Durable checkpoints instead of local ones change neither branch's
+    labels."""
+    sc = spark.sparkContext._jsc.sc()
+    before = sc.checkpointDir()
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ck"))
+    monkeypatch.setenv("SPARK_GRAFT_CUT_MODE", "reliable")
+    try:
+        pairs = spark.createDataFrame([(5, 9), (9, 1), (2, 3)], "id_a long, id_b long")
+        assert _cc(monkeypatch, pairs) == {1: 1, 5: 1, 9: 1, 2: 2, 3: 2}
+    finally:
+        getattr(sc, "checkpointDir_$eq")(before)  # SparkContext's private var
+
+
+def test_connected_components_evaluates_pairs_once(spark, monkeypatch):
+    """Both branches run the pair pipeline exactly once: the driver reads
+    the pairs' cut, and the Spark loop symmetrizes that same cut."""
+    from verified_sources_spark import sizing
+    from verified_sources_spark.llm.neardup import connected_components
+
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def tally(batches):
+        for pdf in batches:
+            evaluated.add(len(pdf))
+            yield pdf
+
+    base = spark.createDataFrame([(i, i + 1) for i in range(50)], "id_a long, id_b long")
+    pairs = base.repartition(3).mapInPandas(tally, base.schema)
+    for cap in CC_BRANCHES.values():
+        monkeypatch.setattr(sizing, "LOCAL_GRAPH_MAX_EDGES", cap)
+        evaluated.value = 0
+        assert connected_components(pairs).count() == 51
+        assert evaluated.value == 50
+
+
+def test_connected_components_loop_runs_only_its_cuts(spark, monkeypatch):
+    """On the Spark loop every job belongs to an eager cut: each
+    iteration's changed-label count is observed on its own cut's job, so
+    an iteration runs no separate count action (one job fewer than a cut
+    plus a count).  Job ids come from the status tracker."""
+    from verified_sources_spark import cut as cut_module
+    from verified_sources_spark import sizing
+    from verified_sources_spark.llm import neardup
+
+    monkeypatch.setattr(sizing, "LOCAL_GRAPH_MAX_EDGES", 0)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "connected_components_jobs"
+    cut_jobs = []
+    plain_cut = cut_module.cut
+
+    def tracked_cut(df, eager=False):
+        before = set(tracker.getJobIdsForGroup(group))
+        out = plain_cut(df, eager)
+        cut_jobs.append(set(tracker.getJobIdsForGroup(group)) - before)
+        return out
+
+    monkeypatch.setattr(cut_module, "cut", tracked_cut)
+    monkeypatch.setattr(neardup, "cut", tracked_cut)
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(399)], "id_a long, id_b long")
+    sc.setJobGroup(group, "connected components on a 400-node chain")
+    try:
+        neardup.connected_components(pairs)
+        jobs = set(tracker.getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    iterations = len(cut_jobs) - 3  # the pairs, the symmetric edges, the first labels
+    assert iterations >= 5
+    assert all(cut_jobs)
+    assert jobs == set().union(*cut_jobs)
 
 
 def test_near_dedup_docs_collapses_clusters(spark):
@@ -517,11 +635,10 @@ def test_minhash_family_seeds_are_independent():
         assert abs(minvals[i] - j * v1) > 1000, "linear-family pattern detected"
 
 
-def test_simhash_dedup_groups_linear_scheme(spark):
+def test_simhash_dedup_groups_linear_scheme(spark, monkeypatch):
     """Planted near-identical cluster collapses into ONE group via sorted-
     neighbor chaining; distinct docs stay singletons; groups agree with the
     transitive closure of the exact pair lister on this data."""
-    from verified_sources_spark.llm.neardup import connected_components
     from verified_sources_spark.llm.simhash import simhash_dedup_groups, simhash_near_pairs
 
     base = (
@@ -534,30 +651,41 @@ def test_simhash_dedup_groups_linear_scheme(spark):
         (101, "another unrelated piece concerning orchestral music and violins"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    groups = {r["doc_id"]: (r["group"], r["group_size"]) for r in
-              simhash_dedup_groups(df, "doc_id", "text").collect()}
+    groups = {doc: (group, size) for doc, group, size in _components(
+        monkeypatch, lambda: simhash_dedup_groups(df, "doc_id", "text"))}
     assert len(groups) == 22  # one row per doc
     cluster_groups = {groups[i][0] for i in range(20)}
     assert len(cluster_groups) == 1 and groups[0][1] == 20
     assert groups[100][1] == 1 and groups[101][1] == 1
     # cross-check vs exact pair lister's transitive closure
-    pairs = simhash_near_pairs(df, "doc_id", "text")
-    comp = {r["node"]: r["component"] for r in connected_components(pairs).collect()}
+    comp = _cc(monkeypatch, simhash_near_pairs(df, "doc_id", "text"))
     for i in range(20):
         assert comp[i] == comp[0]
 
 
-def test_connected_components_converges_on_long_chains(spark):
+def test_connected_components_converges_on_long_chains(spark, monkeypatch):
     """Pointer jumping: a 400-node chain (diameter 399) must converge
     within the default 25 iterations — plain hash-min would need ~400."""
-    from verified_sources_spark.llm.neardup import connected_components
-
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(399)], "id_a long, id_b long"
     )
-    comp = connected_components(pairs).collect()
+    comp = _cc(monkeypatch, pairs)
     assert len(comp) == 400
-    assert {r["component"] for r in comp} == {0}
+    assert set(comp.values()) == {0}
+
+
+def test_connected_components_loop_raises_without_convergence(spark, monkeypatch):
+    """The Spark loop refuses to return split components when
+    ``max_iters`` runs out before the labels stop changing."""
+    from verified_sources_spark import sizing
+    from verified_sources_spark.llm.neardup import connected_components
+
+    monkeypatch.setattr(sizing, "LOCAL_GRAPH_MAX_EDGES", 0)
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(399)], "id_a long, id_b long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge in 2 iterations"):
+        connected_components(pairs, max_iters=2)
 
 
 def test_simhash_dedup_groups_keeps_zero_token_docs(spark):

@@ -135,11 +135,25 @@ def test_shuffled_shards_no_global_sort(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_leakage_split_reuses_banded_pipeline(spark):
+def test_leakage_split_reuses_banded_pipeline(spark, monkeypatch):
     """The split's candidate stage is the capped LSH pipeline — no
-    all-pairs: the plan must contain no cartesian product and no
-    single-partition exchange."""
-    plan = _plan(spark, "leakage_safe_split_docs")
+    all-pairs: the verified-pair plan it hands to connected components
+    (whose result may be a driver-built relation, not a plan) must read
+    the documents with no cartesian product and no single-partition
+    exchange."""
+    from verified_sources_spark.llm import splits
+
+    handed = []
+    labelled = splits.connected_components
+
+    def spy(pairs, *args, **kwargs):
+        handed.append(pairs)
+        return labelled(pairs, *args, **kwargs)
+
+    monkeypatch.setattr(splits, "connected_components", spy)
+    _plan(spark, "leakage_safe_split_docs")
+    plan = handed[0]._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan parquet" in plan
     assert "CartesianProduct" not in plan
     assert "SinglePartition" not in plan
 

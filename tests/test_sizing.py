@@ -4,9 +4,10 @@ and sessionize's hot-user gate in verified_sources_spark.operators.sessionize).
 Each dispatching registry entry runs with its threshold forced to 0
 (every input counts as large) and to 10**9 (every input counts as
 small).  The plan must really take the other branch — the Arrow GEMM's
-MapInPandas, a cut's LogicalRDD or the bucketed sessionizer's
-boundary-merge Join appears or disappears — and the rows must hash
-identically, so a threshold only ever moves cost.
+MapInPandas, a cut's LogicalRDD, the Spark connected-components loop's
+changed flag or the bucketed sessionizer's boundary-merge Join appears
+or disappears — and the rows must hash identically, so a threshold only
+ever moves cost.
 """
 
 from __future__ import annotations
@@ -25,6 +26,10 @@ BRANCH_MARKERS = {
     "cross_source_dedup_docs": "LogicalRDD",
     "incremental_dedup_docs": "LogicalRDD",
     "sessionize_events": "Join",
+    # the Spark loop's last cut keeps its changed flag; driver labels do not
+    "near_dedup_docs_keep": "_chg",
+    "leakage_safe_split_docs": "_chg",
+    "simhash_dedup_groups_docs": "_chg",
 }
 
 
@@ -35,6 +40,7 @@ def test_branch_parity(spark, sf_dir, monkeypatch, name):
     def run(min_rows):
         monkeypatch.setattr(sizing, "GEMM_MIN_ROWS", min_rows)
         monkeypatch.setattr(sizing, "CUT_MIN_ROWS", min_rows)
+        monkeypatch.setattr(sizing, "LOCAL_GRAPH_MAX_EDGES", min_rows)
         monkeypatch.setattr(sessionize, "HOT_MIN_ROWS", min_rows)
         monkeypatch.setattr(sessionize, "HOT_SKEW_RATIO", min_rows)
         df = QUERIES[name](spark, sf_dir)

@@ -39,3 +39,10 @@ def test_custom_mint_prints_the_planted_count(spark, tmp_path, capsys):
     # one hot page in 5/6 of the crawl: one group for it, one per unique
     soak.run(spark, "crawl_hot_page", N, str(tmp_path))
     assert _printed_rows(capsys.readouterr().out) == [N // 6 + 1]
+
+
+def test_chain_star_components_print_the_planted_count(spark, tmp_path, capsys):
+    # ten 20-node components, half chains and half stars hubbed on their
+    # largest id; the scenario also checks both labelling branches agree
+    soak.run(spark, "components_chain_star", N, str(tmp_path))
+    assert _printed_rows(capsys.readouterr().out) == [N // 20]

@@ -11,9 +11,9 @@ entries mint their own assets from ``doc_id``, so a scenario is just
 registry cannot produce the shape: one page copied into most of a
 crawl, one mail with thousands of attachments, one zip with thousands
 of members, one PDF with hundreds of JBIG2 regions, a media ledger
-grown over many batches, table-format deletes and compaction, and
-operator-level skew (a celebrity link target, one hot host, one hot
-span in every document).
+grown over many batches, table-format deletes and compaction, a pair
+graph too big to label on the driver, and operator-level skew (a
+celebrity link target, one hot host, one hot span in every document).
 
 Each measured step prints one line: label, seconds, output rows and
 input rows per second per core.  ``--n`` sets the input size (documents,
@@ -577,6 +577,48 @@ def fetch_one_hot_host(spark, n, root):
               lambda: fetch_schedule(frontier).count(), n)
 
 
+def chain_star_edges(spark, n: int, size: int = 20):
+    """(id_a, id_b) edges over nodes 0..n-1 in components of ``size``
+    consecutive ids: even components are chains, odd ones stars whose hub
+    is their LARGEST id (not the minimum a label must reach).  Returns
+    the edges, their count and the number of components."""
+    node = F.col("id")
+    comp = F.floor(node / size)
+    hub = F.least((comp + 1) * size, F.lit(n)) - 1
+    chain = comp % 2 == 0
+    edges = (spark.range(n)
+             .where(F.when(chain, node > comp * size).otherwise(node != hub))
+             .select(F.when(chain, node - 1).otherwise(node).alias("id_a"),
+                     F.when(chain, node).otherwise(hub).alias("id_b")))
+    n_comps = n // size + (1 if n % size >= 2 else 0)
+    return edges, n - (n + size - 1) // size, n_comps  # size-1 edges a component
+
+
+def components_chain_star(spark, n, root):
+    from verified_sources_spark import sizing
+    from verified_sources_spark.llm.neardup import connected_components
+
+    edges, n_edges, n_comps = chain_star_edges(spark, n)
+    cap = sizing.LOCAL_GRAPH_MAX_EDGES
+    where = "Spark loop" if n_edges > cap else "driver"
+    comps = timed(spark, f"connected_components [{where}], {n_edges} chain+star "
+                  f"edges over {n} nodes",
+                  lambda: connected_components(edges)
+                  .select("component").distinct().count(), n)
+    assert comps == n_comps, (comps, n_comps)
+    # both branches on a subset small enough for the driver: same labels
+    sub = edges.where(F.col("id_b") < min(n, 2_000))
+    labels = []
+    try:
+        for forced in (0, n):
+            sizing.LOCAL_GRAPH_MAX_EDGES = forced
+            labels.append(sorted(map(tuple, connected_components(sub).collect())))
+    finally:
+        sizing.LOCAL_GRAPH_MAX_EDGES = cap
+    assert labels[0] == labels[1], "driver and Spark-loop components differ"
+    print(f"    driver and Spark loop agree on {len(labels[0])} nodes", flush=True)
+
+
 SELECTION_OPS = ("blocklist_filter_docs", "vocab_estimate_docs",
                  "length_quantiles_docs", "selection_pipeline_docs",
                  "blocklist_idn_docs", "pmi_collocations_docs",
@@ -667,6 +709,10 @@ SCENARIOS: dict[str, Scenario] = {
     "budget_many_groups": Scenario(
         budget_many_groups, 100_000,
         "budget_apportionment of n weights into 7 and 10k groups"),
+    "components_chain_star": Scenario(
+        components_chain_star, 1_200_000,
+        "connected_components of 20-node chain/star components over n "
+        "nodes, past the driver-labelling bound"),
     "fetch_one_hot_host": Scenario(
         fetch_one_hot_host, 100_000,
         "fetch_schedule of n URLs, uniform then one host owning half"),

@@ -33,10 +33,15 @@ cluster runs can flip the mechanism without touching call sites:
   Reliable checkpoint files are NOT deleted when their RDD is garbage
   collected unless the application sets
   ``spark.cleaner.referenceTracking.cleanCheckpoints=true``.  Loops that
-  cut once per iteration — connected components (llm/neardup.py), BPE
-  merge training (llm/bpe.py) — otherwise grow the checkpoint directory
-  without bound; set it on the session (or in ``spark-defaults.conf``)
-  for any long-lived reliable-mode driver.
+  cut once per iteration — connected components on graphs too big to
+  label on the driver (llm/neardup.py), BPE merge training (llm/bpe.py)
+  — otherwise grow the checkpoint directory without bound; set it on the
+  session (or in ``spark-defaults.conf``) for any long-lived
+  reliable-mode driver.
+
+A caller that needs a count or an extreme of the rows it cuts reads it
+from the cut's own job with :func:`observed_cut` instead of running a
+second action over the result.
 
 Unknown mode values fall back to ``local`` (a typo must not change
 query semantics or crash query construction).
@@ -47,7 +52,8 @@ from __future__ import annotations
 import os
 import warnings
 
-from pyspark.sql import DataFrame
+from pyspark.serializers import CPickleSerializer
+from pyspark.sql import Column, DataFrame
 
 _VALID_MODES = ("local", "reliable")
 
@@ -93,3 +99,23 @@ def cut(df: DataFrame, eager: bool = False) -> DataFrame:
             )
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+def observed_cut(df: DataFrame, name: str, *metrics: Column) -> tuple[DataFrame, tuple]:
+    """Eager :func:`cut` of ``df`` plus the values of the aggregate
+    ``metrics`` over its rows, computed on the cut's own job by a named
+    ``DataFrame.observe`` — no second action over the result.
+
+    The values are read from the observed frame's query execution, not
+    through ``pyspark.sql.Observation``: an Observation creates the
+    session's ObservationManager, which is not serializable, and from
+    then on every task closure that captures the session (an ML model
+    keeps it in its training summary) fails with
+    NotSerializableException.  ``name`` must be unique within the plan
+    being cut; a cut truncates lineage, so a loop may reuse one name.
+    """
+    observed = df.observe(name, *metrics)
+    out = cut(observed, eager=True)
+    jrow = observed._jdf.queryExecution().observedMetrics().get(name).get()
+    utils = df.sparkSession._jvm.org.apache.spark.sql.api.python.PythonSQLUtils
+    return out, tuple(CPickleSerializer().loads(utils.toPyRow(jrow)))

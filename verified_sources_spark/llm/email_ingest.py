@@ -176,18 +176,32 @@ def iter_mbox(data: bytes):
 # ---------------------------------------------------------------------------
 # parser (stdlib email package — the reader side)
 
+# header classes, keyed by (registry class, base class): the stdlib
+# HeaderRegistry.__getitem__ builds a new class with type() on every
+# call.  Classes, not row data; bounded by the registry's few classes
+# (every unknown header name maps to the one default class)
+_HEADER_CLASSES: dict[tuple[type, type], type] = {}
+
+
 class _HeadersOnce(email.headerregistry.HeaderRegistry):
     """A header factory that parses each distinct header once.  Under
     ``policy.default`` every ``msg.get`` re-parses the raw header, and
     the part walks below read each part's Content-Type many times over
     (``get_content_type``, ``get_filename``, ``get_content_charset``
     ...).  Header objects are immutable, so one parse serves them all;
-    :func:`_message` makes a fresh memo per message, so nothing outlives
-    it."""
+    :func:`_message` makes a fresh memo per message, so no parsed header
+    outlives it."""
 
     def __init__(self):
         super().__init__()
         self._parsed = {}
+
+    def __getitem__(self, name):
+        key = (self.registry.get(name.lower(), self.default_class), self.base_class)
+        cls = _HEADER_CLASSES.get(key)
+        if cls is None:
+            cls = _HEADER_CLASSES[key] = type("_" + key[0].__name__, key, {})
+        return cls
 
     def __call__(self, name, value):
         header = self._parsed.get((name, value))

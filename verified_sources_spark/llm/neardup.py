@@ -8,15 +8,20 @@ closest surface is content-hash dedup on ingestion —
 sources/unstructured_data/helpers.py content hashing — which
 ``exact_dedup`` covers; near-dup needs the cluster step).
 
-Connected components use iterative min-label propagation expressed as
-DataFrame joins (the standard "hash-min" scheme): per iteration each
-node takes the minimum label among itself and its neighbors.  Iterations
-run in a driver loop with a convergence check — the same bounded-loop
-pattern as the IVF quantizer's Lloyd iterations (similarity.py): each
-step is one shuffle-join plus one aggregate; only the changed-count
-reaches the driver; labels are localCheckpoint'ed so lineage stays flat.
-Converges in O(component diameter) steps — near-dup clusters are
-star/clique shaped, so 2-4 in practice.
+Connected components run the pair pipeline once, into an eager cut whose
+own job counts the edges.  A graph of at most
+``sizing.LOCAL_GRAPH_MAX_EDGES`` edges — every near-dup graph of the
+graded corpora, where clusters are small stars and cliques — is read back
+with ``toArrow`` and labelled on the driver in numpy (hash-min plus
+pointer jumping to a fixed point); the labels return as a DataFrame built
+from Arrow, read on the JVM with no Python worker.  A larger graph runs
+min-label propagation as DataFrame joins (the standard "hash-min"
+scheme plus pointer jumping) in a driver loop with a convergence check —
+the same bounded-loop pattern as the IVF quantizer's Lloyd iterations
+(similarity.py): each iteration is one eager cut whose own job counts
+the changed labels, so only that count reaches the driver and lineage
+stays flat.  Both branches converge in O(log component diameter) steps
+and return the same rows.
 
 Greedy ``drop every id_b`` (similarity.near_dup_keep) over-keeps when a
 component's connectivity runs through a higher id (edges (2,3),(1,3)
@@ -28,7 +33,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from verified_sources_spark.cut import cut
+from verified_sources_spark import sizing
+from verified_sources_spark.cut import cut, observed_cut
 
 from verified_sources_spark.llm.minhash import lsh_candidate_pairs, ngram_jaccard
 
@@ -40,19 +46,79 @@ def connected_components(
     max_iters: int = 25,
 ) -> DataFrame:
     """(node, component) for every node in ``pairs``; component = minimum
-    node id reachable through the pair graph.
+    node id reachable through the pair graph.  Pairs with a null end are
+    not edges.
+
+    The pairs are cut once, their count observed on the cut's own job.
+    At most ``sizing.LOCAL_GRAPH_MAX_EDGES`` edges are labelled on the
+    driver (:func:`_label_on_driver`); more run the Spark loop
+    (:func:`_label_with_spark`).  Either way the pair pipeline is
+    evaluated exactly once, and both return the same rows.
+    """
+    raw, (n_edges,) = observed_cut(
+        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")).where(
+            F.col("src").isNotNull() & F.col("dst").isNotNull()
+        ),
+        "connected_components_edges",
+        F.count(F.lit(1)).alias("edges"),
+    )
+    if n_edges <= sizing.LOCAL_GRAPH_MAX_EDGES:
+        return _label_on_driver(raw)
+    return _label_with_spark(raw, max_iters)
+
+
+def _label_on_driver(raw: DataFrame) -> DataFrame:
+    """Components of the cut (src, dst) edges, labelled in numpy.
+
+    Nodes are ranked by id, so the minimum rank is the minimum id.  Each
+    round takes hash-min over the edges, then jumps every label to its
+    label's label; the fixed point gives every node its component's
+    minimum.  The result is built from Arrow, which the JVM reads
+    without a Python worker."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    t = raw.toArrow()
+    # every src, then every dst, widened to one type as a Spark union would
+    ends = pa.concat_tables(
+        [t.select([end]).rename_columns(["id"]) for end in ("src", "dst")],
+        promote_options="permissive",
+    ).column("id")
+    nodes = pc.unique(ends)
+    nodes = nodes.take(pc.sort_indices(nodes))
+    rank = pc.index_in(ends, value_set=nodes).to_numpy()
+    src, dst = rank[: t.num_rows], rank[t.num_rows :]
+    label = np.arange(len(nodes))
+    while True:
+        step = label.copy()
+        low = np.minimum(label[src], label[dst])
+        np.minimum.at(step, src, low)
+        np.minimum.at(step, dst, low)
+        step = step[step]
+        if np.array_equal(step, label):
+            break
+        label = step
+    out = pa.table({"node": nodes, "component": nodes.take(pa.array(label))})
+    return raw.sparkSession.createDataFrame(out)
+
+
+def _label_with_spark(raw: DataFrame, max_iters: int) -> DataFrame:
+    """Components of the cut (src, dst) edges by iterated Spark joins,
+    for graphs whose edges do not fit on the driver.
 
     Each iteration does hash-min over edges AND one pointer-jumping hop
     (label ← label's label), so labels spread geometrically: convergence
     is O(log diameter) iterations, not O(diameter) — a 100k-node CHAIN
     (the sorted-probe edge graphs of ``simhash_dedup_groups`` are exactly
     chain-shaped inside a hot bucket) converges in ~17 iterations where
-    plain hash-min would need 100k/2.  Raises if ``max_iters`` passes
-    without convergence rather than returning silently-split components.
+    plain hash-min would need 100k/2.  Each iteration is one eager cut,
+    whose own job also counts the changed labels.  Raises if
+    ``max_iters`` passes without convergence rather than returning
+    silently-split components.
     """
-    edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    edges = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    edges = raw.unionByName(
+        raw.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()
     edges = edges.transform(cut, eager=True)  # reused every iteration
 
@@ -109,15 +175,17 @@ def connected_components(
                 F.col("_prev"),
             )
         )
-        # carry the changed flag INTO the checkpointed blocks: the
-        # convergence probe is then a scan-and-count of blocks instead of
-        # the former full shuffle join of new labels against old (r16)
-        new_labels = jumped.select(
-            "node",
-            "component",
-            (F.col("component") != F.col("_prev")).alias("_chg"),
-        ).transform(cut, eager=True)
-        changed = new_labels.filter(F.col("_chg")).count()
+        # the changed labels are counted on the cut's own job, not by a
+        # second action over its blocks
+        new_labels, (changed,) = observed_cut(
+            jumped.select(
+                "node",
+                "component",
+                (F.col("component") != F.col("_prev")).alias("_chg"),
+            ),
+            "connected_components_changed",
+            F.count_if(F.col("_chg")).alias("changed"),
+        )
         labels = new_labels.select("node", "component")
         if changed == 0:
             return labels

@@ -33,10 +33,9 @@ from dataclasses import dataclass
 from typing import Any
 
 import pyspark.sql.functions as F
-from pyspark.serializers import CPickleSerializer
 from pyspark.sql import DataFrame, SparkSession
 
-from verified_sources_spark.cut import cut
+from verified_sources_spark.cut import observed_cut
 
 from verified_sources_spark.operators.incremental import (
     CursorStore,
@@ -48,20 +47,6 @@ from verified_sources_spark.operators.table_format import ManifestTable
 
 
 _LOAD_METRICS = "pipeline_load"
-
-
-def _observed_metrics(df: DataFrame, name: str) -> tuple:
-    """The values ``df.observe(name, ...)`` collected when ``df`` ran.
-
-    Read from ``df``'s own query execution, not through
-    ``pyspark.sql.Observation``: an Observation creates the session's
-    ObservationManager, which is not serializable, and from then on every
-    task closure that captures the session (an ML model keeps it in its
-    training summary) fails with NotSerializableException.
-    """
-    jrow = df._jdf.queryExecution().observedMetrics().get(name).get()
-    utils = df.sparkSession._jvm.org.apache.spark.sql.api.python.PythonSQLUtils
-    return tuple(CPickleSerializer().loads(utils.toPyRow(jrow)))
 
 
 @dataclass
@@ -122,7 +107,7 @@ class Pipeline:
         """
         df = data
         resource = f"{table_name}"
-        last = observed = None
+        last = metrics = None
         if incremental is not None:
             last = self.state.get(resource)
             df = incremental_filter(
@@ -143,12 +128,12 @@ class Pipeline:
             # cursor past rows that were never written (silent data loss).
             # The count and the new watermark are observed on the cut's own
             # job, not by two more actions over its result.
-            observed = df.observe(
+            df, metrics = observed_cut(
+                df,
                 _LOAD_METRICS,
                 F.count(F.lit(1)).alias("rows"),
                 F.max(_cursor_col(incremental)).alias("cursor"),
             )
-            df = observed.transform(cut, eager=True)
 
         sink = self.sink(table_name, partition_by=partition_by)
         if write_disposition == "append":
@@ -168,9 +153,9 @@ class Pipeline:
         else:
             raise ValueError(f"unknown write_disposition: {write_disposition!r}")
 
-        if observed is None:
+        if metrics is None:
             return LoadInfo(table_name, write_disposition, df.count())
-        rows, cursor_val = _observed_metrics(observed, _LOAD_METRICS)
+        rows, cursor_val = metrics
         if cursor_val is not None:
             # commit AFTER the successful write — a failed load never
             # advances the cursor (the reference's state contract).

@@ -25,6 +25,13 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
+def default_master() -> str:
+    """``local[N]`` with one task slot per core this process may use (its
+    CPU affinity), unless ``SPARK_GRAFT_CPUS`` names the count."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    return f"local[{cpus}]"
+
+
 def get_spark(
     app_name: str = "verified-sources-spark",
     master: str | None = None,
@@ -32,8 +39,7 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's defaults."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
+    master = master or default_master()
     shuffle = shuffle_partitions or int(
         os.environ.get("SPARK_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
     )

@@ -1,12 +1,15 @@
 """Size-based plan choices: the one place the engine turns an input's size
 into a plan decision.
 
-Every decision reads a driver-side bound — parquet footers and scan
+Most decisions read a driver-side bound — parquet footers and scan
 metadata, never a Spark job — so asking costs milliseconds, not a
-cluster round trip.  An unknowable size always takes the branch that is
-safe at scale.  Both sides of every decision return identical rows
-(tests/test_sizing.py runs each dispatching registry entry on both); the
-thresholds only move cost.
+cluster round trip.  Connected components are the exception: a pair
+graph's size is unknowable before its pipeline runs, so it is counted
+by an ``observe`` on the job that cuts the pairs anyway (no extra job).
+An unknowable size always takes the branch that is safe at scale.  Both
+sides of every decision return identical rows (tests/test_sizing.py
+runs each dispatching registry entry on both); the thresholds only move
+cost.
 
 The thresholds are module constants read at call time, so a test can
 monkeypatch them to force either branch.
@@ -32,6 +35,18 @@ GEMM_MIN_ROWS = 20_000
 # and stage barrier cost ~0.15 s; above it the second pass is a genuine
 # 2x of the dominant compute, so one pass through a cut wins.
 CUT_MIN_ROWS = 200_000
+
+# connected components: at most this many edges are read to the driver
+# and labelled in numpy, more run the Spark join loop.  Measured (chain +
+# star graphs of 20-node components, labels plus one downstream read,
+# local[4], 3g heap) there is no crossover: driver vs loop 0.30 vs 2.06 s
+# at 1k edges, 0.33 vs 2.24 s at 10k, 0.67 vs 4.12 s at 100k, 6.95 vs
+# 23.4 s at 1M and 20.4 vs 61.1 s at 3M (local[2]: 5.59 vs 22.8 s at 1M,
+# so the loop gained nothing from the extra cores).  The bound is
+# therefore the driver's footprint, not time: at 1M edges labelling
+# raised the driver's peak RSS by 64-97 MB, and the loop is the only
+# path whose edges need not fit on one machine.
+LOCAL_GRAPH_MAX_EDGES = 1_000_000
 
 # optimizedPlan substrings that can MULTIPLY rows: the footer sum is an
 # upper bound only when every operator keeps or reduces cardinality
