@@ -16,8 +16,7 @@ PKG = pathlib.Path(__file__).resolve().parent.parent / "verified_sources_spark"
 # the batch loops that stay outside map_rows: file -> (count, reason)
 BATCH_LOOPS = {
     "boundary.py": (1, "the one per-row loop"),
-    "llm/similarity.py": (6, "numpy matrix math over the whole batch; the Lloyd fold sums a whole partition"),
-    "llm/multimodal.py": (3, "resize: ids pass through as one array"),
+    "llm/similarity.py": (4, "numpy matrix math over the whole batch (GEMM, assignment, ADC scan); the Lloyd fold sums a whole partition"),
     "llm/endpoint.py": (2, "one HTTP request per batch, not per row"),
     "llm/bpe.py": (1, "adds a column; input columns pass through as-is"),
     "operators/deletion_vectors.py": (1, "a DV frames its position array whole"),

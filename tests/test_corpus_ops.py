@@ -121,11 +121,21 @@ def test_semantic_dedup_drops_planted_near_identical_vectors(spark):
     assert all(i in kept for i in range(32))
 
 
-def test_semantic_dedup_gemm_matches_join_impl(spark):
-    """The chunked-GEMM pair stage and the pure-Catalyst self-join must
-    produce the same kept set and absorption counts (same float64 math,
-    different engine). Seeded vectors straddle the threshold both ways."""
+def test_semantic_dedup_matches_exact_pairs_within_clusters(spark):
+    """The chunked-GEMM pair stage keeps and counts exactly what the
+    exact all-pairs cosine (``embedding_near_dup_pairs``: float64
+    dot/(|a|·|b|) >= threshold, the oracle-checked expression) gives
+    when limited to pairs inside one cluster: drop every pair's second
+    id, count each surviving first id's pairs.  Seeded vectors straddle
+    the threshold both ways."""
     import random
+    from collections import Counter
+
+    from verified_sources_spark.llm.similarity import (
+        embedding_near_dup_pairs,
+        rank_clusters,
+        train_kmeans,
+    )
 
     rnd = random.Random(7)
     rows = []
@@ -137,17 +147,24 @@ def test_semantic_dedup_gemm_matches_join_impl(spark):
         for j in range(3):
             rows.append((base + j, [x + j * 1e-5 for x in v]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    kw = dict(n_clusters=6, threshold=0.98)
-    got_g = sorted(
+    got = sorted(
         tuple(r)
-        for r in semantic_dedup(df, "vec_id", "embedding", pairs_impl="gemm", **kw).collect()
+        for r in semantic_dedup(df, "vec_id", "embedding", n_clusters=6, threshold=0.98).collect()
     )
-    got_j = sorted(
-        tuple(r)
-        for r in semantic_dedup(df, "vec_id", "embedding", pairs_impl="join", **kw).collect()
-    )
-    assert got_g == got_j
-    kept = {r[0] for r in got_g}
+
+    c = df.select(F.col("vec_id").alias("_id"), F.col("embedding").alias("_v"))
+    cents = train_kmeans(c, "_id", "_v", 6, 2)
+    cluster = {r["_id"]: r["cluster"] for r in rank_clusters(c, "_id", "_v", cents).collect()}
+    pairs = [
+        (r["id_a"], r["id_b"])
+        for r in embedding_near_dup_pairs(df, threshold=0.98).collect()
+        if cluster[r["id_a"]] == cluster[r["id_b"]]
+    ]
+    drops = {b for _, b in pairs}
+    absorbed = Counter(a for a, _ in pairs if a not in drops)
+    want = sorted((i, cl, absorbed[i]) for i, cl in cluster.items() if i not in drops)
+    assert got == want
+    kept = {r[0] for r in got}
     assert {400, 500, 600} <= kept
     assert not ({401, 402, 501, 502, 601, 602} & kept)
 

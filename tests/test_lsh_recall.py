@@ -9,8 +9,6 @@ from __future__ import annotations
 import os
 import sys
 
-import pytest
-
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 
 from lsh_recall_sweep import (  # noqa: E402
@@ -85,37 +83,3 @@ def test_real_corpus_high_j_recall(spark):
         assert all(p in cand for p in high)
     else:
         assert theoretical_recall(0.9, 8, 4) > 0.99  # vacuous guard
-
-
-def test_materialize_modes_share_or_skip_correctly(spark):
-    """r15 materialization contract, pinned on the EXECUTED plan:
-
-    - "cut" shares the level-1 summaries (RDD identity): both pair
-      branches read checkpoint blocks, so the final plan contains ZERO
-      parquet scans of the corpus.
-    - auto on a provably-small corpus (parquet-footer bound under the
-      threshold) skips materialization: the fork recomputes, TWO scans.
-      Both modes produce identical pairs.
-    """
-    from verified_sources_spark.llm.minhash import lsh_candidate_pairs
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).select("doc_id", "text")
-
-    def scans_and_rows(mode):
-        pairs = lsh_candidate_pairs(
-            docs, "doc_id", "text", materialize=mode
-        )
-        rows = {(int(r["id_a"]), int(r["id_b"])) for r in pairs.collect()}
-        plan = pairs._jdf.queryExecution().executedPlan().toString()
-        return plan.count("Scan parquet"), rows
-
-    cut_scans, cut_rows = scans_and_rows("cut")
-    auto_scans, auto_rows = scans_and_rows("auto")
-    assert cut_scans == 0
-    # un-materialized fork: the corpus is scanned once PER BRANCH
-    assert auto_scans >= 2
-    assert cut_rows == auto_rows
-    with pytest.raises(ValueError, match="materialize"):
-        lsh_candidate_pairs(docs, "doc_id", "text", materialize="persist")

@@ -324,7 +324,7 @@ def test_sessionize_auto_probes_skew_and_picks_the_cheap_plan(
     bucket."""
     import datetime as dt
 
-    from verified_sources_spark.operators import sessionize as mod
+    from verified_sources_spark import sizing
     from verified_sources_spark.operators.sessionize import (
         sessionize,
         sessionize_bucketed,
@@ -343,7 +343,7 @@ def test_sessionize_auto_probes_skew_and_picks_the_cheap_plan(
         return "Join" in out._jdf.queryExecution().optimizedPlan().toString()
 
     # uniform: plain plan, no join
-    monkeypatch.setattr(mod, "HOT_MIN_ROWS", 2)
+    monkeypatch.setattr(sizing, "HOT_MIN_ROWS", 2)
     out = sessionize(df, "user_id", "ts", "event_id")
     assert not has_join(out)
 
@@ -357,8 +357,8 @@ def test_sessionize_auto_probes_skew_and_picks_the_cheap_plan(
     hot_df = spark.createDataFrame(
         hot_rows, "user_id long, event_id long, ts timestamp"
     )
-    monkeypatch.setattr(mod, "HOT_MIN_ROWS", 10)
-    monkeypatch.setattr(mod, "HOT_SKEW_RATIO", 2.0)
+    monkeypatch.setattr(sizing, "HOT_MIN_ROWS", 10)
+    monkeypatch.setattr(sizing, "HOT_SKEW_RATIO", 2.0)
     out_hot = sessionize(hot_df, "user_id", "ts", "event_id")
     assert has_join(out_hot)
     got = {

@@ -1,5 +1,5 @@
 """Branch parity for every size-based dispatch (verified_sources_spark.sizing,
-and sessionize's hot-user gate in verified_sources_spark.operators.sessionize).
+sessionize's hot-user gate included).
 
 Each dispatching registry entry runs with its threshold forced to 0
 (every input counts as large) and to 10**9 (every input counts as
@@ -16,7 +16,6 @@ import pytest
 
 from tools.check_correctness import result_hash
 from verified_sources_spark import sizing
-from verified_sources_spark.operators import sessionize
 from verified_sources_spark.plans.queries import QUERIES
 
 # entry → the plan node its large-input branch adds
@@ -41,8 +40,8 @@ def test_branch_parity(spark, sf_dir, monkeypatch, name):
         monkeypatch.setattr(sizing, "GEMM_MIN_ROWS", min_rows)
         monkeypatch.setattr(sizing, "CUT_MIN_ROWS", min_rows)
         monkeypatch.setattr(sizing, "LOCAL_GRAPH_MAX_EDGES", min_rows)
-        monkeypatch.setattr(sessionize, "HOT_MIN_ROWS", min_rows)
-        monkeypatch.setattr(sessionize, "HOT_SKEW_RATIO", min_rows)
+        monkeypatch.setattr(sizing, "HOT_MIN_ROWS", min_rows)
+        monkeypatch.setattr(sizing, "HOT_SKEW_RATIO", min_rows)
         df = QUERIES[name](spark, sf_dir)
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         rows = [tuple(r) for r in df.collect()]
@@ -52,3 +51,31 @@ def test_branch_parity(spark, sf_dir, monkeypatch, name):
     small_nodes, small_hash = run(10**9)
     assert large_nodes > small_nodes
     assert large_hash == small_hash
+
+
+def test_lsh_level1_cut_shares_or_skips(spark, sf_dir, monkeypatch):
+    """lsh_candidate_pairs' level-1 cut, pinned on the EXECUTED plan:
+
+    - cut (every input counts as large), both pair branches read
+      checkpoint blocks, so the final plan contains ZERO parquet scans
+      of the corpus;
+    - uncut (every input counts as small), the fork recomputes: the
+      corpus is scanned once PER BRANCH.
+
+    Both give the same pairs."""
+    from verified_sources_spark.llm.minhash import lsh_candidate_pairs
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+
+    def scans_and_rows(min_rows):
+        monkeypatch.setattr(sizing, "CUT_MIN_ROWS", min_rows)
+        pairs = lsh_candidate_pairs(docs, "doc_id", "text")
+        rows = {(int(r["id_a"]), int(r["id_b"])) for r in pairs.collect()}
+        plan = pairs._jdf.queryExecution().executedPlan().toString()
+        return plan.count("Scan parquet"), rows
+
+    cut_scans, cut_rows = scans_and_rows(0)
+    uncut_scans, uncut_rows = scans_and_rows(10**9)
+    assert cut_scans == 0
+    assert uncut_scans >= 2
+    assert cut_rows == uncut_rows

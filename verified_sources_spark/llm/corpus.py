@@ -42,8 +42,6 @@ from verified_sources_spark.cut import cut
 from verified_sources_spark.functions.text import token_count, tokens
 from verified_sources_spark.llm.minhash import minhash_signatures
 from verified_sources_spark.llm.similarity import (
-    _dot,
-    _norm,
     rank_clusters,
     train_kmeans,
     train_kmeans_quantized,
@@ -633,7 +631,7 @@ def incremental_dedup(
     # llm/minhash r15 finding) — without materialization the whole
     # signature pipeline (tokenize+shingle+md5+minhash of EVERY row)
     # executes once per branch.  Same size rule as lsh_candidate_pairs'
-    # materialize="auto" (sizing.should_cut).
+    # level-1 cut (sizing.should_cut).
     if should_cut(df):
         sig_bands = sig_bands.transform(cut)
     existing_band_rows = sig_bands.join(existing_ids, id_col, "left_semi")
@@ -683,8 +681,8 @@ def _cluster_pairs_gemm(assigned: DataFrame, threshold: float) -> DataFrame:
     Memory per task is O(block × n_i), never the full n_i² score matrix:
     rows are scored in 1024-row blocks against the whole cluster, and
     only (id_a < id_b, score >= threshold) hits are emitted.  All math in
-    float64, matching the ``"join"`` implementation up to rounding at the
-    threshold boundary."""
+    float64, matching ``similarity.embedding_near_dup_pairs``' dot/(|a||b|)
+    up to rounding at the threshold boundary."""
     import pandas as pd
 
     def one_cluster(pdf: "pd.DataFrame") -> "pd.DataFrame":
@@ -725,7 +723,6 @@ def semantic_dedup(
     n_clusters: int | None = 16,
     threshold: float = 0.92,
     lloyd_iters: int = 2,
-    pairs_impl: str = "gemm",
     target_cluster_size: int = 512,
     quantizer: str = "float",
 ) -> DataFrame:
@@ -746,24 +743,17 @@ def semantic_dedup(
     target_cluster_size)``) so the per-cluster quadratic bound stays
     constant as the corpus grows (one metadata-sized count() job).
 
-    ``pairs_impl`` picks the within-cluster engine:
-
-    - ``"gemm"`` (default) — ``applyInPandas`` per cluster: vectors are
-      L2-normalized once, then scored in CHUNKED numpy matrix products
-      (1024-row blocks × the cluster), emitting only over-threshold
-      pairs.  Arrow-batched, linear memory in the cluster (never the
-      n_i² score matrix at once).  The sf1 soak measured the expression
-      alternative at 100+ s for 20k×64-d vectors — interpreted
-      higher-order-function dot products per pair are ~50x slower than
-      one BLAS call per block.
-    - ``"join"`` — the pure-Catalyst self-join with zip_with dot
-      products; no Python boundary, but per-pair interpreted expression
-      cost.  Kept for environments where the Python worker path is
-      unavailable.
-
-    Both produce the same pairs up to float64 rounding exactly at the
-    threshold boundary (gemm normalizes then dots; join computes
-    dot/(|a||b|) — algebraically equal, one ulp apart in the last
+    The within-cluster pair stage is one ``applyInPandas`` per cluster:
+    vectors are L2-normalized once, then scored in CHUNKED numpy matrix
+    products (1024-row blocks × the cluster), emitting only
+    over-threshold pairs — linear memory in the cluster, never the n_i²
+    score matrix at once.  The sf1 soak measured the expression
+    alternative (a zip_with dot-product self-join) at 100+ s for
+    20k×64-d vectors: interpreted per-pair dot products are ~50x slower
+    than one BLAS call per block.  Its pairs are those of
+    ``similarity.embedding_near_dup_pairs`` within a cluster, up to
+    float64 rounding exactly at the threshold (normalize-then-dot
+    against dot/(|a||b|): algebraically equal, one ulp apart in the last
     operation order).
 
     Output: kept rows as (id, cluster) plus ``n_dropped_dups`` — how many
@@ -808,27 +798,7 @@ def semantic_dedup(
     # count (2 copies of the applyInPandas cluster stage).  Cut both so
     # the assignment and the pair scan each execute once (r16, §2.4).
     assigned = assigned.transform(cut)
-    if pairs_impl == "gemm":
-        pairs = _cluster_pairs_gemm(assigned, threshold)
-    elif pairs_impl == "join":
-        a = assigned.select(
-            F.col("cluster"), F.col("_id").alias("id_a"), F.col("_v").alias("va")
-        )
-        b = assigned.select(
-            F.col("cluster"), F.col("_id").alias("id_b"), F.col("_v").alias("vb")
-        )
-        pairs = (
-            a.join(b, "cluster")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .filter(
-                _dot(F.col("va"), F.col("vb"))
-                / (_norm(F.col("va")) * _norm(F.col("vb")))
-                >= threshold
-            )
-            .select("id_a", "id_b")
-        )
-    else:
-        raise ValueError(f"pairs_impl must be 'gemm' or 'join', got {pairs_impl!r}")
+    pairs = _cluster_pairs_gemm(assigned, threshold)
     pairs = pairs.transform(cut)
     drops = pairs.select(F.col("id_b").alias("_id")).distinct()
     absorbed = pairs.join(drops.withColumnRenamed("_id", "id_a"), "id_a", "left_anti")

@@ -15,7 +15,8 @@ index in without touching pipeline code:
   recall target, O(N·Q) — the verification oracle for every other
   backend.
 - ``IvfIndex`` — k-means inverted lists (``ivf_topk``): the native scale
-  path; index "build" trains the coarse quantizer once and reuses it.
+  path.  ``build()`` only keeps the corpus; every ``topk()`` call
+  retrains the coarse quantizer through ``ivf_topk``.
 - ``LshIndex`` — sign-LSH buckets (``lsh_bucketed_topk``).
 - ``ExternalIndexBackend`` — adapter skeleton for a remote vector store:
   batches upserts/queries through ``mapInPandas``-shaped callables the

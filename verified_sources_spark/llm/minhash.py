@@ -139,7 +139,6 @@ def lsh_candidate_pairs(
     shingle_n: int = 3,
     max_bucket_size: int = 1024,
     sub_buckets: int = 32,
-    materialize: str | None = "auto",
 ) -> DataFrame:
     """Distinct candidate pairs (id_a < id_b) sharing at least one LSH band.
 
@@ -174,36 +173,23 @@ def lsh_candidate_pairs(
     star expansion), so the straggler degrades to a linear scan of skinny
     (id, band) rows instead of a quadratic pair blow-up.
 
-    The level-1 summaries can be MATERIALIZED before the two pair
-    branches (bucket pairs / hot sub-bucket stars) read them.  The
+    The level-1 summaries are CUT (``verified_sources_spark.cut.cut``)
+    before the two pair branches (bucket pairs / hot sub-bucket stars)
+    read them when ``sizing.should_cut(df)`` — the input may hold
+    ``sizing.CUT_MIN_ROWS`` rows or more, or its size is unknowable.  The
     branches form a DAG fork, and Spark cannot share the subtree across
     them: CTEs inline, and neither exchange reuse nor cache lookup ever
     matches plans containing higher-order functions (lambda variables
-    defeat canonicalization) — without materialization the whole
-    signature pipeline (the md5 of every shingle in the corpus) executes
-    once PER BRANCH, doubling the dominant cost at scale.  l1 is the
-    smallest correct cut: one row per (band, band_key, salt) with member
-    arrays already capped, orders of magnitude smaller than the corpus.
-
-    ``materialize`` picks the mechanism:
-
-    - ``"auto"`` (default) — ``"cut"`` when ``sizing.should_cut(df)``
-      (the input may hold ``sizing.CUT_MIN_ROWS`` rows or more, or its
-      size is unknowable), ``None`` otherwise.  Rationale, measured r15:
-      on a small corpus the fork's second signature pass back-fills idle
-      cores and costs almost no wall clock, while the cut's block write
-      + stage barrier costs ~0.15 s — but on a saturated cluster the
-      second pass is a genuine 2x of the dominant compute.
-    - ``"cut"`` — ``verified_sources_spark.cut.cut``, the only mechanism
-      that actually shares the level-1 summaries (RDD identity, immune
-      to the canonicalization failure that makes ``persist()`` register
-      a cache entry no branch ever reads): the corpus is scanned once,
-      by the cut.  Lazy, self-cleaning; see ``cut.py`` for the
-      lineage-truncation trade-off and the durable mode.
-    - ``None`` — no materialization; the pipeline recomputes per branch.
+    defeat canonicalization; ``persist()`` registers a cache entry no
+    branch ever reads) — uncut, the whole signature pipeline (the md5 of
+    every shingle in the corpus) executes once PER BRANCH, doubling the
+    dominant cost at scale.  l1 is the smallest correct cut: one row per
+    (band, band_key, salt) with member arrays already capped, orders of
+    magnitude smaller than the corpus.  Below the threshold the fork
+    recomputes — measured: on a small corpus the second signature
+    pass back-fills idle cores and costs almost no wall clock, while the
+    cut's block write + stage barrier costs ~0.15 s.
     """
-    if materialize not in ("auto", "cut", None):
-        raise ValueError("materialize must be 'auto', 'cut', or None")
     assert k % bands == 0, "k must divide into equal bands"
     rows_per_band = k // bands
     cap = int(max_bucket_size)
@@ -286,7 +272,7 @@ FROM banded
 GROUP BY band_idx, band_key, pmod(xxhash64(id), {sub_buckets})
 """
     l1 = df.sparkSession.sql(sql_l1, df=df)
-    if materialize == "cut" or (materialize == "auto" and should_cut(df)):
+    if should_cut(df):
         l1 = l1.transform(cut)
 
     # Two branches read the materialized cut, not three: the complete-bucket

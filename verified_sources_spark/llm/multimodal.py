@@ -6,7 +6,7 @@ real Pillow decode/resize behind an import-try, the same optional-
 dependency gating as ``requests`` in sources/rest.py. The container
 ships no codecs, so the PIL paths are exercised by import-gated tests
 that run wherever Pillow IS installed; everything Spark-side (schema,
-Arrow-batched mapInPandas plumbing, batch shapes, partition sizing,
+Arrow-batched ``map_rows`` plumbing, batch shapes, partition sizing,
 per-object error isolation) is identical across decoders and tested
 here with the fake.
 
@@ -23,9 +23,6 @@ bounds per-task memory.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
@@ -326,56 +323,41 @@ def resize_images(
     height: int = 224,
     decoder: str = "fake",
 ) -> DataFrame:
-    """Image resize over binary payloads (Arrow-batched mapInPandas).
+    """Image resize over binary payloads: one ``map_rows`` stage whose
+    decoder picks only the per-payload function.
 
     ``decoder="pil"``: real Pillow decode → RGB convert → LANCZOS resize →
     PNG re-encode; undecodable payloads produce a NULL ``resized`` (error
-    isolation per object, same rationale as extract_features). The
-    default ``"fake"`` emits a deterministic byte slice tagged with the
-    target dimensions, so schema, batch shape, and partitioning — the
-    Spark-side contract the real codec plugs into — are testable with no
-    codecs in the environment."""
+    isolation per object, same rationale as extract_features).
+    ``"png"`` decodes with the stdlib PNG codec and ``"image"`` any
+    stdlib-decodable format (PNG/JPEG/GIF/BMP, through image_io), both
+    with a nearest-neighbor resample and PNG re-encode under the same
+    isolation. The default ``"fake"`` emits a deterministic byte slice
+    tagged with the target dimensions, so schema, batch shape, and
+    partitioning — the Spark-side contract the real codec plugs into —
+    are testable with no codecs in the environment."""
 
     if decoder == "pil":
         _load_pil()  # fail fast on the driver
 
-        def run_pil(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def resize(p):
             import io
 
             Image = _load_pil()
+            try:
+                with Image.open(io.BytesIO(p)) as im:
+                    buf = io.BytesIO()
+                    im.convert("RGB").resize(
+                        (width, height), Image.Resampling.LANCZOS
+                    ).save(buf, format="PNG")
+                    return buf.getvalue()
+            except Exception:
+                return None
 
-            def one(p):
-                try:
-                    with Image.open(io.BytesIO(p)) as im:
-                        buf = io.BytesIO()
-                        im.convert("RGB").resize(
-                            (width, height), Image.Resampling.LANCZOS
-                        ).save(buf, format="PNG")
-                        return buf.getvalue()
-                except Exception:
-                    return None
-
-            # not map_rows: ids pass through as one array; sizes are scalars
-            for pdf in batches:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf[id_col].values,
-                        "width": width,
-                        "height": height,
-                        "resized": [one(p) for p in pdf[asset_col]],
-                    }
-                )
-
-        return df.select(id_col, asset_col).mapInPandas(run_pil, RESIZE_SCHEMA)
-
-    if decoder in ("png", "image"):
-        # stdlib decode → nearest-neighbor resample → PNG re-encode;
-        # per-object error isolation identical to the pil path.
-        # decoder="image" dispatches ANY stdlib-decodable format
-        # (PNG/JPEG/GIF/BMP) through image_io and normalizes to PNG out
+    elif decoder in ("png", "image"):
         _any = decoder == "image"
 
-        def run_png(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def resize(p):
             from verified_sources_spark.llm.image_io import decode_image
             from verified_sources_spark.llm.png_codec import (
                 decode,
@@ -383,47 +365,28 @@ def resize_images(
                 resize_nearest,
             )
 
-            def one(p):
-                try:
-                    im = decode_image(bytes(p)) if _any else decode(bytes(p))
-                    ch = 4 if im["mode"] == "RGBA" else 3
-                    px = resize_nearest(
-                        im["pixels"], im["width"], im["height"], width, height, ch
-                    )
-                    return encode(width, height, px, im["mode"])
-                except Exception:
-                    return None
-
-            # not map_rows: ids pass through as one array; sizes are scalars
-            for pdf in batches:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf[id_col].values,
-                        "width": width,
-                        "height": height,
-                        "resized": [one(p) for p in pdf[asset_col]],
-                    }
+            try:
+                im = decode_image(p) if _any else decode(p)
+                ch = 4 if im["mode"] == "RGBA" else 3
+                px = resize_nearest(
+                    im["pixels"], im["width"], im["height"], width, height, ch
                 )
+                return encode(width, height, px, im["mode"])
+            except Exception:
+                return None
 
-        return df.select(id_col, asset_col).mapInPandas(run_png, RESIZE_SCHEMA)
+    elif decoder == "fake":
 
-    if decoder != "fake":
+        def resize(p):
+            # fake resize: size-capped deterministic slice of input
+            return p[: width * height // 4096]
+
+    else:
         raise ValueError(
             f"decoder must be 'fake', 'png', 'image' or 'pil', got {decoder!r}"
         )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # not map_rows: ids pass through as one array; sizes are scalars
-        for pdf in batches:
-            out = pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].values,
-                    "width": width,
-                    "height": height,
-                    # fake resize: size-capped deterministic slice of input
-                    "resized": [bytes(p[: width * height // 4096]) for p in pdf[asset_col]],
-                }
-            )
-            yield out
+    def run(_id, p):
+        yield {"doc_id": _id, "width": width, "height": height, "resized": resize(p)}
 
-    return df.select(id_col, asset_col).mapInPandas(run, RESIZE_SCHEMA)
+    return map_rows(df.select(id_col, asset_col), run, RESIZE_SCHEMA)

@@ -15,7 +15,13 @@
 - k-means quantizers (IVF, SemDeDup, PQ, IVF-PQ, two-level): one
   nearest-centroid kernel (``_nearest``) and one Lloyd loop (``_lloyd``,
   a per-partition numpy fold of per-cluster counts and sums, one job per
-  iteration), in float64 or in exact scaled int64.
+  iteration), in float64 or in exact scaled int64.  One assignment
+  stage (``_assign``) emits (id, vec, cluster) for both the flat
+  (``rank_clusters``) and the two-level (``assign_two_level``) quantizer.
+- PQ and IVF-PQ share one ADC scan (``_adc_scan``): PQ is IVF-PQ with a
+  single all-zero coarse cell probed once.
+- Every top-k operator ends in one ranking (``_topk``): per query, best
+  score first, ties to the lowest neighbor id, rank 1..k.
 """
 
 from __future__ import annotations
@@ -75,11 +81,24 @@ def cosine_topk(
         "neighbor_id",
         (_dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn"))).alias("__cos"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("__cos").desc(), F.col("neighbor_id").asc())
+    return _topk(scored, k)
+
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """The one top-k contract every ANN operator here emits: per
+    ``query_id``, the best score first and ties to the lowest
+    ``neighbor_id``, as (query_id, neighbor_id, rank, score) for rank
+    1..k.  A ``__cos`` score (higher is better) comes out as ``cosine``
+    rounded to 4dp; an ``adist`` (exact ADC distance, lower is better)
+    comes out as is."""
+    cos = "__cos" in scored.columns
+    best = F.col("__cos").desc() if cos else F.col("adist").asc()
+    w = Window.partitionBy("query_id").orderBy(best, F.col("neighbor_id").asc())
+    score = F.round("__cos", 4).alias("cosine") if cos else F.col("adist")
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("__cos", 4).alias("cosine"))
+        .select("query_id", "neighbor_id", "rank", score)
     )
 
 
@@ -138,12 +157,7 @@ def cosine_topk_vectorized(
 
     candidates = corpus.select(id_col, vec_col).mapInPandas(score, out_schema)
     candidates = candidates.filter(F.col("neighbor_id") != F.col("query_id"))
-    w = Window.partitionBy("query_id").orderBy(F.col("__cos").desc(), F.col("neighbor_id").asc())
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("__cos", 4).alias("cosine"))
-    )
+    return _topk(candidates, k)
 
 
 def cosine_topk_adaptive(
@@ -292,13 +306,24 @@ def rank_clusters(
     go to the lowest cluster id (:func:`_nearest`).
     Returns (id, vec, cluster)."""
     import numpy as np
-    import pandas as pd
-    import pyspark.sql.types as T
 
     C = np.asarray(centroids)
     exact = C.dtype.kind in "iu"
     C = C.astype(np.int64 if exact else np.float64)
     scaled = _is_scaled(df, vec_col)
+    return _assign(
+        df, id_name, vec_col, lambda col: _nearest(_matrix(col, exact, scaled), C, n_probe)
+    )
+
+
+def _assign(df: DataFrame, id_name: str, vec_col: str, clusters) -> DataFrame:
+    """The one cluster-assignment stage: an Arrow-batched mapInPandas
+    over (id, vec) emitting (id, vec, cluster).  ``clusters`` maps a
+    batch's vector column to its cluster ids: one per row, or an
+    (rows × p) array that repeats each row once per cluster, in order."""
+    import numpy as np
+    import pandas as pd
+    import pyspark.sql.types as T
 
     id_f = df.schema[id_name]
     vec_f = df.schema[vec_col]
@@ -310,13 +335,12 @@ def rank_clusters(
         ]
     )
 
-    def rank(batches):
+    def assign(batches):
         # not map_rows: numpy matrix math over the whole batch
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            near = _nearest(_matrix(pdf[vec_col], exact, scaled), C, n_probe)
-            near = near.reshape(len(pdf), -1)
+            near = clusters(pdf[vec_col]).reshape(len(pdf), -1)
             rows = np.repeat(np.arange(len(pdf)), near.shape[1])
             yield pd.DataFrame(
                 {
@@ -326,7 +350,7 @@ def rank_clusters(
                 }
             )
 
-    return df.select(id_name, vec_col).mapInPandas(rank, schema)
+    return df.select(id_name, vec_col).mapInPandas(assign, schema)
 
 
 def _cluster_sums(X, C):
@@ -476,12 +500,7 @@ def ivf_topk(
         "neighbor_id",
         (_dot(F.col("__qv"), F.col("__cv")) / (_norm(F.col("__qv")) * _norm(F.col("__cv")))).alias("__cos"),
     ).dropDuplicates(["query_id", "neighbor_id"])
-    w = Window.partitionBy("query_id").orderBy(F.col("__cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("__cos", 4).alias("cosine"))
-    )
+    return _topk(scored, k)
 
 
 # frozen parameters of the graded ann_lsh_topk_embeddings query: ONE
@@ -507,6 +526,18 @@ def _hyperplane(dim: int, plane_idx: int, seed: int) -> list[float]:
     return vals
 
 
+def _sign_bucket(vec, dim: int, planes: range, seed: int, prefix: str = ""):
+    """The one sign-LSH bucket key: ``prefix``, then one "1"/"0" per
+    hyperplane index in ``planes`` — the sign of ``vec``·plane, with 0
+    counting as "1"."""
+    bits = [
+        F.when(_dot(vec, F.array(*[F.lit(x) for x in _hyperplane(dim, p, seed)])) >= 0, F.lit("1"))
+        .otherwise(F.lit("0"))
+        for p in planes
+    ]
+    return F.concat(F.lit(prefix), *bits)
+
+
 def lsh_bucketed_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -521,26 +552,17 @@ def lsh_bucketed_topk(
     Recall grows with fewer planes (bigger buckets); n_planes=8 → 256
     buckets.  Same output schema as cosine_topk."""
     dim = len(corpus.select(vec_col).first()[0])
-    planes = [_hyperplane(dim, p, seed) for p in range(n_planes)]
-
-    def bucket_col(vec):
-        bits = []
-        for p in planes:
-            plane_arr = F.array(*[F.lit(x) for x in p])
-            bits.append(F.when(_dot(vec, plane_arr) >= 0, F.lit("1")).otherwise(F.lit("0")))
-        return F.concat(*bits)
-
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("__cv"),
         _norm(F.col(vec_col)).alias("__cn"),
-        bucket_col(F.col(vec_col)).alias("__bucket"),
+        _sign_bucket(F.col(vec_col), dim, range(n_planes), seed).alias("__bucket"),
     )
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("__qv"),
         _norm(F.col(vec_col)).alias("__qn"),
-        bucket_col(F.col(vec_col)).alias("__bucket"),
+        _sign_bucket(F.col(vec_col), dim, range(n_planes), seed).alias("__bucket"),
     )
     prod = c.join(F.broadcast(q), "__bucket").filter(F.col("neighbor_id") != F.col("query_id"))
     scored = prod.select(
@@ -548,12 +570,7 @@ def lsh_bucketed_topk(
         "neighbor_id",
         (_dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn"))).alias("__cos"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("__cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("__cos", 4).alias("cosine"))
-    )
+    return _topk(scored, k)
 
 
 def embedding_near_dup_pairs(
@@ -614,19 +631,16 @@ def embedding_near_dups_lsh(
     corpus exactly once via the explode-pair-sides/regroup shape (same
     as ``ngram_jaccard``): only candidate-matched vectors shuffle."""
     dim = len(corpus.select(vec_col).first()[0])
-
-    def band_bucket(vec, band: int):
-        bits = []
-        for p in range(n_planes):
-            plane = _hyperplane(dim, band * n_planes + p, seed)
-            plane_arr = F.array(*[F.lit(x) for x in plane])
-            bits.append(F.when(_dot(vec, plane_arr) >= 0, F.lit("1")).otherwise(F.lit("0")))
-        return F.concat(F.lit(f"b{band}:"), *bits)
-
     buckets = corpus.select(
         F.col(id_col).alias("__id"),
         F.array(
-            *[band_bucket(F.col(vec_col), band) for band in range(n_bands)]
+            *[
+                _sign_bucket(
+                    F.col(vec_col), dim, range(band * n_planes, (band + 1) * n_planes),
+                    seed, f"b{band}:",
+                )
+                for band in range(n_bands)
+            ]
         ).alias("__buckets"),
     ).transform(cut)
     exploded = buckets.select("__id", F.explode("__buckets").alias("__bucket"))
@@ -771,11 +785,9 @@ def assign_two_level(
     """Two-stage nearest-centroid assignment: the coarse :func:`_nearest`
     picks the cell, a per-cell fine :func:`_nearest` picks the cluster —
     n x O(sqrt(k)) total.  Returns (id, vec, cluster) with GLOBAL fine
-    ids (offset[cell] + local index), same output shape as
-    :func:`rank_clusters`."""
+    ids (offset[cell] + local index), through the same
+    :func:`_assign` stage as :func:`rank_clusters`."""
     import numpy as np
-    import pandas as pd
-    import pyspark.sql.types as T
 
     Cc = np.asarray(coarse, dtype=np.float64)
     Fs = [np.asarray(f, dtype=np.float64) for f in fine]
@@ -783,36 +795,16 @@ def assign_two_level(
     for i, Fm in enumerate(Fs):
         offsets[i + 1] = offsets[i] + len(Fm)
 
-    id_f = df.schema[id_name]
-    vec_f = df.schema[vec_col]
-    schema = T.StructType(
-        [
-            T.StructField(id_name, id_f.dataType, id_f.nullable),
-            T.StructField(vec_col, vec_f.dataType, vec_f.nullable),
-            T.StructField("cluster", T.IntegerType()),
-        ]
-    )
+    def coarse_then_fine(col):
+        X = _matrix(col, exact=False, scaled=False)
+        cells = _nearest(X, Cc)
+        out = np.empty(len(X), dtype=np.int64)
+        for cell in np.unique(cells):
+            m = cells == cell
+            out[m] = offsets[cell] + _nearest(X[m], Fs[cell])
+        return out
 
-    def assign(batches):
-        # not map_rows: numpy matrix math over the whole batch
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.array(list(pdf[vec_col]), dtype=np.float64)
-            cells = _nearest(X, Cc)
-            out = np.empty(len(X), dtype=np.int64)
-            for cell in np.unique(cells):
-                m = cells == cell
-                out[m] = offsets[cell] + _nearest(X[m], Fs[cell])
-            yield pd.DataFrame(
-                {
-                    id_name: pdf[id_name],
-                    vec_col: pdf[vec_col],
-                    "cluster": out.astype("int32"),
-                }
-            )
-
-    return df.select(id_name, vec_col).mapInPandas(assign, schema)
+    return _assign(df, id_name, vec_col, coarse_then_fine)
 
 
 # --------------------------------------------------------------- PQ ANN
@@ -841,87 +833,39 @@ def pq_topk(
     100 TB shape: codes are m bytes/vector (64-dim float32 → 4 bytes:
     a 64× compression of the scan side); the codebooks and the query
     distance tables are the only collected state (codebook-sized and
-    query-sized); candidate pruning happens per PARTITION inside the
-    scoring mapInPandas (≤ n_queries × k rows leave each partition),
-    so the final rank shuffle moves candidates, not the corpus.
-    All distances are exact BIGINTs — ties break on the lowest
-    neighbor id, bit-identical in DuckDB SQL."""
+    query-sized).  The scan is IVF-PQ's (:func:`_adc_scan`) over a
+    single all-zero coarse cell probed once, so each residual is the
+    vector itself; candidates prune per Arrow batch (≤ n_queries × k
+    rows leave each), so the final rank shuffle moves candidates, not
+    the corpus.  All distances are exact BIGINTs — ties break on the
+    lowest neighbor id, bit-identical in DuckDB SQL."""
     import numpy as np
 
-    dim_row = corpus.select(F.size(vec_col)).first()
-    dim = int(dim_row[0])
+    dim = int(corpus.select(F.size(vec_col)).first()[0])
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
     sub = dim // m
 
-    # ---- codebooks (collected: n_codes rows, codebook-sized)
-    X0 = _first_vectors(corpus, id_col, vec_col, n_codes, exact=True)
-    books = [X0[:, s * sub : (s + 1) * sub].copy() for s in range(m)]
-    if train_iters > 0:
-        for s in range(m):
-            sliced = corpus.select(
-                F.col(id_col),
-                F.slice(F.col(vec_col), s * sub + 1, sub).alias("_v"))
-            cents = train_kmeans_quantized(
-                sliced, id_col, "_v", n_centroids=n_codes,
-                lloyd_iters=train_iters)
-            books[s] = np.array(cents, dtype=np.int64)
-
-    # ---- query distance tables (queries collected: query-sized)
-    qrows = queries.select(id_col, vec_col).orderBy(id_col).collect()
-    qids = [int(r[0]) for r in qrows]
-    Q = _scaled_int_matrix([r[1] for r in qrows])
-    # dtab[qi, s, c] = exact L2^2 between query sub-vector and code c
-    dtab = _adc_tables(Q, books)
-
-    spark = corpus.sparkSession
-    b_books = spark.sparkContext.broadcast([b.copy() for b in books])
-    b_dtab = spark.sparkContext.broadcast(dtab)
-    b_qids = spark.sparkContext.broadcast(qids)
-
-    out_schema = ("query_id long, neighbor_id long, adist long")
-
-    def score(batches):
-        import pandas as pd
-
-        bb = b_books.value
-        dt = b_dtab.value
-        qi = np.array(b_qids.value, dtype=np.int64)
-        # not map_rows: numpy matrix math over the whole batch
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            X = _scaled_int_matrix(pdf[vec_col])
-            # encode: per subspace nearest code (lowest code on ties,
-            # the tie-break the oracle replays)
-            codes = np.empty((len(ids), m), dtype=np.int64)
-            for s in range(m):
-                codes[:, s] = _nearest(X[:, s * sub : (s + 1) * sub], bb[s])
-            # ADC: adist[q, v] = sum_s dtab[q, s, codes[v, s]]
-            ad = np.zeros((len(qi), len(ids)), dtype=np.int64)
-            for s in range(m):
-                ad += dt[:, s, :][:, codes[:, s]]
-            parts = []
-            for q in range(len(qi)):
-                cand = np.where(ids != qi[q])[0]
-                # per-partition prune: k smallest (adist, id) leave
-                sel = cand[np.lexsort((ids[cand], ad[q][cand]))[:k]]
-                parts.append((np.full(len(sel), qi[q]), ids[sel], ad[q][sel]))
-            if parts:
-                qcol, ncol, dcol = (np.concatenate(c) for c in zip(*parts))
-                yield pd.DataFrame(
-                    {"query_id": qcol, "neighbor_id": ncol, "adist": dcol})
-
-    from pyspark.sql import Window
-
-    cands = corpus.select(id_col, vec_col).mapInPandas(score, out_schema)
-    w = (Window.partitionBy("query_id")
-         .orderBy(F.col("adist").asc(), F.col("neighbor_id").asc()))
-    return (cands.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id",
-                    F.col("rank").cast("int").alias("rank"), "adist"))
+    # codebooks (collected: n_codes rows, codebook-sized)
+    if train_iters == 0:
+        X0 = _first_vectors(corpus, id_col, vec_col, n_codes, exact=True)
+        books = [X0[:, s * sub : (s + 1) * sub].copy() for s in range(m)]
+    else:
+        books = [
+            np.array(
+                train_kmeans_quantized(
+                    corpus.select(
+                        F.col(id_col), F.slice(F.col(vec_col), s * sub + 1, sub).alias("_v")
+                    ),
+                    id_col, "_v", n_centroids=n_codes, lloyd_iters=train_iters,
+                ),
+                dtype=np.int64,
+            )
+            for s in range(m)
+        ]
+    # PQ is IVF-PQ over one all-zero cell: every residual is the vector
+    cents = np.zeros((1, dim), dtype=np.int64)
+    return _adc_scan(corpus, queries, id_col, vec_col, cents, books, 1, k)
 
 
 def ivfpq_topk(
@@ -955,8 +899,8 @@ def ivfpq_topk(
     state collects) — the FAISS-recipe trained index, still
     bit-deterministic across partitionings.  100 TB shape: the scan side is
     (cell_id, m bytes) per vector; only centroids, codebooks and the
-    query tables are collected/broadcast; candidates prune per
-    partition before the final rank shuffle."""
+    query tables are collected/broadcast; candidates prune per Arrow
+    batch before the final rank shuffle (:func:`_adc_scan`)."""
     import numpy as np
 
     dim = int(corpus.select(F.size(vec_col)).first()[0])
@@ -1013,8 +957,24 @@ def ivfpq_topk(
                                        n_centroids=n_codes,
                                        lloyd_iters=train_iters),
                 dtype=np.int64)
+    return _adc_scan(corpus, queries, id_col, vec_col, cents, books, n_probe, k)
 
 
+def _adc_scan(corpus, queries, id_col, vec_col, cents, books, n_probe, k) -> DataFrame:
+    """The one ADC scan behind PQ and IVF-PQ, in exact int64.  Each
+    corpus vector is assigned its nearest coarse cell in ``cents`` and
+    encoded as the per-subspace nearest codes in ``books`` of its
+    residual (lowest cell and code on ties, the tie-break the oracle
+    replays).  A
+    query probes its ``n_probe`` nearest cells and scores each probed
+    cell's vectors by that residual's ADC tables (:func:`_adc_tables`);
+    every Arrow batch keeps only the ``k`` smallest (adist, id) per
+    (query, probed cell), and :func:`_topk` ranks what is left.  Only
+    the centroids, codebooks and query tables are collected and
+    broadcast."""
+    import numpy as np
+
+    m, sub = len(books), books[0].shape[1]
     qrows = queries.select(id_col, vec_col).orderBy(id_col).collect()
     qids = np.array([int(r[0]) for r in qrows], dtype=np.int64)
     Q = _scaled_int_matrix([r[1] for r in qrows])
@@ -1070,13 +1030,7 @@ def ivfpq_topk(
                 yield pd.DataFrame(
                     {"query_id": qcol, "neighbor_id": ncol, "adist": dcol})
 
-    cands = corpus.select(id_col, vec_col).mapInPandas(score, out_schema)
-    w = (Window.partitionBy("query_id")
-         .orderBy(F.col("adist").asc(), F.col("neighbor_id").asc()))
-    return (cands.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id",
-                    F.col("rank").cast("int").alias("rank"), "adist"))
+    return _topk(corpus.select(id_col, vec_col).mapInPandas(score, out_schema), k)
 
 
 def ivfpq_rerank_topk(
@@ -1120,13 +1074,7 @@ def ivfpq_rerank_topk(
               .select("query_id", "neighbor_id",
                       (_dot(F.col("__qv"), F.col("__cv"))
                        / (F.col("__qn") * F.col("__cn"))).alias("__cos")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("__cos").desc(), F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id",
-                    F.col("rank").cast("int").alias("rank"),
-                    F.round("__cos", 4).alias("cosine")))
+    return _topk(scored, k)
 
 
 def ann_recall(ann: DataFrame, exact: DataFrame, k: int = 3) -> DataFrame:

@@ -25,13 +25,14 @@ No SinglePartition exchange anywhere.
 ``sessionize`` (r8, the default entry point) is ADAPTIVE: the bucketed
 formulation costs 3 shuffles where the plain one costs 1, so every
 small or unskewed caller was paying ~2× for a straggler they don't
-have (r7 bench: 0.675 s vs 0.274 s at sf0.1).  A cheap hot-key probe —
-one single-column scan, map-side combined to one row per user, reduced
-to (max, mean) on the driver — picks plain unless some user BOTH
-exceeds an absolute straggler floor (a task that would run materially
-longer than its peers) AND dominates the mean.  Callers that already
-know their skew call ``sessionize_plain`` or ``sessionize_bucketed``
-directly and skip the probe entirely.
+have (r7 bench: 0.675 s vs 0.274 s at sf0.1).  ``sizing.has_hot_key``
+— a footer bound, then if needed one single-column scan map-side
+combined to one row per user and reduced to (max, mean) on the driver —
+picks plain unless some user BOTH exceeds an absolute straggler floor
+(a task that would run materially longer than its peers) AND dominates
+the mean.  Callers that already know their skew call
+``sessionize_plain`` or ``sessionize_bucketed`` directly and skip the
+probe entirely.
 """
 
 from __future__ import annotations
@@ -39,18 +40,10 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from verified_sources_spark.sizing import row_upper_bound
+from verified_sources_spark.sizing import has_hot_key
 
 DEFAULT_GAP_US = 1_800_000_000        # 30 min
 DEFAULT_BUCKET_US = 86_400_000_000    # 1 day — must be >> gap
-# straggler gate: a user is "hot" when its event count BOTH exceeds
-# this floor (below it, one window task absorbs the user in well under
-# a second — bucketing would cost more than it saves) AND dominates the
-# mean by HOT_SKEW_RATIO (uniformly-huge users don't straggle: every
-# task is equally loaded).  Read at call time, so tests monkeypatch
-# them to force a branch.
-HOT_MIN_ROWS = 200_000
-HOT_SKEW_RATIO = 8.0
 
 
 def sessionize(
@@ -61,37 +54,13 @@ def sessionize(
     gap_us: int = DEFAULT_GAP_US,
     bucket_us: int = DEFAULT_BUCKET_US,
 ) -> DataFrame:
-    """Gap sessionization with adaptive skew handling.
-
-    Probes per-user counts first: ONE single-column scan whose shuffle
-    carries one partially-aggregated row per user, reduced to two
-    numbers on the driver.  Plain unless some user exceeds
-    ``HOT_MIN_ROWS`` AND ``HOT_SKEW_RATIO``× the mean — the measured
-    condition under which the one-window cumsum grows a straggler (r7
-    sf10 soak: 30% hot user → 2.6× max/median task skew; bucketed →
-    ~1.0).  Both formulations are value-identical (asserted against
-    each other and the DuckDB oracle)."""
-    # short-circuit BEFORE the per-user probe: if the whole input can't
-    # hold HOT_MIN_ROWS rows, no user can possibly be hot.  The bound
-    # comes from parquet footers on the driver — zero Spark jobs — so
-    # small/unskewed callers pay NOTHING over the plain formulation.
-    bound = row_upper_bound(df)
-    if bound is not None and bound < HOT_MIN_ROWS:
-        return sessionize_plain(df, user_col, ts_col, id_col, gap_us)
-    probe = (
-        df.select(user_col)
-        .groupBy(user_col)
-        .count()
-        .agg(F.max("count").alias("mx"), F.avg("count").alias("mean"))
-        .first()
-    )
-    hot = (
-        probe is not None
-        and probe.mx is not None
-        and probe.mx >= HOT_MIN_ROWS
-        and probe.mx >= HOT_SKEW_RATIO * float(probe.mean or 1.0)
-    )
-    if hot:
+    """Gap sessionization with adaptive skew handling: bucketed when
+    ``sizing.has_hot_key`` finds a user over ``sizing.HOT_MIN_ROWS`` AND
+    ``sizing.HOT_SKEW_RATIO``× the mean — the measured condition under
+    which the one-window cumsum grows a straggler — plain otherwise.  Both
+    formulations are value-identical (asserted against each other and
+    the DuckDB oracle)."""
+    if has_hot_key(df, user_col):
         return sessionize_bucketed(
             df, user_col, ts_col, id_col, gap_us, bucket_us
         )

@@ -4601,7 +4601,7 @@ def cross_source_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (r16, §2.4; found by the Python-node plan census: the same
     # MapInPandas mint appeared 3x in the final plan).  Cut only when
     # sizing.should_cut says so, the policy of lsh_candidate_pairs'
-    # materialize="auto": on a small corpus the extra passes
+    # level-1 cut: on a small corpus the extra passes
     # back-fill idle cores while the cut's barrier + payload blocks cost
     # real wall clock (interleaved A/B at sf0.01: unconditional cut
     # 1.7-3.1 s vs uncut 1.5-1.9 s warm); on big-or-unknown inputs the

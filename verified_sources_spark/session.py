@@ -24,12 +24,70 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
+# the largest default heap: the sf1 soak measured GC collapse at 8g — 32
+# executor threads of ObjectHashAggregate state (minhash 19s vs 1s, lsh
+# 16s vs 2.2s) once the working set passed the old heap; a local[32] JVM
+# is the whole cluster, so on a large host it gets a cluster's heap
+MAX_DRIVER_MEMORY_MB = 16 * 1024
+
 
 def default_master() -> str:
     """``local[N]`` with one task slot per core this process may use (its
     CPU affinity), unless ``SPARK_GRAFT_CPUS`` names the count."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     return f"local[{cpus}]"
+
+
+def host_memory_bytes() -> int | None:
+    """Memory this process may use: the smallest of its cgroup limits (v2
+    ``memory.max`` or v1 ``memory.limit_in_bytes``, at the mount root and
+    at the process's own cgroup; "max" or a page-rounded 2**63 means
+    none) and the host's ``MemTotal``; None when none can be read."""
+    own = {"": "", "memory": ""}
+    try:
+        with open("/proc/self/cgroup") as f:
+            for line in f:
+                _, controllers, path = line.rstrip("\n").split(":", 2)
+                for c in controllers.split(",") if controllers else [""]:
+                    own[c] = path.rstrip("/")
+    except (OSError, ValueError):
+        pass
+    sizes = []
+    for path in {
+        "/sys/fs/cgroup/memory.max",
+        f"/sys/fs/cgroup{own['']}/memory.max",
+        "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+        f"/sys/fs/cgroup/memory{own['memory']}/memory.limit_in_bytes",
+    }:
+        try:
+            with open(path) as f:
+                v = f.read().strip()
+        except OSError:
+            continue
+        if v.isdigit():
+            sizes.append(int(v))
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    sizes.append(int(line.split()[1]) * 1024)
+                    break
+    except OSError:
+        pass
+    return min(sizes) if sizes else None
+
+
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` unless ``SPARK_DRIVER_MEMORY`` names it:
+    half of :func:`host_memory_bytes` (the Python workers, Arrow
+    buffers and the page cache share the rest; with no swap a heap that
+    can outgrow the memory gets the process killed instead of
+    collected), at least 1g and at most ``MAX_DRIVER_MEMORY_MB``, which
+    is also the answer when the memory is unknowable."""
+    mem = host_memory_bytes()
+    if mem is None:
+        return f"{MAX_DRIVER_MEMORY_MB}m"
+    return f"{min(MAX_DRIVER_MEMORY_MB, max(1024, mem // 2 // 2**20))}m"
 
 
 def get_spark(
@@ -54,11 +112,10 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # 16g: the sf1 soak measured GC collapse at 8g — 32 executor threads
-        # of ObjectHashAggregate state (minhash 19s vs 1s, lsh 16s vs 2.2s)
-        # once the working set passed the old heap; a local[32] JVM is the
-        # whole cluster, so size it like one (box has 128 GiB)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
     )
     if master:

@@ -3,13 +3,15 @@ into a plan decision.
 
 Most decisions read a driver-side bound — parquet footers and scan
 metadata, never a Spark job — so asking costs milliseconds, not a
-cluster round trip.  Connected components are the exception: a pair
-graph's size is unknowable before its pipeline runs, so it is counted
+cluster round trip.  Two decisions need more.  A pair graph's size is
+unknowable before its pipeline runs, so connected components count it
 by an ``observe`` on the job that cuts the pairs anyway (no extra job).
-An unknowable size always takes the branch that is safe at scale.  Both
-sides of every decision return identical rows (tests/test_sizing.py
-runs each dispatching registry entry on both); the thresholds only move
-cost.
+Sessionize's hot-user gate (``has_hot_key``) needs the largest key's
+row count, so unless the footer bound already rules a hot key out it
+runs one per-key count job.  An unknowable size always takes the branch
+that is safe at scale.  Both sides of every decision return identical
+rows (tests/test_sizing.py runs each dispatching registry entry on
+both); the thresholds only move cost.
 
 The thresholds are module constants read at call time, so a test can
 monkeypatch them to force either branch.
@@ -19,6 +21,7 @@ from __future__ import annotations
 
 import os
 
+import pyspark.sql.functions as F
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 
@@ -47,6 +50,16 @@ CUT_MIN_ROWS = 200_000
 # raised the driver's peak RSS by 64-97 MB, and the loop is the only
 # path whose edges need not fit on one machine.
 LOCAL_GRAPH_MAX_EDGES = 1_000_000
+
+# sessionize: a user is "hot" (the bucketed formulation pays off) when
+# its event count BOTH exceeds this floor (below it, one window task
+# absorbs the user in well under a second — bucketing would cost more
+# than it saves) AND dominates the mean by HOT_SKEW_RATIO
+# (uniformly-huge users don't straggle: every task is equally loaded).
+# Measured in an sf10 soak: a 30% hot user gave 2.6x max/median task
+# skew in the one-window cumsum, ~1.0 bucketed.
+HOT_MIN_ROWS = 200_000
+HOT_SKEW_RATIO = 8.0
 
 # optimizedPlan substrings that can MULTIPLY rows: the footer sum is an
 # upper bound only when every operator keeps or reduces cardinality
@@ -118,3 +131,26 @@ def use_gemm(df: DataFrame) -> bool:
 def should_cut(df: DataFrame) -> bool:
     """Cut a plan fork fed by ``df`` rather than let each branch recompute it."""
     return _at_least(df, CUT_MIN_ROWS)
+
+
+def has_hot_key(df: DataFrame, key_col: str) -> bool:
+    """Some ``key_col`` value holds at least ``HOT_MIN_ROWS`` rows AND
+    ``HOT_SKEW_RATIO``× the mean rows per value.  An input whose footer
+    bound is under ``HOT_MIN_ROWS`` has no hot key, at no job; otherwise
+    ONE single-column scan whose shuffle carries one partially-aggregated
+    row per value, reduced to (max, mean) on the driver."""
+    if not _at_least(df, HOT_MIN_ROWS):
+        return False
+    probe = (
+        df.select(key_col)
+        .groupBy(key_col)
+        .count()
+        .agg(F.max("count").alias("mx"), F.avg("count").alias("mean"))
+        .first()
+    )
+    return (
+        probe is not None
+        and probe.mx is not None
+        and probe.mx >= HOT_MIN_ROWS
+        and probe.mx >= HOT_SKEW_RATIO * float(probe.mean or 1.0)
+    )
