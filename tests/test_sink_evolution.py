@@ -135,6 +135,48 @@ def test_partition_pruned_merge_hard_delete_empties_partition(spark, tmp_path, s
     assert rows == {2: "b"}
 
 
+def test_merge_takes_anti_join_keys_from_the_source(spark, tmp_path):
+    """The anti-join reads the keys straight from the source, not from the
+    deduplicated copy: keep_latest keeps one row per key and drops none,
+    and left_anti ignores duplicate keys, so hard deletes, duplicate keys
+    and null keys leave the same rows as the deduplicated-keys form."""
+    from verified_sources_spark.operators.dedup import keep_latest
+    from verified_sources_spark.operators.merge import merge_dataframes
+
+    schema = "k long, v string, lsn long, deleted long"
+    target = spark.createDataFrame(
+        [(1, "a", 0), (2, "b", 0), (3, "c", 0), (None, "n0", 0)], "k long, v string, lsn long"
+    )
+    source = spark.createDataFrame(
+        [
+            (1, "a1", 1, None), (1, "a2", 2, None),  # duplicate key: a2 wins
+            (2, "b1", 1, None), (2, None, 2, 1),  # latest row deletes
+            (3, None, 1, 1), (3, "c1", 2, None),  # a delete overridden
+            (None, "n1", 1, None), (None, "n2", 2, None),  # null keys never match
+            (4, "d", 1, None),
+        ],
+        schema,
+    )
+    src = keep_latest(source, ["k"], ["lsn"])
+    deduped_keys = (
+        target.join(src.select("k").distinct(), on=["k"], how="left_anti")
+        .unionByName(src.filter("deleted IS NULL").drop("deleted"), allowMissingColumns=True)
+    )
+    want = [(None, "n0", 0), (None, "n2", 2), (1, "a2", 2), (3, "c1", 2), (4, "d", 1)]
+
+    def rows(df):
+        return sorted((tuple(r) for r in df.select("k", "v", "lsn").collect()), key=repr)
+
+    assert rows(deduped_keys) == sorted(want, key=repr)
+    got = merge_dataframes(target, source, ["k"], dedup_sort=["lsn"], hard_delete_col="deleted")
+    assert rows(got) == rows(deduped_keys)
+
+    sink = ParquetSink(spark, str(tmp_path / "t"))
+    sink.replace(target)
+    sink.merge(source, keys=["k"], dedup_sort=["lsn"], hard_delete_col="deleted")
+    assert rows(sink.read()) == rows(deduped_keys)
+
+
 def test_split_on_schema_change(spark):
     ch = spark.createDataFrame(
         [(1, "v1"), (2, "v1"), (3, "v2"), (4, "v2"), (5, "v1")],

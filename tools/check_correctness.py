@@ -89,6 +89,7 @@ def main():
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
+            spark_s = time.time() - t0
         except Exception as e:
             print(f"FAIL {name}: spark error: {e}")
             n_fail += 1
@@ -97,10 +98,12 @@ def main():
             print(f"ROWS-ONLY {name}: {len(srows)} rows in {time.time()-t0:.1f}s")
             n_rows_only += 1
             continue
+        t1 = time.time()
         try:
             res = con.execute(oracles[name])
             dcols = [d[0] for d in res.description]
             drows = res.fetchall()
+            oracle_s = time.time() - t1
         except Exception as e:
             print(f"FAIL {name}: duckdb error: {e}")
             n_fail += 1
@@ -135,7 +138,10 @@ def main():
             print(f"FAIL {name}: {'; '.join(problems)}")
             n_fail += 1
         else:
-            print(f"PASS {name}: {len(srows)} rows in {time.time()-t0:.1f}s")
+            print(
+                f"PASS {name}: {len(srows)} rows in {time.time()-t0:.1f}s"
+                f" (spark {spark_s:.1f}s, oracle {oracle_s:.1f}s)"
+            )
             n_pass += 1
     print(f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only")
     spark.stop()

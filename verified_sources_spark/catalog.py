@@ -4,16 +4,22 @@ Tables (see /root/repo/TESTDATA.md): region nation customer supplier part
 orders lineitem events documents embeddings — one parquet file each under
 ``{sf_dir}/{name}.parquet``.
 
-Scale note: these are plain ``spark.read.parquet`` scans, so Catalyst gets
-predicate pushdown, column pruning and partition-size splitting for free;
-at 100 TB the same loader works over a partitioned directory layout
+Scale note: these are plain parquet scans, so Catalyst gets predicate
+pushdown, column pruning and partition-size splitting for free; at 100 TB
+the same loader works over a partitioned directory layout
 (``.../orders/o_orderdate_month=.../*.parquet``) with partition pruning.
+Each table's schema is read from its parquet footer on the driver
+(``operators.fs.read_parquet``), so registering a table runs no Spark
+job; past Spark's parallel-listing threshold of files, Spark's own
+schema-merge job infers it instead.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+
+from verified_sources_spark.operators.fs import read_parquet
 
 TABLES = (
     "region",
@@ -61,9 +67,9 @@ def _ensure_session_confs(spark: SparkSession) -> None:
 
 # plan cache: (applicationId, sf_dir, name) → DataFrame.  A DataFrame is an
 # immutable lazy plan, so handing the same object to every caller is safe;
-# re-reading the parquet footer per call costs ~0.2s of driver time (schema
-# inference round trips) — pure fixed overhead when a benchmark or notebook
-# builds the same query repeatedly.  Keyed by applicationId so a stopped
+# re-listing the file and re-reading its footer per call costs driver time
+# — pure fixed overhead when a benchmark or notebook builds the same query
+# repeatedly.  Keyed by applicationId so a stopped
 # session's plans are never reused by its successor.
 _TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
@@ -85,7 +91,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if key is not None and key in _TABLE_CACHE:
         return _TABLE_CACHE[key]
     _ensure_session_confs(spark)
-    df = spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir.rstrip('/')}/{name}.parquet")
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":

@@ -33,7 +33,7 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
 from verified_sources_spark.operators.deletion_vectors import expanded_delete_rows
-from verified_sources_spark.operators.fs import FS, HadoopFS
+from verified_sources_spark.operators.fs import FS, HadoopFS, read_parquet
 from verified_sources_spark.operators.iceberg_interop import (
     _fieldid_read_session,
     _norm_path_expr,
@@ -243,7 +243,7 @@ def _read_checkpoint(
             if d.get("sidecar") is not None:
                 sidecars.append(d["sidecar"])
     else:
-        cp = spark.read.parquet(top)
+        cp = read_parquet(spark, top)
         cols = set(cp.columns)
         for row in cp.toLocalIterator():
             d = row.asDict(recursive=True)
@@ -260,7 +260,7 @@ def _read_checkpoint(
 def _apply_parquet_checkpoint(
     spark: SparkSession, snap: _Snapshot, files: list[str]
 ) -> None:
-    cp = spark.read.parquet(*files)
+    cp = read_parquet(spark, *files)
     cols = set(cp.columns)
     for row in cp.toLocalIterator():  # one row per action — metadata-sized
         _apply_checkpoint_row(snap, row.asDict(recursive=True), cols)
@@ -677,7 +677,7 @@ def write_delta_checkpoint(
             or int(json.loads(fs.read_text(lc_path))["version"]) < target
         )
         if stale:
-            n = spark.read.parquet(cp_path).count()
+            n = read_parquet(spark, cp_path).count()
             fs.write_text(lc_path, json.dumps({"version": target, "size": n}))
         return cp_path
 

@@ -35,17 +35,148 @@ implementation:
   an external CAS coordinator (DynamoDB-conditional-put-shaped) elects
   the single writer of each manifest path first, then only the winner
   writes the file.
+
+``read_parquet`` is the package's one schema-inferring parquet read: it
+takes the schema from the footers on the driver instead of a Spark job.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import posixpath
 import shutil
 import threading
 import time
 from collections.abc import Iterator
-from urllib.parse import urlparse
+from urllib.parse import unquote, urlparse
+
+from py4j.protocol import Py4JJavaError
+from pyspark.errors.exceptions.captured import CapturedException
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+from verified_sources_spark import sizing
+
+
+def read_parquet(
+    spark: SparkSession,
+    *paths: str,
+    merge_schema: bool = False,
+    base_path: str | None = None,
+) -> DataFrame:
+    """``spark.read.parquet(*paths)`` (with the ``mergeSchema`` and
+    ``basePath`` options when given) whose schema is read from the
+    footers on the driver, so building the DataFrame runs no Spark job.
+
+    Spark infers a parquet schema with a job (``mergeSchemasInParallel``)
+    even for one file.  Here the files come from Spark's own file index
+    (a read with an empty schema lists without a job), their footers are
+    read with ``ParquetFileFormat.readParquetFootersInParallel`` and
+    merged with ``ParquetFileFormat.readSchema``: Spark's conversion
+    (nanosAsLong, int96, NTZ inference) and merge rules, minus the job.
+    Every call reads the footers again; nothing is cached.  Spark infers
+    as before wherever the two could differ or the job is the scale path:
+    see ``_footer_schema``."""
+    options = {}
+    if merge_schema:
+        options["mergeSchema"] = "true"
+    if base_path is not None:
+        options["basePath"] = base_path
+    schema = _footer_schema(spark, paths, options)
+    reader = spark.read.options(**options)
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.parquet(*paths)
+
+
+def _footer_schema(spark: SparkSession, paths, options: dict) -> T.StructType | None:
+    """The schema Spark's parquet inference gives ``paths``, or None to
+    let Spark infer it: when there are no files (Spark raises), when
+    ``spark.sql.parquet.respectSummaryFiles`` is on, past
+    ``sizing.footers_on_driver``, when a Java error stops the footer
+    read or merge (Spark's own path then raises it as before), when a
+    file column is also a partition column (a given schema would move
+    it), and when a case-insensitive session merges names that differ
+    only in case (``readSchema`` merges case-sensitively)."""
+    conf = spark.conf
+    if conf.get("spark.sql.parquet.respectSummaryFiles").lower() == "true":
+        return None
+    if not sizing.footers_on_driver(spark, len(paths)):
+        return None
+    merge = "mergeSchema" in options or (
+        conf.get("spark.sql.parquet.mergeSchema").lower() == "true"
+    )
+    try:
+        empty = spark.read.options(**options).schema(T.StructType([]))
+        relation = empty.parquet(*paths)._jdf.queryExecution().analyzed().relation()
+        location = relation.location()
+        uris = list(location.inputFiles())  # one call; allFiles() order
+        if not uris or not sizing.footers_on_driver(spark, len(uris)):
+            return None
+        touch = _files_to_touch(uris, merge)
+        files = location.allFiles()
+        if touch != list(range(len(uris))):
+            picked = spark._jvm.java.util.ArrayList()
+            for i in touch:
+                picked.add(files.apply(i))
+            files = spark._jvm.scala.jdk.javaapi.CollectionConverters.asScala(picked).toList()
+        ignore_corrupt = conf.get("spark.sql.files.ignoreCorruptFiles").lower() == "true"
+        jspark = spark._jsparkSession
+        parquet = spark._jvm.org.apache.spark.sql.execution.datasources.parquet
+        fmt = getattr(getattr(parquet, "ParquetFileFormat$"), "MODULE$")
+        footers = fmt.readParquetFootersInParallel(
+            jspark.sessionState().newHadoopConf(), files, ignore_corrupt
+        )
+        merged = fmt.readSchema(footers, jspark)
+        if merged.isEmpty():
+            return None
+        schema = T.StructType.fromJson(json.loads(merged.get().json()))
+        partition_cols = T.StructType.fromJson(json.loads(relation.partitionSchema().json()))
+    except (Py4JJavaError, CapturedException):  # a Java error
+        return None
+    fold = conf.get("spark.sql.caseSensitive").lower() != "true"
+    key = str.lower if fold else str
+    overlap = {key(f.name) for f in schema.fields} & {key(p.name) for p in partition_cols.fields}
+    if overlap or (fold and _differ_in_case(schema)):
+        return None
+    return schema
+
+
+_SUMMARY_FILES = ("_common_metadata", "_metadata")
+
+
+def _files_to_touch(uris: list[str], merge: bool) -> list[int]:
+    """Indices of the files whose footers Spark's inference reads, in
+    its order (``ParquetUtils.splitFiles``): sorted by path string, data
+    files, then ``_metadata``, then ``_common_metadata``; without merge,
+    only the first of ``_common_metadata``, ``_metadata``, data.  The
+    order decides the merged column order under drift.  ``inputFiles``
+    are URL-encoded and Spark sorts ``Path.toString`` (decoded) as Java
+    strings, i.e. by UTF-16 code unit."""
+    order = sorted(range(len(uris)), key=lambda i: unquote(uris[i]).encode("utf-16-be"))
+    by_kind = {kind: [] for kind in ("data", *_SUMMARY_FILES)}
+    for i in order:
+        name = uris[i].rsplit("/", 1)[-1]
+        by_kind[name if name in _SUMMARY_FILES else "data"].append(i)
+    if merge:
+        return by_kind["data"] + by_kind["_metadata"] + by_kind["_common_metadata"]
+    first = by_kind["_common_metadata"] or by_kind["_metadata"] or by_kind["data"]
+    return first[:1]
+
+
+def _differ_in_case(dt: T.DataType) -> bool:
+    """Some struct in ``dt`` has two field names equal but for case."""
+    if isinstance(dt, T.StructType):
+        lowered = [f.name.lower() for f in dt.fields]
+        return len(set(lowered)) < len(lowered) or any(
+            _differ_in_case(f.dataType) for f in dt.fields
+        )
+    if isinstance(dt, T.ArrayType):
+        return _differ_in_case(dt.elementType)
+    if isinstance(dt, T.MapType):
+        return _differ_in_case(dt.keyType) or _differ_in_case(dt.valueType)
+    return False
 
 
 def _is_local_uri(path: str) -> bool:

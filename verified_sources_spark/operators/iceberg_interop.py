@@ -66,7 +66,7 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
 from verified_sources_spark.operators.avro_codec import read_container, write_container
-from verified_sources_spark.operators.fs import FS, HadoopFS
+from verified_sources_spark.operators.fs import FS, HadoopFS, read_parquet
 
 
 class IcebergProtocolError(RuntimeError):
@@ -777,7 +777,7 @@ def read_iceberg_table(
                     f"scoped but data files use specs {sorted(data_specs)}"
                 )
             ed = (
-                spark.read.parquet(*[e["file_path"] for e in entries])
+                read_parquet(spark, *[e["file_path"] for e in entries])
                 .select([F.col(c).alias(f"__eq_{c}") for c in cols])
                 .dropDuplicates()
             )

@@ -35,7 +35,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from verified_sources_spark.operators.dedup import keep_latest
-from verified_sources_spark.operators.fs import FS, HadoopFS
+from verified_sources_spark.operators.fs import FS, HadoopFS, read_parquet
 
 
 def merge_dataframes(
@@ -64,8 +64,11 @@ def merge_dataframes(
         upserts = src
     if target is None:
         return upserts
-    # every source key (including deletes) removes the old target row
-    touched = src.select(*keys).distinct()
+    # every source key (including deletes) removes the old target row.
+    # keep_latest keeps one row per key and drops none, so the source's
+    # own keys are the same set; left_anti ignores duplicates, and reading
+    # them from the source spares a second window dedup and its shuffle.
+    touched = source.select(*keys)
     survivors = target.join(touched, on=keys, how="left_anti")
     return survivors.unionByName(upserts, allowMissingColumns=True)
 
@@ -95,10 +98,13 @@ class ParquetSink:
         return self.fs.isdir(self.path) and bool(self.fs.listdir(self.path))
 
     def read(self) -> DataFrame:
-        # mergeSchema: tolerate column drift across appended batches
+        # merged schema: tolerate column drift across appended batches
         # (dlt's schema-evolution contract; new columns read as NULL in
-        # old files).  Partition columns come back via directory discovery.
-        return self.spark.read.option("mergeSchema", "true").parquet(self.path)
+        # old files).  The schema is merged from the data files' footers
+        # on the driver, in Spark's file order, so a read (and so every
+        # merge load) runs no schema job.  Partition columns come back
+        # via directory discovery.
+        return read_parquet(self.spark, self.path, merge_schema=True)
 
     def _writer(self, df: DataFrame):
         w = df.write

@@ -50,6 +50,7 @@ from verified_sources_spark.operators.fs import (
     FSCommitBackend,
     HadoopFS,
     _is_local_uri,
+    read_parquet,
 )
 from verified_sources_spark.operators.merge import merge_dataframes, touched_partitions
 
@@ -406,11 +407,7 @@ class ManifestTable:
         )
 
         files = [f"{self.path}/{e['path']}" for e in entries]
-        df = (
-            self.spark.read.option("mergeSchema", "true")
-            .option("basePath", self._data)
-            .parquet(*files)
-        )
+        df = read_parquet(self.spark, *files, merge_schema=True, base_path=self._data)
         dvs = [
             (_norm_path_py(f"{self.path}/{e['path']}"), e["dv"])
             for e in entries
@@ -989,9 +986,7 @@ class ManifestTable:
             raise FileNotFoundError(
                 f"version {version} recorded no change-data files"
             )
-        return self.spark.read.parquet(
-            *[f"{self.path}/{c['path']}" for c in changes]
-        )
+        return read_parquet(self.spark, *[f"{self.path}/{c['path']}" for c in changes])
 
     # ---------------------------------------------------------- compaction
     _ZORDER_TYPES = (

@@ -14,7 +14,9 @@ rows (tests/test_sizing.py runs each dispatching registry entry on
 both); the thresholds only move cost.
 
 The thresholds are module constants read at call time, so a test can
-monkeypatch them to force either branch.
+monkeypatch them to force either branch.  The one exception is
+``footers_on_driver``, whose bound is Spark's own listing conf: a test
+sets that conf instead.
 """
 
 from __future__ import annotations
@@ -23,7 +25,7 @@ import os
 
 import pyspark.sql.functions as F
 from py4j.protocol import Py4JError
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 # cosine top-k: the JVM fold below, the Arrow GEMM at or above.  Measured
 # crossover (d=64, Q=10, 32 cores, interleaved A/B at 1x/10x/100x the
@@ -116,6 +118,16 @@ def spread(df: DataFrame) -> DataFrame:
     except Py4JError:
         splits = 1
     return df if splits >= par else df.repartition(par)
+
+
+def footers_on_driver(spark: SparkSession, files: int) -> bool:
+    """Infer a parquet schema from ``files`` footers read on the driver
+    (``operators.fs.read_parquet``) rather than in Spark's schema-merge
+    job.  The bound is ``spark.sql.sources.parallelPartitionDiscovery.threshold``
+    (default 32), the count above which Spark itself lists paths with a
+    job: past it, the job is the scale path for footers too."""
+    limit = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold")
+    return files <= int(limit)
 
 
 def _at_least(df: DataFrame, rows: int) -> bool:
