@@ -86,13 +86,13 @@ def test_plan_names_the_stage_after_its_enclosing_function(spark):
         yield {"i": i}
 
     plan = map_rows(df, probe, "i long")._jdf.queryExecution().optimizedPlan().toString()
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     assert "test_plan_names_the_stage_after_its_enclosing_function.probe(" in plan
 
 
 def test_nullable_integral_input_arrives_as_int_and_none(spark):
-    # one batch holding a null: pandas would hand both columns over as
-    # float64, rounding the long to 4611686018427387904
+    # one batch holding a null: a pandas crossing would hand both columns
+    # over as float64, rounding the long to 4611686018427387904
     big = (1 << 62) + 1
     df = spark.createDataFrame([(big, None), (None, 7)], "h long, n int").coalesce(1)
 
@@ -102,6 +102,36 @@ def test_nullable_integral_input_arrives_as_int_and_none(spark):
     out = map_rows(df, seen, "h long, n int, types string").collect()
     assert sorted(out, key=str) == sorted(
         [(big, None, "int,NoneType"), (None, 7, "NoneType,int")], key=str)
+
+
+def test_values_arrive_as_arrow_to_pylist_gives_them(spark):
+    # one batch: an array as a list, an array<struct> element as a dict,
+    # a null double as None (a pandas crossing gave a numpy array and NaN)
+    df = spark.createDataFrame(
+        [([1, 2], [("a", 1)], None), ([], [], 2.5)],
+        "xs array<long>, ss array<struct<k:string,v:long>>, d double").coalesce(1)
+
+    def seen(xs, ss, d):
+        yield {"types": f"{type(xs).__name__},{[type(e).__name__ for e in ss]},{d!r}",
+               "n": len(xs) + sum(e["v"] for e in ss)}
+
+    out = map_rows(df, seen, "types string, n long")
+    assert sorted(out.collect()) == [("list,['dict'],None", 3), ("list,[],2.5", 0)]
+
+
+def test_no_map_rows_plan_casts_to_decimal(spark):
+    # the nullable long input crosses as it is: no DECIMAL(20,0) projection
+    df = spark.createDataFrame([(1,), (None,)], "h long")
+
+    def a(h):
+        yield {"h": h}
+
+    def b(h):
+        yield {"t": str(h)}
+
+    for out in (map_rows(df, a, "h long"), map_rows(map_rows(df, a, "h long").filter("true"), b, "t string")):
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert "MapInArrow" in plan and "decimal(20,0)" not in plan.lower()
 
 
 def _chain(df, between):
@@ -132,8 +162,8 @@ def test_chained_stages_fuse_into_one_python_node(spark):
     df = spark.createDataFrame([(i,) for i in range(8)], "n long").repartition(2)
     fused = _chain(df, lambda s: s)
     plan = fused._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("MapInPandas") == 1
-    assert "MapInPandas _chain.a+_chain.b+_chain.c(" in plan
+    assert plan.count("MapInArrow") == 1
+    assert "MapInArrow _chain.a+_chain.b+_chain.c(" in plan
     # cut() between the stages forces one Python node each
     assert sorted(fused.collect()) == sorted(_chain(df, cut).collect())
     assert len(fused.collect()) == 9
@@ -152,7 +182,7 @@ def test_filter_or_computed_column_between_stages_does_not_fuse(spark):
     for between in (first.filter("n > 1"),
                     first.select((F.col("n") + 1).alias("n"), "s")):
         plan = map_rows(between, b, "t string")._jdf.queryExecution().optimizedPlan().toString()
-        assert plan.count("MapInPandas") == 2
+        assert plan.count("MapInArrow") == 2
     assert sorted(r.t for r in map_rows(first.filter("n > 1"), b, "t string").collect()) == ["22", "33"]
 
 
@@ -166,7 +196,7 @@ def test_no_hand_written_row_loops_outside_boundary():
         src = path.read_text()
         if rel != "boundary.py":
             assert not frame_yield.search(src), f"{rel}: per-row frame built by hand; use map_rows"
-        n = len(re.findall(r"^\s*for pdf in batches:", src, re.M))
+        n = len(re.findall(r"^\s*for (pdf|batch) in batches:", src, re.M))
         if n:
             loops[rel] = n
     assert loops == {k: n for k, (n, _) in BATCH_LOOPS.items()}

@@ -137,13 +137,17 @@ def test_parquet_sink_dispositions(spark, tmp_path):
 # ----------------------------------------------------------------- routing
 def test_route_by_column(spark, tmp_path):
     df = spark.createDataFrame(
-        [("t1", 1), ("t2", 2), ("t1", 3)], "topic string, v int"
+        [("t1", 1), ("t2", 2), ("t1", 3), ("push:event", 4), ("a/b", 5)],
+        "topic string, v int",
     )
     tables = route_by_column(df, "topic", str(tmp_path), name_template="msgs_{route}")
-    assert set(tables) == {"msgs_t1", "msgs_t2"}
+    # table names come from the values, not their escaped directory names
+    assert set(tables) == {"msgs_t1", "msgs_t2", "msgs_push_event", "msgs_a_b"}
     assert spark.read.parquet(tables["msgs_t1"]).count() == 2
+    assert [r.v for r in spark.read.parquet(tables["msgs_push_event"]).collect()] == [4]
+    assert [r.v for r in spark.read.parquet(tables["msgs_a_b"]).collect()] == [5]
     counts = {r["topic"]: r["n_rows"] for r in route_counts(df, "topic").collect()}
-    assert counts == {"t1": 2, "t2": 1}
+    assert counts == {"t1": 2, "t2": 1, "push:event": 1, "a/b": 1}
 
 
 # --------------------------------------------------------------- normalize
@@ -396,6 +400,13 @@ def test_sessionize_static_bound_from_parquet_footers(spark, tmp_path):
     assert row_upper_bound(df.filter("user_id < 10")) == 1000
     # a self-join can multiply rows — bound must refuse
     assert row_upper_bound(df.join(df, "user_id")) is None
+    # so can a per-row Python stage (map_rows' MapInArrow)
+    from verified_sources_spark.boundary import map_rows
+
+    def twice(user_id):
+        yield from ({"user_id": user_id},) * 2
+
+    assert row_upper_bound(map_rows(df.select("user_id"), twice, "user_id long")) is None
     # a self-union holds 2000 rows but reads the same files: inputFiles()
     # is a distinct set, so summing it would undercount — bound must refuse
     assert row_upper_bound(df.unionByName(df)) is None

@@ -163,3 +163,29 @@ def test_incremental_run_keeps_session_serializable(spark, tmp_path):
     src = spark.createDataFrame([(1, 10), (2, 20)], "id long, updated long")
     assert p.run(src, "t", incremental="updated").cursor_value == 20
     spark._jvm.org.apache.spark.util.Utils.serialize(spark._jsparkSession)
+
+
+def test_cursor_of_a_file_uri_dataset_lives_in_the_dataset(spark, tmp_path, monkeypatch):
+    ds = (tmp_path / "ds").as_uri()  # file:///.../ds
+    cwds = [tmp_path / "cwd1", tmp_path / "cwd2"]
+    for d in cwds:
+        d.mkdir()
+    src = spark.createDataFrame([(1, 10), (2, 20)], "id long, updated long")
+    monkeypatch.chdir(cwds[0])
+    assert pipeline(spark, ds).run(src, "t", incremental="updated").cursor_value == 20
+    assert (tmp_path / "ds" / "_state" / "cursors.json").is_file()
+
+    # another cwd reads the same cursor: only the row past it loads
+    monkeypatch.chdir(cwds[1])
+    more = spark.createDataFrame([(2, 20), (3, 30)], "id long, updated long")
+    p = pipeline(spark, ds)
+    assert p.run(more, "t", incremental="updated").rows_loaded == 1
+    assert p.state.get("t") == 30
+    assert sorted(r.id for r in p.read("t").collect()) == [1, 2, 3]
+    assert [list(d.iterdir()) for d in cwds] == [[], []]
+
+
+def test_cursor_store_refuses_a_non_local_dataset(spark):
+    p = pipeline(spark, "hdfs://namenode:8020/ds")  # no cursor needed yet
+    with pytest.raises(ValueError, match="not local"):
+        p.state

@@ -34,8 +34,8 @@ from verified_sources_spark.session import get_spark  # noqa: E402
 
 def stage_names(plan: str) -> dict[int, str]:
     """PythonUDF result id -> stage name, from a plan's text
-    (``MapInPandas name(args)#id``)."""
-    return {int(i): n for n, i in re.findall(r"MapInPandas (\S+?)\(.*?\)#(\d+)", plan)}
+    (``MapInPandas name(args)#id`` or ``MapInArrow name(args)#id``)."""
+    return {int(i): n for n, i in re.findall(r"MapIn(?:Pandas|Arrow) (\S+?)\(.*?\)#(\d+)", plan)}
 
 
 def main() -> None:

@@ -2,34 +2,24 @@
 
 A per-row stage is a function of one input row that yields zero, one or
 many output rows as dicts.  ``map_rows`` owns everything around it: the
-pandas batch loop of ``mapInPandas``, the Python values each row
-arrives as, building each output batch with the schema's column types,
-and a stable name for the plan node.
+Arrow batch loop of ``mapInArrow``, the Python values each row arrives
+as, building each output batch with the schema's column types, and a
+stable name for the plan node.
 
-Handoff contract: a stage receives a ``long``/``int``/``short``/``byte``
-value as a Python ``int`` or ``None``, ``binary`` as ``bytes`` or
-``None`` and ``string`` as ``str`` or ``None``.  Other types arrive as
-pandas delivers them (a null ``double`` as NaN, an array as a numpy
-array).
+Handoff contract: every value arrives as pyarrow's ``to_pylist`` gives
+it, with ``None`` for null in every type.
 
-The int64 trap this module exists for, on both sides of the stage.
-Output: ``pd.DataFrame(list_of_dicts)`` infers a MIXED int+None column
-as float64, silently truncating 64-bit values to the 53-bit mantissa.
-For perceptual-hash columns this is data corruption that equality tests
-DON'T catch when both sides of a join corrupt identically — it only
-surfaces when one operator's batch contains a refusal row (None) and the
-other's doesn't.  So every ``long`` field of the output schema is built
-as pandas nullable Int64 (``pd.array(..., dtype="Int64")``), which keeps
-all 64 bits and round-trips through Arrow as int64 + validity bitmap.
-Input: PySpark's Arrow-to-pandas step hands a ``long`` column with a
-null in the batch over as float64 too, with no option to avoid it, so a
-nullable ``long`` input column crosses as ``decimal(20,0)`` and is
-``int()``-ed in the batch loop (about 1 µs a value, against 0.04 µs
-for plain int64).
+Why Arrow: a stage is a dict generator, and an Arrow batch is the
+columnar form of those dicts.  ``to_pylist`` turns each column into
+Python values, and ``RecordBatch.from_pydict`` types each output field
+by the declared schema, so a ``long`` keeps all 64 bits next to a null
+on both sides of the stage.  Pandas has no such null for ``long``
+(it widens the column to float64, which rounds past 2**53), so a pandas
+crossing needs a cast before and a conversion after every stage.
 
 Fusion.  When ``df`` is a ``map_rows`` output seen through attribute-only
 projections (``select`` of columns, ``alias``, renames, ``drop``),
-``map_rows`` builds ONE ``mapInPandas`` over the first stage's input:
+``map_rows`` builds ONE ``mapInArrow`` over the first stage's input:
 each dict the first stage yields goes straight into the next stage, as
 the contract's values, with no Arrow round trip and no second Python
 runner per task.  Chains of any length fold the same way, and the plan
@@ -37,12 +27,12 @@ node is named ``<stage1>+<stage2>+…``.  It does not fuse across
 anything else — a filter, a computed column, a join or union, a
 ``cut()`` (the way to share an intermediate: each consumer of an
 uncut stage runs it anyway) — or when the next stage reads a field of a
-type the contract above does not fix, so a fused and an unfused chain
-hand over the same values.  The producer is found by its node's text
-in the analyzed plan, which holds the exprIds of its output attributes,
-unique to that node; only the last ``_REMEMBERED`` stages are kept, so
-a long-lived driver does not keep every DataFrame alive (an evicted
-stage is still read correctly, as a second Python node).
+type whose round trip ``_HANDOFF`` does not reproduce, so a fused and an
+unfused chain hand over the same values.  The producer is found by its
+node's text in the analyzed plan, which holds the exprIds of its output
+attributes, unique to that node; only the last ``_REMEMBERED`` stages
+are kept, so a long-lived driver does not keep every DataFrame alive
+(an evicted stage is still read correctly, as a second Python node).
 """
 
 from __future__ import annotations
@@ -53,7 +43,9 @@ from collections import OrderedDict
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     BinaryType, ByteType, DataType, IntegerType, LongType, ShortType,
     StringType, StructType,
@@ -61,18 +53,15 @@ from pyspark.sql.types import (
 
 __all__ = ["map_rows"]
 
-_INTEGRAL = (ByteType, ShortType, IntegerType, LongType)
 _REMEMBERED = 256
 
 
 @dataclass(frozen=True)
 class _Stage:
     """How one ``map_rows`` node was built: ``fn`` maps each row of
-    ``source`` (the first stage's input as it crosses, ``ints`` its
-    integral columns) to its output dicts."""
+    ``source`` (the first stage's input) to its output dicts."""
 
     source: DataFrame
-    ints: frozenset
     fn: Callable[..., Iterator[dict]]
     struct: StructType
     name: str
@@ -88,7 +77,7 @@ _stages_lock = threading.Lock()
 def map_rows(df: DataFrame,
              fn: Callable[..., Iterator[dict]],
              schema: str | StructType) -> DataFrame:
-    """``df.mapInPandas`` over a per-row generator.
+    """``df.mapInArrow`` over a per-row generator.
 
     ``fn`` is called once per input row with that row's values, in
     ``df``'s column order, and yields 0..n dicts keyed by ``schema``'s
@@ -98,17 +87,16 @@ def map_rows(df: DataFrame,
     docstring) is named ``<producer>+<enclosing>.<fn>``."""
     struct = schema if isinstance(schema, StructType) else DataType.fromDDL(schema)
     name = _stage_name(fn)
+    source = df
     producer = _producer(df)
-    if producer is None:
-        source, ints = _crossing(df)
-    else:
+    if producer is not None:
         stage, feed = producer
-        source, ints = stage.source, stage.ints
+        source = stage.source
         fn, name = _compose(stage.fn, feed, fn), f"{stage.name}+{name}"
-    out = _map_in_pandas(source, ints, fn, struct, name)
+    out = _map_in_arrow(source, fn, struct, name)
     key = _node_text(out._jdf.queryExecution().analyzed())
     with _stages_lock:
-        _stages[key] = _Stage(source, ints, fn, struct, name)
+        _stages[key] = _Stage(source, fn, struct, name)
         if len(_stages) > _REMEMBERED:
             _stages.popitem(last=False)
     return out
@@ -121,57 +109,24 @@ def _stage_name(fn) -> str:
     return ".".join(scope[-2:])
 
 
-def _crossing(df: DataFrame):
-    """``df`` as it crosses into Python, nullable ``long`` columns as
-    ``decimal(20,0)``, and the indices of its integral columns."""
-    fields = df.schema.fields
-    ints = frozenset(i for i, f in enumerate(fields)
-                     if isinstance(f.dataType, _INTEGRAL))
-    carried = [f.nullable and isinstance(f.dataType, LongType) for f in fields]
-    if any(carried):
-        quoted = ["`" + f.name.replace("`", "``") + "`" for f in fields]
-        df = df.selectExpr(*(f"CAST({q} AS DECIMAL(20,0)) AS {q}" if c else q
-                             for q, c in zip(quoted, carried)))
-    return df, ints
-
-
-def _map_in_pandas(source: DataFrame, ints: frozenset, fn, struct: StructType,
-                   name: str) -> DataFrame:
-    """The one ``mapInPandas``: input values per the handoff contract,
-    ``fn`` per row, one output frame per input batch."""
+def _map_in_arrow(source: DataFrame, fn, struct: StructType, name: str) -> DataFrame:
+    """The one ``mapInArrow``: input values per the handoff contract,
+    ``fn`` per row, one output batch per input batch."""
+    # string/binary as the Arrow types the session's Python worker expects
+    large = source.sparkSession.conf.get(
+        "spark.sql.execution.arrow.useLargeVarTypes", "false").lower() == "true"
+    schema = to_arrow_schema(struct, prefers_large_types=large)
     columns = struct.fieldNames()
-    longs = frozenset(f.name for f in struct.fields
-                      if isinstance(f.dataType, LongType))
 
     def run(batches):
-        for pdf in batches:
-            values = zip(*(_ints(pdf.iloc[:, i]) if i in ints
-                           else pdf.iloc[:, i].tolist()
-                           for i in range(pdf.shape[1])))
-            yield _frame([r for v in values for r in fn(*v)], columns, longs)
+        for batch in batches:
+            values = zip(*(column.to_pylist() for column in batch.columns))
+            rows = [r for v in values for r in fn(*v)]
+            yield pa.RecordBatch.from_pydict(
+                {c: [r.get(c) for r in rows] for c in columns}, schema=schema)
 
     run.__name__ = name
-    return source.mapInPandas(run, struct)
-
-
-def _ints(col) -> list:
-    """An integral input column as Python ints and None: int64 as is,
-    float64 (a narrower type with a null in the batch) and the decimals
-    a nullable ``long`` crosses as, converted."""
-    if col.dtype.kind in "iu":
-        return col.tolist()
-    return [None if v is None or v != v else int(v) for v in col.tolist()]
-
-
-def _frame(rows: list, columns: list, longs: frozenset):
-    """The output batch: ``long`` columns as nullable Int64, the rest as
-    pandas infers them."""
-    import pandas as pd
-
-    return pd.DataFrame(
-        {c: pd.array([r.get(c) for r in rows], dtype="Int64") if c in longs
-         else [r.get(c) for r in rows] for c in columns},
-        columns=columns)
+    return source.mapInArrow(run, struct)
 
 
 # ---------------------------------------------------------------------------
@@ -230,7 +185,7 @@ def _producer(df: DataFrame):
         if kind == "Project":
             projects.append(plan)
         plan = plan.child()
-    if kind != "MapInPandas":
+    if kind != "MapInArrow":
         return None
     key = _node_text(plan)
     with _stages_lock:

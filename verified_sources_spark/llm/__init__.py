@@ -5,49 +5,3 @@ candidate generation is always hash-bucketed (never all-pairs), joins on
 bucket keys shuffle only the signatures (not the documents), and nothing
 collects to the driver.
 """
-
-from verified_sources_spark.llm.exact_dedup import exact_dedup, exact_dedup_groups  # noqa: F401
-from verified_sources_spark.llm.minhash import minhash_signatures, lsh_candidate_pairs, ngram_jaccard  # noqa: F401
-from verified_sources_spark.llm.simhash import simhash64, simhash_near_pairs, simhash_dedup_groups  # noqa: F401
-from verified_sources_spark.llm.corpus import (  # noqa: F401
-    band_table,
-    domain_cap,
-    incremental_dedup,
-    mixture_sample,
-    pack_manifest,
-    quality_filter,
-    semantic_dedup,
-    unigram_rarity,
-)
-from verified_sources_spark.llm.similarity import cosine_topk, lsh_bucketed_topk  # noqa: F401
-from verified_sources_spark.llm.splits import (  # noqa: F401
-    leakage_safe_split,
-    md5_bucket,
-    shuffled_shards,
-)
-from verified_sources_spark.llm.bpe import (  # noqa: F401
-    apply_bpe,
-    decode_bpe,
-    train_bpe,
-    word_frequencies,
-)
-from verified_sources_spark.llm.quality_model import (  # noqa: F401
-    quality_filter_learned,
-    score_quality,
-    train_quality_classifier,
-    weak_labels,
-)
-from verified_sources_spark.llm.text_prep import (  # noqa: F401
-    decontaminate,
-    duplicate_spans,
-    hash_sample,
-    pii_scrub,
-    repetition_signals,
-    token_chunks,
-)
-from verified_sources_spark.llm.line_dedup import (  # noqa: F401
-    line_dedup,
-    rebuild_docs,
-    split_lines,
-    split_token_windows,
-)

@@ -24,22 +24,32 @@ import json
 import os
 import tempfile
 from typing import Any
+from urllib.parse import urlparse
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
+
+from verified_sources_spark.operators.fs import _is_local_uri
 
 
 class CursorStore:
     """Per-resource persistent cursor state (the reference's
     ``dlt.current.resource_state()`` analogue — a control table, not a
     streaming checkpoint: these cursors are *source order* attributes
-    (updated_at, LSN, offset), not event-time watermarks)."""
+    (updated_at, LSN, offset), not event-time watermarks).
+
+    The store is a local file, committed with an atomic ``os.replace``:
+    a ``file:`` URI is taken as its local path, and any other scheme
+    (``hdfs://``, ``s3a://`` …) raises ``ValueError``."""
 
     def __init__(self, path: str):
-        self.path = path
+        if not _is_local_uri(path):
+            raise ValueError(
+                f"CursorStore keeps its state in a local file; {path!r} is not local")
+        self.path = urlparse(path).path if path.startswith("file:") else path
         self._state: dict[str, Any] = {}
-        if os.path.exists(path):
-            with open(path) as f:
+        if os.path.exists(self.path):
+            with open(self.path) as f:
                 self._state = json.load(f)
 
     def get(self, resource: str, default: Any = None) -> Any:

@@ -15,11 +15,13 @@ directories.
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from verified_sources_spark.functions import snake_case
+from verified_sources_spark.operators.fs import HadoopFS
 
 
 def route_by_column(
@@ -31,14 +33,15 @@ def route_by_column(
 ) -> dict[str, str]:
     """Write *df* partitioned by ``route_col`` in one job; return
     {table_name: path}.  ``name_template`` is the reference's
-    ``table_name=lambda item: ...`` analogue (snake_cased)."""
+    ``table_name=lambda item: ...`` analogue (snake_cased), applied to
+    the route value itself, not to its hive-escaped directory name."""
     out = os.path.join(base_path, "__routed__")
     df.write.mode(mode).partitionBy(route_col).parquet(out)
     tables: dict[str, str] = {}
-    for entry in os.listdir(out):
+    for entry in HadoopFS(df.sparkSession).listdir(out):
         if not entry.startswith(f"{route_col}="):
             continue
-        route_val = entry.split("=", 1)[1]
+        route_val = unquote(entry.split("=", 1)[1])
         name = snake_case(name_template.format(route=route_val))
         tables[name] = os.path.join(out, entry)
     return tables

@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass
+from functools import cached_property
 from typing import Any
 
 import pyspark.sql.functions as F
@@ -71,7 +72,12 @@ class Pipeline:
         self.name = name
         self.dataset_path = dataset_path.rstrip("/")
         self.table_format = table_format
-        self.state = CursorStore(os.path.join(self.dataset_path, "_state", "cursors.json"))
+
+    @cached_property
+    def state(self) -> CursorStore:
+        """The cursor store, opened at the first incremental load: a
+        dataset on a non-local filesystem loads without one."""
+        return CursorStore(os.path.join(self.dataset_path, "_state", "cursors.json"))
 
     # ------------------------------------------------------------- sinks
     def sink(self, table: str, partition_by=None):

@@ -66,7 +66,7 @@ HOT_SKEW_RATIO = 8.0
 # optimizedPlan substrings that can MULTIPLY rows: the footer sum is an
 # upper bound only when every operator keeps or reduces cardinality
 _ROW_MULTIPLIERS = ("Join", "Generate", "Expand", "FlatMap", "MapInPandas",
-                    "MapPartitions", "PythonUDTF")
+                    "MapInArrow", "MapPartitions", "PythonUDTF")
 
 
 def row_upper_bound(df: DataFrame) -> int | None:

@@ -7,63 +7,3 @@ equivalent of the reference's ``@dlt.source`` packages.  IO against
 remote APIs happens in the connector adapter (driver side or
 ``mapPartitions``); everything after that is a plain DataFrame.
 """
-
-from verified_sources_spark.sources.filesystem import read_files, read_new_files  # noqa: F401
-from verified_sources_spark.sources.rest import (  # noqa: F401
-    CursorPaginator,
-    HeaderLinkPaginator,
-    KeysetPaginator,
-    LocalPagesTransport,
-    OffsetPaginator,
-    PageNumberPaginator,
-    RestClient,
-    RestEndpoint,
-    StartTimePaginator,
-    fetch_partitioned,
-    fetch_to_dataframe,
-)
-from verified_sources_spark.sources.oauth import (  # noqa: F401
-    OAuth2Error,
-    OAuth2TokenProvider,
-    StaticTokenProvider,
-)
-from verified_sources_spark.sources.streams import (  # noqa: F401
-    OffsetTracker,
-    bounded_read,
-    timestamp_bounded,
-    with_envelope,
-)
-from verified_sources_spark.sources.cdc import (  # noqa: F401
-    apply_changes,
-    replication_origin_progress,
-    split_on_schema_change,
-    txn_aligned_batches,
-)
-from verified_sources_spark.sources.pg_decoders import (  # noqa: F401
-    decode_message,
-    messages_to_change_rows,
-)
-from verified_sources_spark.sources.inbox import read_inbox, attachments_table  # noqa: F401
-from verified_sources_spark.sources.sheets import grid_to_dataframe  # noqa: F401
-from verified_sources_spark.sources.pg_wire import (  # noqa: F401
-    WalsenderClient,
-    fetch_slot_changes,
-)
-from verified_sources_spark.sources.kafka_wire import (  # noqa: F401
-    KafkaWireClient,
-    fetch_bounded as kafka_fetch_bounded,
-    records_to_rows as kafka_records_to_rows,
-)
-from verified_sources_spark.sources.kinesis_wire import (  # noqa: F401
-    KinesisClient,
-    fetch_stream as kinesis_fetch_stream,
-)
-from verified_sources_spark.sources.mongo_wire import (  # noqa: F401
-    MongoWireClient,
-    load_collection as mongo_load_collection,
-    load_collection_parallel as mongo_load_collection_parallel,
-)
-from verified_sources_spark.sources.duckdb_writer import (  # noqa: F401
-    duckdb_batch_sink,
-    write_duckdb,
-)
