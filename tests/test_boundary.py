@@ -8,19 +8,16 @@ import re
 
 from pyspark.sql import functions as F
 
-from verified_sources_spark.boundary import map_rows
+from verified_sources_spark.boundary import map_batches, map_groups, map_rows
 from verified_sources_spark.cut import cut
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "verified_sources_spark"
 
-# the batch loops that stay outside map_rows: file -> (count, reason)
+# the hand-written batch loops: file -> (count, reason)
 BATCH_LOOPS = {
-    "boundary.py": (1, "the one per-row loop"),
-    "llm/similarity.py": (4, "numpy matrix math over the whole batch (GEMM, assignment, ADC scan); the Lloyd fold sums a whole partition"),
-    "llm/endpoint.py": (2, "one HTTP request per batch, not per row"),
-    "llm/bpe.py": (1, "adds a column; input columns pass through as-is"),
-    "operators/deletion_vectors.py": (1, "a DV frames its position array whole"),
-    "sources/pg_writer.py": (1, "a sink: one transaction per batch"),
+    "boundary.py": (1, "the one batch loop, behind map_rows and map_batches"),
+    "llm/similarity.py": (1, "the Lloyd fold sums a whole partition: at most k x partitions rows reach the driver"),
+    "sources/pg_writer.py": (1, "a sink: one transaction per partition"),
 }
 
 
@@ -201,3 +198,53 @@ def test_no_hand_written_row_loops_outside_boundary():
             loops[rel] = n
     assert loops == {k: n for k, (n, _) in BATCH_LOOPS.items()}
     assert all(reason for _, reason in BATCH_LOOPS.values())
+
+
+# the files that still cross through pandas, each for a reason the
+# Arrow entry points cannot serve
+PANDAS_FILES = {
+    "streaming/stateful.py": "applyInPandasWithState has no Arrow form with state",
+    "operators/grouped.py": "a pandas reference implementation tests compare against",
+    "sources/arrow_ingest.py": "its public fetch returns pandas frames",
+}
+
+
+def test_no_pandas_crossing_outside_the_allowlist():
+    """No Spark: every other Python stage crosses through Arrow."""
+    crossing = re.compile(
+        r"\.(mapInPandas|applyInPandas\w*)\(|\bpandas_udf\(|^\s*(import|from) pandas\b", re.M)
+    found = {path.relative_to(PKG).as_posix() for path in sorted(PKG.rglob("*.py"))
+             if crossing.search(path.read_text())}
+    assert found <= set(PANDAS_FILES), sorted(found - set(PANDAS_FILES))
+
+
+BIG = (1 << 62) + 1   # 4611686018427387904 after a float64 round trip
+
+
+def test_map_batches_keeps_64_bits_beside_a_null(spark):
+    df = spark.createDataFrame([(BIG,), (None,), (7,)], "h long").coalesce(1)
+
+    def probe(batch):
+        h = batch.column("h")
+        return {"h": h, "less": [None if v is None else v - 1 for v in h.to_pylist()],
+                "kind": [type(h).__name__] * batch.num_rows}
+
+    out = map_batches(df, probe, "h long, less long, kind string")
+    assert sorted(out.collect(), key=str) == sorted(
+        [(BIG, BIG - 1, "Int64Array"), (None, None, "Int64Array"), (7, 6, "Int64Array")], key=str)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "MapInArrow test_map_batches_keeps_64_bits_beside_a_null.probe(" in plan
+
+
+def test_map_groups_keeps_64_bits_beside_a_null(spark):
+    df = spark.createDataFrame([(1, BIG), (1, None), (BIG, 7)], "k long, h long")
+
+    def probe(key, table):
+        return {"k": [key[0]], "key_type": [type(key[0]).__name__],
+                "hs": [sorted(table.column("h").to_pylist(), key=str)]}
+
+    out = map_groups(df, ["k"], probe, "k long, key_type string, hs array<long>")
+    assert sorted(out.collect()) == [(1, "int", [BIG, None]), (BIG, "int", [7])]
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "FlatMapGroupsInArrow [k#" in plan
+    assert "test_map_groups_keeps_64_bits_beside_a_null.probe(" in plan

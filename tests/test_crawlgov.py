@@ -404,3 +404,23 @@ def test_fetch_schedule(spark):
         ("a.com", "https://a.com/c", 2000, 2, 4000, 4000),
         ("b.org", "https://b.org/x", 1000, 0, 0, 1000),
         ("b.org", "https://b.org/y", 1000, 1, 1000, 1000)]
+
+
+def test_blocklist_idn_fold_is_an_arrow_udf(spark):
+    """The IDN fold runs as an Arrow UDF (eval type 250, a pandas UDF is
+    200): a batch mixing an IDN host, an ASCII host and a null URL folds
+    the IDN host, keeps the others, and the ids beside it stay exact."""
+    import re
+
+    from verified_sources_spark.llm.crawlgov import blocklist_verdicts
+
+    big = (1 << 62) + 1
+    urls = spark.createDataFrame(
+        [(big, "https://Bücher.example/x"), (None, None), (7, "https://plain.org/")],
+        "doc_id long, url string").coalesce(1)
+    blocked = spark.createDataFrame([("xn--bcher-kva.example",)], "domain string")
+    out = blocklist_verdicts(urls, blocked)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert re.search(r"ArrowEvalPython \[.*\], 250\b", plan)
+    assert sorted(((r.doc_id, r.host, r.blocked) for r in out.collect()), key=str) == sorted(
+        [(big, "xn--bcher-kva.example", True), (None, None, False), (7, "plain.org", False)], key=str)

@@ -264,6 +264,49 @@ def test_embedding_near_dup_lsh_matches_exact_on_true_dups(spark):
     assert kept_ids == set(range(40))  # clones dropped, originals kept
 
 
+def test_ivf_index_trains_once(spark):
+    """IvfIndex.build() trains the coarse quantizer (one Lloyd job per
+    iteration) and buckets the corpus; each of three topk() calls gives
+    ivf_topk's rows and runs no Lloyd job.  A Lloyd job is one whose
+    stage call site is a line of similarity._lloyd."""
+    import inspect
+    import re
+
+    from verified_sources_spark.catalog import load_table
+    from verified_sources_spark.llm import similarity
+    from verified_sources_spark.llm.index_backend import IvfIndex
+
+    e = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    q = e.filter(F.col("vec_id") < 5)
+    lines, first = inspect.getsourcelines(similarity._lloyd)
+    lloyd = range(first, first + len(lines))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def run(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            out = action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = 0
+        for j in tracker.getJobIdsForGroup(group):
+            # a stage the job skipped (its shuffle output reused) has no info
+            infos = (tracker.getStageInfo(s) for s in tracker.getJobInfo(j).stageIds)
+            sites = [i.name for i in infos if i is not None]
+            jobs += any(m and int(m[1]) in lloyd
+                        for m in (re.search(r"similarity\.py:(\d+)$", n) for n in sites))
+        return out, jobs
+
+    index, trained = run("ivf-build", lambda: IvfIndex(n_centroids=8, n_probe=3).build(e))
+    assert trained == 2  # lloyd_iters
+    want = sorted(tuple(r) for r in similarity.ivf_topk(e, q, k=3, n_centroids=8, n_probe=3).collect())
+    for i in range(3):
+        got, retrained = run(f"ivf-topk-{i}", lambda: sorted(tuple(r) for r in index.topk(q, k=3).collect()))
+        assert got == want
+        assert retrained == 0
+
+
 def test_vector_index_backends_same_contract(spark, tmp_path):
     """VERDICT r2 missing #3: all index backends answer the same topk
     contract; brute force is the recall oracle; an injected external

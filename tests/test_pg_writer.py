@@ -180,6 +180,17 @@ def test_append_types_roundtrip(spark, pg_server, pgc):
     )
 
 
+def test_nullable_long_round_trips_exactly(spark, pg_server, pgc):
+    """One batch holding 2**62+1 beside a null: the COPY text carries the
+    long as Arrow holds it (a pandas crossing widened the column to
+    float64 and stored 4611686018427387904)."""
+    big = (1 << 62) + 1
+    df = spark.createDataFrame([(1, big), (2, None), (3, -big)], "k long, h long").coalesce(1)
+    write_postgres(df, pg_server, "t_long", disposition="append")
+    assert _rows(pgc, "SELECT k::text, h::text FROM t_long") == {
+        ("1", str(big)), ("2", None), ("3", str(-big))}
+
+
 def test_replace(spark, pg_server, pgc):
     df1 = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
     df2 = spark.createDataFrame([(9, "z")], "k long, v string")

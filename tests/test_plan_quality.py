@@ -161,7 +161,7 @@ def test_leakage_split_reuses_banded_pipeline(spark, monkeypatch):
 def test_gemm_assignment_plan_has_no_cross_join(spark):
     """Nearest-centroid ranking (similarity.rank_clusters) must not plan
     a cartesian/broadcast-nested-loop product — the round-6 GEMM form is
-    one mapInPandas over the vector scan — and neither may float
+    one map_batches stage (MapInArrow) over the vector scan — and neither may float
     ``ivf_topk``, whose query probes rank through the same kernel."""
     from verified_sources_spark.llm.similarity import ivf_topk, rank_clusters
 
@@ -175,7 +175,7 @@ def test_gemm_assignment_plan_has_no_cross_join(spark):
                  ivf._jdf.queryExecution().executedPlan().toString()):
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
-        assert "MapInPandas" in plan
+        assert "MapInArrow" in plan
 
 
 def test_multimodal_fingerprint_plans_never_shuffle_payloads(spark):

@@ -322,3 +322,34 @@ class TestTrainedIvfPq:
             exact, k=3).collect()
         assert trained["mean_recall"] >= pinned["mean_recall"], (
             trained["mean_recall"], pinned["mean_recall"])
+
+
+def test_rank_clusters_keeps_ids_exact_beside_a_null(spark):
+    """One batch of ids 2**62+1, None, 7: each id passes through the
+    assignment stage as its Arrow value (a pandas crossing widened the
+    column to float64 and returned 4611686018427387904)."""
+    from verified_sources_spark.llm.similarity import rank_clusters
+
+    big = (1 << 62) + 1
+    df = spark.createDataFrame(
+        [(big, [0.0, 0.0]), (None, [9.0, 0.0]), (7, [1.0, 0.0])],
+        "vec_id long, embedding array<float>").coalesce(1)
+    out = rank_clusters(df, "vec_id", "embedding", [[0.0, 0.0], [9.0, 0.0]])
+    assert sorted(((r.vec_id, r.cluster) for r in out.collect()), key=str) == sorted(
+        [(big, 0), (None, 1), (7, 0)], key=str)
+
+
+def test_vector_matrix_refuses_null_and_ragged_vectors():
+    """No Spark: the Arrow vector column becomes one (n, d) matrix, and a
+    null or ragged vector raises as ``np.array(list(...))`` did."""
+    import pyarrow as pa
+
+    from verified_sources_spark.llm.similarity import _matrix
+
+    col = pa.array([[1.0, 2.0], [3.0, 4.0], [5.0, 6.0]], pa.list_(pa.float32())).slice(1)
+    assert _matrix(col, exact=False, scaled=False).tolist() == [[3.0, 4.0], [5.0, 6.0]]
+    assert _matrix(col, exact=True, scaled=False).tolist() == [
+        [3 * KMEANS_SCALE, 4 * KMEANS_SCALE], [5 * KMEANS_SCALE, 6 * KMEANS_SCALE]]
+    for bad in ([[1.0, 2.0], None], [[1.0, 2.0], [3.0]], [[1.0, None]]):
+        with pytest.raises(ValueError):
+            _matrix(pa.array(bad, pa.list_(pa.float64())), exact=False, scaled=False)

@@ -4,7 +4,7 @@ sessionize's hot-user gate included).
 Each dispatching registry entry runs with its threshold forced to 0
 (every input counts as large) and to 10**9 (every input counts as
 small).  The plan must really take the other branch — the Arrow GEMM's
-MapInPandas, a cut's LogicalRDD, the Spark connected-components loop's
+MapInArrow, a cut's LogicalRDD, the Spark connected-components loop's
 changed flag or the bucketed sessionizer's boundary-merge Join appears
 or disappears — and the rows must hash identically, so a threshold only
 ever moves cost.
@@ -20,7 +20,7 @@ from verified_sources_spark.plans.queries import QUERIES
 
 # entry → the plan node its large-input branch adds
 BRANCH_MARKERS = {
-    "cosine_topk_embeddings": "MapInPandas",
+    "cosine_topk_embeddings": "MapInArrow",
     "lsh_candidate_pairs_docs": "LogicalRDD",
     "cross_source_dedup_docs": "LogicalRDD",
     "incremental_dedup_docs": "LogicalRDD",
@@ -79,3 +79,13 @@ def test_lsh_level1_cut_shares_or_skips(spark, sf_dir, monkeypatch):
     assert cut_scans == 0
     assert uncut_scans >= 2
     assert cut_rows == uncut_rows
+
+
+def test_row_bound_reads_footers_under_percent_encoded_paths(spark, tmp_path):
+    """inputFiles() lists percent-encoded URIs (``a%20b%25c``): the bound
+    still finds each file's footer and sums its rows."""
+    path = str(tmp_path / "a b%c" / "t.parquet")
+    spark.range(0, 37, numPartitions=2).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert any("%20" in f for f in df.inputFiles())
+    assert sizing.row_upper_bound(df) == 37

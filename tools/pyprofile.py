@@ -5,8 +5,9 @@
 Runs ENTRY once (built, then written to the ``noop`` sink) under Spark's
 own UDF profiler, ``spark.sql.pyspark.udf.profiler=perf``, and prints
 for each Python stage the ``N`` functions with the most internal time.
-A stage is named by its plan node (``boundary.map_rows`` names, e.g.
-``cross_source_dedup_docs.mint+warc_extract.run``); a stage that ran
+A stage is named by its plan node (``boundary`` names, e.g.
+``cross_source_dedup_docs.mint+warc_extract.run`` or a grouped
+``_cluster_pairs_gemm.one_cluster``); a stage that ran
 while the entry was being built (a cut, a size probe) has no node in
 the final plan and prints as ``UDF<id>``.  The profiler sees only time
 inside the UDF, not the Python runner's start-up per task.
@@ -34,8 +35,10 @@ from verified_sources_spark.session import get_spark  # noqa: E402
 
 def stage_names(plan: str) -> dict[int, str]:
     """PythonUDF result id -> stage name, from a plan's text
-    (``MapInPandas name(args)#id`` or ``MapInArrow name(args)#id``)."""
-    return {int(i): n for n, i in re.findall(r"MapIn(?:Pandas|Arrow) (\S+?)\(.*?\)#(\d+)", plan)}
+    (``MapInPandas name(args)#id``, ``MapInArrow name(args)#id`` or
+    ``FlatMapGroupsInArrow [keys], name(args)#id``)."""
+    return {int(i): n for n, i in re.findall(
+        r"(?:MapIn(?:Pandas|Arrow)|FlatMapGroupsIn(?:Pandas|Arrow) \[[^\]]*\],) (\S+?)\(.*?\)#(\d+)", plan)}
 
 
 def main() -> None:

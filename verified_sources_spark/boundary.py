@@ -1,38 +1,44 @@
-"""The Python boundary for per-row stages.
+"""The Python boundary: every Python stage crosses it through Arrow.
 
-A per-row stage is a function of one input row that yields zero, one or
-many output rows as dicts.  ``map_rows`` owns everything around it: the
-Arrow batch loop of ``mapInArrow``, the Python values each row arrives
-as, building each output batch with the schema's column types, and a
-stable name for the plan node.
+- ``map_rows(df, fn, schema)``: ``fn`` gets one input row's values and
+  yields 0..n output dicts.  Every value arrives as pyarrow's
+  ``to_pylist`` gives it, with ``None`` for null in every type.
+- ``map_batches(df, fn, schema)`` (``mapInArrow``): ``fn`` gets each
+  non-empty input ``pa.RecordBatch``.
+- ``map_groups(df, keys, fn, schema)`` (``groupBy(*keys).applyInArrow``):
+  ``fn(key, table)`` gets the key as a tuple of Python values and the
+  group as a ``pa.Table``.
 
-Handoff contract: every value arrives as pyarrow's ``to_pylist`` gives
-it, with ``None`` for null in every type.
+A batch or group stage returns a mapping from each output field to a
+column (a pyarrow array, numpy array or list).  A column that only
+passes through stays an Arrow array (``take``); numpy holds only what a
+stage computes on.  The boundary types each output field by the declared
+schema and names the plan node ``<enclosing>.<fn>``; ``map_rows`` hands
+its row loop to the one batch loop, ``_map_in_arrow``.  Per-task state
+(a cache, a client built at the first batch) lives in ``fn``'s closure:
+each task deserializes its own copy of ``fn``.
 
-Why Arrow: a stage is a dict generator, and an Arrow batch is the
-columnar form of those dicts.  ``to_pylist`` turns each column into
-Python values, and ``RecordBatch.from_pydict`` types each output field
-by the declared schema, so a ``long`` keeps all 64 bits next to a null
-on both sides of the stage.  Pandas has no such null for ``long``
-(it widens the column to float64, which rounds past 2**53), so a pandas
-crossing needs a cast before and a conversion after every stage.
+Why Arrow: a ``long`` keeps all 64 bits next to a null on both sides of
+a stage.  Pandas has no such null for ``long``: it widens the column to
+float64, which rounds past 2**53.
 
-Fusion.  When ``df`` is a ``map_rows`` output seen through attribute-only
-projections (``select`` of columns, ``alias``, renames, ``drop``),
-``map_rows`` builds ONE ``mapInArrow`` over the first stage's input:
-each dict the first stage yields goes straight into the next stage, as
-the contract's values, with no Arrow round trip and no second Python
-runner per task.  Chains of any length fold the same way, and the plan
-node is named ``<stage1>+<stage2>+…``.  It does not fuse across
-anything else — a filter, a computed column, a join or union, a
-``cut()`` (the way to share an intermediate: each consumer of an
-uncut stage runs it anyway) — or when the next stage reads a field of a
-type whose round trip ``_HANDOFF`` does not reproduce, so a fused and an
-unfused chain hand over the same values.  The producer is found by its
-node's text in the analyzed plan, which holds the exprIds of its output
-attributes, unique to that node; only the last ``_REMEMBERED`` stages
-are kept, so a long-lived driver does not keep every DataFrame alive
-(an evicted stage is still read correctly, as a second Python node).
+Fusion (``map_rows`` only).  When ``df`` is a ``map_rows`` output seen
+through attribute-only projections (``select`` of columns, ``alias``,
+renames, ``drop``), ``map_rows`` builds ONE ``mapInArrow`` over the
+first stage's input: each dict the first stage yields goes straight
+into the next stage, as the contract's values, with no Arrow round trip
+and no second Python runner per task.  Chains of any length fold the
+same way, and the plan node is named ``<stage1>+<stage2>+…``.  It does
+not fuse across anything else — a filter, a computed column, a join or
+union, a ``cut()`` (the way to share an intermediate: each consumer of
+an uncut stage runs it anyway) — or when the next stage reads a field
+of a type whose round trip ``_HANDOFF`` does not reproduce, so a fused
+and an unfused chain hand over the same values.  The producer is found
+by its node's text in the analyzed plan, which holds the exprIds of its
+output attributes, unique to that node; only the last ``_REMEMBERED``
+stages are kept, so a long-lived driver does not keep every DataFrame
+alive (an evicted stage is still read correctly, as a second Python
+node).
 """
 
 from __future__ import annotations
@@ -40,7 +46,7 @@ from __future__ import annotations
 import re
 import threading
 from collections import OrderedDict
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterator, Mapping
 from dataclasses import dataclass
 
 import pyarrow as pa
@@ -51,7 +57,7 @@ from pyspark.sql.types import (
     StringType, StructType,
 )
 
-__all__ = ["map_rows"]
+__all__ = ["map_batches", "map_groups", "map_rows"]
 
 _REMEMBERED = 256
 
@@ -74,6 +80,29 @@ _stages: OrderedDict[str, _Stage] = OrderedDict()
 _stages_lock = threading.Lock()
 
 
+def map_batches(df: DataFrame,
+                fn: Callable[[pa.RecordBatch], Mapping],
+                schema: str | StructType) -> DataFrame:
+    """``df.mapInArrow``: ``fn(batch)`` returns the output columns."""
+    return _map_in_arrow(df, fn, _struct(schema), _stage_name(fn))
+
+
+def map_groups(df: DataFrame, keys: list[str],
+               fn: Callable[[tuple, pa.Table], Mapping],
+               schema: str | StructType) -> DataFrame:
+    """``df.groupBy(*keys).applyInArrow``: ``fn(key, table)`` returns
+    the output columns; ``table`` holds every column of ``df``."""
+    struct = _struct(schema)
+    arrow = _arrow_schema(df, struct)
+
+    # un-annotated: pyspark infers the grouped eval type from hints
+    def run(key, table):
+        return _table(fn(tuple(k.as_py() for k in key), table), arrow)
+
+    run.__name__ = _stage_name(fn)
+    return df.groupBy(*keys).applyInArrow(run, struct)
+
+
 def map_rows(df: DataFrame,
              fn: Callable[..., Iterator[dict]],
              schema: str | StructType) -> DataFrame:
@@ -85,7 +114,7 @@ def map_rows(df: DataFrame,
     ``<enclosing>.<fn>`` from ``fn``'s qualified name (its module when
     ``fn`` is top-level); a stage fused onto the one it reads (module
     docstring) is named ``<producer>+<enclosing>.<fn>``."""
-    struct = schema if isinstance(schema, StructType) else DataType.fromDDL(schema)
+    struct = _struct(schema)
     name = _stage_name(fn)
     source = df
     producer = _producer(df)
@@ -93,13 +122,24 @@ def map_rows(df: DataFrame,
         stage, feed = producer
         source = stage.source
         fn, name = _compose(stage.fn, feed, fn), f"{stage.name}+{name}"
-    out = _map_in_arrow(source, fn, struct, name)
+    columns = struct.fieldNames()
+
+    def rows(batch):
+        values = zip(*(column.to_pylist() for column in batch.columns))
+        out = [r for v in values for r in fn(*v)]
+        return {c: [r.get(c) for r in out] for c in columns}
+
+    out = _map_in_arrow(source, rows, struct, name)
     key = _node_text(out._jdf.queryExecution().analyzed())
     with _stages_lock:
         _stages[key] = _Stage(source, fn, struct, name)
         if len(_stages) > _REMEMBERED:
             _stages.popitem(last=False)
     return out
+
+
+def _struct(schema: str | StructType) -> StructType:
+    return schema if isinstance(schema, StructType) else DataType.fromDDL(schema)
 
 
 def _stage_name(fn) -> str:
@@ -109,21 +149,24 @@ def _stage_name(fn) -> str:
     return ".".join(scope[-2:])
 
 
-def _map_in_arrow(source: DataFrame, fn, struct: StructType, name: str) -> DataFrame:
-    """The one ``mapInArrow``: input values per the handoff contract,
-    ``fn`` per row, one output batch per input batch."""
+def _arrow_schema(df: DataFrame, struct: StructType) -> pa.Schema:
     # string/binary as the Arrow types the session's Python worker expects
-    large = source.sparkSession.conf.get(
+    large = df.sparkSession.conf.get(
         "spark.sql.execution.arrow.useLargeVarTypes", "false").lower() == "true"
-    schema = to_arrow_schema(struct, prefers_large_types=large)
-    columns = struct.fieldNames()
+    return to_arrow_schema(struct, prefers_large_types=large)
+
+
+def _table(columns: Mapping, schema: pa.Schema) -> pa.Table:
+    return pa.Table.from_pydict(dict(columns), schema=schema)
+
+
+def _map_in_arrow(source: DataFrame, fn, struct: StructType, name: str) -> DataFrame:
+    schema = _arrow_schema(source, struct)
 
     def run(batches):
         for batch in batches:
-            values = zip(*(column.to_pylist() for column in batch.columns))
-            rows = [r for v in values for r in fn(*v)]
-            yield pa.RecordBatch.from_pydict(
-                {c: [r.get(c) for r in rows] for c in columns}, schema=schema)
+            if batch.num_rows:
+                yield from _table(fn(batch), schema).to_batches()
 
     run.__name__ = name
     return source.mapInArrow(run, struct)

@@ -19,7 +19,7 @@ linear in the corpus, never all-pairs, and every edge is
 hamming-verified.
 
 Scale shape mirrors llm/image_dedup.py: fingerprinting is a narrow
-``mapInPandas`` over the binary column — payload bytes never shuffle,
+``boundary.map_rows`` stage over the binary column — payload bytes never shuffle,
 each clip reduces to one 64-bit long on the executor that read it;
 grouping shuffles only (id, fingerprint) pairs.  Undecodable or
 too-short clips yield ``decoded_ok=false`` and come back as singleton
@@ -164,7 +164,7 @@ def audio_segments(
     ``decoded_ok=true`` row with null segment fields (silent ≠ broken);
     an undecodable clip emits ``decoded_ok=false``.  Same scale shape
     as the fingerprint ops: per-clip local math inside one narrow
-    ``mapInPandas``, zero shuffle, only the segment table leaves the
+    ``map_rows`` stage, zero shuffle, only the segment table leaves the
     executor."""
     if frame_ms <= 0:
         raise ValueError("frame_ms must be positive")

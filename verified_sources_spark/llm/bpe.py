@@ -33,11 +33,11 @@ split on the marker.
 from __future__ import annotations
 
 from collections import Counter, defaultdict
-from collections.abc import Iterator
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from verified_sources_spark.boundary import map_batches
 from verified_sources_spark.cut import cut
 
 from verified_sources_spark.functions.text import tokens
@@ -278,38 +278,38 @@ def apply_bpe(
     """Append ``out_col`` (array<string> of BPE subword tokens, in
     document order, ``</w>`` marking word ends).
 
-    mapInPandas with the merge ranks in the closure: encoding is pure
-    per-row work, Arrow-batched, with a per-batch word→tokens cache (the
-    Zipf head encodes once per batch, not once per occurrence).
+    One ``map_batches`` stage with the merge ranks in the closure:
+    encoding is pure per-row work, Arrow-batched, and every input column
+    passes through as its Arrow column.  The word→tokens cache lives in
+    the closure too, so each task keeps one across its batches (the
+    Zipf head encodes once per task, not once per occurrence).
     """
     import re as _re
 
+    import pyspark.sql.types as T
+
     ranks = {tuple(m): i for i, m in enumerate(merges)}
     token_re = _re.compile(r"[a-z0-9]+")
-    out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields]
-        + [f"`{out_col}` array<string>"]
+    out_schema = T.StructType(
+        [T.StructField(f.name, f.dataType) for f in df.schema.fields]
+        + [T.StructField(out_col, T.ArrayType(T.StringType()))]
     )
+    cache: dict[str, list[str]] = {}
 
-    def encode_batches(batches: Iterator) -> Iterator:
-        cache: dict[str, list[str]] = {}
-        # not map_rows: adds a column; input columns pass through as-is
-        for pdf in batches:
-            col = []
-            for text in pdf[text_col]:
-                toks: list[str] = []
-                for w in token_re.findall((text or "").lower()):
-                    enc = cache.get(w)
-                    if enc is None:
-                        enc = _encode_word(w, ranks)
-                        cache[w] = enc
-                    toks.extend(enc)
-                col.append(toks)
-            pdf = pdf.copy()
-            pdf[out_col] = col
-            yield pdf
+    def encode(batch):
+        col = []
+        for text in batch.column(text_col).to_pylist():
+            toks: list[str] = []
+            for w in token_re.findall((text or "").lower()):
+                enc = cache.get(w)
+                if enc is None:
+                    enc = _encode_word(w, ranks)
+                    cache[w] = enc
+                toks.extend(enc)
+            col.append(toks)
+        return {**dict(zip(batch.schema.names, batch.columns)), out_col: col}
 
-    return df.mapInPandas(encode_batches, schema=out_schema)
+    return map_batches(df, encode, out_schema)
 
 
 def decode_bpe(tokens_: list[str]) -> str:

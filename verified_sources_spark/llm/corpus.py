@@ -37,11 +37,12 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from verified_sources_spark.boundary import map_groups
 from verified_sources_spark.cut import cut
-
 from verified_sources_spark.functions.text import token_count, tokens
 from verified_sources_spark.llm.minhash import minhash_signatures
 from verified_sources_spark.llm.similarity import (
+    _matrix,
     rank_clusters,
     train_kmeans,
     train_kmeans_quantized,
@@ -676,28 +677,25 @@ def incremental_dedup(
 
 def _cluster_pairs_gemm(assigned: DataFrame, threshold: float) -> DataFrame:
     """Over-threshold cosine pairs within each cluster via chunked numpy
-    matrix products (one ``applyInPandas`` group per cluster).
+    matrix products (one ``map_groups`` group per cluster).
 
     Memory per task is O(block × n_i), never the full n_i² score matrix:
     rows are scored in 1024-row blocks against the whole cluster, and
     only (id_a < id_b, score >= threshold) hits are emitted.  All math in
     float64, matching ``similarity.embedding_near_dup_pairs``' dot/(|a||b|)
     up to rounding at the threshold boundary."""
-    import pandas as pd
-
-    def one_cluster(pdf: "pd.DataFrame") -> "pd.DataFrame":
+    def one_cluster(key, table):
         import numpy as np
+        import pyarrow.compute as pc
 
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame({"id_a": [], "id_b": []}).astype("int64")
-        order = np.argsort(pdf["_id"].values, kind="stable")
-        ids = pdf["_id"].values[order]
-        x = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf["_v"].values[order]])
+        ids = table.column("_id")
+        order = pc.sort_indices(ids).to_numpy()
+        x = _matrix(table.column("_v"), exact=False, scaled=False)[order]
         norms = np.linalg.norm(x, axis=1)
         norms[norms == 0.0] = 1.0  # zero vectors: cosine treated as 0, never a dup
         xn = x / norms[:, None]
-        out_a, out_b = [], []
+        n = table.num_rows
+        out_a, out_b = [order[:0]], [order[:0]]  # empty: a cluster may hold no pair
         block = 1024
         for s in range(0, n, block):
             e = min(s + block, n)
@@ -707,13 +705,11 @@ def _cluster_pairs_gemm(assigned: DataFrame, threshold: float) -> DataFrame:
                 i = s + bi
                 js = np.nonzero(scores[bi, i + 1 :] >= threshold)[0] + i + 1
                 if js.size:
-                    out_a.extend([ids[i]] * js.size)
-                    out_b.extend(ids[js].tolist())
-        return pd.DataFrame({"id_a": out_a, "id_b": out_b}).astype("int64")
+                    out_a.append(np.full(js.size, order[i]))
+                    out_b.append(order[js])
+        return {"id_a": ids.take(np.concatenate(out_a)), "id_b": ids.take(np.concatenate(out_b))}
 
-    return assigned.groupBy("cluster").applyInPandas(
-        one_cluster, "id_a long, id_b long"
-    )
+    return map_groups(assigned, ["cluster"], one_cluster, "id_a long, id_b long")
 
 
 def semantic_dedup(
@@ -743,7 +739,7 @@ def semantic_dedup(
     target_cluster_size)``) so the per-cluster quadratic bound stays
     constant as the corpus grows (one metadata-sized count() job).
 
-    The within-cluster pair stage is one ``applyInPandas`` per cluster:
+    The within-cluster pair stage is one ``map_groups`` group per cluster:
     vectors are L2-normalized once, then scored in CHUNKED numpy matrix
     products (1024-row blocks × the cluster), emitting only
     over-threshold pairs — linear memory in the cluster, never the n_i²
@@ -795,7 +791,7 @@ def semantic_dedup(
     # assigned feeds the pair stage AND the final kept-join (3 copies of
     # the quantize+assign subtree in the uncut final plan — each one a
     # full Python-boundary pass); pairs feeds drops and the absorption
-    # count (2 copies of the applyInPandas cluster stage).  Cut both so
+    # count (2 copies of the map_groups cluster stage).  Cut both so
     # the assignment and the pair scan each execute once (r16, §2.4).
     assigned = assigned.transform(cut)
     pairs = _cluster_pairs_gemm(assigned, threshold)

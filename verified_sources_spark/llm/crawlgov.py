@@ -296,7 +296,7 @@ def frontier_audit(df, agent: str, id_col: str = "doc_id",
     crawler runs per host: parse the host's robots.txt AND its
     sitemap in one pass, then audit every advertised URL against the
     agent's effective rule group (:func:`is_allowed` — longest
-    pattern wins, Allow beats ties).  One mapInPandas: both payloads
+    pattern wins, Allow beats ties).  One map_rows stage: both payloads
     stay in the scan's executor, output is metadata-sized
     (url, allowed, crawl_delay) rows.  Either payload failing
     isolates the whole host as ``decoded_ok=false`` (a frontier must
@@ -611,16 +611,16 @@ def blocklist_verdicts(df, blocked_df, id_col: str = "doc_id",
         F.lower(F.trim(F.col("domain"))), r"\.$", "")
     if fold_idn:
         def _fold_batch(col):
-            # all-ASCII batches short-circuit without a Python loop
-            mask = ~col.map(
-                lambda h: h is None or h.isascii(), na_action=None)
-            if not mask.any():
-                return col
-            out = col.copy()
-            out[mask] = col[mask].map(idn_fold_host)
-            return out
+            import pyarrow as pa
+            import pyarrow.compute as pc
 
-        _fold = F.pandas_udf(_fold_batch, "string")
+            # all-ASCII batches short-circuit without a Python loop
+            if pc.all(pc.fill_null(pc.string_is_ascii(col), True)).as_py() is not False:
+                return col
+            return pa.array([h if h is None or h.isascii() else idn_fold_host(h)
+                             for h in col.to_pylist()], col.type)
+
+        _fold = F.arrow_udf(_fold_batch, "string")
         host = _fold(host)
         rule_expr = _fold(rule_expr)
     hosts = df.select(F.col(id_col), host.alias("host"))

@@ -427,7 +427,7 @@ def archive_document_texts(df, id_col: str = "doc_id",
     of PDFs/office files/notes lands as text rows).  Package zips
     (docx/odf/epub) are DOCUMENTS, never exploded — the router's
     sniff makes that call, which is why this walk lives here and not
-    in llm/archives.  One mapInPandas: member bytes never leave the
+    in llm/archives.  One map_rows stage: member bytes never leave the
     scan's executor.  A corrupt archive isolates as one
     ``decoded_ok=false`` row; a member the router refuses (media,
     binary, corrupt inner archive) isolates as its own false row with

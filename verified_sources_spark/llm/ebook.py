@@ -9,7 +9,7 @@ The reference routes such local documents through its
 unstructured-data/filesystem pipeline
 (``/root/reference/sources/unstructured_data``,
 ``/root/reference/sources/filesystem``); this is the decode half,
-Spark-first: Arrow-batched ``mapInPandas``, payloads never shuffle,
+Spark-first: one ``boundary.map_rows`` stage, payloads never shuffle,
 corrupt files isolate as ``decoded_ok=false`` rows.
 
 Format (public: IDPF EPUB 2/3, OCF container):

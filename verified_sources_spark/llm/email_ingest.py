@@ -7,8 +7,8 @@ mboxes, support-desk exports) are a standing text-corpus source, and
 the reference already ingests live mailboxes through its inbox/IMAP
 source (``/root/reference/sources/inbox`` — UID ranges, filters, body
 + attachment extraction).  This module is the at-rest half of the same
-surface: bytes → per-message text rows, Spark-first (Arrow-batched
-``mapInPandas``; payloads never shuffle; corrupt messages isolate as
+surface: bytes → per-message text rows, Spark-first (one
+``boundary.map_rows`` stage; payloads never shuffle; corrupt messages isolate as
 ``decoded_ok=false`` rows, never task failures).
 
 Decode posture mirrors the WARC front door: honor the declared
@@ -387,7 +387,7 @@ def email_attachment_texts(df, id_col: str = "doc_id",
     attachments (EML/mbox via MIME, .msg via MAPI attach storages) and
     route every attachment through llm/docrouter.extract_document —
     PDF/office/EPUB/HTML/markdown/plain attachments land as TEXT rows
-    beside the crawl and archive front doors.  One mapInPandas: the
+    beside the crawl and archive front doors.  One map_rows stage: the
     attachment bytes never leave the scan's executor (no intermediate
     payload column, no shuffle).  A mail with no attachments emits one
     ``att_idx=null`` row; a corrupt mail OR a refused attachment

@@ -10,11 +10,11 @@ connector stack — bounded exponential backoff on 5xx, ``Retry-After``
 honored on 429, Bearer auth per request.
 
 ``extract_fields_via_endpoint`` is the Spark entry point: the same
-mapInPandas / content-hash contract as ``extract.extract_fields``, but
-each Arrow batch issues ONE batched HTTP call covering every
-(document × field) prompt — the batch shape a real serving endpoint
-wants, and the reason the Arrow batch boundary is the model-call
-boundary.  Tests drive it against an in-process fake server on a real
+content-hash contract as ``extract.extract_fields``, but in one
+``boundary.map_batches`` stage where each Arrow batch issues ONE
+batched HTTP call covering every (document × field) prompt — the batch
+shape a real serving endpoint wants, and the reason the Arrow batch
+boundary is the model-call boundary.  Tests drive it against an in-process fake server on a real
 socket (tests/test_llm_endpoint.py), like every other wire client here.
 """
 
@@ -26,6 +26,7 @@ import urllib.error
 import urllib.request
 from collections.abc import Callable
 
+from verified_sources_spark.boundary import map_batches
 from verified_sources_spark.sources.rest import RestClient, Transport, TransportError
 
 PROMPT_TEMPLATE = (
@@ -89,8 +90,8 @@ class LlmEndpointClient:
     (when sent) or exponential backoff; other 4xx raise immediately.
 
     Construction is cheap and the config is plain strings/floats, so
-    executors build one per ``mapInPandas`` partition from the task
-    closure — no driver-side connection is ever pickled."""
+    each task builds one at its first batch from the stage's closure —
+    no driver-side connection is ever pickled."""
 
     def __init__(
         self,
@@ -162,7 +163,7 @@ class EmbeddingsClient:
     (the protocol's contract: entries may arrive out of order).  Retry
     policy is the ONE shared ``rest.RestClient`` loop: 429/5xx retry
     with Retry-After/backoff, other 4xx raise immediately.  Cheap to
-    construct — executors build one per mapInPandas partition."""
+    construct — each task builds one at its first batch."""
 
     def __init__(
         self,
@@ -234,7 +235,6 @@ def embed_texts(
     Endpoint config travels as plain strings; each task constructs its
     own client.  Transient throttles retry inside the task; a protocol
     violation fails the task loudly."""
-    import pandas as pd
     import pyspark.sql.types as T
 
     out_schema = T.StructType(
@@ -243,25 +243,23 @@ def embed_texts(
             T.StructField("embedding", T.ArrayType(T.FloatType())),
         ]
     )
+    client = None
 
-    def run(batches):
-        client = EmbeddingsClient(
-            base_url,
-            api_key=api_key,
-            model=model,
-            max_retries=max_retries,
-            backoff_base=backoff_base,
-        )
-        # not map_rows: one embeddings request per batch, not per row
-        for pdf in batches:
-            texts = [(t or "") for t in pdf[text_col]]
-            vecs = client.embed_batch(texts)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].values, "embedding": vecs},
-                columns=[id_col, "embedding"],
+    def embed(batch):
+        # one embeddings request per batch, not per row
+        nonlocal client
+        if client is None:
+            client = EmbeddingsClient(
+                base_url,
+                api_key=api_key,
+                model=model,
+                max_retries=max_retries,
+                backoff_base=backoff_base,
             )
+        texts = [(t or "") for t in batch.column(text_col).to_pylist()]
+        return {id_col: batch.column(id_col), "embedding": client.embed_batch(texts)}
 
-    return df.select(id_col, text_col).mapInPandas(run, out_schema)
+    return map_batches(df.select(id_col, text_col), embed, out_schema)
 
 
 def extract_fields_via_endpoint(
@@ -288,7 +286,6 @@ def extract_fields_via_endpoint(
     Spark job, a poisoned document does (loudly)."""
     import hashlib
 
-    import pandas as pd
     import pyspark.sql.types as T
 
     fields = list(queries)
@@ -301,32 +298,32 @@ def extract_fields_via_endpoint(
         ]
     )
 
-    def run(batches):
-        client = LlmEndpointClient(
-            base_url,
-            api_key=api_key,
-            model=model,
-            max_retries=max_retries,
-            backoff_base=backoff_base,
-        )
-        # not map_rows: one completion request per batch, not per row
-        for pdf in batches:
-            texts = [(t or "") for t in pdf[text_col]]
-            prompts = [
-                PROMPT_TEMPLATE.format(text=t, query=q)
-                for t in texts
-                for q in field_queries
-            ]
-            answers = client.complete_batch(prompts)
-            nf = len(fields)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].values,
-                    "content_hash": [hashlib.md5(t.encode()).hexdigest() for t in texts],
-                    # answers run document-major: field j of doc i is i * nf + j
-                    **{f: answers[j::nf] for j, f in enumerate(fields)},
-                },
-                columns=[id_col, "content_hash", *fields],
-            )
+    client = None
 
-    return df.select(id_col, text_col).mapInPandas(run, out_schema)
+    def complete(batch):
+        # one completion request per batch, not per row
+        nonlocal client
+        if client is None:
+            client = LlmEndpointClient(
+                base_url,
+                api_key=api_key,
+                model=model,
+                max_retries=max_retries,
+                backoff_base=backoff_base,
+            )
+        texts = [(t or "") for t in batch.column(text_col).to_pylist()]
+        prompts = [
+            PROMPT_TEMPLATE.format(text=t, query=q)
+            for t in texts
+            for q in field_queries
+        ]
+        answers = client.complete_batch(prompts)
+        nf = len(fields)
+        return {
+            id_col: batch.column(id_col),
+            "content_hash": [hashlib.md5(t.encode()).hexdigest() for t in texts],
+            # answers run document-major: field j of doc i is i * nf + j
+            **{f: answers[j::nf] for j, f in enumerate(fields)},
+        }
+
+    return map_batches(df.select(id_col, text_col), complete, out_schema)

@@ -8,7 +8,7 @@ row per document, merged on a content hash so re-processing is idempotent.
 The LLM call itself is STUBBED (the container ships no model/client):
 ``deterministic_fake_llm`` answers by regex/keyword lookup so tests are
 reproducible.  A real deployment injects an ``answer_fn`` with the same
-signature; the Spark-side contract — Arrow-batched ``mapInPandas``,
+signature; the Spark-side contract — one ``boundary.map_rows`` stage,
 fixed output schema, content-hash merge key, batch-shaped API calls — is
 what this module implements and tests."""
 
@@ -75,8 +75,8 @@ def extract_fields(
 ) -> DataFrame:
     """One row per document: (id, content_hash, <field per query>).
 
-    mapInPandas keeps documents in place (narrow transform — no shuffle of
-    the text payload); each Arrow batch becomes one model-call batch.  The
+    ``map_rows`` keeps documents in place (narrow transform — no shuffle of
+    the text payload); ``answer_fn`` runs once per (document, field).  The
     ``content_hash`` column is the merge key for idempotent re-runs
     (reference __init__.py:53 ``metadata__data_hash``)."""
     fields = list(queries)

@@ -14,7 +14,7 @@ SAME banded sorted-probe machinery as text simhash
 (llm/simhash.fingerprint_dedup_groups) — candidates are linear in the
 corpus, never all-pairs.
 
-Scale shape: hashing is a narrow ``mapInPandas`` over the binary column
+Scale shape: hashing is a narrow ``boundary.map_rows`` stage over the binary column
 (payload bytes never shuffle; each asset reduces to one 64-bit long on
 the executor that read it); grouping shuffles only (id, hash) pairs —
 16 bytes a row no matter how large the images are.  Undecodable assets

@@ -15,12 +15,13 @@ index in without touching pipeline code:
   recall target, O(N·Q) — the verification oracle for every other
   backend.
 - ``IvfIndex`` — k-means inverted lists (``ivf_topk``): the native scale
-  path.  ``build()`` only keeps the corpus; every ``topk()`` call
-  retrains the coarse quantizer through ``ivf_topk``.
+  path.  ``build()`` trains the coarse quantizer once and cuts the
+  bucketed corpus (``ivf_build``); each ``topk()`` only probes and
+  reranks (``ivf_probe``), with the same rows as ``ivf_topk``.
 - ``LshIndex`` — sign-LSH buckets (``lsh_bucketed_topk``).
 - ``ExternalIndexBackend`` — adapter skeleton for a remote vector store:
-  batches upserts/queries through ``mapInPandas``-shaped callables the
-  way the REST layer does; the network client itself is injected (none
+  batches upserts/queries through per-partition callables the way the
+  REST layer does; the network client itself is injected (none
   ships in this container, by design — same boundary as the reference's
   optional chroma/weaviate extras).
 
@@ -34,9 +35,11 @@ from typing import Any, Callable
 
 from pyspark.sql import DataFrame
 
+from verified_sources_spark.cut import cut
 from verified_sources_spark.llm.similarity import (
     cosine_topk,
-    ivf_topk,
+    ivf_build,
+    ivf_probe,
     lsh_bucketed_topk,
 )
 
@@ -77,24 +80,17 @@ class IvfIndex(VectorIndex):
     ):
         self.id_col, self.vec_col = id_col, vec_col
         self.n_centroids, self.n_probe, self.lloyd_iters = n_centroids, n_probe, lloyd_iters
-        self._corpus: DataFrame | None = None
+        self._index: tuple | None = None
 
     def build(self, corpus: DataFrame) -> "IvfIndex":
-        self._corpus = corpus
+        cents, buckets = ivf_build(corpus, self.id_col, self.vec_col,
+                                   self.n_centroids, self.lloyd_iters)
+        self._index = (cents, cut(buckets))
         return self
 
     def topk(self, queries: DataFrame, k: int = 3) -> DataFrame:
-        assert self._corpus is not None, "build() first"
-        return ivf_topk(
-            self._corpus,
-            queries,
-            self.id_col,
-            self.vec_col,
-            k=k,
-            n_centroids=self.n_centroids,
-            n_probe=self.n_probe,
-            lloyd_iters=self.lloyd_iters,
-        )
+        assert self._index is not None, "build() first"
+        return ivf_probe(*self._index, queries, self.id_col, self.vec_col, k, self.n_probe)
 
 
 class LshIndex(VectorIndex):

@@ -20,7 +20,7 @@ and to round-trip-test the decoder against an INDEPENDENT naive IDCT in
 the tests.
 
 Scale shape: like png_codec/wav_codec/avi_codec this is plain per-asset
-math executed inside ``mapInPandas`` batches — numpy does the DCT and
+math executed inside ``boundary.map_rows`` stages — numpy does the DCT and
 color math vectorized per image; nothing here touches Spark.
 
 The reference has no image operators — this is part of the engine's

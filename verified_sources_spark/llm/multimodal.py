@@ -16,7 +16,7 @@ Schema convention for a multimodal asset column ``asset``:
                        duration_ms: long, sha256: string, byte_len: long>
 
 At 100 TB the binary payloads dominate; feature extraction must stream
-through executors without reshuffling payloads — ``mapInPandas`` keeps
+through executors without reshuffling payloads — ``boundary.map_rows`` keeps
 rows in place (narrow transform), and `spark.sql.files.maxPartitionBytes`
 bounds per-task memory.
 """
@@ -114,10 +114,9 @@ def extract_features(
 ) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads.
 
-    mapInPandas: each Arrow batch arrives as a pandas DataFrame; the UDF
-    is vectorized over the batch (loop is per-batch-row in Python here
-    because decode is inherently per-object; a numpy-vectorizable feature
-    would use the columnar arrays directly).
+    One ``boundary.map_rows`` stage: decode is inherently per-object, so
+    each payload arrives as its own ``bytes`` value (a numpy-vectorizable
+    feature would take the whole Arrow batch through ``map_batches``).
 
     ``decoder="pil"`` decodes real images (PIL_FEATURE_SCHEMA: dims, mode,
     container format). Corrupt/undecodable payloads yield

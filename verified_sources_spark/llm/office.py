@@ -9,7 +9,7 @@ and the reference ingests them through its unstructured-data pipeline
 (``/root/reference/sources/unstructured_data`` routes local files into
 text for downstream structuring; ``filesystem`` lands the raw bytes).
 This module is the decode half of that front door, Spark-first: the
-``office_extract`` operator is an Arrow-batched ``mapInPandas`` over a
+``office_extract`` operator is one ``boundary.map_rows`` stage over a
 binary payload column, payloads never shuffle, and a corrupt or
 unsupported file isolates as ``decoded_ok=false`` (never a task
 failure — the honest-refusal contract the rest of the codec suite

@@ -31,6 +31,7 @@ import math
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from verified_sources_spark.boundary import map_batches, map_groups
 from verified_sources_spark.cut import cut
 from verified_sources_spark.sizing import use_gemm
 
@@ -109,7 +110,7 @@ def cosine_topk_vectorized(
     vec_col: str = "embedding",
     k: int = 3,
 ) -> DataFrame:
-    """Brute-force top-k via Arrow-batched numpy matmul (mapInPandas).
+    """Brute-force top-k via Arrow-batched numpy matmul (``map_batches``).
 
     The query matrix (Q x d) is tiny and closure-broadcast to executors;
     each Arrow batch of corpus vectors becomes one (B x d) @ (d x Q)
@@ -119,7 +120,6 @@ def cosine_topk_vectorized(
     ``cosine_topk`` dominates; same output contract (cosine rounded 4dp,
     id-tie-broken ranks)."""
     import numpy as np
-    import pandas as pd
 
     q_rows = queries.select(id_col, vec_col).collect()
     q_ids = np.array([r[id_col] for r in q_rows], dtype=np.int64)
@@ -138,24 +138,21 @@ def cosine_topk_vectorized(
 
     topk_per_batch = max(k + 1, 8)  # +1 covers self-match removal later
 
-    def score(batches):
-        # not map_rows: numpy matrix math over the whole batch
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            if mat.size == 0:
-                continue
-            sims = (mat @ q_mat.T) / (np.linalg.norm(mat, axis=1)[:, None] * q_norm[None, :])
-            m = min(topk_per_batch, sims.shape[0])
-            # partial top-m per query within this batch
-            part = np.argpartition(-sims, m - 1, axis=0)[:m]
-            yield pd.DataFrame({
-                "query_id": np.repeat(q_ids, m),
-                "neighbor_id": ids[part].T.ravel(),
-                "__cos": np.take_along_axis(sims, part, axis=0).T.ravel(),
-            })
+    def score(batch):
+        mat = _matrix(batch.column(vec_col), exact=False, scaled=False)
+        if mat.size == 0:
+            return dict.fromkeys(out_schema.fieldNames(), [])
+        sims = (mat @ q_mat.T) / (np.linalg.norm(mat, axis=1)[:, None] * q_norm[None, :])
+        m = min(topk_per_batch, sims.shape[0])
+        # partial top-m per query within this batch
+        part = np.argpartition(-sims, m - 1, axis=0)[:m]
+        return {
+            "query_id": np.repeat(q_ids, m),
+            "neighbor_id": batch.column(id_col).take(part.T.ravel()),
+            "__cos": np.take_along_axis(sims, part, axis=0).T.ravel(),
+        }
 
-    candidates = corpus.select(id_col, vec_col).mapInPandas(score, out_schema)
+    candidates = map_batches(corpus.select(id_col, vec_col), score, out_schema)
     candidates = candidates.filter(F.col("neighbor_id") != F.col("query_id"))
     return _topk(candidates, k)
 
@@ -197,14 +194,22 @@ def cosine_topk_adaptive(
 KMEANS_SCALE = 10_000_000
 
 
-def _scaled_int_matrix(col):
-    """float32 vectors → exact scaled int64 (floor(x*scale + 0.5): the
-    identical IEEE op sequence on both engines, so the quantization is
-    bit-reproducible in Spark, numpy and DuckDB)."""
+def _vectors(col, dtype):
+    """Equal-length vectors (an Arrow list column, or a list of sequences
+    on the driver) as the ``(n, d)`` ``dtype`` matrix of their flattened
+    values.  A null or ragged vector, or a null element, raises."""
     import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    X = np.array(list(col), dtype=np.float64)
-    return np.floor(X * KMEANS_SCALE + 0.5).astype(np.int64)
+    col = pa.array(col)
+    if not len(col):
+        return np.empty((0, 0), dtype=dtype)
+    lengths, flat = pc.list_value_length(col), col.flatten()
+    if col.null_count or flat.null_count or pc.count_distinct(lengths).as_py() != 1:
+        raise ValueError("vectors must be non-null and of one length")
+    return flat.to_numpy(zero_copy_only=False).astype(dtype, copy=False).reshape(
+        len(col), lengths[0].as_py())
 
 
 def _round_div(s, n):
@@ -228,13 +233,16 @@ def _is_scaled(df: DataFrame, vec_col: str) -> bool:
 
 
 def _matrix(col, exact: bool, scaled: bool):
-    """Vectors as the matrix the centroids' arithmetic needs: exact
-    scaled int64 for int centroids, float64 for float ones."""
+    """Vectors as the matrix the centroids' arithmetic needs: float64 for
+    float centroids, exact int64 for int ones.  Unless already ``scaled``,
+    exact vectors quantize as floor(x*scale + 0.5): the identical IEEE op
+    sequence on both engines, so the quantization is bit-reproducible in
+    Spark, numpy and DuckDB."""
     import numpy as np
 
     if exact and not scaled:
-        return _scaled_int_matrix(col)
-    return np.array(list(col), dtype=np.int64 if exact else np.float64)
+        return np.floor(_vectors(col, np.float64) * KMEANS_SCALE + 0.5).astype(np.int64)
+    return _vectors(col, np.int64 if exact else np.float64)
 
 
 def _nearest(X, C, n_probe: int | None = None):
@@ -291,7 +299,7 @@ def rank_clusters(
     centroids,
     n_probe: int | None = None,
 ) -> DataFrame:
-    """Nearest-centroid ranking as one Arrow-batched mapInPandas over
+    """Nearest-centroid ranking as one ``map_batches`` stage over
     the vectors — no cross join, no shuffle; only the (tiny) centroid
     matrix travels, in the task closure.  A cross join against the
     centroids materializes n×k rows, and SemDeDup's k = n/512 makes that
@@ -317,12 +325,12 @@ def rank_clusters(
 
 
 def _assign(df: DataFrame, id_name: str, vec_col: str, clusters) -> DataFrame:
-    """The one cluster-assignment stage: an Arrow-batched mapInPandas
-    over (id, vec) emitting (id, vec, cluster).  ``clusters`` maps a
-    batch's vector column to its cluster ids: one per row, or an
-    (rows × p) array that repeats each row once per cluster, in order."""
+    """The one cluster-assignment stage: a ``map_batches`` stage over
+    (id, vec) emitting (id, vec, cluster).  ``clusters`` maps a batch's
+    Arrow vector column to its cluster ids: one per row, or an
+    (rows × p) array that repeats each row once per cluster, in order.
+    The id and the vector pass through as Arrow columns."""
     import numpy as np
-    import pandas as pd
     import pyspark.sql.types as T
 
     id_f = df.schema[id_name]
@@ -335,22 +343,16 @@ def _assign(df: DataFrame, id_name: str, vec_col: str, clusters) -> DataFrame:
         ]
     )
 
-    def assign(batches):
-        # not map_rows: numpy matrix math over the whole batch
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            near = clusters(pdf[vec_col]).reshape(len(pdf), -1)
-            rows = np.repeat(np.arange(len(pdf)), near.shape[1])
-            yield pd.DataFrame(
-                {
-                    id_name: pdf[id_name].values[rows],
-                    vec_col: pdf[vec_col].values[rows],
-                    "cluster": near.ravel().astype("int32"),
-                }
-            )
+    def assign(batch):
+        near = clusters(batch.column(vec_col)).reshape(batch.num_rows, -1)
+        rows = np.repeat(np.arange(batch.num_rows), near.shape[1])
+        return {
+            id_name: batch.column(id_name).take(rows),
+            vec_col: batch.column(vec_col).take(rows),
+            "cluster": near.ravel().astype("int32"),
+        }
 
-    return df.select(id_name, vec_col).mapInPandas(assign, schema)
+    return map_batches(df.select(id_name, vec_col), assign, schema)
 
 
 def _cluster_sums(X, C):
@@ -388,32 +390,36 @@ def _first_vectors(df: DataFrame, id_name: str, vec_col: str, k: int, exact: boo
 def _lloyd(vectors: DataFrame, vec_col: str, C, iters: int):
     """The one Lloyd loop behind every Spark-trained quantizer, exact
     when the centroids are int.  Each iteration is ONE job: a
-    mapInPandas folds :func:`_cluster_sums` over its whole partition and
+    ``mapInArrow`` folds :func:`_cluster_sums` over its whole partition and
     yields at most k rows; the driver adds the at most k × partitions
     rows (Python ints when exact: no overflow, no order dependence) and
     finishes with :func:`_lloyd_step`.  Only centroid-sized state ever
     reaches the driver; the corpus never collects."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
 
     exact = C.dtype.kind == "i"
     scaled = _is_scaled(vectors, vec_col)
-    schema = f"cluster int, n long, s array<{'long' if exact else 'double'}>"
+    schema = DataType.fromDDL(f"cluster int, n long, s array<{'long' if exact else 'double'}>")
+    arrow = to_arrow_schema(schema)
     for _ in range(iters if len(C) else 0):
 
         def fold(batches, C=C):
             n, S = np.zeros(len(C), dtype=np.int64), np.zeros_like(C)
-            # not map_rows: one (count, sum) fold over the whole partition
-            for pdf in batches:
-                if len(pdf):
-                    dn, dS = _cluster_sums(_matrix(pdf[vec_col], exact, scaled), C)
+            # not map_batches: one (count, sum) fold over the whole partition
+            for batch in batches:
+                if batch.num_rows:
+                    dn, dS = _cluster_sums(_matrix(batch.column(0), exact, scaled), C)
                     n, S = n + dn, S + dS
             nz = np.flatnonzero(n)
-            yield pd.DataFrame({"cluster": nz.astype("int32"), "n": n[nz], "s": list(S[nz])})
+            yield pa.RecordBatch.from_pydict(
+                {"cluster": nz.astype("int32"), "n": n[nz], "s": list(S[nz])}, schema=arrow)
 
         n = np.zeros(len(C), dtype=np.int64)
         S = np.zeros(C.shape, dtype=object if exact else np.float64)
-        for r in vectors.select(vec_col).mapInPandas(fold, schema).collect():
+        for r in vectors.select(vec_col).mapInArrow(fold, schema).collect():
             n[r["cluster"]] += r["n"]
             S[r["cluster"]] += np.array(r["s"], dtype=S.dtype)
         C = _lloyd_step(C, n, S)
@@ -474,7 +480,7 @@ def ivf_topk(
 
     The quantizer is trained by the shared Lloyd loop (``_lloyd``: one
     per-partition numpy fold per iteration); assignment and probing are
-    :func:`rank_clusters`, one mapInPandas per side with no cross join.
+    :func:`rank_clusters`, one ``map_batches`` stage per side with no cross join.
     Only the centroid table (n_centroids x dim — metadata-sized) ever
     reaches the driver; corpus vectors never collect.  At 100 TB the same
     plan holds: one narrow pass per iteration, then the probe join
@@ -486,11 +492,32 @@ def ivf_topk(
     and assigns/probes by exact int64 distances — the same plan shape,
     but every training+bucketing decision replays in DuckDB SQL, so the
     TRAINED pipeline carries a full value-hash oracle."""
+    cents, buckets = ivf_build(corpus, id_col, vec_col, n_centroids, lloyd_iters, quantizer)
+    return ivf_probe(cents, buckets, queries, id_col, vec_col, k, n_probe)
+
+
+def ivf_build(
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    n_centroids: int,
+    lloyd_iters: int,
+    quantizer: str = "float",
+):
+    """The IVF index: ``(centroids, buckets)``, the coarse quantizer
+    trained over ``corpus`` and the corpus bucketed by it as
+    (neighbor_id, __cv, cluster)."""
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv"))
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
     train = train_kmeans_quantized if quantizer == "exact-int" else train_kmeans
     cents = train(c, "neighbor_id", "__cv", n_centroids, lloyd_iters)
-    buckets = rank_clusters(c, "neighbor_id", "__cv", cents)
+    return cents, rank_clusters(c, "neighbor_id", "__cv", cents)
+
+
+def ivf_probe(cents, buckets: DataFrame, queries: DataFrame, id_col: str, vec_col: str,
+              k: int, n_probe: int) -> DataFrame:
+    """Top-k over an :func:`ivf_build` index: each query probes its
+    ``n_probe`` nearest buckets, and an exact cosine reranks them."""
+    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
     q_probes = rank_clusters(q, "query_id", "__qv", cents, n_probe=n_probe)
     prod = buckets.join(F.broadcast(q_probes), "cluster").filter(
         F.col("neighbor_id") != F.col("query_id")
@@ -723,7 +750,7 @@ def train_kmeans_two_level(
     Structure: ``coarse_k`` (default ceil(sqrt(k))) coarse centroids
     trained with the flat GEMM Lloyd (n x sqrt(k) per pass), then each
     coarse CELL trains its own ~k/coarse_k fine centroids IN PARALLEL —
-    one ``applyInPandas`` task per cell running a local numpy Lloyd over
+    one ``map_groups`` task per cell running a local numpy Lloyd over
     the cell's vectors (cell size ≈ n/sqrt(k): at n=10^8, k=2x10^5
     that is ~220k x d doubles per task — executor-memory sized).  Both
     training and assignment then cost n x O(sqrt(k)) instead of n x k.
@@ -733,9 +760,6 @@ def train_kmeans_two_level(
     offsets are the running sum of per-cell counts — what
     :func:`assign_two_level` emits.  Deterministic throughout (coarse
     init = lowest-id vectors; per-cell init = the cell's lowest ids)."""
-    import numpy as np
-    import pandas as pd
-
     if coarse_k is None:
         coarse_k = max(1, int(math.isqrt(max(1, n_centroids - 1))) + 1)
     coarse = train_kmeans(vectors, id_name, vec_col, coarse_k, lloyd_iters)
@@ -745,25 +769,19 @@ def train_kmeans_two_level(
 
     out_schema = "cell int, centroids array<array<double>>"
 
-    # NOTE: deliberately un-annotated — partial string annotations make
-    # pyspark's group_ops hint inference warn on every run; with no
-    # annotations it falls back to the grouped-map eval type silently
-    def fit_cell(key, pdf):
-        X = np.array(list(pdf[vec_col]), dtype=np.float64)
-        ids = pdf[id_name].to_numpy()
+    def fit_cell(key, table):
+        X = _matrix(table.column(vec_col), exact=False, scaled=False)
+        ids = table.column(id_name).to_numpy()
         # fine centroids PROPORTIONAL to cell population — a uniform
         # quota starves dense cells (blobs merge) and wastes centroids
         # on sparse ones; proportional sizing is also what bounds
         # cluster SIZE, the property SemDeDup's pair stage needs
-        k_cell = max(1, round(n_centroids * len(pdf) / total_n))
+        k_cell = max(1, round(n_centroids * table.num_rows / total_n))
         C = _local_lloyd(X, ids, k_cell, lloyd_iters)
-        return pd.DataFrame({"cell": [int(key[0])], "centroids": [C.tolist()]})
+        return {"cell": [key[0]], "centroids": [C.tolist()]}
 
-    rows = (
-        assigned.groupBy("cluster")
-        .applyInPandas(fit_cell, out_schema)
-        .collect()
-    )  # centroid tables only — k x d doubles, metadata-sized
+    # centroid tables only — k x d doubles, metadata-sized
+    rows = map_groups(assigned, ["cluster"], fit_cell, out_schema).collect()
     fine: list[list[list[float]]] = [[] for _ in range(len(coarse))]
     for r in rows:
         fine[int(r["cell"])] = [list(c) for c in r["centroids"]]
@@ -977,7 +995,7 @@ def _adc_scan(corpus, queries, id_col, vec_col, cents, books, n_probe, k) -> Dat
     m, sub = len(books), books[0].shape[1]
     qrows = queries.select(id_col, vec_col).orderBy(id_col).collect()
     qids = np.array([int(r[0]) for r in qrows], dtype=np.int64)
-    Q = _scaled_int_matrix([r[1] for r in qrows])
+    Q = _matrix([r[1] for r in qrows], exact=True, scaled=False)
     # probe lists + per-(query, probed-cell) ADC tables
     probe = _nearest(Q, cents, n_probe)        # (nq, n_probe)
     # dtabs[qi][p][s][c]: the tables of each query's residual to its
@@ -994,43 +1012,34 @@ def _adc_scan(corpus, queries, id_col, vec_col, cents, books, n_probe, k) -> Dat
 
     out_schema = "query_id long, neighbor_id long, adist long"
 
-    def score(batches):
-        import pandas as pd
-
+    def score(batch):
         C = b_cents.value
         bb = b_books.value
         pr = b_probe.value
         dt = b_dtabs.value
         qi_all = b_qids.value
-        # not map_rows: numpy matrix math over the whole batch
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            X = _scaled_int_matrix(pdf[vec_col])
-            cell = _nearest(X, C)
-            R = X - C[cell]
-            codes = np.empty((len(ids), m), dtype=np.int64)
-            for s in range(m):
-                codes[:, s] = _nearest(R[:, s * sub : (s + 1) * sub], bb[s])
-            parts = []
-            for qi in range(len(qi_all)):
-                for p in range(pr.shape[1]):
-                    c = pr[qi, p]
-                    sel = np.where((cell == c)
-                                   & (ids != qi_all[qi]))[0]
-                    ad = np.zeros(len(sel), dtype=np.int64)
-                    for s in range(m):
-                        ad += dt[qi, p, s][codes[sel, s]]
-                    order = np.lexsort((ids[sel], ad))[:k]
-                    parts.append((np.full(len(order), qi_all[qi]),
-                                  ids[sel[order]], ad[order]))
-            if parts:
-                qcol, ncol, dcol = (np.concatenate(c) for c in zip(*parts))
-                yield pd.DataFrame(
-                    {"query_id": qcol, "neighbor_id": ncol, "adist": dcol})
+        ids = batch.column(id_col).to_numpy()
+        X = _matrix(batch.column(vec_col), exact=True, scaled=False)
+        cell = _nearest(X, C)
+        R = X - C[cell]
+        codes = np.empty((len(ids), m), dtype=np.int64)
+        for s in range(m):
+            codes[:, s] = _nearest(R[:, s * sub : (s + 1) * sub], bb[s])
+        parts = [(np.empty(0, dtype=np.int64),) * 3]
+        for qi in range(len(qi_all)):
+            for p in range(pr.shape[1]):
+                c = pr[qi, p]
+                sel = np.where((cell == c)
+                               & (ids != qi_all[qi]))[0]
+                ad = np.zeros(len(sel), dtype=np.int64)
+                for s in range(m):
+                    ad += dt[qi, p, s][codes[sel, s]]
+                order = np.lexsort((ids[sel], ad))[:k]
+                parts.append((np.full(len(order), qi_all[qi]), sel[order], ad[order]))
+        qcol, rows, dcol = (np.concatenate(c) for c in zip(*parts))
+        return {"query_id": qcol, "neighbor_id": batch.column(id_col).take(rows), "adist": dcol}
 
-    return _topk(corpus.select(id_col, vec_col).mapInPandas(score, out_schema), k)
+    return _topk(map_batches(corpus.select(id_col, vec_col), score, out_schema), k)
 
 
 def ivfpq_rerank_topk(

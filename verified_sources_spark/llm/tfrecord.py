@@ -32,7 +32,7 @@ from __future__ import annotations
 
 import struct
 
-from verified_sources_spark.boundary import map_rows
+from verified_sources_spark.boundary import map_groups, map_rows
 
 __all__ = [
     "TfRecordError", "crc32c", "encode_example", "parse_example",
@@ -335,19 +335,16 @@ def tfrecord_shards(df, id_col: str = "doc_id",
     executors and never exceed a shard's own size in driver memory
     (the output IS the shard table, written wherever the caller
     points it)."""
-    import pandas as pd
-
     from pyspark.sql import functions as F
 
-    def pack(key, pdf):
-        pdf = pdf.sort_values(id_col)
-        recs = [encode_example({"id": [int(i)],
+    def pack(key, table):
+        table = table.sort_by(id_col)
+        recs = [encode_example({"id": [i],
                                 "text": [(t or "").encode()]})
-                for i, t in zip(pdf[id_col], pdf[text_col])]
-        return pd.DataFrame([{
-            "shard_id": int(key[0]),
-            "n_records": len(recs),
-            "asset": encode_tfrecord(recs)}])
+                for i, t in zip(table.column(id_col).to_pylist(),
+                                table.column(text_col).to_pylist())]
+        return {"shard_id": [key[0]], "n_records": [len(recs)],
+                "asset": [encode_tfrecord(recs)]}
 
     from verified_sources_spark.llm.text_prep import hash_sample_bucket
 
@@ -355,5 +352,5 @@ def tfrecord_shards(df, id_col: str = "doc_id",
         F.col(id_col), F.col(text_col),
         (hash_sample_bucket(id_col, salt="shard")
          % F.lit(n_shards)).alias("_shard"))
-    return keyed.groupBy("_shard").applyInPandas(
-        pack, "shard_id long, n_records int, asset binary")
+    return map_groups(keyed, ["_shard"], pack,
+                      "shard_id long, n_records int, asset binary")

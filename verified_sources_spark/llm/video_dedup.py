@@ -25,7 +25,7 @@ Grouping reuses the SAME banded sorted-probe machinery as text simhash
 corpus, never all-pairs, every edge hamming-verified.
 
 Scale shape mirrors the image/audio modules: probing and
-fingerprinting are narrow ``mapInPandas`` passes over the binary
+fingerprinting are narrow ``boundary.map_rows`` stages over the binary
 column — payload bytes never shuffle, each clip reduces to one 64-bit
 long on the executor that read it; grouping shuffles only (id,
 fingerprint) pairs.  Undecodable clips and compressed fourccs the
@@ -213,7 +213,7 @@ def video_shots(
     ``keyframe_hash`` its dHash (signed long), the scene's perceptual
     identity for cross-clip scene matching.
 
-    Per-clip local computation inside one narrow ``mapInPandas`` (the
+    Per-clip local computation inside one narrow ``map_rows`` stage (the
     hashes are already in hand from sampling) — no shuffle at all, and
     only the shot TABLE (a few rows per clip) leaves the executor.
     Undecodable clips yield one ``decoded_ok=false`` row, never vanish.

@@ -4,7 +4,7 @@ Makes the multimodal AUDIO decode path REAL with zero dependencies
 (stdlib struct only, numpy for sample math): parse the RIFF container,
 locate ``fmt `` / ``data`` chunks, and expose integer PCM samples for
 feature extraction on executors.  Like png_codec, this exists so the
-Spark-side plumbing (mapInPandas batch shapes, schema, per-object error
+Spark-side plumbing (``boundary.map_rows`` stages, schema, per-object error
 isolation) is exercised end-to-end against genuine media bytes, not a
 byte-sum fake — the reference's unstructured/filesystem sources treat
 media as opaque payloads plus typed metadata (SURVEY.md §2.1 #31/#32);

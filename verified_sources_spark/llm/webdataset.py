@@ -25,7 +25,7 @@ the zip walk.
 
 from __future__ import annotations
 
-from verified_sources_spark.boundary import map_rows
+from verified_sources_spark.boundary import map_groups, map_rows
 
 __all__ = [
     "WdsError", "iter_wds_samples", "encode_wds",
@@ -165,29 +165,26 @@ def wds_shards(df, id_col: str = "doc_id", text_col: str = "text",
     convention)."""
     import json as _json
 
-    import pandas as pd
-
     from pyspark.sql import functions as F
 
     from verified_sources_spark.llm.text_prep import hash_sample_bucket
 
-    def pack(key, pdf):
-        pdf = pdf.sort_values(id_col)
-        samples = [(f"{int(i):012d}",
+    def pack(key, table):
+        table = table.sort_by(id_col)
+        samples = [(f"{i:012d}",
                     {"txt": (t or "").encode(),
-                     "json": _json.dumps({"id": int(i)}).encode()})
-                   for i, t in zip(pdf[id_col], pdf[text_col])]
-        return pd.DataFrame([{
-            "shard_id": int(key[0]),
-            "n_samples": len(samples),
-            "asset": encode_wds(samples)}])
+                     "json": _json.dumps({"id": i}).encode()})
+                   for i, t in zip(table.column(id_col).to_pylist(),
+                                   table.column(text_col).to_pylist())]
+        return {"shard_id": [key[0]], "n_samples": [len(samples)],
+                "asset": [encode_wds(samples)]}
 
     keyed = df.select(
         F.col(id_col), F.col(text_col),
         (hash_sample_bucket(id_col, salt="shard")
          % F.lit(n_shards)).alias("_shard"))
-    return keyed.groupBy("_shard").applyInPandas(
-        pack, "shard_id long, n_samples int, asset binary")
+    return map_groups(keyed, ["_shard"], pack,
+                      "shard_id long, n_samples int, asset binary")
 
 
 def wds_multimodal_shards(df, id_col: str = "doc_id",
@@ -205,35 +202,31 @@ def wds_multimodal_shards(df, id_col: str = "doc_id",
     must land in their output file); nothing is shuffled twice."""
     import json as _json
 
-    import pandas as pd
-
     from pyspark.sql import functions as F
 
     from verified_sources_spark.llm.text_prep import hash_sample_bucket
 
-    def pack(key, pdf):
-        pdf = pdf.sort_values(id_col)
+    def pack(key, table):
+        table = table.sort_by(id_col)
         samples = []
-        for i, img, seg, cap in zip(pdf[id_col], pdf[image_col],
-                                    pdf[seg_col], pdf[caption_col]):
+        for i, img, seg, cap in zip(*(table.column(c).to_pylist() for c in (
+                id_col, image_col, seg_col, caption_col))):
             if img is None or seg is None:
                 # refuse by name: a silent drop loses a sample, a
                 # bytes(None) TypeError kills the whole export stage
                 raise WdsError(
-                    f"sample {int(i)} carries a null media column")
-            samples.append((f"{int(i):012d}", {
-                "png": bytes(img), "seg.png": bytes(seg),
+                    f"sample {i} carries a null media column")
+            samples.append((f"{i:012d}", {
+                "png": img, "seg.png": seg,
                 "txt": (cap or "").encode(),
-                "json": _json.dumps({"id": int(i)}).encode()}))
-        return pd.DataFrame([{
-            "shard_id": int(key[0]),
-            "n_samples": len(samples),
-            "asset": encode_wds(samples)}])
+                "json": _json.dumps({"id": i}).encode()}))
+        return {"shard_id": [key[0]], "n_samples": [len(samples)],
+                "asset": [encode_wds(samples)]}
 
     keyed = df.select(
         F.col(id_col), F.col(image_col), F.col(seg_col),
         F.col(caption_col),
         (hash_sample_bucket(id_col, salt="shard")
          % F.lit(n_shards)).alias("_shard"))
-    return keyed.groupBy("_shard").applyInPandas(
-        pack, "shard_id long, n_samples int, asset binary")
+    return map_groups(keyed, ["_shard"], pack,
+                      "shard_id long, n_samples int, asset binary")

@@ -25,9 +25,9 @@ external Databricks-written tables read correctly.
 
 Scale design: descriptors are log metadata (driver-side already); the
 DV *blobs* are fetched and expanded to ``(file_path, row_index)`` rows
-on EXECUTORS via ``mapInPandas`` — one task per DV file, no blob ever
-passes through the driver, and the expansion feeds a distributed
-left-anti join against Spark's native ``_metadata.row_index``.
+on EXECUTORS in one ``boundary.map_batches`` stage — one task per DV
+file, no blob ever passes through the driver, and the expansion feeds a
+distributed left-anti join against Spark's native ``_metadata.row_index``.
 """
 
 from __future__ import annotations
@@ -38,7 +38,7 @@ import posixpath
 import struct
 import uuid as _uuid
 import zlib
-from typing import Iterable, Iterator
+from typing import Iterable
 
 MAGIC = 1681511377
 _COOKIE_RUN = 12347
@@ -333,19 +333,21 @@ def expanded_delete_rows(spark, table_path: str, descs: list[tuple[str, dict]]):
     ``(__dv_fp string, __dv_pos long)`` of deleted row positions.
 
     One input row per DV; fetch + bitmap expansion run in executor tasks
-    (``mapInPandas``), repartitioned so each DV is its own task — the
+    (``map_batches``), repartitioned so each DV is its own task — the
     anti-join input never materializes on the driver."""
-    import pandas as pd
+    from itertools import chain
+
+    import numpy as np
+
+    from verified_sources_spark.boundary import map_batches
 
     desc_df = spark.createDataFrame(
         [(fp, json.dumps(d)) for fp, d in descs], "fp string, dv string"
     ).repartition(min(len(descs), 256))
 
-    def expand(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # not map_rows: each DV frames its whole position array at once
-        for pdf in batches:
-            for fp, dv in zip(pdf["fp"], pdf["dv"]):
-                idx = dv_row_indexes(table_path, json.loads(dv))
-                yield pd.DataFrame({"__dv_fp": fp, "__dv_pos": idx})
+    def expand(batch):
+        idx = [dv_row_indexes(table_path, json.loads(dv)) for dv in batch.column("dv").to_pylist()]
+        rows = np.repeat(np.arange(batch.num_rows), [len(i) for i in idx])
+        return {"__dv_fp": batch.column("fp").take(rows), "__dv_pos": list(chain.from_iterable(idx))}
 
-    return desc_df.mapInPandas(expand, "__dv_fp string, __dv_pos long")
+    return map_batches(desc_df, expand, "__dv_fp string, __dv_pos long")

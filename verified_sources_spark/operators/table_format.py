@@ -766,12 +766,11 @@ class ManifestTable:
         """Write one deletion vector per file containing *hits* rows
         (``__fp``/``__pos`` columns) and return {normalized file path →
         descriptor}.  Bitmap encode + file write run in EXECUTOR tasks
-        (one per affected file, ``applyInPandas``); the driver sees only
+        (one ``map_groups`` group per affected file); the driver sees only
         descriptors — metadata-sized, like every other commit input.  A
         file's existing DV is unioned in, so repeated deletes accumulate
         without ever rewriting data."""
-        import pandas as pd
-
+        from verified_sources_spark.boundary import map_groups
         from verified_sources_spark.operators.iceberg_interop import _norm_path_py
 
         old_dvs = {
@@ -781,26 +780,23 @@ class ManifestTable:
         }
         table_path = self.path
 
-        def write_group(pdf: pd.DataFrame) -> pd.DataFrame:
+        def write_group(key, table):
             from verified_sources_spark.operators.deletion_vectors import (
                 dv_row_indexes,
                 write_dv_file,
             )
 
-            fp = pdf["__fp"].iloc[0]
-            idx = set(int(p) for p in pdf["__pos"])
+            fp = key[0]
+            idx = set(table.column("__pos").to_pylist())
             old = old_dvs.get(fp)
             if old:
                 idx.update(dv_row_indexes(table_path, old))
             desc = write_dv_file(table_path, sorted(idx), prefix="_deletes/")
-            return pd.DataFrame({"fp": [fp], "dv": [json.dumps(desc)]})
+            return {"fp": [fp], "dv": [json.dumps(desc)]}
 
-        rows = (
-            hits.select("__fp", "__pos")
-            .groupBy("__fp")
-            .applyInPandas(write_group, "fp string, dv string")
-            .collect()
-        )
+        rows = map_groups(
+            hits.select("__fp", "__pos"), ["__fp"], write_group, "fp string, dv string"
+        ).collect()
         return {r.fp: json.loads(r.dv) for r in rows}
 
     def _apply_dv_updates(

@@ -650,7 +650,7 @@ def cosine_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CPU-bound, so spread it across cores; the query side stays on the
     # plain scan (10 rows).  Implementation is size-adaptive (r16): the
     # JVM fold below the measured ~20k-row crossover, the Arrow GEMM
-    # path (mapInPandas + numpy matmul) above it — identical results,
+    # path (map_batches + numpy matmul) above it — identical results,
     # see cosine_topk_adaptive's docstring for the A/B numbers.
     from verified_sources_spark.llm.similarity import cosine_topk_adaptive
 
@@ -2138,7 +2138,7 @@ def caption_coverage_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (llm/subtitles) and JOIN the two modalities to score caption
     coverage — the curation signal that decides whether a clip is
     usable for caption/ASR training.  Shapes: both probes are
-    mapInPandas with payloads never shuffled; the join is on doc_id
+    map_rows stages with payloads never shuffled; the join is on doc_id
     after each side reduces to metadata-sized rows.  The oracle
     replays cue counts, summed cue time and the coverage ratio in SQL
     — a value-hash match proves the two independent parsers agree on
@@ -2911,7 +2911,7 @@ def media_ingest_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def extract_fields_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LLM field extraction (§2.1 #32, reference unstructured_data):
-    mapInPandas per-field Q&A over documents with the deterministic
+    map_rows per-field Q&A over documents with the deterministic
     answer stub — first-word and length fields plus the content-hash
     merge key.  The stub's answers are pure string functions, so this
     entry carries a full DuckDB value-hash oracle; the live-endpoint
@@ -3040,7 +3040,7 @@ def pdf_image_matches_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     document-borne image lands in the SAME dedup bucket as its
     standalone twin (hamming 0 by construction) — the figure-level
     dedup a multimodal corpus needs.  Shapes: both probes are
-    mapInPandas (payloads never shuffle, pixels reduce to 64-bit
+    map_rows stages (payloads never shuffle, pixels reduce to 64-bit
     hashes in the scan's executor); the join is on doc_id after both
     sides are metadata-sized."""
     from verified_sources_spark.llm.image_dedup import image_dhash
@@ -3416,7 +3416,7 @@ def shard_lines_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard membership, line order and the line text itself in SQL — a
     value-hash match proves all four codecs inflated byte-identically
     and the bomb-gated stream walks preserved line boundaries.  Shape:
-    mint and explode are both mapInPandas; compressed payloads never
+    mint and explode are both map_rows stages; compressed payloads never
     shuffle."""
     from verified_sources_spark.llm.archives import shard_lines
 
@@ -3762,7 +3762,7 @@ def crawl_dedup_pipeline_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # curation capstone's pattern) instead of exact_dedup_groups + a
     # join-back to pages: the join's second pages branch re-ran the
     # whole mint+warc_extract Python chain (r16, §2.4; plan census
-    # showed the MapInPandas mint twice).  Same rows: canonical =
+    # showed the Python mint twice).  Same rows: canonical =
     # min doc_id per md5(text), the canonical's text rides the struct.
     return (pages.groupBy(F.md5("text").alias("_k"))
             .agg(F.expr("min_by(struct(doc_id, text), doc_id)").alias("c"),
@@ -4599,7 +4599,7 @@ def cross_source_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # that leg's Python stage (boundary.map_rows) — three
     # full mint passes with two of the three blobs discarded each time
     # (r16, §2.4; found by the Python-node plan census: the same
-    # MapInPandas mint appeared 3x in the final plan).  Cut only when
+    # Python mint appeared 3x in the final plan).  Cut only when
     # sizing.should_cut says so, the policy of lsh_candidate_pairs'
     # level-1 cut: on a small corpus the extra passes
     # back-fill idle cores while the cut's barrier + payload blocks cost
@@ -4814,7 +4814,7 @@ def curation_pipeline_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouping, the per-domain rank, and the md5-bucket hash sample —
     so one hash match proves six front doors and five curation
     stages compose exactly.  100 TB shape: each branch is one narrow
-    scan→mapInPandas chain (payloads never shuffle — plan-gated), the
+    scan→map_rows chain (payloads never shuffle — plan-gated), the
     dedup is one hash-agg on md5(norm), domain_cap is the salted
     two-stage top-N, and the mixture is a broadcast-rate hash
     filter."""
@@ -5466,7 +5466,7 @@ def frontier_build_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
                       "child_locs array<string>, child_blobs array<binary>")
     # rows feeds the ok-aggregation AND the bad passthrough; uncut, the
     # union re-ran the Python mint+expand chain once per branch (r16,
-    # §2.4 — plan census: the MapInPandas mint twice).  rows is
+    # §2.4 — plan census: the Python mint twice).  rows is
     # metadata-sized (urls + verdicts, no payloads), so the cut is cheap
     # at any scale.
     rows = frontier_expand(assets, agent="enginebot/1.0").transform(cut)
@@ -5623,8 +5623,8 @@ def crawl_corpus_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus.  Per doc, mint a host with robots.txt (``/block/``
     disallowed), a urlset sitemap advertising four paths, and a WARC
     of fetched responses (gzip-member layout on odd hosts) that
-    INCLUDES the disallowed page — then, fused in ONE mapInPandas
-    per host: expand the frontier (llm/crawlgov.expand_host), parse
+    INCLUDES the disallowed page — then, fused in ONE map_rows
+    stage per host: expand the frontier (llm/crawlgov.expand_host), parse
     the WARC (llm/warc: record walk, HTTP split, charset decode,
     HTML text extraction), and ingest ONLY frontier-allowed 200
     pages:

@@ -22,6 +22,7 @@ sets that conf instead.
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote, urlparse
 
 import pyspark.sql.functions as F
 from py4j.protocol import Py4JError
@@ -93,7 +94,8 @@ def row_upper_bound(df: DataFrame) -> int | None:
 
     total = 0
     for f in files:
-        path = f[5:] if f.startswith("file:") else f
+        # inputFiles() lists percent-encoded URIs (a space is %20)
+        path = unquote(urlparse(f).path) if f.startswith("file:") else f
         if not f.endswith(".parquet") or not os.path.exists(path):
             return None  # remote FS: footers not reachable driver-side
         try:

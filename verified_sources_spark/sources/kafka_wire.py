@@ -28,6 +28,8 @@ import struct
 from dataclasses import dataclass
 from typing import Iterable
 
+from verified_sources_spark.llm.tfrecord import crc32c  # RecordBatch v2 checksum (RFC 3720 §B.4)
+
 API_FETCH = 1
 API_LIST_OFFSETS = 2
 API_METADATA = 3
@@ -37,28 +39,6 @@ API_SASL_AUTHENTICATE = 36
 
 EARLIEST_TS = -2
 LATEST_TS = -1
-
-
-# ------------------------------------------------------------------ crc32c
-def _make_crc32c_table() -> list[int]:
-    table = []
-    for i in range(256):
-        crc = i
-        for _ in range(8):
-            crc = (crc >> 1) ^ 0x82F63B78 if crc & 1 else crc >> 1
-        table.append(crc)
-    return table
-
-
-_CRC32C_TABLE = _make_crc32c_table()
-
-
-def crc32c(data: bytes) -> int:
-    """CRC-32/Castagnoli (the RecordBatch v2 checksum; RFC 3720 §B.4)."""
-    crc = 0xFFFFFFFF
-    for b in data:
-        crc = (crc >> 8) ^ _CRC32C_TABLE[(crc ^ b) & 0xFF]
-    return crc ^ 0xFFFFFFFF
 
 
 # ------------------------------------------------------------- varint codec

@@ -15,7 +15,8 @@ for PostgreSQL, built on the engine's own wire client
   prior rows (keyed by a ``__vss_part`` column) — a task retry replaces
   its slice atomically instead of duplicating it, so staging is
   exactly-once per partition without per-task staging tables.  COPY
-  text format is generated vectorized from Arrow batches (mapInPandas).
+  text is generated from each Arrow batch with ``pyarrow.compute``
+  (one ``mapInArrow`` task per partition).
 
 - **One finalize transaction** applies the disposition server-side:
   ``append`` (INSERT..SELECT), ``replace`` (TRUNCATE + INSERT..SELECT —
@@ -93,87 +94,70 @@ def pg_type_for(dt: T.DataType) -> str:
 # ------------------------------------------------------ COPY text encode
 
 
-def _escape_text_series(s):
-    """Escape a string Series for COPY text format: backslash first,
+def _escape_text(a):
+    """Escape a string array for COPY text format: backslash first,
     then the delimiter/newline bytes."""
-    return (
-        s.str.replace("\\", "\\\\", regex=False)
-        .str.replace("\t", "\\t", regex=False)
-        .str.replace("\n", "\\n", regex=False)
-        .str.replace("\r", "\\r", regex=False)
-    )
+    import pyarrow.compute as pc
+
+    for raw, escaped in (("\\", "\\\\"), ("\t", "\\t"), ("\n", "\\n"), ("\r", "\\r")):
+        a = pc.replace_substring(a, raw, escaped)
+    return a
 
 
-def _col_to_copy_text(s, dt: T.DataType, session_tz: str):
-    """One column of an Arrow-derived pandas batch → COPY text values
-    (str Series; NULLs become the literal ``\\N``).  Vectorized for the
-    hot types; per-value only for binary/json/decimal."""
+def _json_value(v, dt: T.DataType):
+    """A nested value as ``to_pylist`` gives it → its JSON form (a map
+    arrives as (key, value) pairs)."""
+    if v is None:
+        return None
+    if isinstance(dt, T.MapType):
+        return {k: _json_value(x, dt.valueType) for k, x in v}
+    if isinstance(dt, T.ArrayType):
+        return [_json_value(x, dt.elementType) for x in v]
+    if isinstance(dt, T.StructType):
+        return {f.name: _json_value(v[f.name], f.dataType) for f in dt.fields}
+    return v
+
+
+def _col_to_copy_text(a, dt: T.DataType):
+    """One Arrow column → COPY text values (a string array; nulls become
+    the literal ``\\N``).  ``pyarrow.compute`` throughout, per value only
+    for binary and json."""
     import json
 
-    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    mask = s.isna()
-    if isinstance(dt, T.BooleanType):
-        out = s.map(lambda v: "t" if v else "f", na_action="ignore")
-    elif isinstance(dt, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)):
-        # nullable ints arrive as float64 or object — go through Int64
-        # so 3.0 prints as 3
-        out = s.astype("Int64").astype("string")
-    elif isinstance(dt, (T.DoubleType, T.FloatType)):
-        # repr(float(v)), NOT repr(v): numpy>=2 reprs scalars as
-        # "np.float64(1.5)", which PostgreSQL rejects; the builtin-float
-        # repr round-trips full precision on both numpy majors
-        out = s.map(lambda v: repr(float(v)), na_action="ignore")
+    if isinstance(dt, T.TimestampType):
+        # instants, printed in UTC with microseconds
+        out = pc.strftime(a.cast(pa.timestamp("us", "UTC")), "%Y-%m-%d %H:%M:%S+00")
+    elif isinstance(dt, T.TimestampNTZType):
+        out = pc.strftime(a, "%Y-%m-%d %H:%M:%S")
+    elif isinstance(dt, (T.BooleanType, T.LongType, T.IntegerType, T.ShortType, T.ByteType,
+                         T.DoubleType, T.FloatType, T.DateType, T.DecimalType)):
+        # exact integers; shortest round-trip floats; ISO dates
+        out = a.cast(pa.string())
     elif isinstance(dt, T.StringType):
-        out = _escape_text_series(s.astype("string"))
-    elif isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-        ts = s
-        if isinstance(dt, T.TimestampType):
-            # Arrow hands the session-tz wall clock (naive) or tz-aware
-            # values; normalize to UTC instants either way
-            if getattr(ts.dt, "tz", None) is None:
-                ts = ts.dt.tz_localize(session_tz)
-            ts = ts.dt.tz_convert("UTC")
-            out = ts.dt.strftime("%Y-%m-%d %H:%M:%S.%f") + "+00"
-        else:
-            out = ts.dt.strftime("%Y-%m-%d %H:%M:%S.%f")
-    elif isinstance(dt, T.DateType):
-        out = s.map(lambda v: v.isoformat(), na_action="ignore")
+        out = _escape_text(a.cast(pa.string()))
     elif isinstance(dt, T.BinaryType):
-        out = s.map(
-            lambda v: "\\\\x" + bytes(v).hex(), na_action="ignore"
-        )  # one escaped backslash survives COPY unescaping → bytea hex form
-    elif isinstance(dt, T.DecimalType):
-        out = s.map(str, na_action="ignore")
+        # one escaped backslash survives COPY unescaping → bytea hex form
+        out = pa.array([None if v is None else "\\\\x" + v.hex() for v in a.to_pylist()], pa.string())
     elif isinstance(dt, (T.ArrayType, T.MapType, T.StructType)):
-        def enc(v):
-            def plain(x):
-                if isinstance(x, dict):
-                    return {k: plain(y) for k, y in x.items()}
-                if hasattr(x, "tolist"):  # numpy array / scalar from Arrow
-                    return plain(x.tolist())
-                if isinstance(x, (list, tuple)):
-                    return [plain(y) for y in x]
-                if hasattr(x, "asDict"):
-                    return plain(x.asDict())
-                return x
-
-            return json.dumps(plain(v), separators=(",", ":"), default=str)
-
-        out = _escape_text_series(s.map(enc, na_action="ignore").astype("string"))
+        out = _escape_text(pa.array(
+            [None if v is None else json.dumps(_json_value(v, dt), separators=(",", ":"), default=str)
+             for v in a.to_pylist()], pa.string()))
     else:
         raise TypeError(f"no COPY encoding for Spark type {dt}")
-    return pd.Series(out, index=s.index, dtype="object").where(~mask, "\\N")
+    return pc.fill_null(out, "\\N")
 
 
-def copy_lines(pdf, fields: Sequence[T.StructField], session_tz: str, suffix: str = ""):
-    """pandas batch → iterator of COPY text lines (bytes).  *suffix* is
+def copy_lines(batch, fields: Sequence[T.StructField], suffix: str = ""):
+    """Arrow batch → iterator of COPY text lines (bytes).  *suffix* is
     appended verbatim before the newline (the staging partition tag)."""
-    cols = [
-        _col_to_copy_text(pdf[f.name], f.dataType, session_tz) for f in fields
-    ]
-    joined = cols[0].str.cat(cols[1:], sep="\t") if len(cols) > 1 else cols[0]
-    for line in joined:
+    import pyarrow.compute as pc
+
+    cols = [_col_to_copy_text(batch.column(f.name), f.dataType) for f in fields]
+    joined = pc.binary_join_element_wise(*cols, "\t") if len(cols) > 1 else cols[0]
+    for line in joined.to_pylist():
         yield (line + suffix + "\n").encode()
 
 
@@ -303,8 +287,6 @@ def write_postgres(
     if strategy not in ("delete-insert", "upsert"):
         raise ValueError(f"unknown merge strategy: {strategy}")
 
-    spark = df.sparkSession
-    session_tz = spark.conf.get("spark.sql.session.timeZone", "UTC")
     fields = list(df.schema.fields)
     data_cols = [f.name for f in fields if f.name != hard_delete_col]
     run = uuid.uuid4().hex[:12]
@@ -341,16 +323,16 @@ def write_postgres(
         df = df.repartition(parallelism)
 
     def stage(batches: Iterator) -> Iterator:
-        import pandas as pd
+        import pyarrow as pa
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
         client = None
         n = 0
         try:
-            # not map_rows: a sink that writes each batch in one transaction
-            for pdf in batches:
-                if len(pdf) == 0:
+            # not map_batches: a sink that writes its partition in one transaction
+            for batch in batches:
+                if batch.num_rows == 0:
                     continue
                 if client is None:
                     client = _connect(dsn)
@@ -366,18 +348,18 @@ def write_postgres(
                         + ", ".join(_ident(f.name) for f in fields)
                         + ", __vss_part) FROM STDIN"
                     )
-                n += client.copy_in(
-                    copy_sql, copy_lines(pdf, fields, session_tz, f"\t{pid}")
-                )
+                n += client.copy_in(copy_sql, copy_lines(batch, fields, f"\t{pid}"))
             if client is not None:
                 client.commit()
         finally:
             if client is not None:
                 client.close()
-        yield pd.DataFrame({"pid": [pid], "staged": [n]})
+        yield pa.RecordBatch.from_pydict(
+            {"pid": [pid], "staged": [n]},
+            schema=pa.schema([("pid", pa.int32()), ("staged", pa.int64())]))
 
     try:
-        reports = df.mapInPandas(stage, "pid int, staged long").collect()
+        reports = df.mapInArrow(stage, "pid int, staged long").collect()
         staged = sum(r.staged for r in reports)
 
         insert_cols = ", ".join(_ident(c) for c in data_cols)

@@ -138,7 +138,7 @@ class TwoTableIngest:
         # the input token, the accepted-set plan (whose DAG forks re-read
         # the batch — in-batch dedup vs exact-dup branches cannot share a
         # subtree) and the fingerprint append otherwise each re-execute
-        # the batch's source chain; with a mapInPandas mint/decode source
+        # the batch's source chain; with a Python mint/decode source
         # that was 3-4 full Python passes per batch.  A micro-batch is
         # bounded by definition, so holding its bytes in MEMORY_AND_DISK
         # for the duration of one apply is the intended working set.

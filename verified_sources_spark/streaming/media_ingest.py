@@ -29,7 +29,7 @@ near-dup collides on at least one whole band), and only COLLIDING pairs
 pay the 64-bit hamming check (``bit_count(a ^ b)``, JVM-side).  A daily
 increment therefore costs O(increment + collisions), independent of
 corpus size; asset payload bytes never shuffle — each asset reduces to
-one signed long in the mapInPandas that decodes it.
+one signed long in the map_rows stage that decodes it.
 
 The reference has no media operators — this extends its incremental-
 ledger idea (sources/pg_replication/__init__.py exactly-once slots;
@@ -177,7 +177,7 @@ class MediaIngest(TwoTableIngest):
     # ---------------------------------------------------------- fingerprints
     def _pfps(self, df: DataFrame) -> DataFrame:
         """(id, modality, pfp) for the DECODABLE assets of ``df`` — one
-        narrow mapInPandas; payload bytes never leave the executor that
+        narrow map_rows stage; payload bytes never leave the executor that
         read them."""
         id_col, asset_col, every_ms = self.id_col, self.asset_col, self.every_ms
 
