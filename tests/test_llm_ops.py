@@ -264,7 +264,7 @@ def test_embedding_near_dup_lsh_matches_exact_on_true_dups(spark):
     assert kept_ids == set(range(40))  # clones dropped, originals kept
 
 
-def test_ivf_index_trains_once(spark):
+def test_ivf_index_trains_once(spark, sf_dir):
     """IvfIndex.build() trains the coarse quantizer (one Lloyd job per
     iteration) and buckets the corpus; each of three topk() calls gives
     ivf_topk's rows and runs no Lloyd job.  A Lloyd job is one whose
@@ -276,7 +276,7 @@ def test_ivf_index_trains_once(spark):
     from verified_sources_spark.llm import similarity
     from verified_sources_spark.llm.index_backend import IvfIndex
 
-    e = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 5)
     lines, first = inspect.getsourcelines(similarity._lloyd)
     lloyd = range(first, first + len(lines))
