@@ -8,7 +8,9 @@ import re
 
 from pyspark.sql import functions as F
 
-from verified_sources_spark.boundary import map_batches, map_groups, map_rows
+import pyarrow as pa
+
+from verified_sources_spark.boundary import _arrow_loop, _row_chunks, map_batches, map_groups, map_rows
 from verified_sources_spark.cut import cut
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "verified_sources_spark"
@@ -216,6 +218,40 @@ def test_no_pandas_crossing_outside_the_allowlist():
     found = {path.relative_to(PKG).as_posix() for path in sorted(PKG.rglob("*.py"))
              if crossing.search(path.read_text())}
     assert found <= set(PANDAS_FILES), sorted(found - set(PANDAS_FILES))
+
+
+# an executor-side fan-out outside the boundary: an RDD crossing, or a
+# thread pool in a source
+RDD_CROSSING = re.compile(
+    r"\.rdd\.(mapPartitions|map|flatMap)\(|createDataFrame\(\s*[\w.]*rdd\b")
+
+
+def test_no_rdd_crossing_or_source_thread_pool():
+    """No Spark: every fan-out over a DataFrame is a map_rows /
+    map_batches stage, and no source fans out on driver threads."""
+    found = set()
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        src = path.read_text()
+        if RDD_CROSSING.search(src):
+            found.add(f"{rel}: RDD crossing")
+        if rel.startswith("sources/") and "ThreadPoolExecutor" in src:
+            found.add(f"{rel}: thread pool")
+    assert not found, sorted(found)
+
+
+def test_map_rows_hands_on_a_batch_every_limit_rows():
+    """No Spark: one input row that yields 35 rows leaves the batch loop
+    as batches of 10, 10, 10 and 5 under a limit of 10."""
+    def fan(n):
+        for k in range(n):
+            yield {"k": k}
+
+    batch = pa.record_batch({"n": pa.array([35], pa.int64())})
+    out = list(_arrow_loop([batch], _row_chunks(fan, ["k"], 10),
+                           pa.schema([("k", pa.int64())])))
+    assert [b.num_rows for b in out] == [10, 10, 10, 5]
+    assert [k for b in out for k in b.column("k").to_pylist()] == list(range(35))
 
 
 BIG = (1 << 62) + 1   # 4611686018427387904 after a float64 round trip

@@ -103,7 +103,7 @@ def test_real_socket_429_exhausts_retries(api_server):
 
 def test_real_socket_fetch_distributed_executors_hit_server(spark, api_server):
     """Executors (Python workers) build their own HttpTransport and hit
-    the server over real sockets inside mapPartitions."""
+    the server over real sockets inside a map_rows stage."""
     base = api_server  # captured in closures shipped to executors
 
     def make_client():
@@ -118,7 +118,6 @@ def test_real_socket_fetch_distributed_executors_hit_server(spark, api_server):
         make_client,
         make_endpoint,
         "user_id long, score long",
-        num_slices=4,
     )
     rows = {r["user_id"]: r["score"] for r in out.collect()}
     assert rows == {i: i * 10 for i in range(1, 9)}

@@ -5,6 +5,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
+from verified_sources_spark.llm.corpus import band_table
 from verified_sources_spark.llm.exact_dedup import exact_dedup, exact_dedup_groups
 from verified_sources_spark.llm.minhash import (
     lsh_candidate_pairs,
@@ -17,7 +18,11 @@ from verified_sources_spark.llm.multimodal import (
     frame_sample_plan,
 )
 from verified_sources_spark.llm.similarity import cosine_topk, lsh_bucketed_topk
-from verified_sources_spark.llm.simhash import simhash64, simhash_near_pairs
+from verified_sources_spark.llm.simhash import (
+    fingerprint_dedup_groups,
+    simhash64,
+    simhash_near_pairs,
+)
 
 
 def _docs(spark):
@@ -936,3 +941,18 @@ def test_remove_contaminated_spans_pinned(spark):
     assert out[2].clean_text == "mentions p q briefly" and out[2].n_spans == 0
     assert out[3].clean_text == "" and out[3].n_tokens_removed == 6
     assert out[4].n_tokens_removed == 0
+
+
+@pytest.mark.parametrize("call", [
+    lambda: lsh_candidate_pairs(None, "id", "text", k=8, bands=3),
+    lambda: simhash_near_pairs(None, "id", "text", max_hamming=4, n_bands=4),
+    lambda: simhash_near_pairs(None, "id", "text", max_hamming=3, n_bands=5),
+    lambda: fingerprint_dedup_groups(None, "id", "fp", max_hamming=4, n_bands=4),
+    lambda: fingerprint_dedup_groups(None, "id", "fp", bits=64, n_bands=6, max_hamming=3),
+    lambda: band_table(None, "id", "text", k=8, bands=3),
+], ids=["minhash_bands", "simhash_pigeonhole", "simhash_bits", "fingerprint_pigeonhole",
+        "fingerprint_bits", "band_table_bands"])
+def test_bad_band_parameters_raise_value_error(call):
+    """Raised before the frame is read, and still under ``python -O``."""
+    with pytest.raises(ValueError):
+        call()

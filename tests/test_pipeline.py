@@ -189,3 +189,48 @@ def test_cursor_store_refuses_a_non_local_dataset(spark):
     p = pipeline(spark, "hdfs://namenode:8020/ds")  # no cursor needed yet
     with pytest.raises(ValueError, match="not local"):
         p.state
+
+
+@pytest.mark.parametrize("disposition", ["append", "replace", "merge"])
+def test_every_load_evaluates_its_source_once(spark, tmp_path, disposition):
+    """Without a cursor too, the write and the row count come from one
+    evaluation: each endpoint of a 20-endpoint fan-out is called once."""
+    from verified_sources_spark.sources.rest import RestClient, RestEndpoint, fetch_distributed
+
+    log = str(tmp_path / "calls.log")
+
+    class CountingTransport:
+        def request(self, url, params):
+            with open(log, "a") as f:
+                f.write(url + "\n")
+            return {"data": [{"id": int(url.rsplit("/", 1)[1])}]}, {}
+
+    src = fetch_distributed(
+        spark.range(20), lambda: RestClient(CountingTransport()),
+        lambda p: RestEndpoint(f"https://a/item/{p['id']}"), "id long")
+    p = pipeline(spark, str(tmp_path / "ds"))
+    info = p.run(src, "items", write_disposition=disposition,
+                 primary_key="id" if disposition == "merge" else None)
+    assert info.rows_loaded == 20
+    with open(log) as f:
+        assert sorted(f.read().split()) == sorted(f"https://a/item/{i}" for i in range(20))
+    assert sorted(r.id for r in p.read("items").collect()) == list(range(20))
+
+
+def test_a_refused_load_evaluates_nothing(spark, tmp_path):
+    from verified_sources_spark.boundary import map_rows
+
+    log = str(tmp_path / "calls.log")
+
+    def source(i):
+        with open(log, "a") as f:
+            f.write(f"{i}\n")
+        yield {"id": i}
+
+    src = map_rows(spark.range(3), source, "id long")
+    p = pipeline(spark, str(tmp_path / "ds"))
+    with pytest.raises(ValueError, match="primary_key"):
+        p.run(src, "t", write_disposition="merge", incremental="id")
+    with pytest.raises(ValueError, match="write_disposition"):
+        p.run(src, "t", write_disposition="upsert")
+    assert not (tmp_path / "calls.log").exists()

@@ -136,7 +136,8 @@ def test_chained_detail_fetch(spark):
     parents = spark.createDataFrame([("w1",), ("w2",), ("w2",)], "gid string")
     children = chained_detail_fetch(
         spark,
-        lambda: _client(pages),
+        # runs in executor tasks: name only importable classes, not _client
+        lambda: RestClient(LocalPagesTransport(pages)),
         parents,
         "gid",
         "https://a/workspaces/{key}/projects",
@@ -147,13 +148,9 @@ def test_chained_detail_fetch(spark):
 
 
 def test_chained_detail_fetch_distributed_matches_driver_path(spark):
-    """VERDICT r1 #6: the executor-side path (param DF → mapPartitions
-    fetch, no driver collect) must produce exactly the driver-side pool's
-    rows."""
-    from verified_sources_spark.sources.saas import (
-        chained_detail_fetch,
-        chained_detail_fetch_distributed,
-    )
+    """VERDICT r1 #6: the executor-side path (param DF → map_rows fetch,
+    no driver collect) gives exactly the rows the driver-side pool gave."""
+    from verified_sources_spark.sources.saas import chained_detail_fetch
 
     pages = {
         "https://a/workspaces/w1/projects": [({"data": [{"pid": 11}, {"pid": 12}]}, {})],
@@ -161,11 +158,6 @@ def test_chained_detail_fetch_distributed_matches_driver_path(spark):
         "https://a/workspaces/w3/projects": [({"data": [{"pid": 31}]}, {})],
     }
     parents = spark.createDataFrame([("w1",), ("w2",), ("w2",), ("w3",)], "gid string")
-    kwargs = dict(
-        parent_key="gid",
-        url_template="https://a/workspaces/{key}/projects",
-        schema="pid long, gid string",
-    )
 
     # local closure (not the module-level _client): cloudpickle ships it by
     # VALUE to executors — test modules aren't importable there; a fresh
@@ -175,11 +167,11 @@ def test_chained_detail_fetch_distributed_matches_driver_path(spark):
 
         return RestClient(LocalPagesTransport(pages))
 
-    driver_side = chained_detail_fetch(spark, make_client, parents, **kwargs)
-    exec_side = chained_detail_fetch_distributed(parents, make_client, **kwargs)
-    d = sorted(map(tuple, driver_side.collect()))
-    e = sorted(map(tuple, exec_side.collect()))
-    assert d == e == [(11, "w1"), (12, "w1"), (21, "w2"), (31, "w3")]
+    out = chained_detail_fetch(
+        spark, make_client, parents, parent_key="gid",
+        url_template="https://a/workspaces/{key}/projects", schema="pid long, gid string",
+    )
+    assert sorted(map(tuple, out.collect())) == [(11, "w1"), (12, "w1"), (21, "w2"), (31, "w3")]
 
 
 # ------------------------------------------------------ round-2 concrete shapes
@@ -192,25 +184,17 @@ def test_slack_thread_replies_self_join(spark):
         slack_thread_replies,
     )
 
-    pages = {
-        "https://s/conversations.replies": [
-            # transport pops one page per call; two threaded messages = two calls
-            (
-                {"messages": [
-                    {"ts": "100.1", "user": "alice", "text": "parent a"},
-                    {"ts": "100.5", "user": "bob", "text": "re: a"},
-                    {"ts": "100.9", "user": "carol", "text": "re: a 2"},
-                ]},
-                {},
-            ),
-            (
-                {"messages": [
-                    {"ts": "200.1", "user": "dan", "text": "parent b"},
-                    {"ts": "200.2", "user": "erin", "text": "re: b"},
-                ]},
-                {},
-            ),
-        ]
+    # one conversations.replies page per thread, chosen by the ts param
+    threads = {
+        "100.1": [
+            {"ts": "100.1", "user": "alice", "text": "parent a"},
+            {"ts": "100.5", "user": "bob", "text": "re: a"},
+            {"ts": "100.9", "user": "carol", "text": "re: a 2"},
+        ],
+        "200.1": [
+            {"ts": "200.1", "user": "dan", "text": "parent b"},
+            {"ts": "200.2", "user": "erin", "text": "re: b"},
+        ],
     }
     messages = spark.createDataFrame(
         [
@@ -221,12 +205,17 @@ def test_slack_thread_replies_self_join(spark):
         "channel string, ts string, thread_ts string, user string, text string",
     )
 
+    class RepliesTransport:
+        def request(self, url, params):
+            assert url == "https://s/conversations.replies" and params["channel"] == "C1"
+            return {"messages": threads[params["ts"]]}, {}
+
     def make_client():
-        from verified_sources_spark.sources.rest import LocalPagesTransport, RestClient
+        from verified_sources_spark.sources.rest import RestClient
 
-        return RestClient(LocalPagesTransport(pages))
+        return RestClient(RepliesTransport())
 
-    replies = slack_thread_replies(messages, make_client, "https://s", num_slices=1)
+    replies = slack_thread_replies(messages, make_client, "https://s")
     got = sorted((r["thread_ts"], r["ts"], r["user"]) for r in replies.collect())
     # parent echoes (ts == thread_ts) dropped — reference's page_data[1:]
     assert got == [("100.1", "100.5", "bob"), ("100.1", "100.9", "carol"), ("200.1", "200.2", "erin")]
@@ -270,7 +259,7 @@ def test_matomo_visitors_batch_lookup(spark):
         [("v1", 10), ("v2", 11), ("v1", 12), ("v3", 13)], "visitorId string, action long"
     )
     visitors = matomo_visitors_batch_lookup(
-        visits, make_client, "https://m", site_id=5, chunk_size=2, num_slices=2
+        visits, make_client, "https://m", site_id=5, chunk_size=2
     )
     got = {r["visitorId"]: (r["visits"], r["country"]) for r in visitors.collect()}
     assert got == {"v1": (3, "de"), "v2": (1, "fr"), "v3": (7, "us")}
@@ -727,7 +716,7 @@ def test_facebook_batch_enrich(spark):
         "id string, name string",
     )
     out = facebook_batch_enrich(
-        creatives, make_client, "https://fb", ["thumbnail_url"], chunk_size=2, num_slices=2
+        creatives, make_client, "https://fb", ["thumbnail_url"], chunk_size=2
     )
     rows = {(r["id"], r["name"]): r["thumbnail_url"] for r in out.collect()}
     assert rows == {
@@ -798,53 +787,54 @@ def test_matomo_remove_active_visits_cutoff_rule(spark):
     assert closed.count() == 2
 
 
-def test_chained_detail_fetch_routes_distributed_above_threshold(spark, monkeypatch):
-    """Above distributed_threshold parent keys the short name must route
-    through the executor-side path — no unbounded driver collect (VERDICT
-    r2 next-step #5)."""
-    from verified_sources_spark.sources import saas
+def _job_ids(spark, fn):
+    """(result of fn(), ids of the Spark jobs it ran)."""
+    import uuid
 
-    pages = {
-        f"https://a/w/w{i}/p": [({"data": [{"pid": i * 10}]}, {})] for i in range(4)
-    }
-    parents = spark.createDataFrame([(f"w{i}",) for i in range(4)], "gid string")
+    sc = spark.sparkContext
+    group = f"fan_out_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        return fn(), list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_chained_detail_fetch_over_fanned_out_parents_runs_no_job_to_build(spark, tmp_path):
+    """A chain over 100 parents that are themselves a fan-out: building it
+    runs no Spark job, and one action calls each parent and each child
+    endpoint once (the executors log every call to a shared file)."""
+    from verified_sources_spark.sources.rest import RestEndpoint, fetch_distributed
+    from verified_sources_spark.sources.saas import chained_detail_fetch
+
+    log = str(tmp_path / "calls.log")
+
+    class CountingTransport:
+        def request(self, url, params):
+            with open(log, "a") as f:
+                f.write(url + "\n")
+            kind, key = url.rsplit("/", 2)[1:]
+            if kind == "parent":
+                return {"data": [{"gid": f"g{key}"}]}, {}
+            return {"data": [{"pid": int(key[1:]) * 10}]}, {}
 
     def make_client():
-        from verified_sources_spark.sources.rest import LocalPagesTransport, RestClient
+        return RestClient(CountingTransport())
 
-        return RestClient(LocalPagesTransport(pages))
+    parents, parent_jobs = _job_ids(spark, lambda: fetch_distributed(
+        spark.range(100).withColumnRenamed("id", "n"), make_client,
+        lambda p: RestEndpoint(f"https://a/parent/{p['n']}"), "gid string"))
+    children, chain_jobs = _job_ids(spark, lambda: chained_detail_fetch(
+        spark, make_client, parents, "gid", "https://a/child/{key}", "pid long, gid string"))
+    assert parent_jobs == chain_jobs == []
 
-    routed = []
-    real = saas.chained_detail_fetch_distributed
-
-    def spy(*args, **kwargs):
-        routed.append(1)
-        return real(*args, **kwargs)
-
-    monkeypatch.setattr(saas, "chained_detail_fetch_distributed", spy)
-    out = saas.chained_detail_fetch(
-        spark, make_client, parents, "gid", "https://a/w/{key}/p",
-        "pid long, gid string", distributed_threshold=2,
-    )
-    rows = sorted((r["gid"], r["pid"]) for r in out.collect())
-    assert rows == [(f"w{i}", i * 10) for i in range(4)]
-    assert routed == [1]  # took the distributed path
-
-    # below the threshold: driver-side pool, no routing
-    routed.clear()
-    few = spark.createDataFrame([("w1",), ("w2",)], "gid string")
-    pages2 = {f"https://a/w/w{i}/p": [({"data": [{"pid": i * 10}]}, {})] for i in (1, 2)}
-
-    def make_client2():
-        from verified_sources_spark.sources.rest import LocalPagesTransport, RestClient
-
-        return RestClient(LocalPagesTransport(pages2))
-
-    out2 = saas.chained_detail_fetch(
-        spark, make_client2, few, "gid", "https://a/w/{key}/p",
-        "pid long, gid string", distributed_threshold=2,
-    )
-    assert out2.count() == 2 and not routed
+    rows = sorted(map(tuple, children.collect()))
+    assert rows == sorted((i * 10, f"g{i}") for i in range(100))
+    with open(log) as f:
+        calls = f.read().split()
+    assert sorted(calls) == sorted(
+        [f"https://a/parent/{i}" for i in range(100)]
+        + [f"https://a/child/g{i}" for i in range(100)])
 
 
 # ------------------------------------------------- r7 long-tail connectors
@@ -892,7 +882,8 @@ def test_workable_endpoints_and_details(spark):
         for c in ("J1", "J2")
     }
     df = workable_details(
-        spark, lambda: _client(detail_pages), parent, "jobs", "questions",
+        # runs in executor tasks: name only importable classes, not _client
+        spark, lambda: RestClient(LocalPagesTransport(detail_pages)), parent, "jobs", "questions",
         "https://w/spi/v3", "q string, shortcode string",
     )
     assert {(r.q, r.shortcode) for r in df.collect()} == {

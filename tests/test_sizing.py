@@ -89,3 +89,31 @@ def test_row_bound_reads_footers_under_percent_encoded_paths(spark, tmp_path):
     df = spark.read.parquet(path)
     assert any("%20" in f for f in df.inputFiles())
     assert sizing.row_upper_bound(df) == 37
+
+
+def test_spread_past_an_exchange_runs_no_job(spark, tmp_path):
+    """A shuffle's partition count is only known at run time: spread over
+    a distinct() repartitions without asking, so the counting source
+    below is never evaluated."""
+    import uuid
+
+    from verified_sources_spark.boundary import map_rows
+
+    log = str(tmp_path / "calls.log")
+
+    def source(i):
+        with open(log, "a") as f:
+            f.write(f"{i}\n")
+        yield {"g": i % 7}
+
+    keys = map_rows(spark.range(100), source, "g long").distinct()
+    sc = spark.sparkContext
+    group = f"spread_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        spread = sizing.spread(keys)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert not (tmp_path / "calls.log").exists()
+    assert sorted(r.g for r in spread.collect()) == list(range(7))

@@ -27,7 +27,7 @@ from verified_sources_spark.sources.rest import (
     RestEndpoint,
     StartTimePaginator,
     TransportError,
-    fetch_partitioned,
+    fetch_distributed,
     fetch_to_dataframe,
 )
 from verified_sources_spark.sources.sheets import detect_headers, grid_to_dataframe
@@ -144,15 +144,16 @@ def test_fetch_to_dataframe_and_fanout(spark):
         "id long, v string",
     )
     assert df.collect()[0]["v"] == "a"
-    eps = [RestEndpoint(f"/t/{i}", paginator=OffsetPaginator(limit=10)) for i in (1, 2)]
-    out = fetch_partitioned(
-        spark,
+    out = fetch_distributed(
+        spark.createDataFrame([("/t/1",), ("/t/2",)], "path string"),
         lambda: RestClient(LocalPagesTransport(pages)),
-        eps,
+        lambda p: RestEndpoint(p["path"], paginator=OffsetPaginator(limit=10)),
         "id long, v string",
-        transform=lambda r: {**r, "v": r["v"].upper()},
+        transform=lambda r, p: {**r, "v": r["v"].upper()},
     )
     assert sorted(r["v"] for r in out.collect()) == ["A", "B"]
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "MapInArrow fetch_distributed.fetch(" in plan
 
 
 # ------------------------------------------------------------- filesystem

@@ -14,7 +14,10 @@ column (a pyarrow array, numpy array or list).  A column that only
 passes through stays an Arrow array (``take``); numpy holds only what a
 stage computes on.  The boundary types each output field by the declared
 schema and names the plan node ``<enclosing>.<fn>``; ``map_rows`` hands
-its row loop to the one batch loop, ``_map_in_arrow``.  Per-task state
+its row loop to the one batch loop, ``_arrow_loop``, a batch every
+``spark.sql.execution.arrow.maxRecordsPerBatch`` output rows, so a
+fan-out stage never holds all the records of an input batch at once
+(read on the driver, like ``useLargeVarTypes``).  Per-task state
 (a cache, a client built at the first batch) lives in ``fn``'s closure:
 each task deserializes its own copy of ``fn``.
 
@@ -48,6 +51,7 @@ import threading
 from collections import OrderedDict
 from collections.abc import Callable, Iterator, Mapping
 from dataclasses import dataclass
+from itertools import islice
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
@@ -84,7 +88,8 @@ def map_batches(df: DataFrame,
                 fn: Callable[[pa.RecordBatch], Mapping],
                 schema: str | StructType) -> DataFrame:
     """``df.mapInArrow``: ``fn(batch)`` returns the output columns."""
-    return _map_in_arrow(df, fn, _struct(schema), _stage_name(fn))
+    return _map_in_arrow(df, lambda batch: (fn(batch),), _struct(schema),
+                         _stage_name(fn))
 
 
 def map_groups(df: DataFrame, keys: list[str],
@@ -122,14 +127,10 @@ def map_rows(df: DataFrame,
         stage, feed = producer
         source = stage.source
         fn, name = _compose(stage.fn, feed, fn), f"{stage.name}+{name}"
-    columns = struct.fieldNames()
-
-    def rows(batch):
-        values = zip(*(column.to_pylist() for column in batch.columns))
-        out = [r for v in values for r in fn(*v)]
-        return {c: [r.get(c) for r in out] for c in columns}
-
-    out = _map_in_arrow(source, rows, struct, name)
+    limit = int(df.sparkSession.conf.get(
+        "spark.sql.execution.arrow.maxRecordsPerBatch", "10000"))
+    out = _map_in_arrow(source, _row_chunks(fn, struct.fieldNames(), limit),
+                        struct, name)
     key = _node_text(out._jdf.queryExecution().analyzed())
     with _stages_lock:
         _stages[key] = _Stage(source, fn, struct, name)
@@ -160,13 +161,32 @@ def _table(columns: Mapping, schema: pa.Schema) -> pa.Table:
     return pa.Table.from_pydict(dict(columns), schema=schema)
 
 
-def _map_in_arrow(source: DataFrame, fn, struct: StructType, name: str) -> DataFrame:
+def _row_chunks(fn, columns: list[str], limit: int):
+    """``chunks(batch)`` for ``map_rows``: ``fn``'s dicts over the batch's
+    rows, handed on as columns every ``limit`` rows (all at once when
+    ``limit`` is not positive, as Spark reads ``maxRecordsPerBatch``)."""
+    def chunks(batch):
+        values = zip(*(column.to_pylist() for column in batch.columns))
+        out = (r for v in values for r in fn(*v))
+        while chunk := list(islice(out, limit if limit > 0 else None)):
+            yield {c: [r.get(c) for r in chunk] for c in columns}
+    return chunks
+
+
+def _arrow_loop(batches, chunks, schema: pa.Schema):
+    """The one batch loop: each non-empty input batch's ``chunks(batch)``
+    mappings leave as Arrow batches typed by ``schema``."""
+    for batch in batches:
+        if batch.num_rows:
+            for columns in chunks(batch):
+                yield from _table(columns, schema).to_batches()
+
+
+def _map_in_arrow(source: DataFrame, chunks, struct: StructType, name: str) -> DataFrame:
     schema = _arrow_schema(source, struct)
 
     def run(batches):
-        for batch in batches:
-            if batch.num_rows:
-                yield from _table(fn(batch), schema).to_batches()
+        return _arrow_loop(batches, chunks, schema)
 
     run.__name__ = name
     return source.mapInArrow(run, struct)

@@ -495,7 +495,8 @@ def band_table(
     Docs too short to shingle produce no rows (NULL signatures filtered).
     """
     rows_per_band = k // bands
-    assert rows_per_band * bands == k, "k must divide into equal bands"
+    if rows_per_band * bands != k:
+        raise ValueError("k must divide into equal bands")
     sig = minhash_signatures(df, id_col, text_col, k=k, shingle_n=shingle_n)
     # Un-shingleable docs are dropped by a NULL band-hash guard ABOVE the
     # explode, not by a `mh_0 IS NOT NULL` filter on sig (r16; the r15

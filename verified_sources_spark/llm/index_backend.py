@@ -20,8 +20,8 @@ index in without touching pipeline code:
   reranks (``ivf_probe``), with the same rows as ``ivf_topk``.
 - ``LshIndex`` — sign-LSH buckets (``lsh_bucketed_topk``).
 - ``ExternalIndexBackend`` — adapter skeleton for a remote vector store:
-  batches upserts/queries through per-partition callables the way the
-  REST layer does; the network client itself is injected (none
+  upserts each Arrow batch of the corpus through an injected callable
+  (a ``map_batches`` stage); the network client itself is injected (none
   ships in this container, by design — same boundary as the reference's
   optional chroma/weaviate extras).
 
@@ -35,6 +35,7 @@ from typing import Any, Callable
 
 from pyspark.sql import DataFrame
 
+from verified_sources_spark.boundary import map_batches
 from verified_sources_spark.cut import cut
 from verified_sources_spark.llm.similarity import (
     cosine_topk,
@@ -119,8 +120,8 @@ class ExternalIndexBackend(VectorIndex):
     are injected — the container ships no vector-store client, so a real
     deployment provides them (same optional-extra boundary as the
     reference's chroma/weaviate imports). ``build`` streams the corpus to
-    the store partition-by-partition on executors; ``topk`` collects only
-    the (small) query set and fans their searches out the same way."""
+    the store one Arrow batch per ``upsert_fn`` call, on executors; ``topk`` collects only
+    the (small) query set and runs its searches on the driver."""
 
     def __init__(
         self,
@@ -133,17 +134,14 @@ class ExternalIndexBackend(VectorIndex):
         self.id_col, self.vec_col = id_col, vec_col
 
     def build(self, corpus: DataFrame) -> "ExternalIndexBackend":
-        upsert, id_col, vec_col = self.upsert_fn, self.id_col, self.vec_col
+        upsert = self.upsert_fn
 
-        def _push(it):
-            batch = [
-                {"id": row[id_col], "vector": list(row[vec_col])} for row in it
-            ]
-            if batch:
-                upsert(batch)
-            yield from ()
+        def push(batch):
+            ids, vectors = (c.to_pylist() for c in batch.columns)
+            upsert([{"id": i, "vector": v} for i, v in zip(ids, vectors)])
+            return {"rows": [batch.num_rows]}
 
-        corpus.select(id_col, vec_col).rdd.mapPartitions(_push).count()
+        map_batches(corpus.select(self.id_col, self.vec_col), push, "rows long").collect()
         return self
 
     def topk(self, queries: DataFrame, k: int = 3) -> DataFrame:

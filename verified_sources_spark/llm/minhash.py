@@ -190,7 +190,8 @@ def lsh_candidate_pairs(
     pass back-fills idle cores and costs almost no wall clock, while the
     cut's block write + stage barrier costs ~0.15 s.
     """
-    assert k % bands == 0, "k must divide into equal bands"
+    if k % bands:
+        raise ValueError("k must divide into equal bands")
     rows_per_band = k // bands
     cap = int(max_bucket_size)
     # The band key is the RAW minhash tuple, not a hash of it: bucketing

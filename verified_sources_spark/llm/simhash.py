@@ -39,6 +39,15 @@ def _bits_of(base_hash: str) -> int:
     raise ValueError(f"unknown base_hash {base_hash!r}")
 
 
+def _check_bands(bits: int, n_bands: int, max_hamming: int) -> None:
+    """Raise unless ``n_bands`` equal bands of ``bits`` keep the
+    pigeonhole guarantee for ``max_hamming`` differing bits."""
+    if n_bands <= max_hamming:
+        raise ValueError("need n_bands > max_hamming (pigeonhole)")
+    if bits % n_bands:
+        raise ValueError(f"n_bands must divide the {bits} fingerprint bits")
+
+
 def _base_hash_col(col, base_hash: str):
     if base_hash == "xxhash64":
         return F.xxhash64(col)
@@ -95,8 +104,7 @@ def simhash_near_pairs(
     dedup grouping — the usual case — use ``simhash_dedup_groups``, whose
     candidate set and output are linear in the corpus."""
     bits = _bits_of(base_hash)
-    assert n_bands > max_hamming, "need n_bands > max_hamming (pigeonhole)"
-    assert bits % n_bands == 0
+    _check_bands(bits, n_bands, max_hamming)
     band_bits = bits // n_bands
     # materialize the signatures (skinny: id + one bigint) before the
     # self-join: the two join sides fork the plan DAG, and without the
@@ -223,8 +231,7 @@ def fingerprint_dedup_groups(
     window 16 as well) — cost is n_tables× the (linear) candidate
     volume, output still linear.  Edges only ever ADD, so n_tables
     can't over-merge."""
-    assert n_bands > max_hamming, "need n_bands > max_hamming (pigeonhole)"
-    assert bits % n_bands == 0
+    _check_bands(bits, n_bands, max_hamming)
     band_bits = bits // n_bands
 
     from pyspark.sql import Window

@@ -143,7 +143,8 @@ def date_range_chunks(spark, start, end, step_days: int) -> DataFrame:
 
     Returns a DataFrame (range_start, range_end) built with
     ``sequence`` + ``explode`` — the chunk list itself is distributed, so a
-    downstream per-chunk fetch (`mapPartitions` / range join) parallelizes.
+    downstream per-chunk fetch (``rest.fetch_distributed`` / range join)
+    parallelizes.
     """
     df = spark.range(1).select(
         F.explode(

@@ -20,10 +20,11 @@ are re-read and deduplicated by ROW IDENTITY against hashes stored with
 the cursor — like the reference's incremental unique-hash dedup, this
 holds for EVERY disposition, append included, not only keyed merge.
 
-The incremental batch is localCheckpoint'ed before writing, so the
+Every batch is cut (``cut.observed_cut``) before writing, so the
 write, the row count, and the committed cursor all come from the same
-evaluation — a non-deterministic source (API fetch, mapPartitions IO)
-can never advance the cursor past rows that were not actually written.
+evaluation — a non-deterministic source (an API fan-out, a DB scan)
+runs once per load and can never advance the cursor past rows that
+were not actually written.
 """
 
 from __future__ import annotations
@@ -111,9 +112,15 @@ class Pipeline:
           ``primary_key`` (str or list) and honors ``dedup_sort`` /
           ``hard_delete_col`` exactly like the operators layer.
         """
+        # refused before the cut below evaluates the source
+        if write_disposition not in ("append", "replace", "merge"):
+            raise ValueError(f"unknown write_disposition: {write_disposition!r}")
+        if write_disposition == "merge" and not primary_key:
+            raise ValueError("merge requires primary_key")
         df = data
         resource = f"{table_name}"
-        last = metrics = None
+        last = None
+        metrics = [F.count(F.lit(1)).alias("rows")]
         if incremental is not None:
             last = self.state.get(resource)
             df = incremental_filter(
@@ -128,27 +135,22 @@ class Pipeline:
             if last is not None and known:
                 at_boundary = _cursor_col(incremental) == F.lit(last)
                 df = df.filter(~(at_boundary & row_hash.isin(list(known))))
-            # pin ONE evaluation: the write, the row count, and the cursor
-            # below must all describe the same data — a non-deterministic
-            # source re-evaluated after the write could otherwise commit a
-            # cursor past rows that were never written (silent data loss).
-            # The count and the new watermark are observed on the cut's own
-            # job, not by two more actions over its result.
-            df, metrics = observed_cut(
-                df,
-                _LOAD_METRICS,
-                F.count(F.lit(1)).alias("rows"),
-                F.max(_cursor_col(incremental)).alias("cursor"),
-            )
+            metrics.append(F.max(_cursor_col(incremental)).alias("cursor"))
+        # pin ONE evaluation: the write, the row count, and the cursor
+        # below must all describe the same data — a non-deterministic
+        # source re-evaluated after the write could otherwise commit a
+        # cursor past rows that were never written (silent data loss), and
+        # an API fan-out would fetch every endpoint twice.  The count and
+        # the new watermark are observed on the cut's own job, not by more
+        # actions over its result.
+        df, (rows, *cursor) = observed_cut(df, _LOAD_METRICS, *metrics)
 
         sink = self.sink(table_name, partition_by=partition_by)
         if write_disposition == "append":
             sink.append(df)
         elif write_disposition == "replace":
             sink.replace(df)
-        elif write_disposition == "merge":
-            if not primary_key:
-                raise ValueError("merge requires primary_key")
+        else:
             keys = [primary_key] if isinstance(primary_key, str) else list(primary_key)
             sink.merge(
                 df,
@@ -156,12 +158,8 @@ class Pipeline:
                 dedup_sort=[dedup_sort] if isinstance(dedup_sort, str) else dedup_sort,
                 hard_delete_col=hard_delete_col,
             )
-        else:
-            raise ValueError(f"unknown write_disposition: {write_disposition!r}")
 
-        if metrics is None:
-            return LoadInfo(table_name, write_disposition, df.count())
-        rows, cursor_val = metrics
+        cursor_val = cursor[0] if cursor else None
         if cursor_val is not None:
             # commit AFTER the successful write — a failed load never
             # advances the cursor (the reference's state contract).

@@ -112,9 +112,13 @@ def spread(df: DataFrame) -> DataFrame:
     parquet file each) must spread, but a scan that already feeds every
     core would shuffle the whole input for nothing: on a 32-split 50k-doc
     table at 32 cores, minhash_signatures took 1.30 s median with an
-    unconditional repartition, 0.78 s without.  The split count is scan
-    metadata (no job)."""
+    unconditional repartition, 0.78 s without.  The split count of a
+    plan without an exchange is scan metadata (no job).  Past an
+    exchange it is only known at run time (asking runs the shuffle's
+    stages under AQE), so such a plan is repartitioned without asking."""
     par = df.sparkSession.sparkContext.defaultParallelism
+    if "Exchange" in df._jdf.queryExecution().executedPlan().toString():
+        return df.repartition(par)
     try:
         splits = df._jdf.rdd().getNumPartitions()
     except Py4JError:

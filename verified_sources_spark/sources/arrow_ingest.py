@@ -10,9 +10,10 @@ analogue:
 - a batch is an Arrow ``RecordBatch``/``pandas`` frame, never a Python
   row list — the executor boundary is Arrow end-to-end (``mapInPandas``);
 - the parallel-batch fan-out is a (skip, limit) parameter DataFrame whose
-  rows execute ON executors, one DB cursor per partition — the
+  rows execute ON executors, one ``make_fetch()`` per task — the
   distributed analogue of the reference's thread-deferred ``_run_batch``
-  (and of ``rest.fetch_distributed`` for REST sources);
+  (and of ``rest.fetch_distributed``'s ``map_rows`` fan-out for REST
+  sources);
 - the filter/projection conflict rules stay in
   ``operators.predicates`` (the relational layer), not in the loader.
 """
@@ -22,6 +23,8 @@ from __future__ import annotations
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+
+from verified_sources_spark import sizing
 
 
 def arrow_table_to_df(spark: SparkSession, table) -> DataFrame:
@@ -53,7 +56,6 @@ def batched_collection_scan(
     make_fetch: Callable[[], Callable[[int, int], "object"]],
     batches: Sequence[dict[str, int]],
     schema: str,
-    num_slices: int | None = None,
 ) -> DataFrame:
     """Parallel skip/limit collection scan with Arrow-batch results.
 
@@ -62,12 +64,10 @@ def batched_collection_scan(
     reading one window, already Arrow/pandas-typed. Batch parameters ship
     as a DataFrame and run inside ``mapInPandas``, so results cross the
     Python→JVM boundary as Arrow batches and no document ever lands on
-    the driver."""
-    if num_slices is None:
-        num_slices = spark.sparkContext.defaultParallelism
-    bdf = spark.createDataFrame(
+    the driver.  The windows spread across the cores (``sizing.spread``)."""
+    bdf = sizing.spread(spark.createDataFrame(
         [(int(b["skip"]), int(b["limit"])) for b in batches], "skip long, limit long"
-    ).repartition(min(num_slices, max(1, len(batches))))
+    ))
 
     def run(pdf_iter):
         fetch = make_fetch()

@@ -16,7 +16,8 @@ Semantics implemented engine-side:
 
 IO is a driver-side adapter (mailbox servers don't fan out); everything
 after landing is distributed.  At scale, per-folder/per-UID-range fetches
-fan out exactly like REST endpoints (fetch_partitioned)."""
+fan out exactly like REST endpoints (``rest.fetch_distributed``: one
+executor-side fetch per row of a parameter DataFrame)."""
 
 from __future__ import annotations
 

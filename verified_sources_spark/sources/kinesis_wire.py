@@ -17,8 +17,9 @@ outside, keeping the container boundary explicit.
 Scale shape: the parallel unit is shards.  ``fetch_stream`` drains each
 shard until it is caught up (``MillisBehindLatest == 0``) — the
 reference's bounded run — and per-shard feeds can be dispatched to
-executors exactly like ``rest.fetch_distributed`` dispatches endpoint
-partitions; the per-shard sequence state is metadata-sized.
+executors exactly like ``rest.fetch_distributed`` dispatches endpoints
+(one ``map_rows`` row per shard); the per-shard sequence state is
+metadata-sized.
 """
 
 from __future__ import annotations

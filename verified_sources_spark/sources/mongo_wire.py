@@ -16,9 +16,9 @@ Spark loaders mirror the reference's collection loaders
   ``CollectionLoader.load_documents`` islice loop), coerced through
   sources/bson_coerce.py, one DataFrame out.
 - ``load_collection_parallel`` — the ``parallel=True`` shape: a driver
-  ``count`` plans (skip, limit) batches, then ONE EXECUTOR TASK per
-  batch opens its own wire client and drains its slice
-  (``CollectionLoaderParallel._create_batches`` + ``_run_batch``,
+  ``count`` plans (skip, limit) batches, then executor tasks drain them
+  in a ``boundary.map_rows`` stage, each batch through its own wire
+  client (``CollectionLoaderParallel._create_batches`` + ``_run_batch``,
   helpers.py:216-268) — the scan scales with executors, and the skip/
   limit caveat is the same one the reference carries (batches are only
   consistent when the collection is quiescent or sorted by a unique
@@ -39,6 +39,8 @@ from collections.abc import Iterator, Sequence
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
+from verified_sources_spark import sizing
+from verified_sources_spark.boundary import map_rows
 from verified_sources_spark.sources.bson_codec import (
     Int64,
     decode_document,
@@ -261,48 +263,37 @@ def load_collection_parallel(
     chunk_size: int = 10_000,
 ) -> DataFrame:
     """Parallel loader (reference ``CollectionLoaderParallel``,
-    helpers.py:216-268): a driver ``count`` plans (skip, limit) batches,
-    ONE EXECUTOR TASK per batch opens its own connection and drains its
-    slice — IO scales with executors, rows never funnel through the
-    driver.  Same consistency caveat as the reference: skip/limit
-    batches are stable only on a quiescent collection or under a
-    unique-key sort."""
-    if isinstance(schema, str):
-        schema = T.StructType.fromDDL(schema)
-    fields = [f.name for f in schema.fields]
+    helpers.py:216-268): a driver ``count`` plans (skip, limit) windows,
+    and a ``map_rows`` stage over ``sizing.spread`` of the window frame
+    drains each one on an executor through a client that opens and
+    closes with its window — IO scales with executors, rows never
+    funnel through the driver, and no client outlives its window.  Same
+    consistency caveat as the reference: skip/limit batches are stable
+    only on a quiescent collection or under a unique-key sort."""
+    from verified_sources_spark.sources.bson_coerce import convert_bson_value
+
     with MongoWireClient(**conn) as c:
         total = c.count_documents(collection, filter_doc)
     if limit:
         total = min(total, abs(limit))
     if total == 0:
         return spark.createDataFrame([], schema)
-    batches = [
-        (sk, min(chunk_size, total - sk)) for sk in range(0, total, chunk_size)
-    ]
-    bdf = spark.createDataFrame(batches, "skip long, n long").repartition(
-        len(batches)
+    windows = spark.createDataFrame(
+        [(sk, min(chunk_size, total - sk)) for sk in range(0, total, chunk_size)],
+        "skip long, n long",
     )
 
-    def run(it):
-        client = None
-        try:
-            for row in it:
-                if client is None:
-                    client = MongoWireClient(**conn)
-                yield from _rows(
-                    client.find(
-                        collection,
-                        filter=filter_doc,
-                        projection=projection,
-                        sort=sort,
-                        skip=row.skip,
-                        limit=row.n,
-                        batch_size=chunk_size,
-                    ),
-                    fields,
-                )
-        finally:
-            if client is not None:
-                client.close()
+    def drain(skip, n):
+        with MongoWireClient(**conn) as client:
+            for d in client.find(
+                collection,
+                filter=filter_doc,
+                projection=projection,
+                sort=sort,
+                skip=skip,
+                limit=n,
+                batch_size=chunk_size,
+            ):
+                yield convert_bson_value(d)
 
-    return spark.createDataFrame(bdf.rdd.mapPartitions(run), schema)
+    return map_rows(sizing.spread(windows), drain, schema)

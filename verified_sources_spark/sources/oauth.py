@@ -26,9 +26,11 @@ is :class:`JwtBearerProvider`: RFC 7523 §2.1 — a fresh RS256-signed
 assertion per token request, signed by ``sources.rsa_jwt`` (pure-stdlib
 RSA, see that module's scope note).
 
-Thread-safe: ``fetch_partitioned`` drives one transport from many
-threads; acquisition is serialized under a lock so a fleet of workers
-waking up to an expired token performs one token request, not N.
+Thread-safe: a provider shared by transports on many threads (a
+caller's own pool) serializes acquisition under a lock, so a fleet of
+workers waking up to an expired token performs one token request, not
+N.  An executor-side fan-out (``rest.fetch_distributed``) ships each
+task its own copy.
 """
 
 from __future__ import annotations

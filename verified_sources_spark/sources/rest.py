@@ -25,24 +25,27 @@ transport drops in behind the same interface.  Retry/backoff with 429
 
 Scale model: page fetching is inherently sequential per endpoint (each
 page points at the next), so the unit of parallelism is the *endpoint ×
-key-range* — ``fetch_partitioned`` fans endpoint instances out across
-executors via ``mapPartitions`` style threading on the driver, and at
-cluster scale via an exploded parameter DataFrame.  The extracted pages
-land in a DataFrame immediately; everything downstream (flatten, route,
-merge) is distributed.
+key-range*.  ``fetch_distributed`` fans the rows of a parameter
+DataFrame out across executor tasks through the Arrow boundary
+(``boundary.map_rows`` over ``sizing.spread``), one endpoint per row —
+the reference's ``@dlt.defer`` thread pool becomes Spark's task slots.
+The extracted pages land in a DataFrame immediately; everything
+downstream (flatten, route, merge) is distributed.
 """
 
 from __future__ import annotations
 
 import json
 import time
-from collections.abc import Callable, Iterator, Sequence
-from concurrent.futures import ThreadPoolExecutor
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.types as T
+
+from verified_sources_spark import sizing
+from verified_sources_spark.boundary import map_rows
 
 
 # ----------------------------------------------------------------- transport
@@ -436,72 +439,40 @@ def fetch_to_dataframe(
     return spark.createDataFrame(rows, schema)  # type: ignore[arg-type]
 
 
-def fetch_partitioned(
-    spark: SparkSession,
-    make_client: Callable[[], RestClient],
-    endpoints: Sequence[RestEndpoint],
-    schema: T.StructType | str,
-    max_workers: int = 8,
-    transform: Callable[[dict], dict] | None = None,
-) -> DataFrame:
-    """Parallel fan-out over endpoint instances (the reference's
-    ``@dlt.defer`` thread pool, sources/chess/__init__.py:55) then one
-    union'd DataFrame.  Each worker gets its own client/transport.
-
-    At cluster scale the same shape becomes: endpoint-param DataFrame →
-    ``mapPartitions(fetch)`` so executors do the IO; the driver-side pool
-    here is the local[HTTP-bound] equivalent."""
-
-    def fetch(ep: RestEndpoint) -> list[dict]:
-        c = make_client()
-        return [transform(r) if transform else r for r in c.records(ep)]
-
-    with ThreadPoolExecutor(max_workers=max_workers) as pool:
-        batches = list(pool.map(fetch, endpoints))
-    rows = [r for b in batches for r in b]
-    return spark.createDataFrame(rows, schema)  # type: ignore[arg-type]
-
-
 def fetch_distributed(
     params_df: DataFrame,
     make_client: Callable[[], RestClient],
     make_endpoint: Callable[[dict], "RestEndpoint"],
     schema: T.StructType | str,
     transform: Callable[[dict, dict], dict] | None = None,
-    num_slices: int | None = None,
 ) -> DataFrame:
     """Executor-side endpoint fan-out: one API fetch per row of
-    ``params_df``, run inside ``mapPartitions`` so parameter rows never
-    collect to the driver (VERDICT r1 #6 — the driver-side pool in
-    ``fetch_partitioned`` bottlenecks at 100× parents).
+    ``params_df``, run in a ``map_rows`` stage over ``sizing.spread`` of
+    it, so parameter rows never collect to the driver and building the
+    fan-out runs no Spark job.  Like any stage it runs again on every
+    action over its result (``Pipeline.run`` pins one evaluation).
 
     ``make_client`` / ``make_endpoint`` ship to executors, so they must be
-    picklable; each PARTITION builds one client (connection/session reuse
-    across that partition's fetches, the per-executor analogue of the
-    reference's per-thread session). ``transform`` receives
-    ``(record, params_row)`` so children can be tagged with parent keys.
-
-    This is the one place per-partition imperative logic is genuine: the
-    work is remote IO, not relational compute — the result lands as a
-    normal DataFrame and everything downstream is Catalyst-planned.
+    picklable; each task builds one client at its first row (connection
+    and session reuse across that task's fetches, the per-executor
+    analogue of the reference's per-thread session).  ``make_endpoint``
+    and ``transform`` get the parameter row as a dict of its columns;
+    ``transform`` receives ``(record, params_row)`` so children can be
+    tagged with parent keys.  A record's keys name the output columns; a
+    missing key is null.
     """
-    spark = params_df.sparkSession
-    if num_slices is None:
-        num_slices = spark.sparkContext.defaultParallelism
-    # spread param rows so fetches parallelize across executors even when
-    # the param frame arrives as one partition (single-file scan)
-    spread = params_df.repartition(min(num_slices, max(1, params_df.count())))
+    names = params_df.columns
+    client = None
 
-    def run(it):
-        client = make_client()
-        for row in it:
-            p = row.asDict()
-            ep = make_endpoint(p)
-            for rec in client.records(ep):
-                yield transform(rec, p) if transform else rec
+    def fetch(*values):
+        nonlocal client
+        if client is None:
+            client = make_client()
+        p = dict(zip(names, values))
+        for rec in client.records(make_endpoint(p)):
+            yield transform(rec, p) if transform else rec
 
-    rdd = spread.rdd.mapPartitions(run)
-    return spark.createDataFrame(rdd, schema)  # type: ignore[arg-type]
+    return map_rows(sizing.spread(params_df), fetch, schema)
 
 
 def records_to_json_df(spark: SparkSession, records: list[dict]) -> DataFrame:

@@ -29,8 +29,11 @@ from dataclasses import dataclass, field
 from typing import Any
 
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
+from verified_sources_spark import sizing
+from verified_sources_spark.boundary import map_batches
 from verified_sources_spark.operators.pivot import custom_field_pivot, rename_from_mapping, unpivot
 from verified_sources_spark.sources.rest import (
     HeaderLinkPaginator,
@@ -39,6 +42,7 @@ from verified_sources_spark.sources.rest import (
     RestClient,
     RestEndpoint,
     StartTimePaginator,
+    fetch_distributed,
     fetch_to_dataframe,
 )
 
@@ -180,85 +184,24 @@ def chained_detail_fetch(
     url_template: str,
     schema: str,
     records_path: str = "data",
-    max_workers: int = 8,
-    distributed_threshold: int = 64,
-    num_slices: int | None = None,
 ) -> DataFrame:
     """Parent→child transformer chain (reference asana workspaces →
     projects → tasks → stories, sources/asana_dlt/__init__.py:64-207;
     workable candidates → details, workable/__init__.py:92-120): each
-    parent row fans out one detail endpoint; children carry the parent
-    key, and results land as one DataFrame — an index-nested-loop join
-    against a remote API.
-
-    Above ``distributed_threshold`` distinct parent keys the fetch routes
-    through ``chained_detail_fetch_distributed`` automatically (keys stay
-    a DataFrame, executors do the IO), so no caller collects unbounded
-    key lists to the driver by reaching for the shorter name; below it,
-    a metadata-sized key collect feeds the driver-side thread pool.  The
-    probe is a ``limit(threshold+1)`` collect — bounded either way."""
-    from verified_sources_spark.sources.rest import RestEndpoint
-
-    probe = (
-        parent.select(parent_key).distinct().limit(distributed_threshold + 1).collect()
-    )
-    if len(probe) > distributed_threshold:
-        return chained_detail_fetch_distributed(
-            parent,
-            make_client,
-            parent_key,
-            url_template,
-            schema,
-            records_path=records_path,
-            num_slices=num_slices,
-        )
-    keys = [r[parent_key] for r in probe]
-    endpoints = [
-        RestEndpoint(url_template.format(key=k), records_path=records_path) for k in keys
-    ]
-    key_by_url = {ep.url: k for ep, k in zip(endpoints, keys)}
-
-    # fetch per-endpoint so each child record can be tagged with its
-    # parent key before landing
-    from concurrent.futures import ThreadPoolExecutor
-
-    def fetch(ep: RestEndpoint):
-        c = make_client()
-        return [{**r, parent_key: key_by_url[ep.url]} for r in c.records(ep)]
-
-    with ThreadPoolExecutor(max_workers=max_workers) as pool:
-        batches = list(pool.map(fetch, endpoints))
-    rows = [r for b in batches for r in b]
-    return spark.createDataFrame(rows, schema)
-
-
-def chained_detail_fetch_distributed(
-    parent: DataFrame,
-    make_client,
-    parent_key: str,
-    url_template: str,
-    schema: str,
-    records_path: str = "data",
-    num_slices: int | None = None,
-) -> DataFrame:
-    """Executor-side variant of ``chained_detail_fetch``: parent keys stay
-    a DataFrame end-to-end (distinct → repartition → ``mapPartitions``
-    fetch), so nothing collects to the driver and fetch parallelism scales
-    with the cluster instead of one thread pool (VERDICT r1 #6). Results
-    are row-equal to the driver-side path (asserted in
-    tests/test_saas_connectors.py)."""
-    from verified_sources_spark.sources.rest import RestEndpoint, fetch_distributed
-
-    keys_df = parent.select(parent_key).distinct()
+    distinct parent key fans out one detail endpoint; children carry the
+    parent key, and results land as one DataFrame — an index-nested-loop
+    join against a remote API.  The keys stay a DataFrame end to end
+    (``fetch_distributed`` over ``parent.select(parent_key).distinct()``):
+    nothing collects to the driver, building the chain runs no Spark
+    job, and each parent is evaluated once per action."""
     return fetch_distributed(
-        keys_df,
+        parent.select(parent_key).distinct(),
         make_client,
         lambda p: RestEndpoint(
             url_template.format(key=p[parent_key]), records_path=records_path
         ),
         schema,
         transform=lambda rec, p: {**rec, parent_key: p[parent_key]},
-        num_slices=num_slices,
     )
 
 
@@ -358,7 +301,6 @@ def slack_thread_replies(
     make_client,
     base_url: str,
     reply_schema: str = "channel string, thread_ts string, ts string, user string, text string",
-    num_slices: int | None = None,
 ) -> DataFrame:
     """Thread replies for every threaded message (reference
     sources/slack/__init__.py:158-180): messages with a non-NULL
@@ -367,8 +309,6 @@ def slack_thread_replies(
     it with ``page_data[1:]``), expressed here relationally as
     ``ts != thread_ts``. Fetches run executor-side (fetch_distributed) —
     thread keys never collect to the driver."""
-    from verified_sources_spark.sources.rest import RestEndpoint, fetch_distributed
-
     threads = (
         messages.filter(F.col("thread_ts").isNotNull())
         .select("channel", "thread_ts")
@@ -384,7 +324,6 @@ def slack_thread_replies(
         ),
         reply_schema,
         transform=lambda rec, p: {**rec, "channel": p["channel"], "thread_ts": p["thread_ts"]},
-        num_slices=num_slices,
     )
     return replies.filter(F.col("ts") != F.col("thread_ts"))
 
@@ -405,6 +344,38 @@ def slack_replies_with_parent(messages: DataFrame, replies: DataFrame) -> DataFr
 
 
 # ------------------------------------------------------------------- matomo
+def _chunked_lookup(
+    ids: DataFrame,
+    make_client,
+    request,
+    chunk_size: int,
+    schema: str,
+) -> DataFrame:
+    """Batch-API lookup: the ids in ``ids``' one column, ``chunk_size``
+    at a time, each chunk one ``request(chunk) -> RestEndpoint`` call,
+    executor-side in a ``map_batches`` stage over ``sizing.spread(ids)``.
+    A chunk is cut inside one Arrow batch: chunk membership is an
+    API-efficiency detail, not a semantic grouping, so no driver collect
+    and no global ordering is needed.  Each task builds one client at
+    its first batch."""
+    fields = T.StructType.fromDDL(schema).fieldNames()
+    client = None
+
+    def lookup(batch):
+        nonlocal client
+        if client is None:
+            client = make_client()
+        keys = [str(v) for v in batch.column(0).to_pylist()]
+        records = [
+            r
+            for i in range(0, len(keys), chunk_size)
+            for r in client.records(request(keys[i:i + chunk_size]))
+        ]
+        return {f: [r.get(f) for r in records] for f in fields}
+
+    return map_batches(sizing.spread(ids), lookup, schema)
+
+
 def matomo_visitors_batch_lookup(
     visits: DataFrame,
     make_client,
@@ -412,43 +383,23 @@ def matomo_visitors_batch_lookup(
     site_id: int,
     chunk_size: int = 20,
     visitor_schema: str = "visitorId string, visits long, country string",
-    num_slices: int | None = None,
 ) -> DataFrame:
     """Unique-visitor profile lookup in id batches (reference
     sources/matomo/__init__.py:193-230: visitor ids from the visits feed
     are chunked ``chunk_size`` at a time into one API call each, to avoid
-    too-long URLs). Spark-first: distinct ids stay a DataFrame; chunking
-    happens partition-locally inside ``mapPartitions`` (chunk membership
-    is an API-efficiency detail, not a semantic grouping), so no driver
-    collect and no global ordering is needed."""
-    spark = visits.sparkSession
-    ids = visits.select("visitorId").distinct()
-    n = num_slices or spark.sparkContext.defaultParallelism
-    spread = ids.repartition(min(n, max(1, ids.count())))
-
-    def run(it):
-        client = make_client()
-        from verified_sources_spark.sources.rest import RestEndpoint
-
-        def flush(chunk):
-            if not chunk:
-                return
-            ep = RestEndpoint(
-                f"{base_url}/visitors.batch",
-                params={"idSite": site_id, "visitorIds": ",".join(chunk)},
-                records_path="data",
-            )
-            yield from client.records(ep)
-
-        chunk: list[str] = []
-        for row in it:
-            chunk.append(row["visitorId"])
-            if len(chunk) >= chunk_size:
-                yield from flush(chunk)
-                chunk = []
-        yield from flush(chunk)
-
-    return spark.createDataFrame(spread.rdd.mapPartitions(run), visitor_schema)
+    too-long URLs). Spark-first: distinct ids stay a DataFrame and are
+    chunked executor-side (``_chunked_lookup``)."""
+    return _chunked_lookup(
+        visits.select("visitorId").distinct(),
+        make_client,
+        lambda chunk: RestEndpoint(
+            f"{base_url}/visitors.batch",
+            params={"idSite": site_id, "visitorIds": ",".join(chunk)},
+            records_path="data",
+        ),
+        chunk_size,
+        visitor_schema,
+    )
 
 
 def matomo_visits_enriched(visits: DataFrame, visitors: DataFrame) -> DataFrame:
@@ -890,47 +841,29 @@ def facebook_batch_enrich(
     id_col: str = "id",
     chunk_size: int = 50,
     enrich_schema: str | None = None,
-    num_slices: int | None = None,
 ) -> DataFrame:
     """Batch-API object enrichment (reference
     sources/facebook_ads/helpers.py:90-128: ``enrich_ad_objects`` queues
     one ``api_get`` per object into a Facebook batch request and merges
     each response into its item). Spark-first: distinct object ids are
-    chunked partition-locally into batch calls (one request per
-    ``chunk_size`` ids, executor-side), the per-id field payloads land as
-    a DataFrame, and the merge-into-item step is a left join — the base
-    rows never leave the cluster."""
-    spark = objects.sparkSession
+    chunked executor-side into batch calls (one request per
+    ``chunk_size`` ids, ``_chunked_lookup``), the per-id field payloads
+    land as a DataFrame, and the merge-into-item step is a left join —
+    the base rows never leave the cluster."""
     if enrich_schema is None:
         enrich_schema = f"{id_col} string, " + ", ".join(f"{f} string" for f in fields)
-    ids = objects.select(id_col).distinct()
-    n = num_slices or spark.sparkContext.defaultParallelism
-    spread = ids.repartition(min(n, max(1, ids.count())))
     field_list = ",".join(sorted(fields))
-
-    def run(it):
-        client = make_client()
-        from verified_sources_spark.sources.rest import RestEndpoint
-
-        def flush(chunk):
-            if not chunk:
-                return
-            ep = RestEndpoint(
-                f"{base_url}/batch",
-                params={"ids": ",".join(chunk), "fields": field_list},
-                records_path="data",
-            )
-            yield from client.records(ep)
-
-        chunk: list[str] = []
-        for row in it:
-            chunk.append(str(row[id_col]))
-            if len(chunk) >= chunk_size:
-                yield from flush(chunk)
-                chunk = []
-        yield from flush(chunk)
-
-    enrich = spark.createDataFrame(spread.rdd.mapPartitions(run), enrich_schema)
+    enrich = _chunked_lookup(
+        objects.select(id_col).distinct(),
+        make_client,
+        lambda chunk: RestEndpoint(
+            f"{base_url}/batch",
+            params={"ids": ",".join(chunk), "fields": field_list},
+            records_path="data",
+        ),
+        chunk_size,
+        enrich_schema,
+    )
     return objects.join(enrich, id_col, "left")
 
 
@@ -1044,8 +977,8 @@ def workable_details(
     """Dependent-details transformer (reference workable/__init__.py:
     92-120): one ``{base}/{main}/{code}/{sub}`` fetch per parent row,
     keyed by id (candidates) or shortcode (jobs), children tagged with
-    the parent key — the engine's chained_detail_fetch shape, routed to
-    executors above the key-count threshold."""
+    the parent key — the engine's chained_detail_fetch shape, fetched on
+    executors."""
     key = WORKABLE_DETAIL_KEYS[main_endpoint]
     return chained_detail_fetch(
         spark, make_client, parent, key,
